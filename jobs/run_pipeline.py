@@ -79,7 +79,7 @@ def main() -> None:
     ap.add_argument("--skew-safe", action="store_true",
                     help="use the range-partitioned sessionization path")
     ap.add_argument("--grok", default="split",
-                    choices=["split", "regexp", "pandas", "multi"],
+                    choices=["split", "pandas", "multi"],
                     help="field-extraction strategy; 'multi' dispatches "
                          "per-row on log format (combined/squid/xferlog/w3c)")
     ap.add_argument("--visit-timeout", type=int, default=None,

@@ -135,181 +135,6 @@ def test_fixture_contains_real_png(spark, media):
         assert abs(got["mean_val"] - float(arr.mean())) < 1e-12
 
 
-def test_jpeg_codec_round_trip_psnr():
-    """Baseline grayscale JPEG is a REAL codec (DCT + canonical Huffman,
-    pure numpy/stdlib). JPEG is lossy, so the bound is reconstruction
-    error, not equality: smooth content at quality 90 stays within a few
-    gray levels; unsupported flavors are refused, not mis-decoded."""
-    from webalizer_spark.operators.jpeg import (
-        decode_jpeg_gray,
-        encode_jpeg_gray,
-    )
-
-    rng = np.random.default_rng(11)
-    for h, w in [(8, 8), (17, 23), (40, 56)]:
-        img = rng.integers(0, 256, (h, w), dtype=np.uint8)
-        dec, shape = decode_jpeg_gray(encode_jpeg_gray(img, quality=95))
-        assert shape == (h, w)
-        err = np.abs(dec.astype(int) - img.astype(int))
-        assert err.max() <= 12 and err.mean() < 3.0, (h, w, err.max())
-
-    with pytest.raises(ValueError, match="not a JPEG"):
-        decode_jpeg_gray(b"\x00\x01" * 8)
-    # a baseline stream with its SOF marker flipped to SOF2 is NOT a
-    # valid progressive file (its one scan would be a full-spectrum "DC"
-    # scan, which Annex G forbids): refused, not mis-decoded
-    good = bytearray(encode_jpeg_gray(np.zeros((8, 8), dtype=np.uint8)))
-    sof = bytes(good).find(b"\xff\xc0")
-    good[sof + 1] = 0xC2
-    with pytest.raises(ValueError, match="DC scan"):
-        decode_jpeg_gray(bytes(good))
-
-
-def test_jpeg_progressive_equals_baseline():
-    """Progressive (SOF2) is a REAL codec, not an approximation: the
-    successive-approximation scan script (DC Al=1 + refine, per-component
-    AC Ss=1..63 Al=1 + refine, EOB-run codes across blocks) lands every
-    quantized coefficient at full precision, so progressive decode must
-    equal baseline decode BIT-FOR-BIT at the same quality — a far
-    stronger check than a PSNR bound."""
-    from webalizer_spark.operators.jpeg import (
-        decode_jpeg,
-        encode_jpeg_color,
-        encode_jpeg_gray,
-        encode_jpeg_progressive,
-    )
-
-    rng = np.random.default_rng(13)
-    for q in (10, 50, 95):
-        for h, w in [(8, 8), (17, 23), (33, 65)]:
-            img = rng.integers(0, 256, (h, w), dtype=np.uint8)
-            b, _ = decode_jpeg(encode_jpeg_gray(img, q))
-            p, shape = decode_jpeg(encode_jpeg_progressive(img, q))
-            assert shape == (h, w)
-            assert np.array_equal(b, p), ("gray", q, h, w)
-            rgb = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
-            for ss in ("444", "420"):
-                cb, _ = decode_jpeg(encode_jpeg_color(rgb, q, ss))
-                cp, cshape = decode_jpeg(encode_jpeg_progressive(rgb, q, ss))
-                assert cshape == (h, w, 3)
-                assert np.array_equal(cb, cp), ("color", ss, q, h, w)
-    # long EOB runs (mostly-empty blocks) exercise the EOBn machinery
-    flat = np.full((64, 64), 128, dtype=np.uint8)
-    flat[0, 0], flat[63, 63] = 255, 0
-    b, _ = decode_jpeg(encode_jpeg_gray(flat, 50))
-    p, _ = decode_jpeg(encode_jpeg_progressive(flat, 50))
-    assert np.array_equal(b, p)
-    # truncating inside the FIRST scan's entropy data exhausts the bit
-    # reader: refused, not mis-decoded (a cut at a scan boundary would be
-    # a legitimate partial progressive render, so cut mid-scan on purpose)
-    enc = encode_jpeg_progressive(flat, 50)
-    first_sos = enc.find(b"\xff\xda")
-    with pytest.raises(ValueError):
-        decode_jpeg(enc[:first_sos + 16])
-
-
-def test_jpeg_restart_intervals():
-    """DRI/RSTn restart markers — near-universal in camera/libjpeg
-    streams — decode bit-exactly on every path: the segmented stream
-    must reproduce the unsegmented decode (baseline gray/color) and the
-    baseline pixels (progressive, whose scans flush EOB runs at each
-    restart), at intervals from every-MCU to one-restart-total."""
-    from webalizer_spark.operators.jpeg import (
-        decode_jpeg,
-        encode_jpeg_color,
-        encode_jpeg_gray,
-        encode_jpeg_progressive,
-    )
-
-    rng = np.random.default_rng(29)
-    img = rng.integers(0, 256, (33, 65), dtype=np.uint8)
-    base, _ = decode_jpeg(encode_jpeg_gray(img, 50))
-    for ri in (1, 2, 7, 100):
-        enc = encode_jpeg_gray(img, 50, restart_interval=ri)
-        assert b"\xff\xdd" in enc       # DRI present
-        r, shape = decode_jpeg(enc)
-        assert shape == (33, 65)
-        assert np.array_equal(base, r), ri
-        p, _ = decode_jpeg(encode_jpeg_progressive(img, 50,
-                                                   restart_interval=ri))
-        assert np.array_equal(base, p), ri
-    rgb = rng.integers(0, 256, (17, 23, 3), dtype=np.uint8)
-    for ss in ("444", "420"):
-        cbase, _ = decode_jpeg(encode_jpeg_color(rgb, 50, ss))
-        for ri in (1, 3):
-            c, _ = decode_jpeg(encode_jpeg_color(rgb, 50, ss,
-                                                 restart_interval=ri))
-            assert np.array_equal(cbase, c), (ss, ri)
-            cp, _ = decode_jpeg(encode_jpeg_progressive(
-                rgb, 50, ss, restart_interval=ri))
-            assert np.array_equal(cbase, cp), (ss, ri)
-    # long EOB runs forced to split across restart boundaries
-    flat = np.full((64, 64), 128, dtype=np.uint8)
-    flat[0, 0], flat[63, 63] = 255, 0
-    fb, _ = decode_jpeg(encode_jpeg_gray(flat, 50))
-    for ri in (1, 3, 63):
-        fp, _ = decode_jpeg(encode_jpeg_progressive(flat, 50,
-                                                    restart_interval=ri))
-        assert np.array_equal(fb, fp), ri
-    # a restart-expecting stream whose markers were stripped is refused
-    enc = bytearray(encode_jpeg_gray(img, 50, restart_interval=2))
-    stripped = re.sub(b"\xff[\xd0-\xd7]", b"", bytes(enc))
-    with pytest.raises(ValueError, match="restart"):
-        decode_jpeg(stripped)
-
-
-def test_jpeg_color_round_trip_psnr():
-    """Color baseline JPEG (3-component YCbCr) is a REAL codec — 4:4:4
-    and 4:2:0 both round-trip within lossy bounds on chroma-smooth
-    content (random RGB noise is NOT chroma-smooth; real images are),
-    and the gray decoder still refuses color streams."""
-    from webalizer_spark.operators.jpeg import (
-        decode_jpeg,
-        decode_jpeg_gray,
-        encode_jpeg_color,
-    )
-
-    rng = np.random.default_rng(12)
-    for h, w in [(16, 16), (17, 23), (48, 56)]:
-        # smooth gradients + mild noise: the content class JPEG targets
-        yy, xx = np.mgrid[0:h, 0:w]
-        base = np.stack([(xx * 255 / max(w - 1, 1)),
-                         (yy * 255 / max(h - 1, 1)),
-                         ((xx + yy) * 255 / max(h + w - 2, 1))], axis=-1)
-        img = np.clip(base + rng.normal(0, 4, (h, w, 3)), 0,
-                      255).astype(np.uint8)
-        for ss, tol in (("444", 8.0), ("420", 16.0)):
-            dec, shape = decode_jpeg(encode_jpeg_color(img, 95, ss))
-            assert shape == (h, w, 3)
-            err = np.abs(dec.astype(int) - img.astype(int))
-            assert err.mean() < tol, (h, w, ss, err.mean())
-    with pytest.raises(ValueError, match="grayscale"):
-        decode_jpeg_gray(encode_jpeg_color(img, 90, "444"))
-    with pytest.raises(ValueError, match="subsample"):
-        encode_jpeg_color(img, 90, "422x")
-
-
-def test_fixture_contains_real_jpeg(spark, media):
-    """The fixture ships genuine baseline JPEGs — grayscale AND color
-    (4:2:0 + 4:4:4); the Spark decode path extracts features from both
-    (lossy decode, deterministic values)."""
-    from webalizer_spark.operators.jpeg import decode_jpeg
-
-    rows = media.select("media_id", "kind", "payload").collect()
-    jpg = [r for r in rows if bytes(r["payload"][:2]) == b"\xff\xd8"]
-    assert len(jpg) > 0
-    feats = extract_features(media).toPandas()
-    shapes = set()
-    for r in jpg:
-        arr, shape = decode_jpeg(bytes(r["payload"]))
-        shapes.add(len(shape))
-        got = feats[feats["media_id"] == r["media_id"]].iloc[0]
-        assert bool(got["ok"])
-        assert got["decoded_shape"] == "x".join(map(str, shape))
-        assert abs(got["mean_val"] - float(arr.mean())) < 1e-12
-    assert shapes == {2, 3}    # both gray and color JPEGs present
-
-
 def test_y4m_codec_round_trip():
     """YUV4MPEG2 is a REAL container (plain-text header + raw planes —
     any ffmpeg reads our output): byte-exact luma round-trip, chroma
@@ -349,26 +174,6 @@ def test_fixture_contains_real_y4m_and_frame_sampling(spark, media):
         assert list(got["frame_idx"]) == list(range(0, nf, 4))
         for fi, fm in zip(got["frame_idx"], got["frame_mean"]):
             assert abs(fm - float(arr[fi].mean())) < 1e-12
-
-
-def test_jpeg_marker_tolerance():
-    """Other encoders' legal stream noise must not break decode: 0xFF
-    fill bytes before a marker and standalone TEM markers between
-    segments are skipped (ITU T.81 B.1.1.2), bit-identical result."""
-    from webalizer_spark.operators.jpeg import (
-        decode_jpeg_gray,
-        encode_jpeg_gray,
-    )
-
-    rng = np.random.default_rng(12)
-    img = rng.integers(0, 256, (16, 24), dtype=np.uint8)
-    enc = encode_jpeg_gray(img, quality=90)
-    base, _ = decode_jpeg_gray(enc)
-    # insert a 0xFF fill run and a standalone TEM marker before SOF0
-    sof = enc.find(b"\xff\xc0")
-    noisy = enc[:sof] + b"\xff\xff\xff\x01" + enc[sof:]
-    dec, shape = decode_jpeg_gray(noisy)
-    assert shape == (16, 24) and (dec == base).all()
 
 
 def test_y4m_rejects_odd_dimensions():
@@ -427,17 +232,6 @@ def test_fixture_contains_real_flac(spark, media):
         got = feats[feats["media_id"] == r["media_id"]].iloc[0]
         assert bool(got["ok"]) and got["decoded_shape"] == f"{len(samples)}"
         assert abs(got["mean_val"] - float(samples.mean())) < 1e-9
-
-
-def test_jpeg_truncated_in_fill_bytes_raises_valueerror():
-    """A truncated stream ending in 0xFF fill bytes must raise ValueError
-    (never struct.error) so decode_media's corrupt routing works."""
-    from webalizer_spark.operators.jpeg import decode_jpeg_gray
-
-    with pytest.raises(ValueError):
-        decode_jpeg_gray(b"\xff\xd8\xff\xff\xff\xe0")
-    with pytest.raises(ValueError):
-        decode_jpeg_gray(b"\xff\xd8\xff\xff\xff\xff")
 
 
 def test_flac_unknown_total_refused():
@@ -668,144 +462,6 @@ def test_fixture_contains_real_flc(spark, media):
             assert ctype == 7
 
 
-def test_mpeg1_codec_closed_loop():
-    """MPEG-1 (ISO 11172-2 I/P/B subset) is a REAL MOTION-COMPENSATED
-    codec: the decoder reproduces the encoder's own reconstruction
-    BIT-EXACTLY across a full GOP (any mismatch would be P-frame
-    drift), in both full-pel and half-pel vector modes, and inter
-    coding genuinely pays (a panning scene costs far less than
-    per-frame-independent I-frames)."""
-    from webalizer_spark.operators.mpeg1 import decode_mpeg1, encode_mpeg1
-
-    rng = np.random.default_rng(11)
-    nf, h, w = 8, 34, 46
-    bg = rng.integers(0, 256, (h + 40, w + 40, 3), dtype=np.uint8)
-    frames = np.stack([bg[2 * i:2 * i + h, 3 * i:3 * i + w]
-                       for i in range(nf)])
-    for full_pel in (True, False):
-        rec = []
-        bs = encode_mpeg1(frames, qscale=8, gop=4, recon_out=rec,
-                          full_pel=full_pel)
-        dec, shape = decode_mpeg1(bs)
-        assert shape == (nf, h, w, 3)
-        for i in range(nf):
-            assert np.array_equal(dec[i], rec[i]), f"drift at frame {i}"
-
-    # fidelity on codec-friendly (smooth) content: > 40 dB at qscale 2
-    yy, xx = np.mgrid[0:32, 0:32]
-    smooth = np.stack([
-        np.stack([np.clip(128 + 60 * np.sin(yy / 7 + i / 3)
-                          + 50 * np.cos(xx / 9), 0, 255)] * 3, -1)
-        for i in range(4)]).astype(np.uint8)
-    dec_s, _ = decode_mpeg1(encode_mpeg1(smooth, qscale=2, gop=4))
-    err = dec_s.astype(np.int32) - smooth.astype(np.int32)
-    psnr = 10 * np.log10(255 ** 2 / float((err ** 2).mean()))
-    assert psnr > 40.0
-
-    # motion compensation is real: on a smooth even-pel pan (chroma
-    # vectors stay integral and the I-frame reconstruction is near-
-    # exact, so forward prediction is almost free) the GOP costs far
-    # less than the same frames coded I-only (gop=1). On noise content
-    # P-frames legitimately re-code the prior frame's quantization
-    # error, so the ratio is asserted on codec-friendly content.
-    yy, xx = np.mgrid[0:h + 40, 0:w + 40]
-    sbg = np.clip(128 + 60 * np.sin(yy / 7.0) + 50 * np.cos(xx / 9.0),
-                  0, 255).astype(np.uint8)
-    sbg = np.stack([sbg, sbg[::-1], sbg], -1)
-    pan = np.stack([sbg[2 * i:2 * i + h, 4 * i:4 * i + w]
-                    for i in range(nf)])
-    ip = len(encode_mpeg1(pan, qscale=2, gop=8))
-    ionly = len(encode_mpeg1(pan, qscale=2, gop=1))
-    assert ip < 0.6 * ionly
-
-    # static frames collapse to skipped macroblocks (smooth content:
-    # the reference reconstruction is close enough that residuals
-    # quantize to zero and whole macroblock runs skip)
-    still = np.stack([pan[0]] * 4)
-    assert len(encode_mpeg1(still, qscale=2, gop=4)) < \
-        len(encode_mpeg1(still[:1], qscale=2)) + 120
-
-    with pytest.raises(ValueError, match="not an MPEG-1"):
-        decode_mpeg1(b"\x00\x00\x01\xb7" + b"\x00" * 64)
-    with pytest.raises(ValueError):
-        decode_mpeg1(encode_mpeg1(still[:1], qscale=8)[:24])
-    with pytest.raises(ValueError, match="even dimensions"):
-        encode_mpeg1(np.zeros((1, 17, 16, 3), dtype=np.uint8))
-
-
-def test_fixture_contains_real_mpeg1(spark, media):
-    """The fixture ships genuine MPEG-1 elementary streams (sequence
-    start code 000001B3); extract_features drives the motion-
-    compensated decode path under Spark, the frame count matches the
-    stream, and at least one fixture stream really carries
-    picture_coding_type 3 — B pictures go through the Spark decode
-    path even at this fixture size."""
-    from webalizer_spark.operators.mpeg1 import decode_mpeg1
-
-    rows = media.select("media_id", "kind", "payload", "n_frames").collect()
-    mpgs = [r for r in rows
-            if bytes(r["payload"][:4]) == b"\x00\x00\x01\xb3"]
-    assert mpgs, "no MPEG-1 rows in fixture"
-    feats = extract_features(media).toPandas()
-    ptypes: set[int] = set()
-    for r in mpgs:
-        raw = bytes(r["payload"])
-        frames, shape = decode_mpeg1(raw)
-        assert shape[0] == r["n_frames"]
-        got = feats[feats["media_id"] == r["media_id"]].iloc[0]
-        assert bool(got["ok"])
-        assert got["decoded_shape"] == "x".join(map(str, shape))
-        pos = 0
-        while True:
-            pos = raw.find(b"\x00\x00\x01\x00", pos)
-            if pos < 0:
-                break
-            ptypes.add((raw[pos + 5] >> 3) & 0x7)
-            pos += 4
-    assert 3 in ptypes, f"no B pictures in fixture streams: {ptypes}"
-
-    import pytest
-
-    from webalizer_spark.operators.mpeg1 import encode_mpeg1
-    with pytest.raises(ValueError, match="b_frames"):
-        encode_mpeg1(np.zeros((2, 16, 16, 3), dtype=np.uint8),
-                     b_frames=-1)
-
-
-def test_mpeg1_property_closed_loop():
-    """Property: for ARBITRARY frame content, dimensions (even, any
-    mod-16 remainder), GOP structure, quantizer and vector mode, the
-    decoder reproduces the encoder's reconstruction bit-exactly —
-    the invariant that makes motion-compensated coding drift-free."""
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-    from hypothesis.extra.numpy import arrays
-
-    from webalizer_spark.operators.mpeg1 import decode_mpeg1, encode_mpeg1
-
-    @settings(max_examples=12, deadline=None)
-    @given(arrays(np.uint8,
-                  st.tuples(st.integers(2, 5),
-                            st.integers(1, 3).map(lambda v: 2 * v + 12),
-                            st.integers(1, 3).map(lambda v: 2 * v + 12),
-                            st.just(3))),
-           st.integers(1, 4),
-           st.sampled_from([2, 8, 20, 31]),
-           st.booleans(),
-           st.sampled_from([0, 1, 2]))
-    def prop(frames, gop, qscale, full_pel, b_frames):
-        rec = []
-        bs = encode_mpeg1(frames, qscale=qscale, gop=gop,
-                          recon_out=rec, full_pel=full_pel,
-                          b_frames=b_frames)
-        dec, shape = decode_mpeg1(bs)
-        assert shape == frames.shape
-        for i in range(frames.shape[0]):
-            assert np.array_equal(dec[i], rec[i])
-
-    prop()
-
-
 def test_audio_features_match_local_dsp(spark, media):
     """audio_features' RMS / zero-crossing rate / spectral centroid
     match a local numpy re-derivation on real WAV and FLAC rows (true
@@ -877,62 +533,6 @@ def test_audio_peak_full_scale_negative(spark):
     assert bool(got["ok"]) and got["peak"] == 32768
 
 
-def test_mpeg1_chroma_halving_truncates_toward_zero():
-    """Regression: the luma->chroma vector rule truncates toward zero
-    (ISO 11172-2), not floor — _half(-3) is -1, not -2."""
-    from webalizer_spark.operators.mpeg1 import _half
-
-    assert [_half(v) for v in (-3, -2, -1, 0, 1, 2, 3)] \
-        == [-1, -1, 0, 0, 0, 1, 1]
-
-
-def test_mpeg1_b_pictures():
-    """B pictures: closed-loop bit-exactness holds with bidirectional
-    prediction in both vector modes (any reorder or PMV mistake would
-    break it), the transmit stream really contains picture_coding_type
-    3, decode returns DISPLAY order, and on smooth linear motion the
-    B-coded GOP costs less than the same frames I/P-coded (interpolated
-    prediction pays)."""
-    from webalizer_spark.operators.mpeg1 import decode_mpeg1, encode_mpeg1
-
-    nf, h, w = 9, 32, 48
-    yy, xx = np.mgrid[0:h + 40, 0:w + 40]
-    sbg = np.clip(128 + 60 * np.sin(yy / 7.0) + 50 * np.cos(xx / 9.0),
-                  0, 255).astype(np.uint8)
-    sbg = np.stack([sbg, sbg[::-1], sbg], -1)
-    frames = np.stack([sbg[2 * i:2 * i + h, 4 * i:4 * i + w]
-                       for i in range(nf)])
-
-    for fp in (True, False):
-        rec = []
-        bs = encode_mpeg1(frames, qscale=4, gop=4, recon_out=rec,
-                          full_pel=fp, b_frames=2)
-        dec, shape = decode_mpeg1(bs)
-        assert shape == (nf, h, w, 3)
-        for i in range(nf):
-            assert np.array_equal(dec[i], rec[i]), (fp, i)
-        # display order: each decoded frame tracks ITS source frame
-        for i in range(nf):
-            err = np.abs(dec[i].astype(int) - frames[i].astype(int))
-            assert float(err.mean()) < 12.0, (fp, i)
-
-    # the stream carries real B pictures (type 3 in a picture header)
-    bs = encode_mpeg1(frames, qscale=4, gop=4, b_frames=2)
-    types = []
-    pos = 0
-    while True:
-        pos = bs.find(b"\x00\x00\x01\x00", pos)
-        if pos < 0:
-            break
-        types.append((bs[pos + 5] >> 3) & 0x7)
-        pos += 4
-    assert 3 in types and 1 in types
-
-    ipb = len(bs)
-    ip = len(encode_mpeg1(frames, qscale=4, gop=4, b_frames=0))
-    assert ipb < ip
-
-
 def test_fake_container_never_misroutes_to_flic():
     """Round-5 advice: a fake-container payload whose width field's low
     16 bits equal FLIC's magic (w=44818 -> bytes 4:6 == 12 AF) must hit
@@ -967,86 +567,6 @@ def test_flic_sniff_requires_depth_8():
     with pytest.raises(Exception) as ei:
         decode_media(blob, "video")
     assert "FLC" not in str(ei.value)
-
-
-def _motion_frames(nf=9, h=48, w=80, step=3):
-    """Smooth gradient + a moving bright square: static background for
-    B-skip eligibility, real motion for vector coverage."""
-    yy, xx = np.mgrid[0:h, 0:w]
-    frames = np.zeros((nf, h, w, 3), np.uint8)
-    for i in range(nf):
-        base = (yy * 2 + xx).astype(np.int32)
-        f = np.stack([base, base, base], axis=-1)
-        x0 = 8 + i * step
-        f[20:28, x0:x0 + 8] += 60
-        frames[i] = np.clip(f, 0, 255).astype(np.uint8)
-    return frames
-
-
-def test_mpeg1_skipped_b_macroblocks_closed_loop():
-    """Round-5 verdict item 7a: the encoder now SKIPS zero-residual B
-    macroblocks (previous prediction repeated, 2.4.4.4) and the decoder
-    reconstructs them — closed-loop bit-exact with real skip runs in
-    the stream, and smaller than the no-skip r5 encoding was."""
-    from webalizer_spark.operators.mpeg1 import decode_mpeg1, encode_mpeg1
-
-    frames = _motion_frames()
-    for full_pel in (True, False):
-        recon, stats = [], {}
-        bs = encode_mpeg1(frames, qscale=6, gop=4, b_frames=2,
-                          full_pel=full_pel, recon_out=recon, stats=stats)
-        assert stats.get("b_skipped", 0) > 20, stats   # real skip runs
-        arr, shape = decode_mpeg1(bs)
-        assert shape[0] == len(frames)
-        for i in range(len(frames)):
-            assert np.array_equal(arr[i], recon[i]), (full_pel, i)
-
-
-def test_mpeg1_f_code_2_large_vectors_closed_loop():
-    """Round-5 verdict item 7b: f_code=2 motion vectors with nonzero
-    residual bits — motion of 12 px/frame in half-pel units is OUTSIDE
-    the f_code=1 range (the same encode raises), so this stream
-    genuinely needs the wider range; decode is closed-loop bit-exact."""
-    import pytest
-
-    from webalizer_spark.operators.mpeg1 import decode_mpeg1, encode_mpeg1
-
-    frames = _motion_frames(nf=6, w=112, step=12)
-    with pytest.raises(ValueError, match="f_code"):
-        encode_mpeg1(frames, qscale=6, gop=8, b_frames=0,
-                     full_pel=False, search=12, f_code=1)
-    for b in (0, 1):
-        recon = []
-        bs = encode_mpeg1(frames, qscale=6, gop=8, b_frames=b,
-                          full_pel=False, search=12, f_code=2,
-                          recon_out=recon)
-        arr, shape = decode_mpeg1(bs)
-        assert shape[0] == len(frames)
-        for i in range(len(frames)):
-            assert np.array_equal(arr[i], recon[i]), (b, i)
-
-
-def test_mpeg1_motion_residual_coding_round_trip():
-    """The f_code>1 differential codec itself: every differential in
-    the wrapped range survives a write/read cycle at f_code 2..4."""
-    from webalizer_spark.operators.mpeg1 import (_BR, _BW, _put_motion,
-                                                 _read_motion, _wrap_mv)
-
-    for f_code in (2, 3, 4):
-        fr = 1 << (f_code - 1)
-        bw = _BW()
-        vals = list(range(-16 * fr, 16 * fr))
-        pmv = 0
-        for v in vals:
-            _put_motion(bw, v, pmv, fr)
-            pmv = v
-        br = _BR(bw.bytes())
-        pmv = 0
-        for v in vals:
-            d = _read_motion(br, fr)
-            got = _wrap_mv(pmv + d, fr)
-            assert got == v, (f_code, v, got)
-            pmv = got
 
 
 def test_image_dhash_brightness_invariance_and_cross_format():
@@ -1206,11 +726,11 @@ def test_video_fp_invariances():
         _video_fp64(fr[:1])
 
 
-def test_video_near_dup_pairs_cross_codec(spark):
-    """The Y4M master and its lossy MPEG-1 re-encode pair up (frame
-    means survive coding nearly unchanged); unrelated footage does
-    not; corrupt rows flag ok=false."""
-    from webalizer_spark.operators.mpeg1 import encode_mpeg1
+
+def test_video_near_dup_pairs_end_to_end(spark):
+    """A Y4M master and a noisy re-encode of it pair up (per-pixel
+    noise moves frame means only slightly); unrelated footage does
+    not; corrupt rows flag ok=false and non-video rows are skipped."""
     from webalizer_spark.operators.multimodal import (
         encode_y4m,
         video_fingerprint,
@@ -1218,17 +738,17 @@ def test_video_near_dup_pairs_cross_codec(spark):
     )
 
     fr = _demo_frames()
-    rgb = np.repeat(fr[:, :, :, None], 3, axis=3)
     rng = np.random.RandomState(99)
     walk = np.cumsum(rng.choice([-9, 9], 12)) + 100
     fr2 = np.clip(walk[:, None, None] + np.zeros((12, 32, 48)),
                   0, 255).astype(np.uint8)
+    noisy = np.clip(fr.astype(np.int16)
+                    + rng.randint(-3, 4, fr.shape), 0, 255).astype(np.uint8)
     rows = [
         (1, "video", bytearray(encode_y4m(fr))),
-        (2, "video", bytearray(encode_mpeg1(rgb, qscale=6, gop=6,
-                                            b_frames=1))),
+        (2, "video", bytearray(encode_y4m(noisy))),
         (3, "video", bytearray(encode_y4m(fr2))),
-        (4, "video", bytearray(b"\x00\x00\x01\xb3truncated")),
+        (4, "video", bytearray(encode_y4m(fr)[:-10])),
         (5, "audio", bytearray(b"ignored: wrong kind")),
     ]
     media = spark.createDataFrame(

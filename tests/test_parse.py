@@ -2,23 +2,35 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from webalizer_spark.config import DEFAULT_CONFIG
+from webalizer_spark.functions import GROK_FIELDS, apply_grok, sanitize
 from webalizer_spark.operators.parse import parse_transcripts, split_ok_bad
 
 
-def _counts(df):
-    return df.selectExpr(
-        "count_if(parse_ok) ok", "count_if(not parse_ok) bad",
-        "sum(length(coalesce(actor,''))+length(coalesce(referrer,''))"
-        "+status+nbytes) chk").collect()[0]
+def _grokked(transcripts, strategy):
+    """Raw GROK_FIELDS of the sanitized text plus parse_ok, per turn."""
+    key = ["conv_id", "turn_idx"]
+    clean = transcripts.withColumn(
+        "text", sanitize(F.col("text"), DEFAULT_CONFIG.max_field_len))
+    raw = apply_grok(clean, "text", strategy).select(*key, *GROK_FIELDS)
+    ok = parse_transcripts(transcripts, strategy).select(*key, "parse_ok")
+    return raw.join(ok, key)
 
 
 def test_grok_strategies_agree(spark, transcripts):
-    base = None
-    for strat in ["split", "regexp", "pandas"]:
-        row = _counts(parse_transcripts(transcripts, strat))
-        if base is None:
-            base = row
-        assert row == base, f"strategy {strat} diverges: {row} != {base}"
+    """The pandas strategy equals the default split strategy row by row,
+    keyed on (conv_id, turn_idx), on every raw field and on parse_ok."""
+    split = _grokked(transcripts, "split").cache()
+    pandas = _grokked(transcripts, "pandas").cache()
+    try:
+        by_ok = dict(split.groupBy("parse_ok").count().collect())
+        assert set(by_ok) == {True, False}
+        assert sum(by_ok.values()) == transcripts.count()
+        assert split.exceptAll(pandas).count() == 0
+        assert pandas.exceptAll(split).count() == 0
+    finally:
+        split.unpersist()
+        pandas.unpersist()
 
 
 def test_parse_ok_bad_split(spark, transcripts):

@@ -17,9 +17,9 @@ Layout:
   sources/              table-format shim (Iceberg on cluster, parquet locally)
   functions/            grok parser + scalar function library
   operators/            sessionize, enrich, filters, aggregates, topn,
-                        dedup, similarity, textstats, multimodal
+                        dedup, similarity, quality, sampling, bpe,
+                        equality, multimodal
   plans/                end-to-end pipeline + checkpoint/resume
-  streaming/            Structured Streaming twins (session_window)
 """
 
 from webalizer_spark.config import EngineConfig

@@ -93,8 +93,6 @@ class EngineConfig:
     # Skew handling: convs with more turns than this take the
     # range-partitioned skew-safe sessionization path (SURVEY §4 O9).
     hot_conv_threshold: int = 100_000
-    # Streaming watermark (chronology-check analog, SURVEY §2.9).
-    late_data_watermark: str = "30 minutes"
     # PageType [sample.conf; webalizer.c ƒispage]: wildcard patterns over
     # `path` defining what counts as a "page". Empty = the engine's
     # default recast predicate (tool IS NOT NULL).

@@ -2,14 +2,13 @@
 
 Recasts the reference's combined-log parser [parser.c ƒparse_record_web
 ~120 LoC; ƒfmt_logrec ~60 LoC — an in-place byte scanner honoring quotes
-and brackets] as columnar regex. Three interchangeable strategies, all
+and brackets] as columnar regex. Two interchangeable strategies, both
 adding the same raw string columns (typing/validation happens after,
 JVM-side, in parse.py):
 
   split   — ONE anchored regexp_replace rewriting the line into a
             US-delimited record, then a single split. One regex pass per
             row, fully JVM/whole-stage-codegen. Default.
-  regexp  — one regexp_extract per field (n regex passes, all codegen).
   pandas  — Arrow pandas_udf; compiled regex via Series.str.extract (one
             C-regex pass, n groups). Pays the JVM<->Arrow hop; kept as the
             vectorized-UDF path the input_hint mandates supporting.
@@ -41,7 +40,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# One master pattern, shared verbatim by all three strategies.
+# One master pattern, shared verbatim by both strategies.
 # Groups: 1 actor, 2 ident, 3 user, 4 datetime, 5 verb, 6 path,
 #         7 status, 8 bytes, 9 referrer, 10 agent
 MASTER_PATTERN = (
@@ -93,13 +92,6 @@ def apply_grok(df: DataFrame, text_col: str = "text",
             *[_raw_field(F.col("_parts"), i).alias(n)
               for i, n in enumerate(GROK_FIELDS)],
         )
-    if strategy == "regexp":
-        return df.select(
-            *df.columns,
-            *[F.nullif(F.regexp_extract(F.col(text_col), MASTER_PATTERN, i + 1),
-                       F.lit("")).alias(n)
-              for i, n in enumerate(GROK_FIELDS)],
-        )
     if strategy == "pandas":
         with_struct = df.withColumn("_g", _grok_pandas_udf(F.col(text_col)))
         return with_struct.select(
@@ -117,4 +109,4 @@ def _grok_pandas_udf(text: pd.Series) -> pd.DataFrame:
     return out
 
 
-GROK_STRATEGIES = ("split", "regexp", "pandas")
+GROK_STRATEGIES = ("split", "pandas")

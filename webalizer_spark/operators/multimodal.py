@@ -8,26 +8,19 @@ Catalyst expressions).
 
 Codec status: BMP (24-bit uncompressed), WAV (PCM16 mono), PNG (8-bit
 gray/RGB non-interlaced; stdlib zlib inflate + numpy unfilter incl. the
-Paeth predictor), baseline JPEG (grayscale SOF0 AND 3-component YCbCr
-color with 4:4:4/4:2:0 chroma since round 5 — DCT + canonical Huffman,
-operators/jpeg.py; tables parsed from the file, lossy round-trip with
-PSNR-bounded tests) and FLAC (RFC 9639 subset, operators/flac.py,
-lossless) are REAL codecs implemented here — the fixture generator
-emits genuine .bmp/.wav/.png/.jpg/.flac payloads, and the
-feature/resize paths decode them like any external tool would.
-Progressive (SOF2) JPEG decodes natively too since round 5. Video ships
-as REAL YUV4MPEG2 (C420 luma) streams, REAL MJPEG AVIs
-(operators/avi.py — RIFF container, per-frame baseline JPEG) and REAL
-MPEG-1 elementary streams (operators/mpeg1.py — ISO 11172-2 I/P/B
-subset with motion-compensated forward AND bidirectional prediction,
-decode-side reorder) any ffmpeg reads.
-Formats still needing external libraries (modern entropy-coded video
-codecs — H.264/VP9 in mp4/webm — ONLY) go through `_decode_real`,
-which raises
-NotImplementedError behind an import-try (PIL / soundfile are not in
-the sandbox image); the deterministic fake container covers those rows
-in tests. decode_media() sniffs the payload magic and dispatches —
-swapping in PIL on a real cluster changes ONE branch.
+Paeth predictor), GIF87a/89a (operators/gif.py) and FLAC (RFC 9639
+subset, operators/flac.py, lossless) are REAL codecs implemented here —
+the fixture generator emits genuine .bmp/.wav/.png/.gif/.flac payloads,
+and the feature/resize paths decode them like any external tool would.
+Video ships as REAL YUV4MPEG2 (C420 luma) streams, animated GIFs and
+delta-coded FLC (operators/flic.py) any ffmpeg reads.
+Formats needing external libraries (JPEG, MPEG and other DCT or
+entropy-coded codecs) go through `_decode_real`, which raises
+NotImplementedError behind an import-try (PIL / soundfile are not
+dependencies of this package), so such rows route as corrupt; the deterministic
+fake container covers those rows in tests. decode_media() sniffs the
+payload magic and dispatches — swapping in PIL on a real cluster
+changes ONE branch.
 
 Scale notes: payloads dominate bytes, so the plan NEVER shuffles them —
 decode is a narrow mapInPandas straight after the scan, features are
@@ -304,23 +297,15 @@ def decode_wav(payload: bytes) -> tuple[np.ndarray, int]:
 
 def gen_media(out_dir: str, n: int = 200, seed: int = 42) -> str:
     """Deterministic media fixture. Image rows rotate through REAL
-    24-bit BMPs (i%6==0), REAL Paeth-filtered PNGs (i%12==3), REAL
-    baseline grayscale JPEGs (i%48==9), REAL color YCbCr JPEGs
-    (i%48==21 -> 4:2:0, i%48==33 -> 4:4:4), REAL grayscale-palette
-    GIFs (i%24==6) and the fake container (i%48==45, keeping the
-    _decode_fake image branch fixture-covered); audio rows rotate
-    through REAL PCM16 WAVs (i odd), REAL FLAC streams (i%12==4) and
-    the fake container; video rows are REAL YUV4MPEG2 streams
-    (i%6==2), REAL MJPEG AVIs (i%12==5), REAL ANIMATED GIFs
-    (i%24==11), REAL INTER-FRAME FLCs (i%48==23 — DELTA_FLC coded
-    frames) or REAL MOTION-COMPENSATED MPEG-1 streams (i%96==47 —
-    block 0 rows are HALF-PEL I/P WITH B PICTURES, block 1 rows
-    full-pel I/P, so both vector modes and bidirectional prediction
-    are fixture-covered even at n=120),
-    with i%96==95 on the self-describing fake container (standing in
-    for modern entropy-coded codecs and keeping that branch
-    fixture-covered); the i%96==45 image row is a REAL PROGRESSIVE
-    (SOF2) JPEG, i%96==93 keeps the fake-image branch covered."""
+    grayscale-palette GIFs (i%24==6), REAL 24-bit BMPs (other even i),
+    REAL Paeth-filtered PNGs (i%12==3) and the fake container (i%12==9,
+    keeping the _decode_fake image branch fixture-covered); audio rows
+    rotate through REAL PCM16 WAVs (i odd), REAL FLAC streams (i%12==4)
+    and the fake container; video rows are REAL YUV4MPEG2 streams
+    (i%6==2), REAL ANIMATED GIFs (i%24==11), REAL INTER-FRAME FLCs
+    (i%48==23 — DELTA_FLC coded frames) or the self-describing fake
+    container (standing in for codecs that need external libraries and
+    keeping that branch fixture-covered)."""
     rng = np.random.default_rng(seed)
     rows = []
     kinds = ["image", "audio", "video"]
@@ -339,24 +324,6 @@ def gen_media(out_dir: str, n: int = 200, seed: int = 42) -> str:
             payload = encode_bmp24(body.reshape(h, w))
         elif kind == "image" and i % 12 == 3:
             payload = encode_png(body.reshape(h, w))
-        elif kind == "image" and i % 48 == 9:
-            from webalizer_spark.operators.jpeg import encode_jpeg_gray
-            payload = encode_jpeg_gray(body.reshape(h, w), quality=90)
-        elif kind == "image" and i % 48 in (21, 33):
-            from webalizer_spark.operators.jpeg import encode_jpeg_color
-            rgb = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
-            payload = encode_jpeg_color(
-                rgb, quality=90,
-                subsample="420" if i % 48 == 21 else "444",
-                # half the 4:2:0 rows carry DRI/RSTn restart markers,
-                # like real camera streams
-                restart_interval=2 if i % 96 == 21 else 0)
-        elif kind == "image" and i % 96 == 45:
-            from webalizer_spark.operators.jpeg import (
-                encode_jpeg_progressive,
-            )
-            payload = encode_jpeg_progressive(body.reshape(h, w),
-                                              quality=90)
         elif kind == "audio" and i % 2 == 1:
             payload = encode_wav_pcm16(
                 (body.astype(np.int16) - 128) * 256, sr)
@@ -368,32 +335,11 @@ def gen_media(out_dir: str, n: int = 200, seed: int = 42) -> str:
             w2, h2 = max(w // 2 * 2, 8), max(h // 2 * 2, 8)
             payload = encode_y4m(
                 rng.integers(0, 256, (nf, h2, w2), dtype=np.uint8))
-        elif kind == "video" and i % 12 == 5:
-            from webalizer_spark.operators.avi import encode_avi_mjpeg
-            payload = encode_avi_mjpeg(
-                rng.integers(0, 256, (nf, h, w), dtype=np.uint8),
-                quality=90)
         elif kind == "video" and i % 24 == 11:
             from webalizer_spark.operators.gif import encode_gif
             pal = rng.integers(0, 256, (16, 3), dtype=np.uint8)
             payload = encode_gif(
                 pal[rng.integers(0, 16, (nf, h, w))].astype(np.uint8))
-        elif kind == "video" and i % 96 == 47:
-            from webalizer_spark.operators.mpeg1 import encode_mpeg1
-            w2, h2 = max(w // 2 * 2, 8), max(h // 2 * 2, 8)
-            base = rng.integers(0, 256, (nf, h2 + 16, w2 + 16, 3),
-                                dtype=np.uint8)
-            fr = np.stack([base[fi, fi % 8:fi % 8 + h2,
-                                fi % 8:fi % 8 + w2] for fi in range(nf)])
-            # i%96==47 is always odd, so parity can't alternate the
-            # vector mode — alternate by fixture block instead. The
-            # FIRST block carries B pictures so the bidirectional path
-            # is covered even by the n=120 test fixture (whose only
-            # MPEG row is i=47); block 1 covers full-pel I/P.
-            blk = (i // 96) % 2
-            payload = encode_mpeg1(fr, qscale=8, gop=4,
-                                   full_pel=bool(blk),
-                                   b_frames=1 - blk)
         elif kind == "video" and i % 48 == 23:
             from webalizer_spark.operators.flic import encode_flc
             base = rng.integers(0, 256, (h, w), dtype=np.uint8)
@@ -424,14 +370,11 @@ def gen_media(out_dir: str, n: int = 200, seed: int = 42) -> str:
 
 
 def _decode_real(payload: bytes, kind: str) -> np.ndarray:
-    """External-library codec path — requires PIL/av, which the sandbox
-    image lacks. Only MODERN ENTROPY-CODED video (H.264/VP9 in
-    mp4/webm — CABAC/range coding, in-loop filters) still lands here:
-    BMP/PNG/JPEG (baseline grayscale+color AND progressive) + GIF
-    images, WAV/FLAC audio, and y4m + MJPEG-AVI + animated-GIF +
-    delta-coded FLC + MOTION-COMPENSATED MPEG-1 (operators/mpeg1.py,
-    I/P/B pictures with half-pel-capable forward and bidirectional
-    prediction) video all decode natively above."""
+    """External-library codec path — requires PIL/av, which this
+    package does not depend on. JPEG, MPEG and other DCT or
+    entropy-coded formats land here: BMP/PNG/GIF images, WAV/FLAC
+    audio, and y4m + animated-GIF + delta-coded FLC video all decode
+    natively above."""
     try:
         import PIL.Image  # noqa: F401
     except ImportError as e:
@@ -467,19 +410,6 @@ def decode_media(payload: bytes, kind: str) -> tuple[np.ndarray, tuple[int, ...]
         return decode_png(payload)
     if payload[:9] == b"YUV4MPEG2":
         return decode_y4m(payload)
-    if payload[:2] == b"\xff\xd8":
-        from webalizer_spark.operators.jpeg import decode_jpeg
-        try:
-            # baseline grayscale, 3-component YCbCr (444/422/420) AND
-            # progressive (SOF2) all decode natively since round 5
-            return decode_jpeg(payload)
-        except ValueError:
-            # genuinely corrupt / exotic JPEG (arithmetic coding,
-            # 12-bit, hierarchical): fall through to the
-            # external-library path (PIL decodes it on a real cluster;
-            # in-sandbox it raises and the row routes as corrupt)
-            arr = _decode_real(payload, kind)
-            return arr, tuple(arr.shape)
     if payload[:6] in (b"GIF87a", b"GIF89a"):
         from webalizer_spark.operators.gif import decode_gif
         frames, shape = decode_gif(payload)
@@ -490,14 +420,8 @@ def decode_media(payload: bytes, kind: str) -> tuple[np.ndarray, tuple[int, ...]
     if payload[:2] == b"BM":
         return decode_bmp(payload)
     if payload[:4] == b"RIFF":
-        if payload[8:12] == b"AVI ":
-            from webalizer_spark.operators.avi import decode_avi_mjpeg
-            return decode_avi_mjpeg(payload)
         samples, _sr = decode_wav(payload)
         return samples, (len(samples),)
-    if payload[:4] == b"\x00\x00\x01\xb3":
-        from webalizer_spark.operators.mpeg1 import decode_mpeg1
-        return decode_mpeg1(payload)
     if (len(payload) >= 14
             and payload[4:6] in (b"\x12\xaf", b"\x11\xaf")
             and payload[12:14] == b"\x08\x00"):
@@ -878,8 +802,8 @@ def video_near_dup_pairs(media: DataFrame, max_hamming: int = 10,
                          n_blocks: int = 16,
                          max_block_freq: int | None = None) -> DataFrame:
     """Near-duplicate video pairs through the shared pigeonhole
-    Hamming join (bits=64): re-encodes of the same footage (e.g. Y4M
-    master vs its MPEG-1 encode) land within a small Hamming distance
+    Hamming join (bits=64): re-encodes of the same footage (e.g. a Y4M
+    master vs a lossy re-encode) land within a small Hamming distance
     because lossy coding perturbs frame means only slightly."""
     from webalizer_spark.operators.dedup import simhash_pairs
 

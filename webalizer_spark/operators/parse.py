@@ -73,7 +73,6 @@ def parse_transcripts_multi(
     cfg: EngineConfig = DEFAULT_CONFIG,
     format_col: str | None = None,
     w3c_fields: list[str] | None = None,
-    auto_w3c: bool = True,
     drop_directives: bool = True,
 ) -> DataFrame:
     """S2 end-to-end: LogType-dispatched parse producing the SAME typed
@@ -95,7 +94,7 @@ def parse_transcripts_multi(
         w3c_field_order,
     )
 
-    if w3c_fields is None and auto_w3c:
+    if w3c_fields is None:
         # one metadata-cheap pass over directive rows only
         try:
             w3c_fields = w3c_field_order(df)

@@ -29,9 +29,6 @@ Two physical strategies, identical output (property-tested):
                           the first spanning key of each partition.
                           Wall-clock is O(rows/partitions), independent of
                           the hottest key.
-
-Streaming twin: streaming/session_stream.py uses
-groupBy(session_window(ts, timeout), conv_id) — same 1800 s semantics.
 """
 
 from __future__ import annotations

@@ -201,8 +201,6 @@ def resume_filter(df: DataFrame, ckpt: CheckpointPaths,
     The caller must feed only new data in this mode (a full re-read would
     re-fold already-processed records, exactly as re-running the
     reference over an old log would double-count under FoldSeqErr).
-    The streaming twin is the watermark-late-data policy
-    (streaming/session_stream.py).
 
     keep_directives: W3C '#'-prefixed directive rows are format METADATA,
     not data records — each incremental batch needs the #Fields: row to
