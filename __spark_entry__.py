@@ -24,8 +24,8 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001: the engine's core chain —
     30-min gap-and-island sessionization over (user_id, ts, event_id),
     per-session entry pages via min_by, deterministic top-N — on the
-    driver's events table. (The full transcript pipeline runs as the
-    tr_* queries and in tests/bench.)"""
+    events table. (The full transcript pipeline runs in the CLI job,
+    tests and bench.)"""
     from pyspark.sql import functions as F
 
     from webalizer_spark.operators.sessionize import sessionize

@@ -133,7 +133,7 @@ def main() -> None:
         tr = resume_filter(tr, ckpt, keep_directives=(args.grok == "multi"))
         # session numbering continues the saved per-conv state
         sessionizer = lambda df: resume_sessionize(  # noqa: E731
-            df, ckpt, cfg.visit_timeout_s)
+            df, ckpt, cfg.visit_timeout_s, skew_safe=args.skew_safe)
 
     res = run_pipeline(spark, tr, dims, cfg=cfg, grok_strategy=args.grok,
                        skew_safe=args.skew_safe, sessionizer=sessionizer)

@@ -63,10 +63,12 @@ def test_cli_incremental_resume(tmp_path):
     # checkpoint state tracks the parse-OK spine, not raw input
     assert m1["total_rows"] == s1["by_role"] and m1["version"] == 1
 
-    # resume over the FULL input: only rows past the watermark process
+    # resume over the FULL input: only rows past the watermark process;
+    # --skew-safe routes the resumed batch through the range-partitioned
+    # sessionizer (the fixture has a hot conv)
     out2 = str(tmp_path / "out2")
     stdout2 = _run_cli("--input", full, "--output", out2,
-                       "--checkpoint", ckpt, "--incremental")
+                       "--checkpoint", ckpt, "--incremental", "--skew-safe")
     assert f"{n_total - n_half} records" in stdout2
     with open(os.path.join(out2, "_metrics.json")) as f:
         s2 = json.load(f)["sinks"]
@@ -77,14 +79,15 @@ def test_cli_incremental_resume(tmp_path):
     assert m2["version"] == 2
 
     # cumulative daily state equals a single full non-incremental run's
+    # (visits too: the resumed sessionizer continues the saved numbering)
     daily = duckdb.sql(
-        f"SELECT CAST(SUM(hits) AS BIGINT) FROM "
-        f"'{ckpt}/v=2/daily_state/*.parquet'").fetchone()[0]
+        f"SELECT CAST(SUM(hits) AS BIGINT), CAST(SUM(visits) AS BIGINT) "
+        f"FROM '{ckpt}/v=2/daily_state/*.parquet'").fetchone()
     out3 = str(tmp_path / "out3")
     _run_cli("--input", full, "--output", out3)
     full_daily = duckdb.sql(
-        f"SELECT CAST(SUM(hits) AS BIGINT) FROM "
-        f"'{out3}/reports/daily/*.parquet'").fetchone()[0]
+        f"SELECT CAST(SUM(hits) AS BIGINT), CAST(SUM(visits) AS BIGINT) "
+        f"FROM '{out3}/reports/daily/*.parquet'").fetchone()
     assert daily == full_daily
 
     # history table upserted with month rows

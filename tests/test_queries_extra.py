@@ -12,10 +12,11 @@ SF = "/root/testdata/sf0.01"
 
 
 def test_ungraded_split_and_redact_match_duckdb(spark):
-    """The round-5 ungraded oracle rows (hash_split buckets, PII
-    redaction) match their DuckDB twins bit-exact — same check the
-    driver runs for graded rows, executed here because the graded
-    window is capped at 50."""
+    """Every UNGRADED oracle row that no headline bench leaf gates (plus
+    some rows since rotated into the graded window) matches its DuckDB
+    twin bit-exact — the canon comparison tools/verify_queries.py runs
+    for graded rows, executed here because the graded window is capped
+    at 50."""
     import os
     import sys
 
@@ -39,7 +40,15 @@ def test_ungraded_split_and_redact_match_duckdb(spark):
                  "doc_mixture_rows", "doc_tfidf_top", "evt_pagerank",
                  "doc_chunks", "doc_blocklist", "doc_normalize",
                  "evt_anomalies", "evt_cohorts", "evt_funnel",
-                 "doc_quality_bins", "evt_ip_class"):
+                 "doc_quality_bins", "evt_ip_class",
+                 "evt_hour_profile", "evt_month_summary", "doc_lang_id",
+                 "doc_quality", "emb_lsh_signatures",
+                 "doc_near_dup_keep_best", "doc_decontam_bloom",
+                 "doc_corpus_diff", "doc_sentences", "doc_sentence_chunks",
+                 "doc_containment", "evt_top_values", "doc_remove_seen",
+                 "doc_entropy", "doc_line_dedup", "doc_html_text",
+                 "doc_c4_lines", "doc_dsir_weights", "doc_dsir_sample",
+                 "evt_url_canon", "evt_robots", "tr2_haproxy"):
         sdf = ALL_Q[name](spark, SF).toPandas()
         odf = con.sql(ALL_O[name]).df()
         sc, sr = canon(sdf)

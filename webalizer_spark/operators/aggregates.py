@@ -14,7 +14,7 @@ replaces the reference's bounded in-memory tables. Metric vocabulary:
   sites   = distinct conv_id [hashtab.c t_site = node count]
 
 Multi-grain time tables (hourly/daily/monthly [webalizer.c counter block])
-use date_trunc; month+day+hour in ONE shuffle via rollup() when asked.
+use date_trunc.
 At 100 TB every one of these is a single AQE-coalesced shuffle whose key
 cardinality (hours, tools, statuses...) is tiny, so partial aggregation
 collapses virtually all input map-side — hot conv_ids do not skew any
@@ -59,10 +59,6 @@ def SITES() -> Column:
     return F.countDistinct("conv_id").alias("sites")
 
 
-def CORE_METRICS() -> list[Column]:
-    return [HITS(), FILES(), PAGES(), ERRORS(), KBYTES()]
-
-
 def _pages_for(df: DataFrame) -> Column:
     """PageType-aware pages metric: pipeline spines carry a conf-driven
     is_page column (filters.page_predicate); plain frames use the fixed
@@ -94,19 +90,6 @@ def hour_of_day_profile(df: DataFrame, ts_col: str = "ts") -> DataFrame:
     """A7 variant: the reference's hourly table is hour-OF-DAY within the
     month [webalizer.c th_* arrays] — a 24-row profile."""
     return df.groupBy(F.hour(ts_col).alias("hour")).agg(*_core_for(df))
-
-
-def multi_grain_rollup(df: DataFrame, ts_col: str = "ts") -> DataFrame:
-    """A9 note: month+day+hour grains in ONE shuffle via rollup, with
-    grouping_id distinguishing the grain of each output row."""
-    return (
-        df.rollup(
-            _grain(ts_col, "month"),
-            _grain(ts_col, "day"),
-            _grain(ts_col, "hour"),
-        )
-        .agg(*_core_for(df), F.grouping_id().alias("grain_id"))
-    )
 
 
 def per_site(df: DataFrame) -> DataFrame:
@@ -201,17 +184,6 @@ def grouped_rollup(df: DataFrame, key: str,
             | (~F.col("is_group") & F.col(key).isNotNull())
         )
         .drop("_gkey")
-    )
-
-
-def averages_and_maxima(daily: DataFrame) -> DataFrame:
-    """A14: per-day averages and maxima for the month-total table and
-    graph y-axis scaling [output.c month_total_table; graphs.c]."""
-    return daily.agg(
-        F.avg("hits").alias("avg_hits"), F.max("hits").alias("max_hits"),
-        F.avg("files").alias("avg_files"), F.max("files").alias("max_files"),
-        F.avg("pages").alias("avg_pages"), F.max("pages").alias("max_pages"),
-        F.avg("kbytes").alias("avg_kbytes"), F.max("kbytes").alias("max_kbytes"),
     )
 
 

@@ -6,16 +6,14 @@ frame-sample run as Arrow-batched Python over mapInPandas (the only hot
 path where Python is justified: codec libraries are not expressible as
 Catalyst expressions).
 
-Codec status: BMP (24-bit uncompressed), WAV (PCM16 mono), PNG (8-bit
-gray/RGB non-interlaced; stdlib zlib inflate + numpy unfilter incl. the
-Paeth predictor), GIF87a/89a (operators/gif.py) and FLAC (RFC 9639
-subset, operators/flac.py, lossless) are REAL codecs implemented here —
-the fixture generator emits genuine .bmp/.wav/.png/.gif/.flac payloads,
-and the feature/resize paths decode them like any external tool would.
-Video ships as REAL YUV4MPEG2 (C420 luma) streams, animated GIFs and
-delta-coded FLC (operators/flic.py) any ffmpeg reads.
-Formats needing external libraries (JPEG, MPEG and other DCT or
-entropy-coded codecs) go through `_decode_real`, which raises
+Codec status: BMP (24-bit uncompressed), WAV (PCM16 mono) and PNG
+(8-bit gray/RGB non-interlaced; stdlib zlib inflate + numpy unfilter
+incl. the Paeth predictor) are REAL codecs implemented here — the
+fixture generator emits genuine .bmp/.wav/.png payloads, and the
+feature/resize paths decode them like any external tool would. Video
+ships as REAL YUV4MPEG2 (C420 luma) streams any ffmpeg reads.
+Formats needing external libraries (JPEG, GIF, FLAC, MPEG and other
+compressed codecs) go through `_decode_real`, which raises
 NotImplementedError behind an import-try (PIL / soundfile are not
 dependencies of this package), so such rows route as corrupt; the deterministic
 fake container covers those rows in tests. decode_media() sniffs the
@@ -297,15 +295,13 @@ def decode_wav(payload: bytes) -> tuple[np.ndarray, int]:
 
 def gen_media(out_dir: str, n: int = 200, seed: int = 42) -> str:
     """Deterministic media fixture. Image rows rotate through REAL
-    grayscale-palette GIFs (i%24==6), REAL 24-bit BMPs (other even i),
-    REAL Paeth-filtered PNGs (i%12==3) and the fake container (i%12==9,
-    keeping the _decode_fake image branch fixture-covered); audio rows
-    rotate through REAL PCM16 WAVs (i odd), REAL FLAC streams (i%12==4)
+    24-bit BMPs (even i), REAL Paeth-filtered PNGs (i%12==3) and the
+    fake container (i%12==9, keeping the _decode_fake image branch
+    fixture-covered); audio rows rotate through REAL PCM16 WAVs (i odd)
     and the fake container; video rows are REAL YUV4MPEG2 streams
-    (i%6==2), REAL ANIMATED GIFs (i%24==11), REAL INTER-FRAME FLCs
-    (i%48==23 — DELTA_FLC coded frames) or the self-describing fake
-    container (standing in for codecs that need external libraries and
-    keeping that branch fixture-covered)."""
+    (i%6==2) or the self-describing fake container (standing in for
+    codecs that need external libraries and keeping that branch
+    fixture-covered)."""
     rng = np.random.default_rng(seed)
     rows = []
     kinds = ["image", "audio", "video"]
@@ -317,39 +313,17 @@ def gen_media(out_dir: str, n: int = 200, seed: int = 42) -> str:
         nf = int(rng.integers(4, 32)) if kind == "video" else 1
         body_len = w * h if kind == "image" else (nf * 64 if kind == "video" else 1024)
         body = rng.integers(0, 256, body_len, dtype=np.uint8)
-        if kind == "image" and i % 24 == 6:
-            from webalizer_spark.operators.gif import encode_gif
-            payload = encode_gif(body.reshape(h, w))
-        elif kind == "image" and i % 2 == 0:
+        if kind == "image" and i % 2 == 0:
             payload = encode_bmp24(body.reshape(h, w))
         elif kind == "image" and i % 12 == 3:
             payload = encode_png(body.reshape(h, w))
         elif kind == "audio" and i % 2 == 1:
             payload = encode_wav_pcm16(
                 (body.astype(np.int16) - 128) * 256, sr)
-        elif kind == "audio" and i % 12 == 4:
-            from webalizer_spark.operators.flac import encode_flac
-            payload = encode_flac(
-                (body.astype(np.int16) - 128) * 256, sr)
         elif kind == "video" and i % 6 == 2:
             w2, h2 = max(w // 2 * 2, 8), max(h // 2 * 2, 8)
             payload = encode_y4m(
                 rng.integers(0, 256, (nf, h2, w2), dtype=np.uint8))
-        elif kind == "video" and i % 24 == 11:
-            from webalizer_spark.operators.gif import encode_gif
-            pal = rng.integers(0, 256, (16, 3), dtype=np.uint8)
-            payload = encode_gif(
-                pal[rng.integers(0, 16, (nf, h, w))].astype(np.uint8))
-        elif kind == "video" and i % 48 == 23:
-            from webalizer_spark.operators.flic import encode_flc
-            base = rng.integers(0, 256, (h, w), dtype=np.uint8)
-            fr = np.stack([base] * nf).copy()
-            for fi in range(1, nf):       # sparse deltas, like real anims
-                ys = rng.integers(0, h, 4)
-                xs = rng.integers(0, w, 4)
-                fr[fi] = fr[fi - 1]
-                fr[fi, ys, xs] = rng.integers(0, 256, 4)
-            payload = encode_flc(fr)
         else:
             payload = (_MAGIC + struct.pack("<IIII", w, h, sr, nf)
                        + body.tobytes())
@@ -371,10 +345,9 @@ def gen_media(out_dir: str, n: int = 200, seed: int = 42) -> str:
 
 def _decode_real(payload: bytes, kind: str) -> np.ndarray:
     """External-library codec path — requires PIL/av, which this
-    package does not depend on. JPEG, MPEG and other DCT or
-    entropy-coded formats land here: BMP/PNG/GIF images, WAV/FLAC
-    audio, and y4m + animated-GIF + delta-coded FLC video all decode
-    natively above."""
+    package does not depend on. JPEG, GIF, FLAC, MPEG and other
+    compressed formats land here: BMP/PNG images, WAV audio and y4m
+    video all decode natively above."""
     try:
         import PIL.Image  # noqa: F401
     except ImportError as e:
@@ -401,38 +374,17 @@ def decode_media(payload: bytes, kind: str) -> tuple[np.ndarray, tuple[int, ...]
     the deterministic fake container next, external-library formats
     last."""
     if payload[:4] == _MAGIC:
-        # exact 4-byte container magic checked FIRST: the FLIC sniff
-        # below is only 2 bytes at offset 4, and a fake payload whose
-        # width field's low 16 bits happen to equal 0xAF12/0xAF11
-        # would misroute to decode_flc (round-5 advice)
+        # exact 4-byte container magic checked FIRST, so no later sniff
+        # can claim a fake payload
         return _decode_fake(payload, kind)
     if payload[:8] == _PNG_SIG:
         return decode_png(payload)
     if payload[:9] == b"YUV4MPEG2":
         return decode_y4m(payload)
-    if payload[:6] in (b"GIF87a", b"GIF89a"):
-        from webalizer_spark.operators.gif import decode_gif
-        frames, shape = decode_gif(payload)
-        if shape[0] == 1 and kind == "image":
-            img = np.ascontiguousarray(frames[0])
-            return img, tuple(img.shape)
-        return frames, shape
     if payload[:2] == b"BM":
         return decode_bmp(payload)
     if payload[:4] == b"RIFF":
         samples, _sr = decode_wav(payload)
-        return samples, (len(samples),)
-    if (len(payload) >= 14
-            and payload[4:6] in (b"\x12\xaf", b"\x11\xaf")
-            and payload[12:14] == b"\x08\x00"):
-        # FLIC's magic is weak (2 bytes at offset 4), so also require a
-        # plausible header: depth field == 8, the only depth FLI/FLC
-        # defines
-        from webalizer_spark.operators.flic import decode_flc
-        return decode_flc(payload)
-    if payload[:4] == b"fLaC":
-        from webalizer_spark.operators.flac import decode_flac
-        samples, _sr = decode_flac(payload)
         return samples, (len(samples),)
     arr = _decode_real(payload, kind)
     return arr, tuple(arr.shape)
@@ -596,11 +548,8 @@ def decode_audio(payload: bytes,
     header rate, which feature extraction needs). The fake container
     has no header rate; meta_sr supplies the metadata column's value
     there (required in that case)."""
-    if payload[:4] == b"RIFF" and payload[8:12] != b"AVI ":
+    if payload[:4] == b"RIFF":
         return decode_wav(payload)
-    if payload[:4] == b"fLaC":
-        from webalizer_spark.operators.flac import decode_flac
-        return decode_flac(payload)
     s, _shape = decode_media(payload, "audio")
     if meta_sr is None:
         raise ValueError("fake-container audio needs the metadata rate")
@@ -619,7 +568,7 @@ def audio_features(media: DataFrame, batch_size: int = 64) -> DataFrame:
     rate (fraction of adjacent sample pairs changing sign — the classic
     cheap voiced/unvoiced and noisiness proxy) and spectral centroid in
     Hz (rFFT magnitude-weighted mean frequency — "brightness"), plus the
-    true sample rate read from the WAV/FLAC header (the fake container
+    true sample rate read from the WAV header (the fake container
     falls back to its metadata column). Pure numpy in one Arrow-batched
     mapInPandas pass; payloads never shuffle; corrupt rows route as
     ok=false like extract_features."""
@@ -674,8 +623,8 @@ def _audio_fp64(x: np.ndarray) -> int:
     (E[t+1,b] - E[t+1,b+1]) - (E[t,b] - E[t,b+1]) for t,b in 0..7 —
     64 bits, packed t-major. Uniform gain scales every E by g^2 and
     double-differencing is linear, so the sign (hence the whole
-    fingerprint) is EXACTLY gain-invariant; lossless containers of the
-    same samples (WAV vs FLAC) hash identically. Pure numpy."""
+    fingerprint) is EXACTLY gain-invariant; any container carrying the
+    same samples hashes identically. Pure numpy."""
     x = x.astype(np.float64)
     n = len(x)
     if n < 18:

@@ -47,8 +47,7 @@ def sessionize(df: DataFrame, timeout_s: int = 1800,
                tiebreak: str = "turn_idx") -> DataFrame:
     """Append is_new_session (boolean) and session_seq (1-based per key).
 
-    session_id = (key, session_seq) composite; a string form is available
-    via session_id_col().
+    session_id = (key, session_seq) composite.
     """
     w = Window.partitionBy(key).orderBy(ts_col, tiebreak)
     # NTZ-safe epoch seconds: session tz is pinned UTC, so NTZ->LTZ->long
@@ -63,10 +62,6 @@ def sessionize(df: DataFrame, timeout_s: int = 1800,
           .withColumn("session_seq",
                       F.sum(F.col("is_new_session").cast("long")).over(run))
     )
-
-
-def session_id_col(key: str = "conv_id") -> F.Column:
-    return F.concat_ws("#", F.col(key), F.col("session_seq"))
 
 
 # ---------------------------------------------------------------------------

@@ -15,14 +15,12 @@ Determinism rules used throughout so the two engines are BIT-equal:
   - session gaps use floor-to-second epochs on both sides (matches the
     reference's second-granularity timestamps [webalizer.c ƒjdate]).
 
-The transcript-pipeline queries (tr_*) run on the deterministic synthetic
-fixture (datagen.py) because the transcript table is not one of the
-driver's DuckDB views — the driver records rows-only checks for them;
-full value assertions for those live in tests/ against the pandas
-mini-oracle. The tr2_* family (queries_synth.py) closes that oracle gap:
-CLF lines are synthesized identically from the driver's `events` view on
-both sides, so grok/parse/error-routing/search/mangle are hash-checked
-bit-exact against DuckDB as well.
+The transcript table is not one of the oracle's DuckDB views, so the
+transcript parse path is graded through the tr2_* family
+(queries_synth.py): CLF lines are synthesized identically from the
+`events` view on both sides, so grok/parse/error-routing/
+search/mangle are hash-checked bit-exact against DuckDB. The pipeline
+sinks themselves are checked in tests/ against the pandas mini-oracle.
 """
 
 from __future__ import annotations
@@ -33,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from webalizer_spark.operators import aggregates as A  # noqa: F401 (parity)
-from webalizer_spark.operators.sessionize import entry_exit, sessionize
+from webalizer_spark.operators.sessionize import sessionize
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE: dict[str, str] = {}
@@ -136,45 +134,6 @@ _DSUM_SQL = "CAST(SUM(CAST({c} AS DECIMAL(18,6))) AS DOUBLE)"
 # (user_id ~ site/conv, event_type ~ tool/url, value ~ bytes)
 # =========================================================================
 
-@qu("evt_top_event_types", f"""
-SELECT event_type,
-       COUNT(*) AS hits,
-       {_DSUM_SQL.format(c='value')} AS total_value,
-       ROUND(COUNT(*) * 100.0 / SUM(COUNT(*)) OVER (), 4) AS pct
-FROM events GROUP BY event_type
-""")
-def evt_top_event_types(spark, sf):
-    """A2/T2 analog + F10: per-dimension agg feeding the top-N table,
-    with the %-of-total share column every reference table prints
-    [output.c table bodies] via topn.with_share.
-    Ungraded since r5: A2/T2/F10 are graded first-party by
-    tr2_top_tools (same operators over the parse path); slot freed for
-    tr2_resume."""
-    from webalizer_spark.operators.topn import with_share
-    agg = _t(spark, sf, "events").groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("hits"),
-        _dsum("value").alias("total_value"),
-    )
-    return with_share(agg, "hits")
-
-
-@qu("evt_hourly_totals", f"""
-SELECT date_trunc('hour', ts) AS hour_ts,
-       COUNT(*) AS hits,
-       COUNT(DISTINCT user_id) AS sites,
-       {_DSUM_SQL.format(c='value')} AS total_value
-FROM events GROUP BY 1
-""")
-def evt_hourly_totals(spark, sf):
-    """A7: hourly totals table [webalizer.c th_* arrays]."""
-    return _t(spark, sf, "events").groupBy(
-        F.date_trunc("hour", "ts").alias("hour_ts")).agg(
-        F.count(F.lit(1)).alias("hits"),
-        F.countDistinct("user_id").alias("sites"),
-        _dsum("value").alias("total_value"),
-    )
-
-
 @qu("evt_daily_totals", f"""
 SELECT date_trunc('day', ts) AS day_ts,
        COUNT(*) AS hits,
@@ -202,8 +161,9 @@ SELECT CAST(hour(ts) AS INT) AS hour, COUNT(*) AS hits
 FROM events GROUP BY 1
 """)
 def evt_hour_profile(spark, sf):
-    """A7 variant: 24-row hour-of-day profile. Ungraded: subsumed by
-    evt_hourly_totals (same operator, richer row)."""
+    """A7: 24-row hour-of-day profile [webalizer.c th_* arrays].
+    Ungraded: the (day, hour) rollup leaf evt_rollup covers the
+    same grain."""
     return _t(spark, sf, "events").groupBy(
         F.hour("ts").cast("int").alias("hour")).agg(
         F.count(F.lit(1)).alias("hits"))
@@ -293,43 +253,6 @@ def evt_month_summary(spark, sf):
     return sess.crossJoin(F.broadcast(am))
 
 
-@qu("evt_entry_types", _SESSION_CTE + """
-, r AS (
-  SELECT *, row_number() OVER (PARTITION BY user_id, session_seq
-                               ORDER BY ts, event_id) AS rn
-  FROM s
-)
-SELECT event_type AS page, COUNT(*) AS entries FROM r WHERE rn = 1 GROUP BY 1
-""")
-def evt_entry_types(spark, sf):
-    """W2: entry-page counts (first event of each session).
-    Ungraded since r4: subsumed by the composed lifecycle oracle
-    tr2_sessions, which grades entry pages through parse -> sessionize
-    -> entry_exit end-to-end."""
-    sess = _evt_sessions(spark, sf)
-    # every event counts as a 'page' here (event_type is never NULL)
-    per = sess.groupBy("user_id", "session_seq").agg(
-        F.min_by("event_type", F.struct("ts", "event_id")).alias("page"))
-    return per.groupBy("page").agg(F.count(F.lit(1)).alias("entries"))
-
-
-@qu("evt_exit_types", _SESSION_CTE + """
-, r AS (
-  SELECT *, row_number() OVER (PARTITION BY user_id, session_seq
-                               ORDER BY ts DESC, event_id DESC) AS rn
-  FROM s
-)
-SELECT event_type AS page, COUNT(*) AS exits FROM r WHERE rn = 1 GROUP BY 1
-""")
-def evt_exit_types(spark, sf):
-    """W3: exit-page counts (last event of each session).
-    Ungraded since r4: subsumed by tr2_sessions (see evt_entry_types)."""
-    sess = _evt_sessions(spark, sf)
-    per = sess.groupBy("user_id", "session_seq").agg(
-        F.max_by("event_type", F.struct("ts", "event_id")).alias("page"))
-    return per.groupBy("page").agg(F.count(F.lit(1)).alias("exits"))
-
-
 @q("evt_top_users_by_value", f"""
 WITH agg AS (
   SELECT user_id, COUNT(*) AS hits,
@@ -352,34 +275,6 @@ def evt_top_users_by_value(spark, sf):
         .select("rank", "user_id", "hits", "total_value")
 
 
-@qu("evt_type_share", """
-SELECT event_type, COUNT(*) AS hits,
-       ROUND(COUNT(*) * 100.0 / SUM(COUNT(*)) OVER (), 4) AS pct
-FROM events GROUP BY event_type
-""")
-def evt_type_share(spark, sf):
-    """F10: percent-of-total share math [output.c pie tables].
-    Ungraded: the pct column is folded into evt_top_event_types."""
-    from webalizer_spark.operators.topn import with_share
-    agg = _t(spark, sf, "events").groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("hits"))
-    return with_share(agg, "hits")
-
-
-@qu("evt_json_extract", """
-SELECT event_type,
-       CAST(SUM(CAST(json_extract(props, '$.k') AS BIGINT)) AS BIGINT) AS k_sum,
-       COUNT(*) AS hits
-FROM events GROUP BY event_type
-""")
-def evt_json_extract(spark, sf):
-    """S2 sidecar: structured payload extraction (props JSON)."""
-    return _t(spark, sf, "events").groupBy("event_type").agg(
-        F.sum(F.get_json_object("props", "$.k").cast("bigint")).alias("k_sum"),
-        F.count(F.lit(1)).alias("hits"),
-    )
-
-
 @q("evt_value_range_join", f"""
 WITH ranges(lo, hi, size_class) AS (
   VALUES (0.0, 5.0, 'low'), (5.0, 15.0, 'mid'), (15.0, 1e9, 'high')
@@ -399,42 +294,6 @@ def evt_value_range_join(spark, sf):
             .groupBy("size_class")
             .agg(F.count(F.lit(1)).alias("hits"),
                  _dsum("value").alias("total_value")))
-
-
-@qu("evt_ignore_filter", """
-SELECT date_trunc('day', ts) AS day_ts, COUNT(*) AS hits
-FROM events WHERE event_type NOT IN ('error') GROUP BY 1
-""")
-def evt_ignore_filter(spark, sf):
-    """P2: Ignore-list pre-aggregation filter (pushdown). Ungraded:
-    evt_wildcard_filter covers P2+P3 through the engine's own wildcard
-    grammar (this is the plain-literal special case)."""
-    return (_t(spark, sf, "events")
-            .filter(~F.col("event_type").isin("error"))
-            .groupBy(F.date_trunc("day", "ts").alias("day_ts"))
-            .agg(F.count(F.lit(1)).alias("hits")))
-
-
-@qu("evt_grouping_sets", """
-SELECT event_type, date_trunc('day', ts) AS day_ts, COUNT(*) AS hits,
-       CAST(GROUPING(event_type) AS INT) AS g_type,
-       CAST(GROUPING(date_trunc('day', ts)) AS INT) AS g_day
-FROM events
-GROUP BY GROUPING SETS ((event_type), (date_trunc('day', ts)))
-""")
-def evt_grouping_sets(spark, sf):
-    """A12: GROUPING SETS — per-type and per-day aggregates in ONE shuffle.
-    Ungraded since r4: the same groupingSets machinery is graded through
-    evt_grouped_rollup (richer: named groups + is_group flag); slot
-    reassigned to the first-party A3/A4/A11 oracles (tr2_per_*)."""
-    ev = _t(spark, sf, "events").withColumn(
-        "day_ts", F.date_trunc("day", "ts"))
-    return (ev.groupingSets([[F.col("event_type")], [F.col("day_ts")]],
-                            F.col("event_type"), F.col("day_ts"))
-            .agg(F.count(F.lit(1)).alias("hits"),
-                 F.grouping("event_type").cast("int").alias("g_type"),
-                 F.grouping("day_ts").cast("int").alias("g_day"))
-            .select("event_type", "day_ts", "hits", "g_type", "g_day"))
 
 
 @qu("evt_rollup", """
@@ -535,29 +394,6 @@ def tpch_join_agg(spark, sf):
                  .cast("string").alias("revenue")))
 
 
-@qu("tpch_top_parts", f"""
-WITH agg AS (
-  SELECT l_partkey, {_DSUM_SQL.format(c='l_quantity')} AS total_qty,
-         COUNT(*) AS hits
-  FROM lineitem GROUP BY l_partkey
-), r AS (
-  SELECT *, row_number() OVER (ORDER BY total_qty DESC, l_partkey ASC) AS rank
-  FROM agg
-)
-SELECT CAST(rank AS INT) AS rank, l_partkey, total_qty, hits
-FROM r WHERE rank <= 10
-""")
-def tpch_top_parts(spark, sf):
-    """T2: top-N over a larger key space, deterministic tie-break.
-    N-cut first (TakeOrderedAndProject), then bounded window-free rank —
-    no partition-less window over the full part key space."""
-    from webalizer_spark.operators.topn import with_rank
-    agg = _t(spark, sf, "lineitem").groupBy("l_partkey").agg(
-        _dsum("l_quantity").alias("total_qty"), F.count(F.lit(1)).alias("hits"))
-    return with_rank(agg, "total_qty", "l_partkey", 10) \
-        .select("rank", "l_partkey", "total_qty", "hits")
-
-
 @q("tpch_semi_anti", """
 SELECT
   (SELECT COUNT(*) FROM customer c
@@ -612,21 +448,6 @@ def doc_dedup_exact(spark, sf):
         F.count(F.lit(1)).alias("n_docs"),
         F.countDistinct(F.md5("text")).alias("n_unique"),
         (F.count(F.lit(1)) - F.countDistinct(F.md5("text"))).alias("n_dup_rows"),
-    )
-
-
-@qu("doc_fingerprint", """
-SELECT source,
-       COUNT(DISTINCT substr(md5(text), 1, 16)) AS distinct_fps,
-       COUNT(*) AS docs
-FROM documents GROUP BY source
-""")
-def doc_fingerprint(spark, sf):
-    """Document fingerprinting: stable 64-bit content fingerprint."""
-    d = _t(spark, sf, "documents")
-    return d.groupBy("source").agg(
-        F.countDistinct(F.substring(F.md5("text"), 1, 16)).alias("distinct_fps"),
-        F.count(F.lit(1)).alias("docs"),
     )
 
 
@@ -738,25 +559,6 @@ def doc_minhash_lsh_pairs(spark, sf):
             .select(F.col("a.doc_id").alias("doc_a"),
                     F.col("b.doc_id").alias("doc_b"))
             .distinct())
-
-
-@qu("doc_token_stats", """
-SELECT source, COUNT(*) AS docs,
-       CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS total_tokens,
-       CAST(SUM(length(text)) AS BIGINT) AS total_chars,
-       ROUND(AVG(len(string_split(text, ' '))), 6) AS avg_tokens
-FROM documents GROUP BY source
-""")
-def doc_token_stats(spark, sf):
-    """Token counting (whitespace tokenizer) per source."""
-    d = _t(spark, sf, "documents").withColumn(
-        "ntok", F.size(F.split("text", " ")))
-    return d.groupBy("source").agg(
-        F.count(F.lit(1)).alias("docs"),
-        F.sum("ntok").alias("total_tokens"),
-        F.sum(F.length("text")).alias("total_chars"),
-        F.round(F.avg("ntok"), 6).alias("avg_tokens"),
-    )
 
 
 @qu("doc_lang_id", """
@@ -1034,71 +836,6 @@ def doc_simhash(spark, sf):
     bit = F.when(F.col("w") >= 0,
                  F.pow(F.lit(2), F.col("j")).cast("bigint")).otherwise(F.lit(0))
     return per_bit.groupBy("doc_id").agg(F.sum(bit).cast("bigint").alias("simhash"))
-
-
-# =========================================================================
-# transcripts — flagship pipeline queries on the deterministic fixture
-# (rows-only for the driver: the transcript table is not a DuckDB view;
-#  full value assertions live in tests/test_pipeline.py vs the pandas
-#  mini-oracle)
-# =========================================================================
-
-_FIXTURE_BASE = "/root/repo/_gen"
-
-
-def _fixture(spark):
-    from webalizer_spark.datagen import ensure_fixture
-    d = ensure_fixture(_FIXTURE_BASE)
-    tr = spark.read.parquet(f"{d}/transcripts.parquet")
-    dims = {n: spark.read.parquet(f"{d}/{n}.parquet")
-            for n in ["role_class", "tool_family", "byte_ranges",
-                      "engine_params", "name_groups"]}
-    return tr, dims
-
-
-_TR_MEMO: dict[int, object] = {}
-
-
-def _tr_pipeline(spark):
-    """One pipeline run shared by every tr_* query in a session — the
-    driver calls each query separately; re-running the full pipeline per
-    report would defeat the one-scan design."""
-    from webalizer_spark.plans.pipeline import run_pipeline
-    key = id(spark)
-    if key not in _TR_MEMO:
-        tr, dims = _fixture(spark)
-        _TR_MEMO[key] = run_pipeline(spark, tr, dims)
-    return _TR_MEMO[key]
-
-
-@qu("tr_top_tools")
-def tr_top_tools(spark, sf):
-    """Flagship: parse->enrich->sessionize->top tools by calls (T2)."""
-    return _tr_pipeline(spark).reports["top_tools"]
-
-
-@qu("tr_daily_totals")
-def tr_daily_totals(spark, sf):
-    """Pipeline daily table: hits/files/pages/errors/kbytes/sites/visits."""
-    return _tr_pipeline(spark).reports["daily"]
-
-
-@qu("tr_status_histogram")
-def tr_status_histogram(spark, sf):
-    """Response-code histogram grokked out of the text column (A10)."""
-    return _tr_pipeline(spark).reports["status_codes"]
-
-
-@qu("tr_errors_sink")
-def tr_errors_sink(spark, sf):
-    """Bad-record routing: corrupt lines -> errors sink (S4)."""
-    return _tr_pipeline(spark).errors
-
-
-@qu("tr_search_terms")
-def tr_search_terms(spark, sf):
-    """Referrer search-term extraction + top table (J4/F4/A6)."""
-    return _tr_pipeline(spark).reports["top_search"]
 
 
 @q("doc_token_bpe", r"""
@@ -1495,7 +1232,7 @@ def doc_winnow_fingerprints(spark, sf):
     rightmost-min selection — the MOSS local-copy-detection algorithm):
     any shared run of >= window+k-1 tokens between two docs contributes
     at least one COMMON fingerprint, which whole-document hashing
-    (doc_fingerprint) cannot offer. The oracle re-derives the sliding
+    cannot offer. The oracle re-derives the sliding
     window minimum with DuckDB window functions over an independent
     k-gram expansion."""
     from webalizer_spark.operators.dedup import winnow_fingerprints
@@ -2237,117 +1974,6 @@ def doc_sentence_chunks(spark, sf):
     return chunk_by_sentences(synth, max_tokens=12)
 
 
-@qu("doc_prep_pipeline", """
-WITH t AS (
-  SELECT doc_id, string_split(coalesce(text, ''), ' ') AS toks,
-         CAST(doc_id % 3 + 5 AS INTEGER) AS w
-  FROM documents
-), np AS (
-  SELECT doc_id, toks, w,
-         CAST(floor((len(toks) + w - 1) / w) AS INTEGER) AS n
-  FROM t
-), lines0 AS (
-  -- mk(jj): paragraph jj's final text (chunk + cookie + punct);
-  -- every 3rd paragraph is a COPY of paragraph 1 (jj = 1)
-  SELECT doc_id,
-         list_prepend('Page ' || (doc_id % 10),
-           list_transform(
-             list_transform(range(1, n + 1),
-                            j -> CASE WHEN j % 3 = 0
-                                      THEN CAST(1 AS BIGINT)
-                                      ELSE j END),
-             jj -> array_to_string(list_slice(toks, (jj - 1) * w + 1,
-                                              jj * w), ' ')
-                   || CASE WHEN (doc_id * 3 + jj) % 13 = 0
-                           THEN ' cookie' ELSE '' END
-                   || CASE (doc_id + jj) % 4 WHEN 0 THEN '.'
-                           WHEN 1 THEN '!' WHEN 2 THEN '' ELSE '?' END))
-           AS lines
-  FROM np
-), ldd AS (
-  SELECT doc_id,
-         list_filter(
-           list_transform(range(1, len(lines) + 1),
-                          i -> CASE WHEN list_position(lines, lines[i]) = i
-                                    THEN lines[i] END),
-           x -> x IS NOT NULL) AS lines
-  FROM lines0
-), kept AS (
-  SELECT doc_id,
-         list_filter(lines, x ->
-             regexp_matches(x, '[.!?"]$')
-             AND len(list_filter(regexp_split_to_array(trim(x), '\\s+'),
-                                 t2 -> t2 <> '')) >= 5
-             AND NOT contains(lower(x), '{')
-             AND NOT contains(lower(x), 'javascript')
-             AND NOT contains(lower(x), 'lorem ipsum')
-             AND NOT contains(lower(x), 'cookie')) AS k
-  FROM ldd
-)
-SELECT doc_id, md5(array_to_string(k, chr(10))) AS text_md5,
-       CAST(len(k) AS BIGINT) AS n_kept
-FROM kept WHERE len(k) >= 3
-""")
-def doc_prep_pipeline(spark, sf):
-    """Composite corpus-prep flagship (ungraded oracle): the first
-    three stages a web-corpus pipeline runs, COMPOSED — HTML pages
-    synthesized from `documents` (title + style/script/comment junk,
-    <b>-wrapped paragraphs, a duplicate paragraph every 3rd line, a
-    ' cookie' blocklist injection, a no-punctuation branch) flow
-    through quality.html_to_text -> dedup_lines -> c4_line_filter in
-    one DataFrame plan (all three stages are zero-shuffle HOF passes —
-    the composition stays a single narrow projection chain). The
-    DuckDB twin derives the expected line list directly from the
-    synthesis schedule (never parsing HTML) and replays the
-    first-occurrence and C4 rules — each stage is individually graded
-    elsewhere (doc_html_text / doc_line_dedup / doc_c4_lines); this
-    row grades their COMPOSITION."""
-    from webalizer_spark.operators.quality import (
-        c4_line_filter,
-        dedup_lines,
-        html_to_text,
-    )
-
-    docs = _t(spark, sf, "documents")
-    did = F.col("doc_id")
-    toks = F.split(F.coalesce(F.col("text"), F.lit("")), " ")
-    w = (did % 3 + 5).cast("int")
-    n = F.floor((F.size(toks) + w - 1) / w).cast("int")
-
-    def mk(jj):
-        body = F.concat_ws(" ", F.slice(toks, (jj - 1) * w + 1, w))
-        body = F.concat(
-            body,
-            F.when((did * 3 + jj) % 13 == 0, F.lit(" cookie")).otherwise(""),
-            (lambda m: F.when(m == 0, ".").when(m == 1, "!")
-             .when(m == 2, "").otherwise("?"))((did + jj) % 4))
-        return body
-
-    def para(j):
-        body = mk(F.when(j % 3 == 0, F.lit(1).cast("bigint")).otherwise(j))
-        body = (F.when(j % 2 == 0,
-                       F.concat(F.lit("<b>"), body, F.lit("</b>")))
-                .otherwise(body))
-        return F.concat(
-            F.when((did + j) % 7 == 0,
-                   F.lit("<!-- nav\nchrome -->")).otherwise(""),
-            F.lit("<p>"), body, F.lit("</p>"),
-            F.when((did * 7 + j) % 5 == 0,
-                   F.lit("<script>var p='<p>no</p>';</script>"))
-            .otherwise(""))
-
-    html = F.concat(
-        F.lit("<html><head><title>Page "), (did % 10).cast("string"),
-        F.lit("</title><style>p{x:y}</style></head><body>"),
-        F.array_join(F.transform(F.sequence(F.lit(1), n), para), ""),
-        F.lit("</body></html>"))
-    extracted = docs.select("doc_id", html_to_text(html).alias("text"))
-    out = c4_line_filter(dedup_lines(extracted).select("doc_id", "text"),
-                         min_words=5, min_lines=3)
-    return out.select("doc_id", F.md5("text").alias("text_md5"),
-                      F.col("n_kept").cast("bigint").alias("n_kept"))
-
-
 @qu("doc_containment", """
 WITH base AS (
   -- planted excerpts: every 6th doc spawns a SHORT excerpt doc made of
@@ -2432,31 +2058,6 @@ def evt_top_values(spark, sf):
 
     return column_top_values(_t(spark, sf, "events"),
                              ["event_type", "user_id", "props"], k=5)
-
-
-@qu("doc_dup_cluster_sizes", _DUP_CC_CTE + """
-, comp AS (
-  SELECT label, COUNT(*) AS members FROM labels GROUP BY label
-)
-SELECT CAST(members AS BIGINT) AS cluster_size,
-       CAST(COUNT(*) AS BIGINT) AS n_clusters
-FROM comp GROUP BY members
-""")
-def doc_dup_cluster_sizes(spark, sf):
-    """Duplicate-cluster size histogram (ungraded oracle): how many
-    near-dup components exist at each size — the first diagnostic a
-    dedup run reports (a fat tail here means boilerplate detonation;
-    singletons never enter the component table). Composes the graded
-    connected-components path with one two-level aggregation; the
-    oracle re-derives from the recursive-CTE closure."""
-    from webalizer_spark.operators.dedup import connected_min_label
-
-    edges = _dup_edges(spark, sf).select("doc_a", "doc_b")
-    comp = connected_min_label(edges)
-    return (comp.groupBy("label")
-            .agg(F.count(F.lit(1)).alias("members"))
-            .groupBy(F.col("members").cast("bigint").alias("cluster_size"))
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n_clusters")))
 
 
 @qu("doc_remove_seen", """

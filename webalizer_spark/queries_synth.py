@@ -312,7 +312,7 @@ def tr2_top_tools(spark, sf):
     deterministic ranked top-N cut [output.c ƒtop_urls_table] — through
     the REAL operators (aggregates.per_url -> topn.with_share ->
     topn.with_rank), hash-checked against an independent SQL
-    derivation. Closes round-2's S5 gap (tr_top_tools was rows-only)."""
+    derivation."""
     from webalizer_spark.operators.aggregates import per_url
     from webalizer_spark.operators.topn import with_rank, with_share
 
