@@ -99,6 +99,7 @@ def main() -> None:
 
     from webalizer_spark import get_spark
     from webalizer_spark.plans.checkpoint import (
+        DAILY_COLS,
         CheckpointPaths,
         compact,
         resume_filter,
@@ -150,9 +151,7 @@ def main() -> None:
         io_out = TableIO(spark, base_path=args.output)
         hist = (spark.read.parquet(ckpt.daily_state)
                 .groupBy(F.date_trunc("month", "day_ts").alias("month_ts"))
-                .agg(*[F.sum(c).alias(c)
-                       for c in ["hits", "files", "pages", "errors",
-                                 "bytes", "visits"]]))
+                .agg(*[F.sum(c).alias(c) for c in DAILY_COLS]))
         io_out.merge(hist, "history", ["month_ts"])
         if args.keep_checkpoints is not None:
             gone = compact(ckpt, keep_last=args.keep_checkpoints)

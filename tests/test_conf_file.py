@@ -32,6 +32,8 @@ DumpSites   no
 # reference warns and continues
 BGColor     #E8E8E8
 HTMLHead    <b>x</b>
+# so is TopCountries: transcripts carry no country dimension
+TopCountries 5
 """
 
 
@@ -47,7 +49,7 @@ def test_parse_conf_reference_grammar():
     # label defaults to the pattern when omitted
     assert cfg.lists.group_referrer == (("*eng-5*", "*eng-5*"),)
     assert cfg.dumps == ("tools",)
-    assert sorted(unknown) == ["BGColor", "HTMLHead"]
+    assert sorted(unknown) == ["BGColor", "HTMLHead", "TopCountries"]
 
 
 def test_parse_conf_defaults_when_empty():

@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from webalizer_spark.config import EngineConfig, WildcardLists
+from webalizer_spark.plans.checkpoint import CheckpointPaths, save_state
 from webalizer_spark.plans.pipeline import run_pipeline
 
 
@@ -209,12 +210,13 @@ def cfg_result4(spark, transcripts, dims):
     res.unpersist()
 
 
-def test_pagetype_drives_page_predicate(cfg_result4):
+def test_pagetype_drives_page_predicate(cfg_result4, tmp_path):
     """With PageType configured, reference ispage() semantics replace the
     tool-turn default: the fixture's paths are all extension-less
     ('msg/<role>' and bare tool names carry no '.'), and ispage treats
     extension-less paths as pages unconditionally — so EVERY ok row is a
-    page (not just tool turns), and entry/exit key on paths."""
+    page (not just tool turns), and entry/exit key on paths. The saved
+    daily_state (the CLI's history source) counts the same pages."""
     res, _ = cfg_result4
     spine = res.enriched
     n_all = spine.count()
@@ -222,6 +224,10 @@ def test_pagetype_drives_page_predicate(cfg_result4):
     daily = res.reports["daily"].toPandas()
     assert int(daily["pages"].sum()) == n_all
     assert n_all != n_tool  # the conf really rewired the predicate
+    ckpt = CheckpointPaths(str(tmp_path))
+    save_state(spine, ckpt)
+    state = spine.sparkSession.read.parquet(ckpt.daily_state)
+    assert state.agg(F.sum("pages")).first()[0] == n_all
     # entry pages are now session-first PATHS (any path, msg/ or tool)
     entry = res.reports["top_entry"].toPandas()
     paths = {r["path"] for r in spine.select("path").distinct().collect()}

@@ -243,9 +243,9 @@ def test_simhash_pairs_param_validation(spark):
         simhash_pairs(sig, max_hamming=4, n_blocks=4)
     with pytest.raises(ValueError, match="evenly"):
         simhash_pairs(sig, bits=10, n_blocks=4)
-    # bits=64 became VALID in round 6 (block values mask to their low
-    # bits, discarding the bigint sign extension — the image/audio/
-    # video dHash joins run at full width); past 64 still refuses
+    # bits=64 is VALID (block values mask to their low bits, discarding
+    # the bigint sign extension, so a full-width fingerprint joins);
+    # past 64 still refuses
     simhash_pairs(sig, bits=64, n_blocks=4)  # must not raise
     with pytest.raises(ValueError, match=r"\[1, 64\]"):
         simhash_pairs(sig, bits=65, n_blocks=5)

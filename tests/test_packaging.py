@@ -80,3 +80,56 @@ def test_driver_import_path_front_loads_priority():
     r = subprocess.run([sys.executable, "-c", code],
                        capture_output=True, text=True, timeout=120)
     assert r.returncode == 0, r.stderr[-1000:]
+
+
+def _py_files():
+    for root, dirs, files in os.walk(REPO):
+        # skip VCS, caches and generated data (.git, _gen, __pycache__)
+        dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
+        yield from (os.path.join(root, f) for f in files if f.endswith(".py"))
+
+
+def test_every_engine_name_is_referenced():
+    """Dead-code guard: every top-level function, class and assignment in
+    webalizer_spark/ is loaded (by name, attribute or import) somewhere in
+    the repo's Python outside its own definition. Decorated functions are
+    exempt: a decorator such as the query registry's @q(...) is their
+    reference."""
+    import ast
+
+    pkg = os.path.join(REPO, "webalizer_spark")
+    defined = []   # (name, path, top-level statement index)
+    loaded = {}    # name -> {(path, top-level statement index)}
+    for path in _py_files():
+        with open(path) as f:
+            tree = ast.parse(f.read(), path)
+        for i, stmt in enumerate(tree.body):
+            if path.startswith(pkg + os.sep):
+                if isinstance(stmt, ast.ClassDef) or (
+                        isinstance(stmt, (ast.FunctionDef,
+                                          ast.AsyncFunctionDef))
+                        and not stmt.decorator_list):
+                    defined.append((stmt.name, path, i))
+                targets = (stmt.targets if isinstance(stmt, ast.Assign)
+                           else [stmt.target]
+                           if isinstance(stmt, ast.AnnAssign) else [])
+                for t in targets:
+                    for n in ast.walk(t):
+                        if (isinstance(n, ast.Name) and n.id
+                                not in ("__all__", "__version__")):
+                            defined.append((n.id, path, i))
+            for n in ast.walk(stmt):
+                if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load):
+                    name = n.id
+                elif isinstance(n, ast.Attribute):
+                    name = n.attr
+                elif isinstance(n, ast.alias):
+                    name = n.name.rsplit(".", 1)[-1]
+                else:
+                    continue
+                loaded.setdefault(name, set()).add((path, i))
+    dead = sorted(
+        f"{os.path.relpath(path, pkg)}:{name}"
+        for name, path, i in defined
+        if not loaded.get(name, set()) - {(path, i)})
+    assert dead == [], dead

@@ -18,7 +18,7 @@ Layout:
   functions/            grok parser + scalar function library
   operators/            sessionize, enrich, filters, aggregates, topn,
                         dedup, similarity, quality, sampling, bpe,
-                        equality, multimodal
+                        equality
   plans/                end-to-end pipeline + checkpoint/resume
 """
 

@@ -8,8 +8,9 @@ defaults [sample.conf; webalizer.1]:
 
   VisitTimeout 1800        -> visit_timeout_s
   TopSites 30 / TopKSites 10 / TopURLs 30 / TopKURLs 10 / TopReferrers 30
-  TopAgents 15 / TopCountries 30 / TopEntry 10 / TopExit 10
+  TopAgents 15 / TopEntry 10 / TopExit 10
   TopSearch 20 / TopUsers 20
+  TopCountries             -> not recast (no country dimension): unknown
   PageType htm* cgi        -> page predicate; recast: tool IS NOT NULL
   Ignore*/Include*/Hide*/Group* wildcard lists -> pattern lists
   MangleAgents 0-5         -> role/agent normalization level
@@ -31,7 +32,6 @@ class TopN:
     urls_by_kb: int = 10     # TopKURLs
     referrers: int = 30      # TopReferrers
     agents: int = 15         # TopAgents   — recast: top roles/agent strings
-    countries: int = 30      # TopCountries — recast: top classes/families
     entry: int = 10          # TopEntryPages
     exit: int = 10           # TopExitPages
     search: int = 20         # TopSearch
@@ -122,7 +122,7 @@ _TOPN_KEYS = {
     "topsites": "sites", "topksites": "sites_by_kb",
     "topurls": "urls", "topkurls": "urls_by_kb",
     "topreferrers": "referrers", "topagents": "agents",
-    "topcountries": "countries", "topentry": "entry", "topexit": "exit",
+    "topentry": "entry", "topexit": "exit",
     "topsearch": "search", "topusers": "users",
 }
 

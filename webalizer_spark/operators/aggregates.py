@@ -8,7 +8,8 @@ replaces the reference's bounded in-memory tables. Metric vocabulary:
 
   hits    = rows (reference: every parsed record)
   files   = rows with status == 200 [webalizer.c 'file' tally]
-  pages   = rows with tool IS NOT NULL (P7 recast of ispage())
+  pages   = rows with is_page (PageType; default tool IS NOT NULL, the
+            P7 recast of ispage())
   kbytes  = sum(nbytes)/1024 [output.c KBytes math]
   visits  = count of session-start rows (is_new_session)
   sites   = distinct conv_id [hashtab.c t_site = node count]

@@ -228,7 +228,7 @@ def simhash_pairs(sig: DataFrame, max_hamming: int = 2, bits: int = 16,
         # 64 is safe even though bigint shiftright sign-extends: every
         # block value is masked to its low bw bits, which discards the
         # extended sign bits, and bit_count(xor) is sign-correct — so a
-        # full-width fingerprint (e.g. a 64-bit image dHash) works
+        # full-width 64-bit fingerprint works
         raise ValueError("bits must be in [1, 64]")
     bw = bits // n_blocks
     mask = (1 << bw) - 1

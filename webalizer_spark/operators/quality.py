@@ -943,9 +943,6 @@ def blocklist_filter(docs: DataFrame, terms: list[str],
     return docs.filter(F.round(frac, 6) <= max_frac)
 
 
-NORM_SCHEMA = "doc_id bigint, text string, changed boolean"
-
-
 def normalize_text(docs: DataFrame, form: str = "NFC",
                    collapse_ws: bool = True, strip_controls: bool = True,
                    id_col: str = "doc_id",

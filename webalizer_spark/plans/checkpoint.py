@@ -32,6 +32,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from webalizer_spark.operators import aggregates as A
 from webalizer_spark.operators.sessionize import sessionize, sessionize_skew_safe
 
 
@@ -76,20 +77,19 @@ class CheckpointPaths:
         return self._vdir("day_conv_state")
 
 
-def _daily_metrics() -> list:
-    return [
-        F.count(F.lit(1)).alias("hits"),
-        F.count_if(F.col("status") == 200).alias("files"),
-        F.count_if(F.col("tool").isNotNull()).alias("pages"),
-        F.count_if(F.col("status") >= 400).alias("errors"),
-        F.sum("nbytes").alias("bytes"),
-        F.count_if(F.col("is_new_session")).alias("visits"),
-    ]
+# the additive daily_state columns, in their stored order; each merges
+# across runs by a plain sum
+DAILY_COLS = ("hits", "files", "pages", "errors", "bytes", "visits")
 
 
 def _daily_delta(sessions: DataFrame) -> DataFrame:
+    """One batch's daily_state rows. pages follows the spine's PageType
+    predicate (A._pages_for), so the saved history agrees with the daily
+    report; bytes stays the raw sum(nbytes), not KBYTES."""
     return sessions.groupBy(
-        F.date_trunc("day", "ts").alias("day_ts")).agg(*_daily_metrics())
+        F.date_trunc("day", "ts").alias("day_ts")).agg(
+        A.HITS(), A.FILES(), A._pages_for(sessions), A.ERRORS(),
+        F.sum("nbytes").alias("bytes"), A.VISITS())
 
 
 def save_state(sessions: DataFrame, ckpt: CheckpointPaths) -> dict:
@@ -148,9 +148,7 @@ def save_state(sessions: DataFrame, ckpt: CheckpointPaths) -> dict:
         daily_delta = (spark.read.parquet(ckpt.daily_state)
                        .unionByName(daily_delta)
                        .groupBy("day_ts")
-                       .agg(*[F.sum(c).alias(c)
-                              for c in ["hits", "files", "pages", "errors",
-                                        "bytes", "visits"]]))
+                       .agg(*[F.sum(c).alias(c) for c in DAILY_COLS]))
         day_conv_delta = (spark.read.parquet(ckpt.day_conv_state)
                           .unionByName(day_conv_delta).distinct())
 
@@ -285,9 +283,7 @@ def merge_daily(new_sessions: DataFrame, ckpt: CheckpointPaths) -> DataFrame:
     delta = _daily_delta(new_sessions)
     additive = (old.unionByName(delta)
                 .groupBy("day_ts")
-                .agg(*[F.sum(c).alias(c)
-                       for c in ["hits", "files", "pages", "errors",
-                                 "bytes", "visits"]]))
+                .agg(*[F.sum(c).alias(c) for c in DAILY_COLS]))
     presence = (spark.read.parquet(ckpt.day_conv_state)
                 .unionByName(new_sessions.select(
                     F.date_trunc("day", "ts").alias("day_ts"), "conv_id"))

@@ -51,6 +51,10 @@ from webalizer_spark.operators.sessionize import (
     sessionize_skew_safe,
 )
 
+# storage level of the parse cache, the spine and the shared aggregates:
+# spillable, so a spine larger than executor memory degrades, never fails
+PERSIST_LEVEL = StorageLevel.MEMORY_AND_DISK
+
 
 @dataclass
 class PipelineResult:
@@ -83,7 +87,6 @@ def run_pipeline(
     cfg: EngineConfig = DEFAULT_CONFIG,
     grok_strategy: str = "split",
     skew_safe: bool = False,
-    persist_level: StorageLevel = StorageLevel.MEMORY_AND_DISK,
     sessionizer=None,
 ) -> PipelineResult:
     # -- PARSE ------------------------------------------------------------
@@ -108,7 +111,7 @@ def run_pipeline(
     parsed = (parse_transcripts(transcripts, grok_strategy, cfg)
               .withColumn("_bad_text",
                           F.when(~F.col("parse_ok"), F.col("text")))
-              .drop("text").persist(persist_level))
+              .drop("text").persist(PERSIST_LEVEL))
     ok = parsed.drop("_bad_text").filter(F.col("parse_ok"))
     # errors keep the exact input schema/order [BASE_COLS], raw line
     # restored from _bad_text — row-for-row identical to the old
@@ -181,7 +184,7 @@ def run_pipeline(
     spine_cols = ([c for c in enriched.columns
                    if c not in ("is_new_session", "session_seq")]
                   + ["is_new_session", "session_seq"])
-    spine = enriched.select(*spine_cols).persist(persist_level)
+    spine = enriched.select(*spine_cols).persist(PERSIST_LEVEL)
 
     # -- ROUTE (fan-out sinks, all narrow reads of the spine) -------------
     tool_calls = spine.filter(F.col("tool").isNotNull())
@@ -199,9 +202,9 @@ def run_pipeline(
                                 page_pred=F.col("is_page"))
     else:
         sess_pages = entry_exit(spine)
-    sess_pages = sess_pages.persist(persist_level)
-    per_site = A.per_site(spine).persist(persist_level)
-    per_url = A.per_url(spine).persist(persist_level)
+    sess_pages = sess_pages.persist(PERSIST_LEVEL)
+    per_site = A.per_site(spine).persist(PERSIST_LEVEL)
+    per_url = A.per_url(spine).persist(PERSIST_LEVEL)
     n = cfg.topn
     reports: dict[str, DataFrame] = {
         "hourly": A.hour_of_day_profile(spine),
