@@ -24,7 +24,8 @@ Prints ONE JSON line:
    "samples": [per-sample records], "load": {...}, "cpu_probe": {...}}
 
 Env knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (local[N]),
-BENCH_CONVS (fixture size), BENCH_SKEW=1 (skew-safe session path),
+BENCH_CONVS (fixture size), BENCH_WHALE=1 (one-whale fixture, which the
+pipeline's own hottest-conv estimate sends down the skew-safe path),
 BENCH_SAMPLES (fresh-JVM samples, default 3; 1 = old single-pass).
 """
 
@@ -81,12 +82,13 @@ def bench_fixture() -> str:
         # skew-safe path regardless of the whale's share
         params = GenParams(n_convs=n_convs, hot_convs=1, hot_mult=5000)
         return ensure_fixture(BENCH_BASE, params, tag=f"whale_{n_convs}")
-    # a couple of properly hot convs exercise the skew machinery
+    # two hot convs (the hotter ~71k turns: below HOT_CONV_ROWS, so the
+    # pipeline keeps the window path)
     params = GenParams(n_convs=n_convs, hot_convs=2, hot_mult=500)
     return ensure_fixture(BENCH_BASE, params, tag=f"bench_{n_convs}")
 
 
-def run_pipeline_bench(spark, fixture: str, skew_safe: bool) -> dict:
+def run_pipeline_bench(spark, fixture: str) -> dict:
     from webalizer_spark.plans.pipeline import run_pipeline, write_sinks
 
     tr = spark.read.parquet(f"{fixture}/transcripts.parquet")
@@ -96,7 +98,7 @@ def run_pipeline_bench(spark, fixture: str, skew_safe: bool) -> dict:
     out = os.path.join(BENCH_BASE, "_out")
     shutil.rmtree(out, ignore_errors=True)
     t0 = time.time()
-    res = run_pipeline(spark, tr, dims, skew_safe=skew_safe)
+    res = run_pipeline(spark, tr, dims)
     counts = write_sinks(res, out)
     sec = time.time() - t0
     res.unpersist()
@@ -198,7 +200,6 @@ def main() -> None:
         return
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    skew = os.environ.get("BENCH_SKEW", "0") == "1"
     fixture = bench_fixture()
 
     from webalizer_spark import get_spark
@@ -212,7 +213,7 @@ def main() -> None:
     t_total = time.time()
     qtimes: dict[str, float] = {}
 
-    pipe = run_pipeline_bench(spark, fixture, skew_safe=skew)
+    pipe = run_pipeline_bench(spark, fixture)
     qtimes["pipeline_e2e"] = pipe["sec"]
 
     if os.environ.get("BENCH_ONLY") == "pipeline":

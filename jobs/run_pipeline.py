@@ -1,17 +1,13 @@
 """spark-submit entry point (SURVEY §7 M9).
 
-Cluster usage:
-  zip -r engine.zip webalizer_spark
-  spark-submit --py-files engine.zip \
-      --packages org.apache.iceberg:iceberg-spark-runtime-4.0_2.13:<ver> \
-      --conf spark.sql.catalog.lake=org.apache.iceberg.spark.SparkCatalog \
-      --conf spark.sql.catalog.lake.type=rest ... \
-      jobs/run_pipeline.py --input lake.db.transcripts --dims lake.db \
-      --output lake.db --checkpoint s3://bucket/ckpt --incremental
+Usage:
+  python jobs/run_pipeline.py --input _gen/sf_test \
+      --output out --checkpoint ckpt --incremental
 
-Local/sandbox usage (parquet shim, no Iceberg jar needed):
-  python jobs/run_pipeline.py --input /root/repo/_gen/sf_test \
-      --output /tmp/out --checkpoint /tmp/ckpt
+--input/--dims name a directory of parquet tables (transcripts plus the
+five dimension tables); the job writes parquet and JSON under --output
+and --checkpoint. The job also opens these paths with Python's os
+module, so on a cluster they sit on a shared mount.
 
 The job is the reference's EP1/EP2 lifecycle [webalizer.c ƒmain;
 preserve.c]: read -> parse -> enrich -> sessionize (resume-aware when
@@ -60,8 +56,7 @@ def resolve_config(conf_path: str | None, visit_timeout: int | None,
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True,
-                    help="transcripts: parquet dir (with transcripts.parquet) "
-                         "or Iceberg table id")
+                    help="parquet directory holding transcripts.parquet")
     ap.add_argument("--dims", default=None,
                     help="dimension tables location (default: same as input)")
     ap.add_argument("--output", required=True)
@@ -76,8 +71,6 @@ def main() -> None:
                     help="resume from checkpoint; --no-incremental disables "
                          "an 'Incremental yes' from --conf (explicit CLI "
                          "flags override the conf file in both directions)")
-    ap.add_argument("--skew-safe", action="store_true",
-                    help="use the range-partitioned sessionization path")
     ap.add_argument("--grok", default="split",
                     choices=["split", "pandas", "multi"],
                     help="field-extraction strategy; 'multi' dispatches "
@@ -134,18 +127,26 @@ def main() -> None:
         tr = resume_filter(tr, ckpt, keep_directives=(args.grok == "multi"))
         # session numbering continues the saved per-conv state
         sessionizer = lambda df: resume_sessionize(  # noqa: E731
-            df, ckpt, cfg.visit_timeout_s, skew_safe=args.skew_safe)
+            df, ckpt, cfg.visit_timeout_s)
 
     res = run_pipeline(spark, tr, dims, cfg=cfg, grok_strategy=args.grok,
-                       skew_safe=args.skew_safe, sessionizer=sessionizer)
-    counts = write_sinks(res, args.output)
+                       sessionizer=sessionizer)
+    if resumed and res.parsed.isEmpty():
+        # nothing past the watermark (e.g. a repeated run of a committed
+        # batch): the output still holds that batch's sinks — keep them
+        # rather than overwrite them with empty tables
+        counts = {}
+        print("no records past the checkpoint watermark; "
+              "sinks left as committed")
+    else:
+        counts = write_sinks(res, args.output)
     if ckpt is not None:
         save_state(res.enriched, ckpt)
         # S9 history table (webalizer.hist analog): month rows
         # re-aggregated from the CUMULATIVE daily state (correct even
         # when a month spans several incremental runs), upserted by
-        # month key — MERGE INTO on Iceberg, read-merge-swap on the
-        # parquet shim
+        # month key (TableIO.merge: read-merge-swap of the parquet
+        # directory)
         from pyspark.sql import functions as F
 
         io_out = TableIO(spark, base_path=args.output)

@@ -28,6 +28,21 @@ def _run_cli(*args: str) -> str:
     return out.stdout
 
 
+def _stage_half(full: str, half) -> int:
+    """Stage a time-half input in ``half``: the dims plus the ts <= median
+    slice of full's transcripts. Returns the slice's row count."""
+    half.mkdir()
+    for d in DIMS:
+        shutil.copy(f"{full}/{d}.parquet", half / f"{d}.parquet")
+    med = duckdb.sql(f"SELECT median(ts) FROM "
+                     f"'{full}/transcripts.parquet'").fetchone()[0]
+    duckdb.sql(f"COPY (SELECT * FROM '{full}/transcripts.parquet' "
+               f"WHERE ts <= TIMESTAMP '{med}') TO "
+               f"'{half}/transcripts.parquet' (FORMAT PARQUET)")
+    return duckdb.sql(
+        f"SELECT COUNT(*) FROM '{half}/transcripts.parquet'").fetchone()[0]
+
+
 def test_cli_incremental_resume(tmp_path):
     from webalizer_spark.datagen import GenParams, ensure_fixture
 
@@ -37,18 +52,8 @@ def test_cli_incremental_resume(tmp_path):
     n_total = duckdb.sql(
         f"SELECT COUNT(*) FROM '{full}/transcripts.parquet'").fetchone()[0]
 
-    # stage a time-half input: dims + the ts <= median slice
     half = tmp_path / "half"
-    half.mkdir()
-    for d in DIMS:
-        shutil.copy(f"{full}/{d}.parquet", half / f"{d}.parquet")
-    med = duckdb.sql(f"SELECT median(ts) FROM "
-                     f"'{full}/transcripts.parquet'").fetchone()[0]
-    duckdb.sql(f"COPY (SELECT * FROM '{full}/transcripts.parquet' "
-               f"WHERE ts <= TIMESTAMP '{med}') TO "
-               f"'{half}/transcripts.parquet' (FORMAT PARQUET)")
-    n_half = duckdb.sql(
-        f"SELECT COUNT(*) FROM '{half}/transcripts.parquet'").fetchone()[0]
+    n_half = _stage_half(full, half)
 
     out1, ckpt = str(tmp_path / "out1"), str(tmp_path / "ckpt")
     stdout1 = _run_cli("--input", str(half), "--output", out1,
@@ -63,12 +68,10 @@ def test_cli_incremental_resume(tmp_path):
     # checkpoint state tracks the parse-OK spine, not raw input
     assert m1["total_rows"] == s1["by_role"] and m1["version"] == 1
 
-    # resume over the FULL input: only rows past the watermark process;
-    # --skew-safe routes the resumed batch through the range-partitioned
-    # sessionizer (the fixture has a hot conv)
+    # resume over the FULL input: only rows past the watermark process
     out2 = str(tmp_path / "out2")
     stdout2 = _run_cli("--input", full, "--output", out2,
-                       "--checkpoint", ckpt, "--incremental", "--skew-safe")
+                       "--checkpoint", ckpt, "--incremental")
     assert f"{n_total - n_half} records" in stdout2
     with open(os.path.join(out2, "_metrics.json")) as f:
         s2 = json.load(f)["sinks"]
@@ -94,6 +97,48 @@ def test_cli_incremental_resume(tmp_path):
     hist = duckdb.sql(
         f"SELECT COUNT(*) FROM '{out2}/history/*.parquet'").fetchone()[0]
     assert hist >= 1
+
+
+def _committed(out: str, ckpt: str) -> dict:
+    """What a committed incremental run leaves: every sink's row count,
+    _metrics.json, the manifest and the history rows."""
+    import pyarrow.dataset as ds
+
+    with open(os.path.join(out, "_metrics.json")) as f:
+        metrics = json.load(f)
+    with open(os.path.join(ckpt, "manifest.json")) as f:
+        manifest = json.load(f)
+    rows = {name: ds.dataset(os.path.join(out, name), format="parquet",
+                             partitioning="hive").count_rows()
+            for name in metrics["sinks"]}
+    history = sorted(map(tuple, duckdb.sql(
+        f"SELECT * FROM '{out}/history/*.parquet'").fetchall()))
+    return {"rows": rows, "metrics": metrics, "manifest": manifest,
+            "history": history}
+
+
+def test_cli_rerun_of_committed_batch_keeps_sinks(tmp_path):
+    """Repeating a resumed run after it committed finds nothing past the
+    watermark; its sinks, _metrics.json, manifest and history must stay
+    exactly as the first run left them, not be overwritten with empty
+    tables."""
+    from webalizer_spark.datagen import GenParams, ensure_fixture
+
+    full = ensure_fixture(str(tmp_path / "fix"), GenParams(n_convs=100),
+                          tag="rerun")
+    _stage_half(full, tmp_path / "half")
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    _run_cli("--input", str(tmp_path / "half"), "--output",
+             str(tmp_path / "out1"), "--checkpoint", ckpt, "--incremental")
+    resume = ("--input", full, "--output", out, "--checkpoint", ckpt,
+              "--incremental")
+    _run_cli(*resume)
+    first = _committed(out, ckpt)
+    assert first["rows"]["by_role"] > 0 and first["manifest"]["version"] == 2
+
+    stdout = _run_cli(*resume)
+    assert "0 records" in stdout
+    assert _committed(out, ckpt) == first
 
 
 def _mixed_format_fixture(full_dir, dims_src):

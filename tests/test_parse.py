@@ -2,7 +2,6 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from webalizer_spark.config import DEFAULT_CONFIG
 from webalizer_spark.functions import GROK_FIELDS, apply_grok, sanitize
 from webalizer_spark.operators.parse import parse_transcripts, split_ok_bad
 
@@ -10,8 +9,7 @@ from webalizer_spark.operators.parse import parse_transcripts, split_ok_bad
 def _grokked(transcripts, strategy):
     """Raw GROK_FIELDS of the sanitized text plus parse_ok, per turn."""
     key = ["conv_id", "turn_idx"]
-    clean = transcripts.withColumn(
-        "text", sanitize(F.col("text"), DEFAULT_CONFIG.max_field_len))
+    clean = transcripts.withColumn("text", sanitize(F.col("text")))
     raw = apply_grok(clean, "text", strategy).select(*key, *GROK_FIELDS)
     ok = parse_transcripts(transcripts, strategy).select(*key, "parse_ok")
     return raw.join(ok, key)

@@ -100,8 +100,13 @@ def test_entry_exit_reports(result, oracle):
 
 def test_skew_safe_pipeline_equivalence(spark, transcripts, dims, result):
     """Salting/skew path on vs off -> identical report tables (SURVEY §5.2
-    prop d)."""
-    res2 = run_pipeline(spark, transcripts, dims, skew_safe=True)
+    prop d). The fixture's convs are far below HOT_CONV_ROWS, so the
+    module result took the window path; the skew-safe path is forced
+    through the sessionizer seam."""
+    from webalizer_spark.operators.sessionize import sessionize_skew_safe
+
+    res2 = run_pipeline(spark, transcripts, dims,
+                        sessionizer=sessionize_skew_safe)
     try:
         for name in ["daily", "status_codes", "top_tools", "top_entry"]:
             a = result.reports[name].toPandas()
@@ -113,18 +118,22 @@ def test_skew_safe_pipeline_equivalence(spark, transcripts, dims, result):
         res2.unpersist()
 
 
-def test_auto_skew_selection_and_metrics(spark, transcripts, dims, tmp_path):
-    """skew_safe='auto' routes via cfg.hot_conv_threshold; write_sinks
-    emits the per-partition lineage metrics manifest."""
+def test_auto_skew_selection_and_metrics(spark, transcripts, dims, tmp_path,
+                                        monkeypatch):
+    """The pipeline picks the skew-safe path once the sampled hottest conv
+    reaches HOT_CONV_ROWS; write_sinks emits the per-partition lineage
+    metrics manifest."""
     import json
-    from webalizer_spark.config import EngineConfig
+    from webalizer_spark.operators import sessionize as S
     from webalizer_spark.plans.pipeline import write_sinks
 
-    cfg = EngineConfig(hot_conv_threshold=100)   # fixture has >100-turn convs
-    res = run_pipeline(spark, transcripts, dims, cfg=cfg, skew_safe="auto")
+    monkeypatch.setattr(S, "HOT_CONV_ROWS", 100)  # fixture has >100-turn convs
+    S.release_skew_caches()
+    res = run_pipeline(spark, transcripts, dims)
     try:
         out = str(tmp_path / "sinks")
         counts = write_sinks(res, out)
+        assert S._SKEW_CACHES, "the skew-safe path did not run"
         m = json.load(open(f"{out}/_metrics.json"))
         assert m["sinks"] == {k: int(v) for k, v in counts.items()}
         assert sum(p["rows"] for p in m["spine_partitions"]) == \

@@ -162,10 +162,11 @@ def test_second_incremental_run_preserves_prior_state(spark, parsed_ok):
             ref_daily[c].astype("int64").tolist(), c
 
 
-def test_resume_sessionize_skew_safe_matches_window(spark, parsed_ok, halves):
+def test_resume_sessionize_skew_safe_matches_window(spark, parsed_ok, halves,
+                                                    monkeypatch):
     """Resume composes with the range-partitioned skew path: identical
     per-row output to the window path."""
-    from webalizer_spark.operators.sessionize import release_skew_caches
+    from webalizer_spark.operators import sessionize as S
 
     first, second = halves
     shutil.rmtree(CKPT, ignore_errors=True)
@@ -174,11 +175,15 @@ def test_resume_sessionize_skew_safe_matches_window(spark, parsed_ok, halves):
 
     cols = ["conv_id", "turn_idx", "is_new_session", "session_seq"]
     new = resume_filter(parsed_ok, ckpt)
+    S.release_skew_caches()
     a = (resume_sessionize(new, ckpt).select(*cols).toPandas()
          .sort_values(["conv_id", "turn_idx"]).reset_index(drop=True))
-    b = (resume_sessionize(new, ckpt, skew_safe=True).select(*cols).toPandas()
+    assert not S._SKEW_CACHES      # small convs: the window path
+    monkeypatch.setattr(S, "HOT_CONV_ROWS", 1)
+    b = (resume_sessionize(new, ckpt).select(*cols).toPandas()
          .sort_values(["conv_id", "turn_idx"]).reset_index(drop=True))
-    release_skew_caches()
+    assert S._SKEW_CACHES          # the skew-safe path ran
+    S.release_skew_caches()
     assert a.equals(b)
 
 
@@ -349,3 +354,24 @@ def test_compact_keeps_live_state_resumable(spark, parsed_ok, halves):
     import pytest as _pytest
     with _pytest.raises(ValueError, match="keep_last"):
         compact(ckpt, keep_last=0)
+
+
+def test_perfbench_history_cols_match_daily_state():
+    """The benchmark rebuilds the history table from its own copy of the
+    daily-state columns (perfbench/workloads.py HISTORY_COLS); read it
+    without importing the benchmark and hold it to DAILY_COLS, so a
+    change to the checkpoint's daily columns fails here rather than
+    quietly skewing the benchmark's history step."""
+    import ast
+    import os
+
+    from webalizer_spark.plans.checkpoint import DAILY_COLS
+
+    path = os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "perfbench", "workloads.py")
+    tree = ast.parse(open(path).read())
+    found = [ast.literal_eval(node.value) for node in tree.body
+             if isinstance(node, ast.Assign)
+             and any(getattr(t, "id", None) == "HISTORY_COLS"
+                     for t in node.targets)]
+    assert found == [DAILY_COLS]

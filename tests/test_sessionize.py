@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 from tests import oracle_pandas as O
 from webalizer_spark.operators.sessionize import (
     entry_exit,
+    pick_sessionizer,
     sessionize,
     sessionize_skew_safe,
 )
@@ -31,6 +32,17 @@ def test_skew_safe_equals_window(spark, transcripts):
         b = _sorted(sessionize_skew_safe(transcripts, num_partitions=nparts)
                     .select(*COLS).toPandas())
         assert a.equals(b), f"skew path diverges at num_partitions={nparts}"
+
+
+def test_pick_sessionizer(spark):
+    """The path follows the sampled hottest conv: one 150k-row conv takes
+    the skew-safe path; a batch-shaped frame (48k rows, hottest conv
+    1,000 rows) keeps the window path."""
+    whale = spark.range(150_000).select(F.lit("whale").alias("conv_id"))
+    assert pick_sessionizer(whale) is sessionize_skew_safe
+    flat = spark.range(48_000).select(
+        (F.col("id") % 48).cast("string").alias("conv_id"))
+    assert pick_sessionizer(flat) is sessionize
 
 
 def test_order_independence(spark, transcripts):

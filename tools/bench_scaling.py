@@ -25,8 +25,8 @@ Usage:
       [--low 8] [--high 32] [--whale]
 
 --whale swaps the fixture for a single-whale skew fixture (one conv
-holding most turns) and uses the skew-safe sessionization path, to show
-wall-clock stays flat when one key dominates.
+holding most turns), which the pipeline sends down the skew-safe
+sessionization path, to show wall-clock stays flat when one key dominates.
 
 Writes BENCH_scaling.json at the repo root and prints a summary.
 """
@@ -64,7 +64,6 @@ def run_once(cpus: int, convs: int, whale: bool) -> dict:
         "BENCH_CONVS": str(convs),
     })
     if whale:
-        env["BENCH_SKEW"] = "1"
         env["BENCH_WHALE"] = "1"
     load1 = os.getloadavg()[0]
     out = subprocess.run(

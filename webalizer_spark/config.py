@@ -88,11 +88,6 @@ class EngineConfig:
     # DumpAgents/DumpUsers/DumpSearchstr]: families whose FULL sorted
     # table is written as an all_* sink (T5 .tab dump analog).
     dumps: tuple[str, ...] = ()
-    # Field caps (MAXHOST/MAXURL/... in webalizer.h): bound adversarial rows.
-    max_field_len: int = 4096
-    # Skew handling: convs with more turns than this take the
-    # range-partitioned skew-safe sessionization path (SURVEY §4 O9).
-    hot_conv_threshold: int = 100_000
     # PageType [sample.conf; webalizer.c ƒispage]: wildcard patterns over
     # `path` defining what counts as a "page". Empty = the engine's
     # default recast predicate (tool IS NOT NULL).

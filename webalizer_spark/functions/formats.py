@@ -307,7 +307,7 @@ def _pack_w3c(text: Column, fields: Sequence[str]) -> Column:
 def apply_grok_multi(df: DataFrame, text_col: str = "text",
                      format_col: str | None = None,
                      w3c_fields: Sequence[str] | None = None,
-                     max_field_len: int | None = None) -> DataFrame:
+                     sanitize_text: bool = False) -> DataFrame:
     """Format-dispatched grok: adds `log_format` + the canonical
     GROK_FIELDS raw columns. Each format's regex runs only on its rows
     (the when() ladder short-circuits), all JVM-side.
@@ -319,7 +319,7 @@ def apply_grok_multi(df: DataFrame, text_col: str = "text",
     nor errors].
 
     PLAN NOTE: format detection runs on the RAW text head (cheap rlikes
-    over 40 chars) while sanitize (max_field_len) nests INSIDE the pack
+    over 40 chars) while sanitize (sanitize_text) nests INSIDE the pack
     branches. Sanitizing in a prior projection looks cleaner but
     CollapseProject merges it into the detection projection and the
     full-text regex then evaluates TWICE per row (measured in the plan);
@@ -327,8 +327,7 @@ def apply_grok_multi(df: DataFrame, text_col: str = "text",
     output `text` column stays the raw line — the errors sink preserves
     the original bytes, like the reference's Debug dump.
     """
-    src = (sanitize(F.col(text_col), max_field_len)
-           if max_field_len else F.col(text_col))
+    src = sanitize(F.col(text_col)) if sanitize_text else F.col(text_col)
     if format_col:
         fmt = F.col(format_col)
     else:

@@ -18,7 +18,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from webalizer_spark.config import DEFAULT_CONFIG, EngineConfig
 from webalizer_spark.datagen import SPARK_TS_FMT
 from webalizer_spark.functions.grok import apply_grok
 from webalizer_spark.functions.scalars import sanitize
@@ -26,11 +25,7 @@ from webalizer_spark.functions.scalars import sanitize
 BASE_COLS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
 
 
-def parse_transcripts(
-    df: DataFrame,
-    strategy: str = "split",
-    cfg: EngineConfig = DEFAULT_CONFIG,
-) -> DataFrame:
+def parse_transcripts(df: DataFrame, strategy: str = "split") -> DataFrame:
     """transcripts(conv_id, turn_idx, role, text, tool, ts) -> parsed.
 
     Output adds: actor, ident, auth_user, verb, path, status int,
@@ -38,8 +33,8 @@ def parse_transcripts(
     strategy='multi' dispatches per-row on log format (S2 LogType auto).
     """
     if strategy == "multi":
-        return parse_transcripts_multi(df, cfg)
-    clean = df.withColumn("text", sanitize(F.col("text"), cfg.max_field_len))
+        return parse_transcripts_multi(df)
+    clean = df.withColumn("text", sanitize(F.col("text")))
     raw = apply_grok(clean, "text", strategy)
     out = raw.select(
         *BASE_COLS,
@@ -70,7 +65,6 @@ def parse_transcripts(
 
 def parse_transcripts_multi(
     df: DataFrame,
-    cfg: EngineConfig = DEFAULT_CONFIG,
     format_col: str | None = None,
     w3c_fields: list[str] | None = None,
     drop_directives: bool = True,
@@ -103,7 +97,7 @@ def parse_transcripts_multi(
     # sanitize nests inside the grok branches (see apply_grok_multi plan
     # note) — exactly one full-text regex eval per row
     raw = apply_grok_multi(df, "text", format_col, w3c_fields,
-                           max_field_len=cfg.max_field_len)
+                           sanitize_text=True)
     if drop_directives:
         raw = raw.filter(~F.col("text").startswith("#"))
     fmt = F.col("log_format")

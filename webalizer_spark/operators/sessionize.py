@@ -29,12 +29,15 @@ Two physical strategies, identical output (property-tested):
                           the first spanning key of each partition.
                           Wall-clock is O(rows/partitions), independent of
                           the hottest key.
+
+pick_sessionizer() chooses between them from a sample of the data, the
+way the reference applies one timeout rule per host with no switch.
 """
 
 from __future__ import annotations
 
 import json
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from typing import Any
 
 import pandas as pd
@@ -275,6 +278,35 @@ def sessionize_skew_safe(df: DataFrame, timeout_s: int = 1800,
     except Exception:
         ranged.unpersist()
         raise
+
+
+# ---------------------------------------------------------------------------
+# path choice
+# ---------------------------------------------------------------------------
+
+# estimated turns of the hottest key from which the skew-safe path is
+# taken: below it the window path is cheaper (no range sort, no Arrow
+# hop); above it the one window task holding that key pins the stage
+# (BENCH.md §2, whale fixtures)
+HOT_CONV_ROWS = 100_000
+
+
+def pick_sessionizer(df: DataFrame,
+                     key: str = "conv_id") -> Callable[..., DataFrame]:
+    """sessionize or sessionize_skew_safe, chosen from the data: skew-safe
+    only when the hottest key is estimated to hold HOT_CONV_ROWS rows.
+
+    The estimate is a seeded 1% sample of the key column (one small job;
+    a key at the threshold lands ~1k sampled rows), not an exact groupBy
+    pre-pass, which at scale would be a full shuffle before any work.
+    Both paths produce identical output (property-tested), so estimator
+    noise can only change which plan runs, never the result; the seed
+    keeps a given input deterministic.
+    """
+    hottest = (df.select(key).sample(fraction=0.01, seed=7)
+               .groupBy(key).count()
+               .agg(F.max("count")).collect()[0][0] or 0) * 100
+    return sessionize_skew_safe if hottest >= HOT_CONV_ROWS else sessionize
 
 
 # ---------------------------------------------------------------------------

@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from webalizer_spark.operators import aggregates as A
-from webalizer_spark.operators.sessionize import sessionize, sessionize_skew_safe
+from webalizer_spark.operators.sessionize import pick_sessionizer
 
 
 @dataclass
@@ -226,8 +226,7 @@ def resume_filter(df: DataFrame, ckpt: CheckpointPaths,
 def resume_sessionize(new_df: DataFrame, ckpt: CheckpointPaths,
                       timeout_s: int = 1800,
                       key: str = "conv_id", ts_col: str = "ts",
-                      tiebreak: str = "turn_idx",
-                      skew_safe: bool = False) -> DataFrame:
+                      tiebreak: str = "turn_idx") -> DataFrame:
     """Sessionize a resumed batch so numbering continues the saved state.
 
     Local gap-and-island first, then one shuffle join against conv_state:
@@ -238,13 +237,13 @@ def resume_sessionize(new_df: DataFrame, ckpt: CheckpointPaths,
         reference's restored-tstamp behavior [hashtab.c ƒput_hnode with
         restored node].
 
-    skew_safe routes the local pass through the range-partitioned
-    sessionizer (identical output, property-tested) so resume composes
+    The local pass takes the path pick_sessionizer chooses for the batch
+    (identical output either way, property-tested), so resume composes
     with the hot-conv path.
     """
     spark = new_df.sparkSession
-    local_sessionizer = sessionize_skew_safe if skew_safe else sessionize
-    local = local_sessionizer(new_df, timeout_s, key, ts_col, tiebreak)
+    local = pick_sessionizer(new_df, key)(new_df, timeout_s, key, ts_col,
+                                          tiebreak)
     state = (spark.read.parquet(ckpt.conv_state)
              .select(F.col(key).alias("_st_key"),
                      F.col("last_ts").alias("_st_last_ts"),

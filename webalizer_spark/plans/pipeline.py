@@ -47,8 +47,7 @@ from webalizer_spark.operators.sessionize import (
     entry_counts,
     entry_exit,
     exit_counts,
-    sessionize,
-    sessionize_skew_safe,
+    pick_sessionizer,
 )
 
 # storage level of the parse cache, the spine and the shared aggregates:
@@ -86,7 +85,6 @@ def run_pipeline(
     dims: dict[str, DataFrame],
     cfg: EngineConfig = DEFAULT_CONFIG,
     grok_strategy: str = "split",
-    skew_safe: bool = False,
     sessionizer=None,
 ) -> PipelineResult:
     # -- PARSE ------------------------------------------------------------
@@ -108,7 +106,7 @@ def run_pipeline(
     # join outright). Cached bad-text bytes stay bounded by the
     # corrupt fraction; at a 1% bad rate that is 1% of corpus text in
     # (spillable) cache versus re-reading 100% of it from storage.
-    parsed = (parse_transcripts(transcripts, grok_strategy, cfg)
+    parsed = (parse_transcripts(transcripts, grok_strategy)
               .withColumn("_bad_text",
                           F.when(~F.col("parse_ok"), F.col("text")))
               .drop("text").persist(PERSIST_LEVEL))
@@ -157,27 +155,13 @@ def run_pipeline(
     # restores the historical spine column order.
     # sessionizer override: resume mode passes a checkpoint-stitching
     # variant (plans/checkpoint.resume_sessionize) so numbering continues
-    # the saved state
+    # the saved state. Otherwise the path is picked from the data; the
+    # hottest-conv estimate samples the INPUT's key column, so it costs
+    # one small scan and does not pull the parse into plan time.
     if sessionizer is None:
-        use_skew = skew_safe
-        if skew_safe == "auto":
-            # a seeded 1% sample estimates the hottest conv instead of
-            # the old exact full groupBy pre-pass (round-6 verdict item
-            # 4): at scale the exact pass was an extra full shuffle
-            # before any work started, and the decision only needs an
-            # order-of-magnitude signal — a conv at the default 100k
-            # threshold lands ~1k sampled rows. Both sessionize paths
-            # produce identical output (property-tested), so estimator
-            # noise can only flip WHICH physical plan runs, never the
-            # result; the seed keeps a given input deterministic.
-            hottest = ((ok.sample(fraction=0.01, seed=7)
-                        .groupBy("conv_id").count()
-                        .agg(F.max("count")).collect()[0][0]) or 0) * 100
-            use_skew = hottest >= cfg.hot_conv_threshold
-        sessionizer = lambda df: (  # noqa: E731
-            sessionize_skew_safe if use_skew else sessionize)(
-            df, cfg.visit_timeout_s)
-    sess = sessionizer(ok)
+        sess = pick_sessionizer(transcripts)(ok, cfg.visit_timeout_s)
+    else:
+        sess = sessionizer(ok)
 
     # -- ENRICH (post-window, narrow broadcast joins) ---------------------
     enriched = enrich_all(sess, dims)

@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from webalizer_spark.functions.grok import MASTER_PATTERN
-from webalizer_spark.queries import _t, q, qu
+from webalizer_spark.queries import QUERIES, _t, q, qu
 
 # ---------------------------------------------------------------------------
 # shared line synthesis — Spark side
@@ -1073,11 +1073,10 @@ def tr2_haproxy(spark, sf):
         "status", "nbytes", "ts_text", "agent_str", "referrer", "parse_ok")
 
 
-
-# Re-apply the priority reorder + 50-row guard now that the tr2_* rows
-# exist. Required on the queries_synth-first import path (the driver's
-# __spark_entry__): the circular import runs queries.py's bottom while
-# this module is still empty, so its finalize saw no tr2_* rows.
-from webalizer_spark.queries import finalize_registries  # noqa: E402
-
-finalize_registries()
+# The graded registry (__spark_entry__.queries) holds at most 50 entries;
+# the rest live in UNGRADED. Checked here because, on either import order
+# (queries first, or this module first as __spark_entry__ does), this line
+# runs after every q() registration of both modules.
+if len(QUERIES) > 50:
+    raise RuntimeError(f"graded query registry has {len(QUERIES)} entries "
+                       "(> 50); move extras to UNGRADED")
