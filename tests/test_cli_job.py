@@ -60,13 +60,16 @@ def test_cli_incremental_resume(tmp_path):
                        "--checkpoint", ckpt, "--incremental")
     assert f"{n_half} records" in stdout1
     with open(os.path.join(out1, "_metrics.json")) as f:
-        s1 = json.load(f)["sinks"]
+        metrics1 = json.load(f)
+    s1 = metrics1["sinks"]
     # every input row routes exactly once: ok spine (by_role) or errors
     assert s1["errors"] + s1["by_role"] == n_half
     with open(os.path.join(ckpt, "manifest.json")) as f:
         m1 = json.load(f)
     # checkpoint state tracks the parse-OK spine, not raw input
     assert m1["total_rows"] == s1["by_role"] and m1["version"] == 1
+    # both lineage records describe the same spine partitions
+    assert metrics1["spine_partitions"] == m1["partitions"]
 
     # resume over the FULL input: only rows past the watermark process
     out2 = str(tmp_path / "out2")

@@ -355,42 +355,37 @@ def test_winnowing_shared_run_guarantee(spark):
     assert winnow_fingerprints(short, k=3, window=4).count() == 0
 
 
-def test_lsh_signature_strategies_agree(spark):
-    """The per-row literal-weights signature path (zero shuffle) must be
-    bit-identical to the explode+groupBy path for both the single-table
-    and multi-table layouts — same md5 seeding, same decimal math."""
-    from webalizer_spark.operators.similarity import (
-        _lsh_signatures_explode,
-        lsh_signatures,
-    )
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    for planes, tables in [(8, 1), (4, 8)]:
-        lit = sorted(map(tuple, lsh_signatures(
-            emb, planes, 64, num_tables=tables).collect()))
-        exp = sorted(map(tuple, _lsh_signatures_explode(
-            emb, planes, 64, "vec_id", "embedding", tables).collect()))
-        assert lit == exp and len(lit) == 500 * tables
-
-
 def test_lsh_signature_paths_agree_on_short_vectors(spark):
-    """Vectors shorter than dim (or with NULL elements) must produce the
-    SAME signature on both physical paths: the literal fold skips
-    missing terms like SQL SUM skips NULLs — a NULL-poisoned fold would
-    silently zero every plane."""
+    """Vectors shorter than dim (or with NULL elements) sign the terms
+    they have: the fold skips missing terms like SQL SUM skips NULLs
+    (the DuckDB oracle's _LSH_SIG_CTE arithmetic) — a NULL-poisoned fold
+    would silently zero every plane. The reference is exact decimal
+    arithmetic over the same md5 weights."""
+    from decimal import ROUND_HALF_UP, Decimal
+
     from webalizer_spark.operators.similarity import (
-        _lsh_signatures_explode,
+        _lsh_weight,
         lsh_signatures,
     )
 
-    emb = spark.createDataFrame(
-        [(1, [0.5] * 64), (2, [0.25] * 32), (3, [1.0] * 8)],
-        "vec_id long, embedding array<float>")
+    rows = [(1, [0.5] * 64), (2, [0.25] * 32), (3, [1.0] * 8),
+            (4, [0.5, None] * 16)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    q = Decimal("1e-12")
+    exp = []
+    for vid, vec in rows:
+        for t in range(2):
+            sig = 0
+            for j in range(4):
+                # CAST(x * w AS DECIMAL(18,12)) per term, then SUM
+                p = sum(Decimal(x * _lsh_weight(t, j, i)).quantize(
+                            q, ROUND_HALF_UP)
+                        for i, x in enumerate(vec) if x is not None)
+                sig += 2 ** j if p >= 0 else 0
+            exp.append((vid, t, sig))
     lit = sorted(map(tuple, lsh_signatures(
         emb, 4, 64, num_tables=2).collect()))
-    exp = sorted(map(tuple, _lsh_signatures_explode(
-        emb, 4, 64, "vec_id", "embedding", 2).collect()))
-    assert lit == exp
+    assert lit == sorted(exp)
     assert all(sig != 0 for _, _, sig in lit)   # not NULL-poisoned
 
 

@@ -3,7 +3,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from webalizer_spark.functions import GROK_FIELDS, apply_grok, sanitize
-from webalizer_spark.operators.parse import parse_transcripts, split_ok_bad
+from webalizer_spark.operators.parse import parse_transcripts
 
 
 def _grokked(transcripts, strategy):
@@ -33,9 +33,9 @@ def test_grok_strategies_agree(spark, transcripts):
 
 def test_parse_ok_bad_split(spark, transcripts):
     parsed = parse_transcripts(transcripts)
-    ok, bad = split_ok_bad(parsed)
     total = transcripts.count()
-    n_ok, n_bad = ok.count(), bad.count()
+    n_ok = parsed.filter(F.col("parse_ok")).count()
+    n_bad = parsed.filter(~F.col("parse_ok")).count()
     assert n_ok + n_bad == total
     # corruption rate ~1% (FIXTURES.md): every corrupt line and only
     # corrupt-ish lines route to the errors sink

@@ -8,6 +8,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from webalizer_spark.operators.filters import page_predicate
 from webalizer_spark.operators.sessionize import sessionize
 from webalizer_spark.plans.checkpoint import (
     CheckpointPaths,
@@ -23,11 +24,13 @@ CKPT = "/root/repo/_gen/_ckpt_test"
 
 @pytest.fixture(scope="module")
 def parsed_ok(spark, transcripts):
-    from webalizer_spark.operators.parse import parse_transcripts, split_ok_bad
+    from webalizer_spark.operators.parse import parse_transcripts
 
     parsed = parse_transcripts(transcripts).persist()
-    ok, _ = split_ok_bad(parsed)
-    yield ok
+    # the spine's default-config is_page column, which the daily state
+    # counts as pages
+    yield (parsed.filter(F.col("parse_ok"))
+           .withColumn("is_page", page_predicate(())))
     parsed.unpersist()
 
 
@@ -291,7 +294,8 @@ def test_month_boundary_visit_counts_once(spark):
                  200, "python", 50, "agent/1.0", "u2"))
     df = spark.createDataFrame(
         rows, "conv_id string, turn_idx int, ts timestamp, status int,"
-              " tool string, nbytes long, agent_str string, ident string")
+              " tool string, nbytes long, agent_str string, ident string"
+    ).withColumn("is_page", page_predicate(()))
 
     sess = sessionize(df, 1800)
     mb1 = sess.filter("conv_id = 'mb-1'").orderBy("turn_idx").collect()

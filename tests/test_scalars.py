@@ -6,7 +6,6 @@ from webalizer_spark.functions.scalars import (
     agent_mangle,
     get_domain,
     search_terms,
-    share_pct,
     url_decode,
 )
 
@@ -52,12 +51,6 @@ def test_search_terms_extraction(spark):
     assert _one(spark, c, "proto://eng-1.example/?q=Spark+Shuffle%21") == \
         "spark shuffle!"
     assert _one(spark, c, "proto://eng-1.example/?other=x") is None
-
-
-def test_share_pct(spark):
-    df = spark.createDataFrame([(25, 100)], "m int, t int")
-    got = df.select(share_pct(F.col("m"), F.col("t")).alias("p")).collect()[0]["p"]
-    assert got == 25.0
 
 
 def test_redact_pii(spark):

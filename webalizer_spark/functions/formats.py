@@ -41,7 +41,14 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from webalizer_spark.functions.grok import GROK_FIELDS, MASTER_PATTERN, _US
+from webalizer_spark.functions.grok import (
+    GROK_FIELDS,
+    MASTER_PATTERN,
+    _COMBINED_MAP,
+    _US,
+    _pack,
+    _unpack,
+)
 from webalizer_spark.functions.scalars import sanitize
 
 SQUID_PATTERN = (
@@ -95,22 +102,9 @@ def detect_format(text: Column, default: str = "combined") -> Column:
     )
 
 
-def _pack(text: Column, pattern: str, mapping: list[int | str | None]) -> Column:
-    """regexp_replace-pack the chosen groups (in GROK_FIELDS order) into a
-    US-delimited record. Entries: int = that group; str = a replacement
-    template combining groups (e.g. '$1 $2 $3 $4' reassembles a
-    multi-group datetime); None -> empty (NULL after split)."""
-    repl = _US + _US.join(
-        "" if g is None else (g if isinstance(g, str) else f"${g}")
-        for g in mapping)
-    return F.regexp_replace(F.replace(text, F.lit(_US), F.lit("")),
-                            pattern, repl)
-
-
 # mapping: canonical field -> regex group(s) per format
 #   GROK_FIELDS order: actor ident auth_user dt_text verb path
 #                      status_text bytes_text referrer agent_str
-_COMBINED_MAP: list[int | str | None] = [1, 2, 3, 4, 5, 6, 7, 8, 9, 10]
 # squid: dt_text = epoch seconds (ms group 2 dropped — the reference
 # also keeps second granularity)
 _SQUID_MAP: list[int | str | None] = [4, None, 10, 1, 8, 9, 6, 7, None, None]
@@ -354,9 +348,4 @@ def apply_grok_multi(df: DataFrame, text_col: str = "text",
     packed = ladder.otherwise(
         F.when(F.col("log_format") == "w3c", src)  # no field mapping
         .otherwise(_pack(src, MASTER_PATTERN, _COMBINED_MAP)))
-    with_parts = tagged.withColumn("_parts", F.split(packed, _US, -1))
-    return with_parts.select(
-        *tagged.columns,
-        *[F.nullif(F.get(F.col("_parts"), i + 1), F.lit("")).alias(n)
-          for i, n in enumerate(GROK_FIELDS)],
-    )
+    return _unpack(tagged, packed)

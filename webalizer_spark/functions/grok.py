@@ -61,8 +61,16 @@ _RAW_STRUCT = T.StructType([T.StructField(f, T.StringType()) for f in GROK_FIELD
 _US = "\x1f"
 
 
-def _parts_expr(text: Column) -> Column:
-    """regexp_replace -> US-delimited -> split, ONE regex pass.
+# the combined grammar's groups in GROK_FIELDS order (see _pack)
+_COMBINED_MAP: list[int | str | None] = list(range(1, len(GROK_FIELDS) + 1))
+
+
+def _pack(text: Column, pattern: str, mapping: list[int | str | None]) -> Column:
+    """ONE anchored regexp_replace rewriting a line into a US-delimited
+    record of the chosen groups, in GROK_FIELDS order. Entries: int =
+    that group; str = a replacement template combining groups (e.g.
+    '$1 $2 $3 $4' reassembles a multi-group datetime); None -> empty
+    (NULL after _unpack).
 
     The replacement starts with the delimiter, so a MATCHED line splits
     into 1 + n elements (parts[0] == ''), while an UNMATCHED line comes
@@ -70,9 +78,11 @@ def _parts_expr(text: Column) -> Column:
     is then NULL for every field of an unmatched row, with no conditional
     expression anywhere (ANSI-safe, branch-free).
     """
-    clean = F.replace(text, F.lit(_US), F.lit(""))
-    repl = _US + _US.join(f"${i}" for i in range(1, len(GROK_FIELDS) + 1))
-    return F.split(F.regexp_replace(clean, MASTER_PATTERN, repl), _US, -1)
+    repl = _US + _US.join(
+        "" if g is None else (g if isinstance(g, str) else f"${g}")
+        for g in mapping)
+    return F.regexp_replace(F.replace(text, F.lit(_US), F.lit("")),
+                            pattern, repl)
 
 
 def _raw_field(parts: Column, i: int) -> Column:
@@ -82,16 +92,23 @@ def _raw_field(parts: Column, i: int) -> Column:
     return F.nullif(F.get(parts, i + 1), F.lit(""))
 
 
+def _unpack(df: DataFrame, packed: Column) -> DataFrame:
+    """Append the GROK_FIELDS raw columns of a packed record to df. The
+    split array is its own projection (see the PLAN NOTE above)."""
+    with_parts = df.withColumn("_parts", F.split(packed, _US, -1))
+    return with_parts.select(
+        *df.columns,
+        *[_raw_field(F.col("_parts"), i).alias(n)
+          for i, n in enumerate(GROK_FIELDS)],
+    )
+
+
 def apply_grok(df: DataFrame, text_col: str = "text",
                strategy: str = "split") -> DataFrame:
     """Append the GROK_FIELDS raw string columns to df."""
     if strategy == "split":
-        with_parts = df.withColumn("_parts", _parts_expr(F.col(text_col)))
-        return with_parts.select(
-            *df.columns,
-            *[_raw_field(F.col("_parts"), i).alias(n)
-              for i, n in enumerate(GROK_FIELDS)],
-        )
+        return _unpack(df, _pack(F.col(text_col), MASTER_PATTERN,
+                                 _COMBINED_MAP))
     if strategy == "pandas":
         with_struct = df.withColumn("_g", _grok_pandas_udf(F.col(text_col)))
         return with_struct.select(
@@ -107,6 +124,3 @@ def _grok_pandas_udf(text: pd.Series) -> pd.DataFrame:
     out = text.str.extract(MASTER_PATTERN, expand=True)
     out.columns = GROK_FIELDS
     return out
-
-
-GROK_STRATEGIES = ("split", "pandas")

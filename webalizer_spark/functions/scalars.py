@@ -74,16 +74,6 @@ def agent_mangle(agent: Column, level: int = 0) -> Column:
     return F.substring_index(agent, "/", 1)
 
 
-def kbytes(bytes_col: Column) -> Column:
-    """KBytes display math [output.c]: bytes/1024, double."""
-    return bytes_col.cast("double") / F.lit(1024.0)
-
-
-def share_pct(metric: Column, total: Column) -> Column:
-    """Percent-of-total share [output.c/graphs.c pie math]."""
-    return F.when(total > 0, metric.cast("double") * 100.0 / total).otherwise(F.lit(0.0))
-
-
 # ---------------------------------------------------------------------------
 # PII scrubbing (training-data pipeline op — beyond the reference)
 # ---------------------------------------------------------------------------

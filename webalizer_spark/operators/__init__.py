@@ -1,3 +1,3 @@
-from webalizer_spark.operators.parse import parse_transcripts, split_ok_bad
+from webalizer_spark.operators.parse import parse_transcripts
 
-__all__ = ["parse_transcripts", "split_ok_bad"]
+__all__ = ["parse_transcripts"]

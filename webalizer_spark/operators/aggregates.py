@@ -40,8 +40,11 @@ def FILES() -> Column:
     return F.count_if(F.col("status") == 200).alias("files")
 
 
-def PAGES() -> Column:
-    return F.count_if(F.col("tool").isNotNull()).alias("pages")
+def PAGE_ROWS() -> Column:
+    """pages: rows whose is_page column is set. The spine computes
+    is_page once from the PageType predicate (filters.page_predicate);
+    a frame built elsewhere adds it with the same predicate."""
+    return F.count_if(F.col("is_page")).alias("pages")
 
 
 def ERRORS() -> Column:
@@ -60,17 +63,8 @@ def SITES() -> Column:
     return F.countDistinct("conv_id").alias("sites")
 
 
-def _pages_for(df: DataFrame) -> Column:
-    """PageType-aware pages metric: pipeline spines carry a conf-driven
-    is_page column (filters.page_predicate); plain frames use the fixed
-    recast predicate."""
-    if "is_page" in df.columns:
-        return F.count_if(F.col("is_page")).alias("pages")
-    return PAGES()
-
-
-def _core_for(df: DataFrame) -> list[Column]:
-    return [HITS(), FILES(), _pages_for(df), ERRORS(), KBYTES()]
+def _core() -> list[Column]:
+    return [HITS(), FILES(), PAGE_ROWS(), ERRORS(), KBYTES()]
 
 
 def _grain(ts_col: str, grain: str) -> Column:
@@ -81,7 +75,7 @@ def time_totals(df: DataFrame, grain: str = "day", ts_col: str = "ts",
                 with_sessions: bool = False) -> DataFrame:
     """A7/A8/A9: hourly/daily/monthly totals incl. per-bucket distinct
     sites (reference daily table sd_htab) and visit starts."""
-    metrics = [*_core_for(df), SITES()]
+    metrics = [*_core(), SITES()]
     if with_sessions:
         metrics.append(VISITS())
     return df.groupBy(_grain(ts_col, grain)).agg(*metrics)
@@ -90,14 +84,14 @@ def time_totals(df: DataFrame, grain: str = "day", ts_col: str = "ts",
 def hour_of_day_profile(df: DataFrame, ts_col: str = "ts") -> DataFrame:
     """A7 variant: the reference's hourly table is hour-OF-DAY within the
     month [webalizer.c th_* arrays] — a 24-row profile."""
-    return df.groupBy(F.hour(ts_col).alias("hour")).agg(*_core_for(df))
+    return df.groupBy(F.hour(ts_col).alias("hour")).agg(*_core())
 
 
 def per_site(df: DataFrame) -> DataFrame:
     """A1: per-conv (per-site) table [hashtab.c ƒput_hnode]: hits, files,
     pages, kbytes, visits, last-seen ts."""
     return df.groupBy("conv_id").agg(
-        *_core_for(df), VISITS(), F.max("ts").alias("last_ts"),
+        *_core(), VISITS(), F.max("ts").alias("last_ts"),
     )
 
 
@@ -155,7 +149,7 @@ def month_summary(df: DataFrame, ts_col: str = "ts") -> DataFrame:
     """A9: month totals + distinct cardinalities (t_site/t_url/t_agent/
     t_user) — the webalizer.hist row [preserve.c ƒput_history]."""
     return df.groupBy(_grain(ts_col, "month")).agg(
-        *_core_for(df), VISITS(), SITES(),
+        *_core(), VISITS(), SITES(),
         F.countDistinct("tool").alias("urls"),
         F.countDistinct("agent_str").alias("agents"),
         F.countDistinct("ident").alias("users"),

@@ -24,6 +24,20 @@ _LOG = logging.getLogger("webalizer_spark.dedup")
 _BROADCAST_DROP_MAX = 500_000
 
 
+def _drop_rows(df: DataFrame, drop: DataFrame,
+               on: str | F.Column) -> DataFrame:
+    """left_anti df against a drop set, broadcasting the drop set when it
+    has at most _BROADCAST_DROP_MAX rows. Every caller's drop set comes
+    out of a local checkpoint, whose unknown stats stop AQE from
+    broadcasting it itself — the anti-join would plan as a SortMergeJoin
+    (double Exchange+Sort on ids). The count is cheap (already
+    materialized); above the gate SMJ stays — at 100 TB a giant drop set
+    must not be forced driver-side."""
+    if drop.limit(_BROADCAST_DROP_MAX + 1).count() <= _BROADCAST_DROP_MAX:
+        drop = F.broadcast(drop)
+    return df.join(drop, on, "left_anti")
+
+
 def _cap_hot_keys(keys: DataFrame, key_cols: list[str], cap: int | None,
                   op: str) -> DataFrame:
     """Drop join keys shared by more than `cap` rows before a candidate
@@ -415,16 +429,7 @@ def drop_non_min_members(df: DataFrame, edges: DataFrame,
     comp = connected_min_label(edges)
     drop = (comp.filter(F.col("label") != F.col("v"))
             .select(F.col("v").alias(id_col)))
-    # comp comes out of the CC loop's localCheckpoint, whose unknown
-    # stats stop AQE from broadcasting the typically-small drop set —
-    # the keep anti-join planned as a SortMergeJoin (double
-    # Exchange+Sort on ids). Count it (cheap: already materialized)
-    # and broadcast under the same smallness gate quality.decontaminate
-    # uses; above the gate keep SMJ — at 100 TB a giant drop set must
-    # not be forced driver-side.
-    if drop.limit(_BROADCAST_DROP_MAX + 1).count() <= _BROADCAST_DROP_MAX:
-        drop = F.broadcast(drop)
-    return df.join(drop, id_col, "left_anti")
+    return _drop_rows(df, drop, id_col)
 
 
 def near_dup_remove(df: DataFrame, content_col: str = "text",
@@ -461,8 +466,8 @@ def drop_non_best_members(df: DataFrame, edges: DataFrame, score_col: str,
     struct(score, -v)) tie-break crashes on string ids under ANSI,
     where drop_non_min_members handles them fine). eqNullSafe against
     the max makes an all-NULL-score component keep its min id, so rows
-    are never dropped without a surviving keeper. Same smallness-gated
-    broadcast on the final anti-join as drop_non_min_members."""
+    are never dropped without a surviving keeper. The final anti-join is
+    _drop_rows, as in drop_non_min_members."""
     comp = connected_min_label(edges)
     scored = comp.join(
         df.select(F.col(id_col).alias("v"), F.col(score_col).alias("_s")),
@@ -474,9 +479,7 @@ def drop_non_best_members(df: DataFrame, edges: DataFrame, score_col: str,
     drop = (scored.join(keep, "label")
             .filter(F.col("v") != F.col("keeper"))
             .select(F.col("v").alias(id_col)))
-    if drop.limit(_BROADCAST_DROP_MAX + 1).count() <= _BROADCAST_DROP_MAX:
-        drop = F.broadcast(drop)
-    return df.join(drop, id_col, "left_anti")
+    return _drop_rows(df, drop, id_col)
 
 
 def near_dup_remove_best(df: DataFrame, score_col: str,
@@ -546,10 +549,8 @@ def remove_seen(corpus: DataFrame, reference: DataFrame,
     # their drop sets via the CC loop's checkpoints)
     seen = (dup.select(F.expr("substring(doc_a, 3)").alias("_sid"))
             .distinct().localCheckpoint(eager=False))
-    if seen.limit(_BROADCAST_DROP_MAX + 1).count() <= _BROADCAST_DROP_MAX:
-        seen = F.broadcast(seen)
-    return corpus.join(
-        seen, F.col(id_col).cast("string") == F.col("_sid"), "left_anti")
+    return _drop_rows(corpus, seen,
+                      F.col(id_col).cast("string") == F.col("_sid"))
 
 
 def containment_pairs(sh: DataFrame, threshold: float = 0.8,

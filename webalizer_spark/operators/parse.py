@@ -7,7 +7,9 @@ declarative projection chain:
   text --grok--> raw string fields --cast/validate--> typed columns + parse_ok
 
 parse_ok is the bad-record predicate: a row is OK iff the line matched the
-grammar AND its datetime parses AND status/bytes are integral. bytes '-'
+grammar AND its datetime parses AND status/bytes are integral. The S4
+routing on it (ok rows on, bad rows to the errors sink with the raw line)
+happens once, in plans/pipeline.run_pipeline over the parse cache. bytes '-'
 -> 0 (the reference treats '-' transfer as zero). Everything is a built-in
 expression — one regex pass (grok 'split' default), then cheap casts —
 all inside whole-stage codegen; no shuffle, no Python in the default path.
@@ -154,10 +156,3 @@ def parse_transcripts_multi(
     )
     return out.withColumn("parse_ok", parse_ok)
 
-
-def split_ok_bad(parsed: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Bad-record routing (S4): ok rows continue; bad rows -> errors sink
-    with the raw line preserved (the reference's Debug dump analog)."""
-    ok = parsed.filter(F.col("parse_ok"))
-    bad = parsed.filter(~F.col("parse_ok")).select(*BASE_COLS)
-    return ok, bad

@@ -82,46 +82,9 @@ def lsh_signatures(emb: DataFrame, num_planes: int = 8, dim: int = 64,
     2x faster already at 2 000 vectors and strictly better at scale).
     Decimal-fold accumulation keeps projections bit-identical to the
     old groupBy-decimal-sum and to the DuckDB oracle (_LSH_SIG_CTE).
-    Configs whose expression tree would get unwieldy (planes*tables*dim
-    > 65536 literals) fall back to the explode path.
+    The expression tree holds planes*tables*dim literal weights; every
+    caller stays at or below 8*8*64.
     """
-    if num_tables * num_planes * dim <= 65536:
-        return _lsh_signatures_literal(
-            emb, num_planes, dim, id_col, vec_col, num_tables)
-    return _lsh_signatures_explode(
-        emb, num_planes, dim, id_col, vec_col, num_tables)
-
-
-def _lsh_weight(t: int, j: int, i: int) -> float:
-    """Python twin of the md5(t|j|i) seeding — MUST stay bit-identical
-    to _lsh_signatures_explode's wt and queries.py's _LSH_SIG_CTE."""
-    import hashlib
-
-    h = int(hashlib.md5(f"{t}|{j}|{i}".encode()).hexdigest()[:8], 16)
-    return 1.0 if h % 2 == 0 else -1.0
-
-
-def _lsh_proj_fold(vec_col: str, weights: list[float]) -> F.Column:
-    """Exact-decimal +-1-weighted projection of a vector column against
-    a literal weight array, as a zip_with/aggregate fold (ONE F.expr —
-    a Column-API lambda build was tried in round 7 and measured ~20x
-    slower to CONSTRUCT via py4j round-trips; the single parsed string
-    is the cheaper driver path). coalesce(v, 0) skips missing terms
-    the way SQL SUM skips NULLs, so short/NULL-element vectors produce
-    the SAME signature as the explode path instead of a NULL-poisoned
-    all-zero signature."""
-    arr = "array(" + ",".join(f"{w:.1f}D" for w in weights) + ")"
-    return F.expr(
-        f"aggregate(zip_with({vec_col}, {arr}, "
-        f"(x, y) -> CAST(CAST(x AS DOUBLE) * y AS DECIMAL(18,12))), "
-        f"CAST(0 AS DECIMAL(18,12)), "
-        f"(acc, v) -> CAST(acc + coalesce(v, CAST(0 AS DECIMAL(18,12)))"
-        f" AS DECIMAL(18,12)))")
-
-
-def _lsh_signatures_literal(emb: DataFrame, num_planes: int, dim: int,
-                            id_col: str, vec_col: str,
-                            num_tables: int) -> DataFrame:
     structs = []
     for t in range(num_tables):
         sig = None
@@ -137,32 +100,31 @@ def _lsh_signatures_literal(emb: DataFrame, num_planes: int, dim: int,
                       F.col("sig").cast("bigint").alias("sig"))
 
 
-def _lsh_signatures_explode(emb: DataFrame, num_planes: int, dim: int,
-                            id_col: str, vec_col: str,
-                            num_tables: int) -> DataFrame:
-    spark = emb.sparkSession
-    dims = spark.range(dim).select(F.col("id").cast("int").alias("i"))
-    planes = (spark.range(num_tables * num_planes)
-              .select((F.col("id") % num_planes).cast("int").alias("j"),
-                      (F.col("id") / num_planes).cast("int").alias("t")))
-    wt = F.when(
-        F.conv(F.substring(F.md5(F.concat_ws(
-            "|", F.col("t").cast("string"), F.col("j").cast("string"),
-            F.col("i").cast("string"))), 1, 8),
-            16, 10).cast("bigint") % 2 == 0,
-        F.lit(1.0)).otherwise(F.lit(-1.0))
-    w = planes.crossJoin(dims).withColumn("wt", wt)
-    # try_element_at: out-of-range dims (vector shorter than dim) yield
-    # NULL and SUM skips them — matching the literal path's coalesce(0)
-    # fold; plain element_at throws under ANSI semantics
-    x = (F.try_element_at(vec_col, F.col("i") + 1).cast("double")
-         * F.col("wt")).cast("decimal(18,12)")
-    proj = (emb.crossJoin(F.broadcast(w))
-            .groupBy(id_col, "t", "j").agg(F.sum(x).alias("p")))
-    bit = F.when(F.col("p") >= 0,
-                 F.pow(F.lit(2), F.col("j")).cast("bigint")).otherwise(F.lit(0))
-    return proj.groupBy(id_col, "t").agg(
-        F.sum(bit).cast("bigint").alias("sig"))
+def _lsh_weight(t: int, j: int, i: int) -> float:
+    """md5(t|j|i) seeding of the +-1 hyperplane weights — MUST stay
+    bit-identical to queries.py's _LSH_SIG_CTE wt (the DuckDB oracle)."""
+    import hashlib
+
+    h = int(hashlib.md5(f"{t}|{j}|{i}".encode()).hexdigest()[:8], 16)
+    return 1.0 if h % 2 == 0 else -1.0
+
+
+def _lsh_proj_fold(vec_col: str, weights: list[float]) -> F.Column:
+    """Exact-decimal +-1-weighted projection of a vector column against
+    a literal weight array, as a zip_with/aggregate fold (ONE F.expr —
+    a Column-API lambda build was tried in round 7 and measured ~20x
+    slower to CONSTRUCT via py4j round-trips; the single parsed string
+    is the cheaper driver path). coalesce(v, 0) skips missing terms
+    the way SQL SUM skips NULLs, so short/NULL-element vectors produce
+    the signature of their present terms (as the oracle's SUM does)
+    instead of a NULL-poisoned all-zero signature."""
+    arr = "array(" + ",".join(f"{w:.1f}D" for w in weights) + ")"
+    return F.expr(
+        f"aggregate(zip_with({vec_col}, {arr}, "
+        f"(x, y) -> CAST(CAST(x AS DOUBLE) * y AS DECIMAL(18,12))), "
+        f"CAST(0 AS DECIMAL(18,12)), "
+        f"(acc, v) -> CAST(acc + coalesce(v, CAST(0 AS DECIMAL(18,12)))"
+        f" AS DECIMAL(18,12)))")
 
 
 def ann_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,

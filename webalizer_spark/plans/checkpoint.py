@@ -14,8 +14,9 @@ State saved after a run (all parquet + one JSON manifest):
                 DISTINCT-site count mergeable (A13: distincts must be
                 kept as per-key tables to stay mergeable).
   manifest.json watermark (max ts), totals, and per-partition lineage
-                metrics (rows per input partition) — the north_rule's
-                "per-partition checkpoints with lineage and metrics".
+                metrics (rows and bytes per spine partition,
+                spine_lineage) — the north_rule's "per-partition
+                checkpoints with lineage and metrics".
 
 resume(): new records are filtered to ts > watermark (P6; on Iceberg this
 is partition pruning on the ts-bucketed layout), sessionized locally,
@@ -28,6 +29,7 @@ from __future__ import annotations
 import json
 import os
 from dataclasses import dataclass
+from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -83,13 +85,50 @@ DAILY_COLS = ("hits", "files", "pages", "errors", "bytes", "visits")
 
 
 def _daily_delta(sessions: DataFrame) -> DataFrame:
-    """One batch's daily_state rows. pages follows the spine's PageType
-    predicate (A._pages_for), so the saved history agrees with the daily
-    report; bytes stays the raw sum(nbytes), not KBYTES."""
+    """One batch's daily_state rows. pages counts the spine's PageType
+    is_page column, so the saved history agrees with the daily report;
+    bytes stays the raw sum(nbytes), not KBYTES."""
     return sessions.groupBy(
         F.date_trunc("day", "ts").alias("day_ts")).agg(
-        A.HITS(), A.FILES(), A._pages_for(sessions), A.ERRORS(),
+        A.HITS(), A.FILES(), A.PAGE_ROWS(), A.ERRORS(),
         F.sum("nbytes").alias("bytes"), A.VISITS())
+
+
+def _merged_daily(sessions: DataFrame, ckpt: CheckpointPaths,
+                  ) -> tuple[DataFrame, DataFrame]:
+    """(daily_state, day_conv_state) with this batch folded into the saved
+    snapshot, if any: additive metrics merge by re-aggregation, the
+    (day_ts, conv_id) presence pairs by a distinct union (A13)."""
+    spark = sessions.sparkSession
+    daily = _daily_delta(sessions)
+    presence = sessions.select(
+        F.date_trunc("day", "ts").alias("day_ts"), "conv_id").distinct()
+    if not os.path.exists(ckpt.manifest):
+        return daily, presence
+    daily = (spark.read.parquet(ckpt.daily_state).unionByName(daily)
+             .groupBy("day_ts")
+             .agg(*[F.sum(c).alias(c) for c in DAILY_COLS]))
+    presence = (spark.read.parquet(ckpt.day_conv_state)
+                .unionByName(presence).distinct())
+    return daily, presence
+
+
+def spine_lineage(spine: DataFrame) -> tuple[list[dict], datetime | None]:
+    """Rows and bytes per spine partition, sorted by partition id, and the
+    spine's max ts (the resume watermark [preserve.c stores the last
+    timestamp]) — one aggregate; ([], None) for an empty spine."""
+    per_part = (spine
+                .groupBy(F.spark_partition_id().alias("partition_id"))
+                .agg(F.count(F.lit(1)).alias("rows"),
+                     F.sum("nbytes").alias("bytes"),
+                     F.max("ts").alias("wm"))
+                .collect())
+    parts = sorted(({"partition_id": r["partition_id"], "rows": r["rows"],
+                     "bytes": int(r["bytes"] or 0)} for r in per_part),
+                   key=lambda p: p["partition_id"])
+    wm = max((r["wm"] for r in per_part if r["wm"] is not None),
+             default=None)
+    return parts, wm
 
 
 def save_state(sessions: DataFrame, ckpt: CheckpointPaths) -> dict:
@@ -107,33 +146,21 @@ def save_state(sessions: DataFrame, ckpt: CheckpointPaths) -> dict:
     os.makedirs(ckpt.base, exist_ok=True)
     has_prev = os.path.exists(ckpt.manifest)
 
-    # lineage/metrics: rows + bytes per spine partition (the sessionized
-    # shuffle layout feeding the sinks), and the resume watermark
-    # [preserve.c stores the last timestamp]. The rows==0 fast path rides
-    # the same aggregate — no separate isEmpty() job over the spine.
-    per_part = (sessions
-                .groupBy(F.spark_partition_id().alias("partition_id"))
-                .agg(F.count(F.lit(1)).alias("rows"),
-                     F.sum("nbytes").alias("bytes"),
-                     F.max("ts").alias("wm"))
-                .collect())
-    batch_rows = sum(r["rows"] for r in per_part)
-    if batch_rows == 0:
+    # the rows==0 fast path rides the lineage aggregate — no separate
+    # isEmpty() job over the spine
+    parts, batch_wm = spine_lineage(sessions)
+    if not parts:
         # empty batch: nothing to snapshot — keep the existing state (the
         # reference likewise leaves webalizer.current untouched when every
         # record was skipped as already-processed)
         return load_manifest(ckpt) if has_prev else {
             "watermark": None, "total_rows": 0, "partitions": []}
-    batch_wm = max(r["wm"] for r in per_part if r["wm"] is not None)
 
     new_version = ckpt._version() + 1
     conv_delta = sessions.groupBy("conv_id").agg(
         F.max("ts").alias("last_ts"),
         F.max("session_seq").alias("sessions"),
     )
-    daily_delta = _daily_delta(sessions)
-    day_conv_delta = sessions.select(
-        F.date_trunc("day", "ts").alias("day_ts"), "conv_id").distinct()
     prev_rows = 0
     prev_wm = None
     if has_prev:
@@ -145,18 +172,13 @@ def save_state(sessions: DataFrame, ckpt: CheckpointPaths) -> dict:
                       .groupBy("conv_id")
                       .agg(F.max("last_ts").alias("last_ts"),
                            F.max("sessions").alias("sessions")))
-        daily_delta = (spark.read.parquet(ckpt.daily_state)
-                       .unionByName(daily_delta)
-                       .groupBy("day_ts")
-                       .agg(*[F.sum(c).alias(c) for c in DAILY_COLS]))
-        day_conv_delta = (spark.read.parquet(ckpt.day_conv_state)
-                          .unionByName(day_conv_delta).distinct())
+    daily, day_conv = _merged_daily(sessions, ckpt)
 
     conv_delta.write.mode("overwrite").parquet(
         ckpt._vdir("conv_state", new_version))
-    daily_delta.write.mode("overwrite").parquet(
+    daily.write.mode("overwrite").parquet(
         ckpt._vdir("daily_state", new_version))
-    day_conv_delta.write.mode("overwrite").parquet(
+    day_conv.write.mode("overwrite").parquet(
         ckpt._vdir("day_conv_state", new_version))
 
     wm = batch_wm.isoformat()
@@ -165,10 +187,8 @@ def save_state(sessions: DataFrame, ckpt: CheckpointPaths) -> dict:
     manifest = {
         "version": new_version,
         "watermark": wm,
-        "total_rows": int(prev_rows) + int(batch_rows),
-        "partitions": [
-            {"partition_id": r["partition_id"], "rows": r["rows"],
-             "bytes": int(r["bytes"] or 0)} for r in per_part],
+        "total_rows": int(prev_rows) + sum(p["rows"] for p in parts),
+        "partitions": parts,
     }
     # commit: temp write + atomic rename of the version pointer
     tmp = ckpt.manifest + ".tmp"
@@ -275,18 +295,10 @@ def resume_sessionize(new_df: DataFrame, ckpt: CheckpointPaths,
 
 
 def merge_daily(new_sessions: DataFrame, ckpt: CheckpointPaths) -> DataFrame:
-    """A13: additive metrics merge by re-aggregation; per-day distinct
-    sites recomputed exactly from the merged presence table."""
-    spark = new_sessions.sparkSession
-    old = spark.read.parquet(ckpt.daily_state)
-    delta = _daily_delta(new_sessions)
-    additive = (old.unionByName(delta)
-                .groupBy("day_ts")
-                .agg(*[F.sum(c).alias(c) for c in DAILY_COLS]))
-    presence = (spark.read.parquet(ckpt.day_conv_state)
-                .unionByName(new_sessions.select(
-                    F.date_trunc("day", "ts").alias("day_ts"), "conv_id"))
-                .distinct())
+    """A13: the saved daily state merged with a resumed batch, plus the
+    per-day distinct sites recomputed exactly from the merged presence
+    table."""
+    additive, presence = _merged_daily(new_sessions, ckpt)
     sites = presence.groupBy("day_ts").agg(
         F.countDistinct("conv_id").alias("sites"))
     return additive.join(sites, "day_ts", "left")

@@ -49,6 +49,7 @@ from webalizer_spark.operators.sessionize import (
     exit_counts,
     pick_sessionizer,
 )
+from webalizer_spark.plans.checkpoint import spine_lineage
 
 # storage level of the parse cache, the spine and the shared aggregates:
 # spillable, so a spine larger than executor memory degrades, never fails
@@ -181,12 +182,9 @@ def run_pipeline(
     # entry/exit follow the conf page predicate: with PageType set the
     # entry/exit tables key on matching PATHS (the reference's URL-based
     # tables); default keys on tool like the rest of the recast
-    if cfg.page_types:
-        sess_pages = entry_exit(spine, page_col="path",
-                                page_pred=F.col("is_page"))
-    else:
-        sess_pages = entry_exit(spine)
-    sess_pages = sess_pages.persist(PERSIST_LEVEL)
+    sess_pages = entry_exit(
+        spine, page_col="path" if cfg.page_types else "tool",
+        page_pred=F.col("is_page")).persist(PERSIST_LEVEL)
     per_site = A.per_site(spine).persist(PERSIST_LEVEL)
     per_url = A.per_url(spine).persist(PERSIST_LEVEL)
     n = cfg.topn
@@ -292,6 +290,7 @@ def write_sinks(result: PipelineResult, out_base: str) -> dict[str, int]:
     Sinks: errors/, tool_calls/, by_role/ (partitioned by role), and one
     directory per report table.
     """
+    import json
     import os
     from concurrent.futures import ThreadPoolExecutor
 
@@ -308,10 +307,12 @@ def write_sinks(result: PipelineResult, out_base: str) -> dict[str, int]:
         writer.parquet(os.path.join(out_base, name))
         counts[name] = obs.get["rows"]
 
-    # materialize both cached spines ONCE, then fan the (mostly tiny)
-    # report writes out concurrently — Spark schedules the jobs against
-    # the shared cache; sequential writes waste cluster idle time
-    result.enriched.count()
+    # ONE pass materializes both cached spines (parse and spine) and
+    # records the per-partition lineage (north_rule: "lineage and metrics
+    # emitted per partition"); then the (mostly tiny) report writes fan
+    # out concurrently — Spark schedules the jobs against the shared
+    # cache; sequential writes waste cluster idle time
+    partitions, _ = spine_lineage(result.enriched)
     jobs = [(result.errors, "errors", None),
             (result.tool_calls, "tool_calls", None),
             (result.by_role, "by_role", ["role"])]
@@ -321,25 +322,16 @@ def write_sinks(result: PipelineResult, out_base: str) -> dict[str, int]:
         for f in futures:
             f.result()
 
-    # per-partition lineage metrics alongside the sinks (north_rule:
-    # "lineage and metrics emitted per partition") — spine rows/bytes per
-    # partition plus every per-sink routed-row count, one JSON manifest
-    import json
-
-    per_part = (result.enriched
-                .groupBy(F.spark_partition_id().alias("partition_id"))
-                .agg(F.count(F.lit(1)).alias("rows"),
-                     F.sum("nbytes").alias("bytes"))
-                .collect())
+    # one JSON manifest: every per-sink routed-row count plus the spine
+    # lineage; sorted keys keep it byte-stable whatever order the pool
+    # finished in
     metrics = {
         "sinks": {k: int(v) for k, v in counts.items()},
-        "spine_partitions": [
-            {"partition_id": r["partition_id"], "rows": r["rows"],
-             "bytes": int(r["bytes"] or 0)} for r in per_part],
+        "spine_partitions": partitions,
     }
     os.makedirs(out_base, exist_ok=True)
     tmp = os.path.join(out_base, "_metrics.json.tmp")
     with open(tmp, "w") as f:
-        json.dump(metrics, f, indent=1)
+        json.dump(metrics, f, indent=1, sort_keys=True)
     os.replace(tmp, os.path.join(out_base, "_metrics.json"))
     return counts

@@ -642,7 +642,10 @@ def _resume_base(spark, sf):
     """Parsed synth rows renamed to the checkpoint operators' contract
     (conv_id/turn_idx/ts/status/tool/nbytes) — actor is the conv analog,
     ts is the PARSED timestamp, and a deterministic subset gets a tool
-    so the pages metric is non-trivial on both sides."""
+    so the pages metric is non-trivial on both sides. is_page is the
+    pipeline spine's default-config page predicate."""
+    from webalizer_spark.operators.filters import page_predicate
+
     p = _parsed(spark, sf).filter(F.col("parse_ok"))
     return p.select(
         F.col("actor").alias("conv_id"),
@@ -650,7 +653,7 @@ def _resume_base(spark, sf):
         F.col("ts_text").alias("ts"),
         "status",
         F.when(F.col("event_id") % 5 == 0, F.lit("t")).alias("tool"),
-        "nbytes")
+        "nbytes").withColumn("is_page", page_predicate(()))
 
 
 @q("tr2_resume", _BASE_CTE + """

@@ -1,3 +1,3 @@
-from webalizer_spark.sources.tables import TableIO, read_table, write_table
+from webalizer_spark.sources.tables import TableIO
 
-__all__ = ["TableIO", "read_table", "write_table"]
+__all__ = ["TableIO"]

@@ -117,12 +117,3 @@ class TableIO:
         shutil.rmtree(path)
         os.replace(tmp, path)
 
-
-def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Convenience: read one of the driver-provided testdata tables."""
-    return TableIO(spark, base_path=sf_dir).read(name)
-
-
-def write_table(spark: SparkSession, base: str, df: DataFrame, name: str,
-                **kw) -> None:
-    TableIO(spark, base_path=base).write(df, name, **kw)
