@@ -146,14 +146,17 @@ def main() -> None:
         # re-aggregated from the CUMULATIVE daily state (correct even
         # when a month spans several incremental runs), upserted by
         # month key (TableIO.merge: read-merge-swap of the parquet
-        # directory)
-        from pyspark.sql import functions as F
+        # directory). No manifest means no batch has had a good row yet,
+        # so there is no daily state to build it from.
+        if os.path.exists(ckpt.manifest):
+            from pyspark.sql import functions as F
 
-        io_out = TableIO(spark, base_path=args.output)
-        hist = (spark.read.parquet(ckpt.daily_state)
-                .groupBy(F.date_trunc("month", "day_ts").alias("month_ts"))
-                .agg(*[F.sum(c).alias(c) for c in DAILY_COLS]))
-        io_out.merge(hist, "history", ["month_ts"])
+            io_out = TableIO(spark, base_path=args.output)
+            hist = (spark.read.parquet(ckpt.daily_state)
+                    .groupBy(F.date_trunc("month", "day_ts")
+                             .alias("month_ts"))
+                    .agg(*[F.sum(c).alias(c) for c in DAILY_COLS]))
+            io_out.merge(hist, "history", ["month_ts"])
         if args.keep_checkpoints is not None:
             gone = compact(ckpt, keep_last=args.keep_checkpoints)
             if gone:

@@ -252,3 +252,44 @@ def test_cli_multi_format_incremental(tmp_path):
         f"SELECT COUNT(*) FROM '{out2}/by_role/*/*.parquet' "
         f"WHERE log_format = 'w3c' AND path LIKE '%/e%'").fetchone()[0]
     assert w3c_batch2 > 0
+
+
+def test_cli_degenerate_batches_route_to_errors(tmp_path):
+    """A first checkpointed run over an all-corrupt batch, and one over an
+    empty transcripts table, exits 0: every input row lands in the errors
+    sink, by_role is empty, and with no spine to snapshot the run leaves
+    no manifest and no history."""
+    import pyarrow.dataset as ds
+
+    from webalizer_spark.datagen import GenParams, ensure_fixture
+
+    full = ensure_fixture(str(tmp_path / "fix"), GenParams(n_convs=40),
+                          tag="degenerate")
+    src = f"'{full}/transcripts.parquet'"
+    batches = {
+        "all_corrupt": f"SELECT * REPLACE ('CORRUPT ' || conv_id AS text) "
+                       f"FROM {src} ORDER BY conv_id, turn_idx LIMIT 200",
+        "empty": f"SELECT * FROM {src} LIMIT 0",
+    }
+    for name, sql in batches.items():
+        inp = tmp_path / name
+        inp.mkdir()
+        for d in DIMS:
+            shutil.copy(f"{full}/{d}.parquet", inp / f"{d}.parquet")
+        duckdb.sql(f"COPY ({sql}) TO '{inp}/transcripts.parquet' "
+                   f"(FORMAT PARQUET)")
+        n = duckdb.sql(f"SELECT COUNT(*) FROM "
+                       f"'{inp}/transcripts.parquet'").fetchone()[0]
+        out, ckpt = str(tmp_path / f"{name}_out"), str(tmp_path / f"{name}_ck")
+        stdout = _run_cli("--input", str(inp), "--output", out,
+                          "--checkpoint", ckpt, "--incremental")
+        assert f"{n} records" in stdout, (name, stdout)
+        with open(os.path.join(out, "_metrics.json")) as f:
+            sinks = json.load(f)["sinks"]
+        assert (sinks["errors"], sinks["by_role"]) == (n, 0), (name, sinks)
+        rows = {s: ds.dataset(os.path.join(out, s), format="parquet",
+                              partitioning="hive").count_rows()
+                for s in ("errors", "by_role")}
+        assert rows == {"errors": n, "by_role": 0}, (name, rows)
+        assert not os.path.exists(os.path.join(ckpt, "manifest.json")), name
+        assert not os.path.exists(os.path.join(out, "history")), name

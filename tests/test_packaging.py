@@ -88,29 +88,30 @@ def _py_files():
         yield from (os.path.join(root, f) for f in files if f.endswith(".py"))
 
 
-def _foreign_aliases(tree, origins: dict) -> set[str]:
-    """Names a file binds to modules from outside the repo (``pq`` in
-    ``import pyarrow.parquet as pq``). ``origins`` caches each top-level
-    module's file across calls."""
-    import ast
-    import importlib.util
+def _repo_module(dotted: str) -> bool:
+    """Whether a dotted import path names a module file of this repo."""
+    base = os.path.join(REPO, *dotted.split("."))
+    return (os.path.isfile(base + ".py")
+            or os.path.isfile(os.path.join(base, "__init__.py")))
 
-    def foreign(module: str) -> bool:
-        top = module.split(".")[0]
-        if top not in origins:
-            spec = importlib.util.find_spec(top)
-            origins[top] = spec.origin if spec else None
-        origin = origins[top]
-        return origin is not None and not origin.startswith(REPO + os.sep)
+
+def _module_aliases(tree) -> set[str]:
+    """Names a file binds to the repo's own modules by an import: ``D``
+    in ``from webalizer_spark.operators import dedup as D``, ``E`` in
+    ``import __spark_entry__ as E``, ``webalizer_spark`` in ``import
+    webalizer_spark.queries``."""
+    import ast
 
     out = set()
     for n in ast.walk(tree):
         if isinstance(n, ast.Import):
-            out |= {a.asname or a.name.split(".")[0]
-                    for a in n.names if foreign(a.name)}
-        elif (isinstance(n, ast.ImportFrom) and not n.level
-              and foreign(n.module)):
-            out |= {a.asname or a.name for a in n.names}
+            for a in n.names:
+                bound = a.name if a.asname else a.name.split(".")[0]
+                if _repo_module(bound):
+                    out.add(a.asname or bound)
+        elif isinstance(n, ast.ImportFrom) and n.module and not n.level:
+            out |= {a.asname or a.name for a in n.names
+                    if _repo_module(f"{n.module}.{a.name}")}
     return out
 
 
@@ -119,22 +120,22 @@ def test_every_engine_name_is_referenced():
     webalizer_spark/ is loaded (by name, attribute or import) somewhere in
     the repo's Python outside its own definition. Decorated functions are
     exempt: a decorator such as the query registry's @q(...) is their
-    reference. Two things do not count as a load: a package __init__.py
-    re-exporting the name, and an attribute read off a module from
-    outside the repo (pyarrow's ``pq.<name>`` is not a use of an engine
-    function called ``<name>``)."""
+    reference. A package __init__.py re-exporting the name does not count
+    as a load, and ``x.<name>`` counts only when ``x`` is bound to one of
+    the repo's modules by an import: pyarrow's ``pq.write_table`` or a
+    local ``writer.write_table(...)`` is not a use of an engine function
+    called ``write_table``."""
     import ast
 
     pkg = os.path.join(REPO, "webalizer_spark")
     defined = []   # (name, path, top-level statement index)
     loaded = {}    # name -> {(path, top-level statement index)}
-    origins = {}
     for path in _py_files():
         with open(path) as f:
             tree = ast.parse(f.read(), path)
         in_pkg = path.startswith(pkg + os.sep)
         reexports = in_pkg and os.path.basename(path) == "__init__.py"
-        foreign = _foreign_aliases(tree, origins)
+        modules = _module_aliases(tree)
         for i, stmt in enumerate(tree.body):
             if in_pkg:
                 if isinstance(stmt, ast.ClassDef) or (
@@ -153,9 +154,13 @@ def test_every_engine_name_is_referenced():
             for n in ast.walk(stmt):
                 if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load):
                     name = n.id
-                elif isinstance(n, ast.Attribute) and not (
-                        isinstance(n.value, ast.Name)
-                        and n.value.id in foreign):
+                elif isinstance(n, ast.Attribute):
+                    root = n.value
+                    while isinstance(root, ast.Attribute):
+                        root = root.value
+                    if not (isinstance(root, ast.Name)
+                            and root.id in modules):
+                        continue
                     name = n.attr
                 elif isinstance(n, ast.alias) and not reexports:
                     name = n.name.rsplit(".", 1)[-1]

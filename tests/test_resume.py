@@ -164,6 +164,19 @@ def test_second_incremental_run_preserves_prior_state(spark, parsed_ok):
         assert daily[c].astype("int64").tolist() == \
             ref_daily[c].astype("int64").tolist(), c
 
+    # each merged day_conv_state file holds its rows in (day_ts, conv_id)
+    # order, so the bytes written do not depend on shuffle arrival order
+    import glob
+
+    import pyarrow.parquet as pq
+
+    files = glob.glob(f"{ckpt.day_conv_state}/*.parquet")
+    assert files
+    for path in files:
+        t = pq.read_table(path, columns=["day_ts", "conv_id"]).to_pydict()
+        keys = list(zip(t["day_ts"], t["conv_id"]))
+        assert keys == sorted(keys), path
+
 
 def test_resume_sessionize_skew_safe_matches_window(spark, parsed_ok, halves,
                                                     monkeypatch):

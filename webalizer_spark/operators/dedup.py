@@ -4,9 +4,10 @@ Exact + near-dup families, all pure DataFrame plans (no Python in the hot
 path). The all-pairs variants are exact baselines; the LSH variants are
 the 100 TB paths (candidate generation via bucket join instead of a
 quadratic self-join). Hash functions are md5-keyed and deterministic, so
-results are reproducible across runs/engines (oracle-checked in
-queries.py: doc_dedup_exact, doc_ngram_jaccard, doc_minhash_signatures,
-doc_minhash_lsh_pairs, doc_simhash).
+results are reproducible across runs/engines (oracle-checked through
+the queries.py rows that call them: doc_ngram_jaccard,
+doc_minhash_signatures, doc_minhash_lsh_pairs, doc_simhash,
+doc_simhash_pairs, doc_near_dup_keep, doc_containment, ...).
 """
 
 from __future__ import annotations
@@ -165,18 +166,17 @@ def _guard_all_pairs(df: DataFrame, id_col: str, op: str) -> None:
             "(lsh_candidate_pairs -> jaccard_pairs(candidates=...))")
 
 
-def jaccard_pairs(sh: DataFrame, threshold: float = 0.8,
-                  id_col: str = "doc_id",
-                  candidates: DataFrame | None = None) -> DataFrame:
-    """Exact token-set Jaccard. With `candidates` (from LSH) intersection
-    counting runs ONLY over candidate pairs — the shingle fan-out goes
-    through the candidate edge list BEFORE any pair aggregation, so the
-    hot-token quadratic blowup never materializes. Without candidates it
-    is the exact all-pairs baseline (size-guarded; small inputs only)."""
+def _overlap_counts(sh: DataFrame, id_col: str,
+                    candidates: DataFrame | None, op: str) -> DataFrame:
+    """(doc_a, doc_b, i, sza, szb): shared-shingle count i and both
+    shingle-set sizes for each doc_a < doc_b pair that shares a shingle.
+    With `candidates` (doc_a, doc_b) only those pairs are counted: a's
+    shingles fan out to its candidate partners first (equi-join on
+    doc_a), then one equi-join on (doc_b, shingle) counts matches, so
+    the hot-shingle quadratic blowup never materializes. Without
+    candidates it is the all-pairs self-join (size-guarded)."""
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
     if candidates is not None:
-        # fan a's shingles out to candidate partners first (equi-join on
-        # doc_a), then count matches with one equi-join on (doc_b, shingle)
         fan = (sh.withColumnRenamed(id_col, "doc_a")
                .withColumnRenamed("shingle", "_sh")
                .join(candidates, "doc_a"))
@@ -186,7 +186,7 @@ def jaccard_pairs(sh: DataFrame, threshold: float = 0.8,
                  .groupBy("doc_a", "doc_b")
                  .agg(F.count(F.lit(1)).alias("i")))
     else:
-        _guard_all_pairs(sh, id_col, "jaccard_pairs")
+        _guard_all_pairs(sh, id_col, op)
         a, b = sh.alias("a"), sh.alias("b")
         inter = (a.join(b, (F.col("a.shingle") == F.col("b.shingle"))
                         & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
@@ -195,9 +195,20 @@ def jaccard_pairs(sh: DataFrame, threshold: float = 0.8,
                  .agg(F.count(F.lit(1)).alias("i")))
     sa = sizes.select(F.col(id_col).alias("doc_a"), F.col("sz").alias("sza"))
     sb = sizes.select(F.col(id_col).alias("doc_b"), F.col("sz").alias("szb"))
+    return inter.join(sa, "doc_a").join(sb, "doc_b")
+
+
+def jaccard_pairs(sh: DataFrame, threshold: float = 0.8,
+                  id_col: str = "doc_id",
+                  candidates: DataFrame | None = None) -> DataFrame:
+    """Exact token-set Jaccard. With `candidates` (from LSH) intersection
+    counting runs ONLY over candidate pairs — the shingle fan-out goes
+    through the candidate edge list BEFORE any pair aggregation, so the
+    hot-token quadratic blowup never materializes. Without candidates it
+    is the exact all-pairs baseline (size-guarded; small inputs only)."""
+    pairs = _overlap_counts(sh, id_col, candidates, "jaccard_pairs")
     jac = F.col("i").cast("double") / (F.col("sza") + F.col("szb") - F.col("i"))
-    return (inter.join(sa, "doc_a").join(sb, "doc_b")
-            .filter(jac >= threshold)
+    return (pairs.filter(jac >= threshold)
             .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard")))
 
 
@@ -567,28 +578,8 @@ def containment_pairs(sh: DataFrame, threshold: float = 0.8,
     winnowing/span fingerprint families (which key on shared content
     directly) with this operator as the verifier; the all-pairs form
     is exact."""
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
-    if candidates is not None:
-        fan = (sh.withColumnRenamed(id_col, "doc_a")
-               .withColumnRenamed("shingle", "_sh")
-               .join(candidates, "doc_a"))
-        b = (sh.withColumnRenamed(id_col, "doc_b")
-             .withColumnRenamed("shingle", "_sh"))
-        inter = (fan.join(b, ["doc_b", "_sh"])
-                 .groupBy("doc_a", "doc_b")
-                 .agg(F.count(F.lit(1)).alias("i")))
-    else:
-        _guard_all_pairs(sh, id_col, "containment_pairs")
-        a, b = sh.alias("a"), sh.alias("b")
-        inter = (a.join(b, (F.col("a.shingle") == F.col("b.shingle"))
-                        & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-                 .groupBy(F.col(f"a.{id_col}").alias("doc_a"),
-                          F.col(f"b.{id_col}").alias("doc_b"))
-                 .agg(F.count(F.lit(1)).alias("i")))
-    sa = sizes.select(F.col(id_col).alias("doc_a"), F.col("sz").alias("sza"))
-    sb = sizes.select(F.col(id_col).alias("doc_b"), F.col("sz").alias("szb"))
+    pairs = _overlap_counts(sh, id_col, candidates, "containment_pairs")
     cont = F.col("i").cast("double") / F.least("sza", "szb")
-    return (inter.join(sa, "doc_a").join(sb, "doc_b")
-            .where(cont >= threshold)
+    return (pairs.where(cont >= threshold)
             .select("doc_a", "doc_b",
                     F.round(cont, 6).alias("containment")))

@@ -451,6 +451,20 @@ def unigram_logprobs(docs: DataFrame, text_col: str = "text",
                     F.log((F.col("cnt") + alpha) / denom).alias("logp")))
 
 
+def _nll_ppl(scored: DataFrame, id_col: str, logp: Column) -> DataFrame:
+    """(id, ntok, nll, ppl) from one row per scored token. Each token's
+    logp is rounded to 6dp decimal before the exact sum, so the answer
+    does not depend on aggregation order."""
+    dec = F.round(logp, 6).cast("decimal(24,6)")
+    return (scored.groupBy(id_col)
+            .agg(F.count(F.lit(1)).alias("ntok"),
+                 (-F.sum(dec)).cast("double").alias("nll"))
+            .select(id_col, "ntok",
+                    F.round("nll", 6).alias("nll"),
+                    F.round(F.exp(F.col("nll") / F.col("ntok")), 6)
+                    .alias("ppl")))
+
+
 def lm_perplexity(docs: DataFrame, lm: DataFrame | None = None,
                   id_col: str = "doc_id", text_col: str = "text",
                   alpha: float = 0.5) -> DataFrame:
@@ -495,14 +509,7 @@ def lm_perplexity(docs: DataFrame, lm: DataFrame | None = None,
               .crossJoin(F.broadcast(unk))
               .select(id_col,
                       F.coalesce("logp", "_unk_logp").alias("_lp")))
-    dec = F.round(F.col("_lp"), 6).cast("decimal(24,6)")
-    return (scored.groupBy(id_col)
-            .agg(F.count(F.lit(1)).alias("ntok"),
-                 (-F.sum(dec)).cast("double").alias("nll"))
-            .select(id_col, "ntok",
-                    F.round("nll", 6).alias("nll"),
-                    F.round(F.exp(F.col("nll") / F.col("ntok")), 6)
-                    .alias("ppl")))
+    return _nll_ppl(scored, id_col, F.col("_lp"))
 
 
 # ---------------------------------------------------------------------------
@@ -1185,14 +1192,7 @@ def lm_perplexity_bigram(docs: DataFrame, lam: float = 0.8,
               .crossJoin(F.broadcast(unk)))
     p = F.when(F.col("prev").isNull(), p_uni) \
         .otherwise(F.col("_p_pair"))
-    dec = F.round(F.log(p), 6).cast("decimal(24,6)")
-    return (scored.groupBy(id_col)
-            .agg(F.count(F.lit(1)).alias("ntok"),
-                 (-F.sum(dec)).cast("double").alias("nll"))
-            .select(id_col, "ntok",
-                    F.round("nll", 6).alias("nll"),
-                    F.round(F.exp(F.col("nll") / F.col("ntok")), 6)
-                    .alias("ppl")))
+    return _nll_ppl(scored, id_col, F.log(p))
 
 
 def pii_stats(docs: DataFrame, id_col: str = "doc_id",
@@ -1357,6 +1357,23 @@ def char_entropy(docs: DataFrame, id_col: str = "doc_id",
                            F.lit(0.0)), 6).alias("entropy_bits"))
 
 
+def _sentences(text_col: str) -> Column:
+    """A document's sentences in order, as split_sentences defines them
+    (NULL text has none)."""
+    return F.filter(
+        F.transform(
+            F.regexp_extract_all(F.coalesce(F.col(text_col), F.lit("")),
+                                 F.lit(r"[^.!?]*[.!?]+|[^.!?]+$"),
+                                 F.lit(0)),
+            lambda s: F.trim(s)),
+        lambda s: s != "")
+
+
+def _n_words(s: Column) -> Column:
+    """Whitespace-separated word count of a string column."""
+    return F.size(F.filter(F.split(s, r"\s+"), lambda t: t != ""))
+
+
 def split_sentences(docs: DataFrame, id_col: str = "doc_id",
                     text_col: str = "text") -> DataFrame:
     """Sentence segmentation — the unit C4/CCNet rules actually speak
@@ -1367,19 +1384,11 @@ def split_sentences(docs: DataFrame, id_col: str = "doc_id",
     pattern uses NO lookarounds so it runs identically under Java
     regex and RE2. Output: (id, sent_idx 0-based, sentence, n_words
     whitespace-word count)."""
-    sents = F.filter(
-        F.transform(
-            F.regexp_extract_all(F.coalesce(F.col(text_col), F.lit("")),
-                                 F.lit(r"[^.!?]*[.!?]+|[^.!?]+$"),
-                                 F.lit(0)),
-            lambda s: F.trim(s)),
-        lambda s: s != "")
-    e = docs.select(F.col(id_col),
-                    F.posexplode(sents).alias("sent_idx", "sentence"))
-    n_words = F.size(F.filter(F.split(F.col("sentence"), r"\s+"),
-                              lambda t: t != ""))
+    e = docs.select(F.col(id_col), F.posexplode(_sentences(text_col))
+                    .alias("sent_idx", "sentence"))
     return e.select(id_col, "sent_idx", "sentence",
-                    n_words.cast("bigint").alias("n_words"))
+                    _n_words(F.col("sentence")).cast("bigint")
+                    .alias("n_words"))
 
 
 def chunk_by_sentences(docs: DataFrame, max_tokens: int = 64,
@@ -1395,17 +1404,7 @@ def chunk_by_sentences(docs: DataFrame, max_tokens: int = 64,
     before the final narrow posexplode."""
     if max_tokens < 1:
         raise ValueError("max_tokens must be >= 1")
-    sents = F.filter(
-        F.transform(
-            F.regexp_extract_all(F.coalesce(F.col(text_col), F.lit("")),
-                                 F.lit(r"[^.!?]*[.!?]+|[^.!?]+$"),
-                                 F.lit(0)),
-            lambda s: F.trim(s)),
-        lambda s: s != "")
-
-    def nw(s):
-        return F.size(F.filter(F.split(s, r"\s+"), lambda t: t != ""))
-
+    sents = _sentences(text_col)
     empty = F.array().cast("array<string>")
     folded = F.aggregate(
         sents,
@@ -1422,14 +1421,15 @@ def chunk_by_sentences(docs: DataFrame, max_tokens: int = 64,
                    F.concat_ws(" ", acc["cur"], s)).otherwise(s),
             F.lit("cur_n"),
             F.when((acc["cur"] != "") & (acc["cur_n"] + n <= max_tokens),
-                   acc["cur_n"] + n).otherwise(n)))(nw(s)),
+                   acc["cur_n"] + n).otherwise(n)))(_n_words(s)),
         lambda acc: F.when(acc["cur"] == "", acc["chunks"])
         .otherwise(F.concat(acc["chunks"], F.array(acc["cur"]))))
     e = (docs.select(F.col(id_col), folded.alias("_chunks"))
          .select(F.col(id_col),
                  F.posexplode("_chunks").alias("chunk_idx", "chunk_text")))
     return e.select(id_col, "chunk_idx", "chunk_text",
-                    nw(F.col("chunk_text")).cast("bigint").alias("n_tokens"))
+                    _n_words(F.col("chunk_text")).cast("bigint")
+                    .alias("n_tokens"))
 
 
 def column_top_values(df: DataFrame, columns: list[str],

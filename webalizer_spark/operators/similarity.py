@@ -4,8 +4,9 @@ Brute-force cosine top-k is the exact baseline (broadcast the query set,
 never shuffle the corpus); random-hyperplane LSH bucketing is the scale
 path (signature equi-join restricts the candidate set). All arithmetic
 is built-in expressions (zip_with/aggregate folds) — no Python.
-Oracle-checked in queries.py (emb_cosine_topk, emb_lsh_signatures,
-emb_lsh_buckets, emb_near_dup_cosine).
+Oracle-checked through the queries.py rows that call these operators
+(emb_cosine_topk, emb_ann_topk, emb_ivf_topk, emb_near_dup_cosine,
+emb_near_dup_keep, emb_semdedup_keep).
 """
 
 from __future__ import annotations
@@ -39,6 +40,26 @@ def _pair_cos(a: str, b: str, na: str, nb: str) -> F.Column:
     return F.expr(_DOT.format(a=a, b=b)) / (F.col(na) * F.col(nb))
 
 
+def _normed(df: DataFrame, id_col: str, vec_col: str, id_as: str,
+            vec_as: str, norm_as: str) -> DataFrame:
+    """(id, vector, L2 norm) under the given names: each row's norm is
+    computed once, before any pair join, for _pair_cos."""
+    return df.select(F.col(id_col).alias(id_as), F.col(vec_col).alias(vec_as),
+                     _norm_col(vec_col).alias(norm_as))
+
+
+def _top_k(pairs: DataFrame, k: int) -> DataFrame:
+    """Each query's k best (query_id, neighbor_id, cos) pairs: rank by
+    cos descending, then neighbor_id ascending, with a per-query
+    row_number window (the query_id key space is small)."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cos").desc(), F.col("neighbor_id").asc())
+    return (pairs.withColumn("rank", F.row_number().over(w).cast("int"))
+            .filter(F.col("rank") <= k)
+            .select("query_id", "rank", "neighbor_id",
+                    F.round("cos", 6).alias("cos")))
+
+
 def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
                      id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
     """Exact top-k: broadcast(queries) x corpus, per-query size-k window.
@@ -47,21 +68,12 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     partition against the broadcast queries; ranking is per-query
     row_number (size-k heap semantics via TakeOrdered per partition would
     need an agg — the window over query_id keys is small)."""
-    q = queries.select(F.col(id_col).alias("query_id"),
-                       F.col(vec_col).alias("qv"),
-                       _norm_col(vec_col).alias("qn"))
-    c = corpus.select(F.col(id_col).alias("neighbor_id"),
-                      F.col(vec_col).alias("cv"),
-                      _norm_col(vec_col).alias("cn"))
+    q = _normed(queries, id_col, vec_col, "query_id", "qv", "qn")
+    c = _normed(corpus, id_col, vec_col, "neighbor_id", "cv", "cn")
     pairs = (F.broadcast(q).crossJoin(c)
              .filter(F.col("query_id") != F.col("neighbor_id"))
              .withColumn("cos", _pair_cos("qv", "cv", "qn", "cn")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc())
-    return (pairs.withColumn("rank", F.row_number().over(w).cast("int"))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "neighbor_id",
-                    F.round("cos", 6).alias("cos")))
+    return _top_k(pairs, k)
 
 
 def lsh_signatures(emb: DataFrame, num_planes: int = 8, dim: int = 64,
@@ -152,20 +164,11 @@ def ann_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id")
         .distinct())
-    qv = queries.select(F.col(id_col).alias("query_id"),
-                        F.col(vec_col).alias("qv"),
-                        _norm_col(vec_col).alias("qn"))
-    cv = corpus.select(F.col(id_col).alias("neighbor_id"),
-                       F.col(vec_col).alias("cv"),
-                       _norm_col(vec_col).alias("cn"))
+    qv = _normed(queries, id_col, vec_col, "query_id", "qv", "qn")
+    cv = _normed(corpus, id_col, vec_col, "neighbor_id", "cv", "cn")
     pairs = (cand_ids.join(F.broadcast(qv), "query_id").join(cv, "neighbor_id")
              .withColumn("cos", _pair_cos("qv", "cv", "qn", "cn")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc())
-    return (pairs.withColumn("rank", F.row_number().over(w).cast("int"))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "neighbor_id",
-                    F.round("cos", 6).alias("cos")))
+    return _top_k(pairs, k)
 
 
 def ivf_assign(corpus: DataFrame, centroids: DataFrame,
@@ -218,14 +221,29 @@ def near_dup_cosine(emb: DataFrame, threshold: float = 0.95,
             f"near_dup_cosine: {n} vectors exceeds the all-pairs baseline "
             f"bound ({ALL_PAIRS_MAX_VECS}); use lsh_signatures/ann_topk "
             "bucket candidates instead")
-    a = emb.select(F.col(id_col).alias("vec_a"), F.col(vec_col).alias("ea"),
-                   _norm_col(vec_col).alias("_na"))
-    b = emb.select(F.col(id_col).alias("vec_b"), F.col(vec_col).alias("eb"),
-                   _norm_col(vec_col).alias("_nb"))
+    a = _normed(emb, id_col, vec_col, "vec_a", "ea", "_na")
+    b = _normed(emb, id_col, vec_col, "vec_b", "eb", "_nb")
     return (a.crossJoin(b).filter(F.col("vec_a") < F.col("vec_b"))
             .withColumn("_c", _pair_cos("ea", "eb", "_na", "_nb"))
             .filter(F.col("_c") >= threshold)
             .select("vec_a", "vec_b", F.round("_c", 6).alias("cos")))
+
+
+def _keep_min_of_verified(emb: DataFrame, cand: DataFrame,
+                          threshold: float, id_col: str,
+                          vec_col: str) -> DataFrame:
+    """The tail of both embedding-dedup operators: exact cosine on the
+    candidate (va, vb) id pairs only — vectors and norms join back by
+    id after candidate pruning — then keep the minimum-id member of
+    each component of the >= threshold edges."""
+    from webalizer_spark.operators.dedup import drop_non_min_members
+
+    ea = _normed(emb, id_col, vec_col, "va", "_ea", "_na")
+    eb = _normed(emb, id_col, vec_col, "vb", "_eb", "_nb")
+    edges = (cand.join(ea, "va").join(eb, "vb")
+             .filter(_pair_cos("_ea", "_eb", "_na", "_nb") >= threshold)
+             .select(F.col("va").alias("doc_a"), F.col("vb").alias("doc_b")))
+    return drop_non_min_members(emb, edges, id_col)
 
 
 def near_dup_remove_lsh(emb: DataFrame, threshold: float = 0.45,
@@ -242,8 +260,7 @@ def near_dup_remove_lsh(emb: DataFrame, threshold: float = 0.45,
     from the (table, signature) equi-join, so the quadratic term is
     bounded by bucket sizes. Oracle-checked bit-exact in queries.py
     (emb_near_dup_keep, vs a recursive-CTE closure)."""
-    from webalizer_spark.operators.dedup import (_cap_hot_keys,
-                                                 drop_non_min_members)
+    from webalizer_spark.operators.dedup import _cap_hot_keys
 
     sig = lsh_signatures(emb, num_planes, dim, id_col, vec_col, num_tables)
     # hot-bucket cap (same hazard as text LSH: near-constant embeddings
@@ -258,14 +275,7 @@ def near_dup_remove_lsh(emb: DataFrame, threshold: float = 0.45,
                    & (F.col("sa") == F.col("sb"))
                    & (F.col("va") < F.col("vb")))
             .select("va", "vb").distinct())
-    ea = emb.select(F.col(id_col).alias("va"), F.col(vec_col).alias("_ea"),
-                    _norm_col(vec_col).alias("_na"))
-    eb = emb.select(F.col(id_col).alias("vb"), F.col(vec_col).alias("_eb"),
-                    _norm_col(vec_col).alias("_nb"))
-    edges = (cand.join(ea, "va").join(eb, "vb")
-             .filter(_pair_cos("_ea", "_eb", "_na", "_nb") >= threshold)
-             .select(F.col("va").alias("doc_a"), F.col("vb").alias("doc_b")))
-    return drop_non_min_members(emb, edges, id_col)
+    return _keep_min_of_verified(emb, cand, threshold, id_col, vec_col)
 
 
 def ivf_centroids(corpus: DataFrame, n_cells: int = 16,
@@ -323,12 +333,10 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
         .withColumnRenamed(id_col, "neighbor_id")
     query_probes = ivf_assign(queries, cents, id_col, vec_col, n_probe) \
         .withColumnRenamed(id_col, "query_id")
-    cv = corpus.select(F.col(id_col).alias("neighbor_id"),
-                       F.col(vec_col).alias("cv"),
-                       _norm_col(vec_col).alias("cn")).join(corpus_cells, "neighbor_id")
-    qv = queries.select(F.col(id_col).alias("query_id"),
-                        F.col(vec_col).alias("qv"),
-                        _norm_col(vec_col).alias("qn")).join(query_probes, "query_id")
+    cv = _normed(corpus, id_col, vec_col, "neighbor_id", "cv", "cn") \
+        .join(corpus_cells, "neighbor_id")
+    qv = _normed(queries, id_col, vec_col, "query_id", "qv", "qn") \
+        .join(query_probes, "query_id")
     # no dedupe needed: corpus vectors are assigned to exactly ONE cell
     # (n_probe=1 above), so a (query, neighbor) pair can match in at most
     # one probed cell — a .distinct() here would shuffle full vector
@@ -337,12 +345,7 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     pairs = (F.broadcast(qv).join(cv, "cell_id")
              .filter(F.col("query_id") != F.col("neighbor_id"))
              .withColumn("cos", _pair_cos("qv", "cv", "qn", "cn")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc())
-    return (pairs.withColumn("rank", F.row_number().over(w).cast("int"))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "neighbor_id",
-                    F.round("cos", 6).alias("cos")))
+    return _top_k(pairs, k)
 
 
 def fixed_centroids(emb: DataFrame, n_cells: int,
@@ -385,8 +388,7 @@ def semantic_dedup(emb: DataFrame, threshold: float = 0.45,
     ids cross the wire beyond that one partition pass — vector
     payloads join back by id AFTER candidate pruning.
     """
-    from webalizer_spark.operators.dedup import (_cap_hot_keys,
-                                                 drop_non_min_members)
+    from webalizer_spark.operators.dedup import _cap_hot_keys
 
     if centroids is None:
         centroids = ivf_centroids(emb, n_cells, id_col, vec_col)
@@ -406,11 +408,4 @@ def semantic_dedup(emb: DataFrame, threshold: float = 0.45,
     cand = (a.join(b, (F.col("ca") == F.col("cb"))
                    & (F.col("va") < F.col("vb")))
             .select("va", "vb"))
-    ea = emb.select(F.col(id_col).alias("va"), F.col(vec_col).alias("_ea"),
-                    _norm_col(vec_col).alias("_na"))
-    eb = emb.select(F.col(id_col).alias("vb"), F.col(vec_col).alias("_eb"),
-                    _norm_col(vec_col).alias("_nb"))
-    edges = (cand.join(ea, "va").join(eb, "vb")
-             .filter(_pair_cos("_ea", "_eb", "_na", "_nb") >= threshold)
-             .select(F.col("va").alias("doc_a"), F.col("vb").alias("doc_b")))
-    return drop_non_min_members(emb, edges, id_col)
+    return _keep_min_of_verified(emb, cand, threshold, id_col, vec_col)

@@ -178,8 +178,11 @@ def save_state(sessions: DataFrame, ckpt: CheckpointPaths) -> dict:
         ckpt._vdir("conv_state", new_version))
     daily.write.mode("overwrite").parquet(
         ckpt._vdir("daily_state", new_version))
-    day_conv.write.mode("overwrite").parquet(
-        ckpt._vdir("day_conv_state", new_version))
+    # sorted within each file: a distinct's output order follows shuffle
+    # arrival, and parquet encodes the same rows in another order to a
+    # different byte size
+    day_conv.sortWithinPartitions("day_ts", "conv_id").write \
+        .mode("overwrite").parquet(ckpt._vdir("day_conv_state", new_version))
 
     wm = batch_wm.isoformat()
     if prev_wm is not None:

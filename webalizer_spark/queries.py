@@ -428,13 +428,6 @@ WITH toks AS (
 """
 
 
-def _doc_tokens(spark, sf):
-    """Distinct token set per document (shingle base for dedup ops)."""
-    return (_t(spark, sf, "documents")
-            .select("doc_id", F.explode(F.array_distinct(
-                F.split("text", " "))).alias("tok")))
-
-
 @q("doc_dedup_exact", """
 SELECT COUNT(*) AS n_docs,
        COUNT(DISTINCT md5(text)) AS n_unique,
@@ -472,22 +465,9 @@ def doc_ngram_jaccard(spark, sf):
     partitioned) -> pair aggregate; stop-token filtering would bound the
     hottest token's pair blowup (documented; vocab here is tiny).
     """
-    toks = _doc_tokens(spark, sf)
-    sizes = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-    a = toks.alias("a")
-    b = toks.alias("b")
-    inter = (a.join(b, (F.col("a.tok") == F.col("b.tok"))
-                    & (F.col("a.doc_id") < F.col("b.doc_id")))
-             .groupBy(F.col("a.doc_id").alias("doc_a"),
-                      F.col("b.doc_id").alias("doc_b"))
-             .agg(F.count(F.lit(1)).alias("i")))
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sza"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("szb"))
-    jac = (F.col("i").cast("double")
-           / (F.col("sza") + F.col("szb") - F.col("i")))
-    return (inter.join(sa, "doc_a").join(sb, "doc_b")
-            .filter(jac >= 0.95)
-            .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard")))
+    from webalizer_spark.operators.dedup import jaccard_pairs, shingles
+    return jaccard_pairs(shingles(_t(spark, sf, "documents")),
+                         threshold=0.95)
 
 
 @q("doc_minhash_signatures", _TOKS_CTE + """
@@ -504,14 +484,9 @@ def doc_minhash_signatures(spark, sf):
     At scale: explode(shingles) x tiny seed dim -> ONE groupBy(doc, seed)
     min-aggregate; partial aggregation collapses the fan-out map-side.
     """
-    toks = _doc_tokens(spark, sf)
-    seeds = spark.range(8).select(F.col("id").cast("int").alias("seed"))
-    h = F.conv(F.substring(F.md5(F.concat_ws("|", F.col("seed").cast("string"),
-                                             F.col("tok"))), 1, 15),
-               16, 10).cast("bigint")
-    return (toks.crossJoin(F.broadcast(seeds))
-            .groupBy("doc_id", "seed")
-            .agg(F.min(h).alias("minhash")))
+    from webalizer_spark.operators.dedup import minhash_signatures, shingles
+    return minhash_signatures(shingles(_t(spark, sf, "documents")),
+                              num_hashes=8)
 
 
 @q("doc_minhash_lsh_pairs", _TOKS_CTE + """
@@ -535,30 +510,11 @@ def doc_minhash_lsh_pairs(spark, sf):
     """MinHash + LSH banding: candidate near-dup pairs via band-bucket join
     (4 bands x 2 rows). The scale path for doc_ngram_jaccard: candidates
     only, no all-pairs join."""
-    toks = _doc_tokens(spark, sf)
-    seeds = spark.range(8).select(F.col("id").cast("int").alias("seed"))
-    h = F.conv(F.substring(F.md5(F.concat_ws("|", F.col("seed").cast("string"),
-                                             F.col("tok"))), 1, 15),
-               16, 10).cast("bigint")
-    sig = (toks.crossJoin(F.broadcast(seeds))
-           .groupBy("doc_id", "seed")
-           .agg(F.min(h).alias("minhash"))
-           .withColumn("band", (F.col("seed") / 2).cast("int")))
-    bands = (sig.groupBy("doc_id", "band")
-             .agg(F.array_join(F.transform(
-                 F.array_sort(F.collect_list(F.struct("seed", "minhash"))),
-                 lambda s: s["minhash"].cast("string")), ",").alias("band_key"))
-             # barrier before the self-join: both sides otherwise
-             # recompute the full MinHash signature lineage (round 7)
-             .localCheckpoint(eager=False))
-    a = bands.alias("a")
-    b = bands.alias("b")
-    return (a.join(b, (F.col("a.band") == F.col("b.band"))
-                   & (F.col("a.band_key") == F.col("b.band_key"))
-                   & (F.col("a.doc_id") < F.col("b.doc_id")))
-            .select(F.col("a.doc_id").alias("doc_a"),
-                    F.col("b.doc_id").alias("doc_b"))
-            .distinct())
+    from webalizer_spark.operators.dedup import (lsh_candidate_pairs,
+                                                 minhash_signatures, shingles)
+    sig = minhash_signatures(shingles(_t(spark, sf, "documents")),
+                             num_hashes=8)
+    return lsh_candidate_pairs(sig, rows_per_band=2)
 
 
 @qu("doc_lang_id", """
@@ -626,12 +582,6 @@ def doc_quality(spark, sf):
 # embeddings — similarity search (ANN) ops
 # =========================================================================
 
-_DOT = ("aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * y), 0D,"
-        " (acc, v) -> acc + v)")
-_NORM = ("sqrt(aggregate({a}, 0D, (acc, v) ->"
-         " acc + CAST(v AS DOUBLE) * v))")
-
-
 @q("emb_norms_by_label", """
 SELECT label,
        COUNT(*) AS vecs,
@@ -642,11 +592,11 @@ FROM embeddings GROUP BY label
 """)
 def emb_norms_by_label(spark, sf):
     """Vector feature extraction: mean L2 norm per label."""
+    from webalizer_spark.operators.similarity import _norm_col
     e = _t(spark, sf, "embeddings")
-    norm = F.expr(_NORM.format(a="embedding"))
     return e.groupBy("label").agg(
         F.count(F.lit(1)).alias("vecs"),
-        F.round(F.avg(norm), 6).alias("avg_norm"),
+        F.round(F.avg(_norm_col("embedding")), 6).alias("avg_norm"),
     )
 
 
@@ -677,24 +627,9 @@ def emb_cosine_topk(spark, sf):
     ranked per query by a size-k window — no global sort. The IVF/LSH
     scale path is emb_lsh_signatures/emb_lsh_buckets.
     """
-    from pyspark.sql import Window
+    from webalizer_spark.operators.similarity import brute_force_topk
     e = _t(spark, sf, "embeddings")
-    a = (e.filter(F.col("vec_id") < 10)
-         .select(F.col("vec_id").alias("query_id"),
-                 F.col("embedding").alias("ea")))
-    b = e.select(F.col("vec_id").alias("neighbor_id"),
-                 F.col("embedding").alias("eb"))
-    cos = (F.expr(_DOT.format(a="ea", b="eb"))
-           / (F.expr(_NORM.format(a="ea")) * F.expr(_NORM.format(a="eb"))))
-    pairs = (F.broadcast(a).crossJoin(b)
-             .filter(F.col("query_id") != F.col("neighbor_id"))
-             .withColumn("cos", cos))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc())
-    return (pairs.withColumn("rank", F.row_number().over(w).cast("int"))
-            .filter(F.col("rank") <= 5)
-            .select("query_id", "rank", "neighbor_id",
-                    F.round("cos", 6).alias("cos")))
+    return brute_force_topk(e, e.filter(F.col("vec_id") < 10), k=5)
 
 
 def _lsh_wt_ji(j: int, i: int) -> float:
@@ -734,14 +669,14 @@ def emb_lsh_signatures(spark, sf):
     is order-independent). The ANN scale path: bucket by signature,
     search within bucket.
 
-    Round-7 physical plan: the weights are a deterministic function of
-    (j, i), so they are materialized as literal arrays on the driver
-    and each signature is computed per row by a decimal zip_with fold —
-    ZERO Exchange (the previous crossJoin x 512 weights + two groupBys
-    shuffled planes*dim rows per vector). Same recipe as
-    similarity._lsh_signatures_literal (round-3, plan-asserted for
-    emb_ann_topk); decimal folds are exact, so the signatures are
-    bit-identical to the explode/groupBy form and the oracle."""
+    The weights are literal arrays built on the driver and each
+    signature is one per-row decimal fold (similarity._lsh_proj_fold,
+    the fold lsh_signatures uses) — zero Exchange. The weights are
+    seeded md5(j|i) (_lsh_wt_ji), not lsh_signatures' md5(t|j|i): this
+    single-table layout and its oracle CTE predate the multi-table
+    operator, and lsh_signatures(num_tables=1) would hash a different
+    key and so change every signature, and with them the emb_lsh_buckets
+    histogram."""
     from webalizer_spark.operators.similarity import _lsh_proj_fold
 
     e = _t(spark, sf, "embeddings")
@@ -826,16 +761,8 @@ def doc_simhash(spark, sf):
     Pure integer arithmetic -> order-independent and exactly
     reproducible. At scale: explode(tokens) x 16-bit dim, ONE
     groupBy(doc, bit) with map-side partial sums, then a per-doc pack."""
-    toks = _doc_tokens(spark, sf)
-    th = F.conv(F.substring(F.md5("tok"), 1, 15), 16, 10).cast("bigint")
-    bits = spark.range(16).select(F.col("id").cast("int").alias("j"))
-    w = F.expr("2 * (shiftright(th, j) & 1) - 1")
-    per_bit = (toks.withColumn("th", th)
-               .crossJoin(F.broadcast(bits))
-               .groupBy("doc_id", "j").agg(F.sum(w).alias("w")))
-    bit = F.when(F.col("w") >= 0,
-                 F.pow(F.lit(2), F.col("j")).cast("bigint")).otherwise(F.lit(0))
-    return per_bit.groupBy("doc_id").agg(F.sum(bit).cast("bigint").alias("simhash"))
+    from webalizer_spark.operators.dedup import shingles, simhash
+    return simhash(shingles(_t(spark, sf, "documents")), bits=16)
 
 
 @q("doc_token_bpe", r"""
@@ -1104,11 +1031,10 @@ def doc_simhash_pairs(spark, sf):
     lossless for max_hamming < n_blocks) — while the oracle computes the
     naive all-pairs definition; equal results prove the blocking loses
     nothing."""
-    from webalizer_spark.operators.dedup import simhash, simhash_pairs
-    sh = simhash(_doc_tokens(spark, sf).withColumnRenamed("tok", "shingle"),
-                 bits=16, id_col="doc_id")
-    return simhash_pairs(sh, max_hamming=2, bits=16, n_blocks=4,
-                         id_col="doc_id")
+    from webalizer_spark.operators.dedup import (shingles, simhash,
+                                                 simhash_pairs)
+    sh = simhash(shingles(_t(spark, sf, "documents")), bits=16)
+    return simhash_pairs(sh, max_hamming=2, bits=16, n_blocks=4)
 
 
 @q("emb_ivf_topk", _BF_TOPK_SQL)

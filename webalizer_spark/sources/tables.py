@@ -6,8 +6,12 @@ and sinks are tables. In production the engine targets Iceberg
 (``catalog.db.table`` identifiers — partition pruning on ts-bucketed
 partitions is the resume filter, SURVEY §2.1 S8/P6); in the sandbox there
 is no Iceberg runtime jar and no network, so the same calls fall back to
-parquet directories. All engine code goes through this shim, so the
-difference is a constructor flag, not a code path.
+parquet directories. The CLI reads its input and dimension tables and
+upserts its history through this shim, so for those the difference is a
+constructor flag, not a code path. Three places read or write parquet
+paths directly instead: plans/pipeline.write_sinks (sinks and reports),
+plans/checkpoint (the state tables) and the CLI's history step (its
+read of the daily state).
 
 At 100 TB: writes are partitioned by day(ts) + bucket(conv_id), giving
 both the month-rollover grain (the reference's monthly report boundary)
