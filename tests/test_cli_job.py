@@ -144,6 +144,45 @@ def test_cli_rerun_of_committed_batch_keeps_sinks(tmp_path):
     assert _committed(out, ckpt) == first
 
 
+def test_cli_late_records_only_batch_keeps_sinks(tmp_path):
+    """A resumed run whose batch holds only late records (new turns, all
+    at or before the committed watermark) drops every one of them at the
+    watermark filter: it exits 0 and leaves the sinks, _metrics.json,
+    manifest and history as the checkpointed run committed them."""
+    from webalizer_spark.datagen import GenParams, ensure_fixture
+
+    full = ensure_fixture(str(tmp_path / "fix"), GenParams(n_convs=100),
+                          tag="late")
+    half = tmp_path / "half"
+    _stage_half(full, half)
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    _run_cli("--input", str(half), "--output", out, "--checkpoint", ckpt,
+             "--incremental")
+    first = _committed(out, ckpt)
+    assert first["rows"]["by_role"] > 0 and first["manifest"]["version"] == 1
+
+    # late arrivals: turns the first run never saw (fresh turn_idx), each
+    # stamped at or before its watermark
+    late = tmp_path / "late"
+    late.mkdir()
+    for d in DIMS:
+        shutil.copy(f"{full}/{d}.parquet", late / f"{d}.parquet")
+    wm = first["manifest"]["watermark"]
+    duckdb.sql(f"COPY (SELECT * REPLACE (turn_idx + 1000000 AS turn_idx) "
+               f"FROM '{half}/transcripts.parquet' "
+               f"WHERE ts <= TIMESTAMP '{wm}') "
+               f"TO '{late}/transcripts.parquet' (FORMAT PARQUET)")
+    n_late = duckdb.sql(f"SELECT COUNT(*) FROM "
+                        f"'{late}/transcripts.parquet'").fetchone()[0]
+    assert n_late > 0
+
+    stdout = _run_cli("--input", str(late), "--output", out,
+                      "--checkpoint", ckpt, "--incremental")
+    assert "no records past the checkpoint watermark" in stdout, stdout
+    assert "0 records" in stdout
+    assert _committed(out, ckpt) == first
+
+
 def _mixed_format_fixture(full_dir, dims_src):
     """Deterministic mixed-grammar transcripts: combined/squid/xferlog/w3c
     rows interleaved per (conv, turn), one #Fields: directive row, and a

@@ -99,21 +99,30 @@ def test_entry_exit_reports(result, oracle):
 
 
 def test_skew_safe_pipeline_equivalence(spark, transcripts, dims, result):
-    """Salting/skew path on vs off -> identical report tables (SURVEY §5.2
-    prop d). The fixture's convs are far below HOT_CONV_ROWS, so the
-    module result took the window path; the skew-safe path is forced
-    through the sessionizer seam."""
+    """Salting/skew path on vs off -> identical sinks (SURVEY §5.2
+    prop d): every report plus the by_role, tool_calls and errors sinks,
+    compared as sorted rows. The fixture's convs are far below
+    HOT_CONV_ROWS, so the module result took the window path; the
+    skew-safe path is forced through the sessionizer seam."""
     from webalizer_spark.operators.sessionize import sessionize_skew_safe
+
+    def sinks(res):
+        return {**res.reports, "by_role": res.by_role,
+                "tool_calls": res.tool_calls, "errors": res.errors}
 
     res2 = run_pipeline(spark, transcripts, dims,
                         sessionizer=sessionize_skew_safe)
     try:
-        for name in ["daily", "status_codes", "top_tools", "top_entry"]:
-            a = result.reports[name].toPandas()
-            b = res2.reports[name].toPandas()
+        window, skew = sinks(result), sinks(res2)
+        assert window.keys() == skew.keys()
+        for name in window:
+            a = window[name].toPandas()
+            b = skew[name].toPandas()
             a = a.sort_values(list(a.columns)).reset_index(drop=True)
             b = b.sort_values(list(b.columns)).reset_index(drop=True)
-            pd.testing.assert_frame_equal(a, b, check_exact=False, rtol=1e-12)
+            assert len(a) > 0, name
+            pd.testing.assert_frame_equal(a, b, check_exact=False,
+                                          rtol=1e-12, obj=name)
     finally:
         res2.unpersist()
 

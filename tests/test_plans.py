@@ -92,6 +92,52 @@ def test_errors_sink_reads_parse_cache_no_rescan(spark, transcripts, dims):
         res.unpersist()
 
 
+def _chain_to_spine(node) -> list[str]:
+    """Class names of the executed nodes from ``node`` down to the scan
+    of the cached spine (the cached relation holding ``turn_idx``),
+    following first children through AQE wrappers, query stages and
+    the cached aggregates in between."""
+    names = []
+    while True:
+        cls = node.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            node = node.executedPlan()
+        elif cls.endswith("QueryStageExec"):
+            node = node.plan()
+        elif cls == "InMemoryTableScanExec":
+            names.append(cls)
+            if "turn_idx" in node.relation().output().toString():
+                return names
+            node = node.relation().cachedPlan()
+        else:
+            names.append(cls)
+            node = node.children().apply(0)
+
+
+def test_cached_spine_is_coalesced(spark, transcripts, dims):
+    """AQE sizes the cached spine from its shuffle bytes instead of
+    keeping spark.sql.shuffle.partitions partitions (session.py:
+    canChangeCachedPlanOutputPartitioning), and coalescing whole hash
+    partitions keeps the spine clustered by conv_id: the per-site
+    aggregate reads the cache with no Exchange in between."""
+    from webalizer_spark.operators import aggregates as A
+    from webalizer_spark.plans.pipeline import run_pipeline
+
+    res = run_pipeline(spark, transcripts, dims)
+    try:
+        res.enriched.count()
+        nshuf = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        assert res.enriched.rdd.getNumPartitions() < nshuf
+        per_site = A.per_site(res.enriched)
+        per_site.collect()
+        chain = _chain_to_spine(
+            per_site._jdf.queryExecution().executedPlan())  # noqa: SLF001
+        below = chain[chain.index("HashAggregateExec"):]
+        assert "ShuffleExchangeExec" not in below, chain
+    finally:
+        res.unpersist()
+
+
 def test_simhash_pairs_no_cartesian(spark):
     """The pigeonhole-blocked candidate join must plan as an equi-join on
     (block, value) — never a cartesian/all-pairs product."""

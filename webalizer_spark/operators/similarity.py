@@ -11,6 +11,9 @@ emb_near_dup_keep, emb_semdedup_keep).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from functools import partial
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -97,19 +100,29 @@ def lsh_signatures(emb: DataFrame, num_planes: int = 8, dim: int = 64,
     The expression tree holds planes*tables*dim literal weights; every
     caller stays at or below 8*8*64.
     """
-    structs = []
-    for t in range(num_tables):
-        sig = None
-        for j in range(num_planes):
-            w = [_lsh_weight(t, j, i) for i in range(dim)]
-            proj = _lsh_proj_fold(vec_col, w)
-            bit = F.when(proj >= 0, F.lit(2 ** j).cast("bigint")) \
-                .otherwise(F.lit(0).cast("bigint"))
-            sig = bit if sig is None else sig + bit
-        structs.append(F.struct(F.lit(t).alias("t"), sig.alias("sig")))
+    structs = [F.struct(F.lit(t).alias("t"),
+                        _lsh_sig(vec_col, partial(_lsh_weight, t),
+                                 num_planes, dim).alias("sig"))
+               for t in range(num_tables)]
     out = emb.select(F.col(id_col), F.inline(F.array(*structs)))
     return out.select(id_col, F.col("t").cast("int").alias("t"),
                       F.col("sig").cast("bigint").alias("sig"))
+
+
+def _lsh_sig(vec_col: str, weight: Callable[[int, int], float],
+             num_planes: int, dim: int) -> F.Column:
+    """One signature column: bit j is set when the projection on plane j
+    (weights ``weight(j, i)`` for i < dim) is >= 0. The weight function
+    carries the seeding, so lsh_signatures' md5(t|j|i) tables and the
+    single-table md5(j|i) layout of queries.emb_lsh_signatures share
+    this fold."""
+    sig = None
+    for j in range(num_planes):
+        proj = _lsh_proj_fold(vec_col, [weight(j, i) for i in range(dim)])
+        bit = F.when(proj >= 0, F.lit(2 ** j).cast("bigint")) \
+            .otherwise(F.lit(0).cast("bigint"))
+        sig = bit if sig is None else sig + bit
+    return sig
 
 
 def _lsh_weight(t: int, j: int, i: int) -> float:

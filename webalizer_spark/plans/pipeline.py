@@ -8,10 +8,15 @@ Recasts the reference's single record loop [webalizer.c ƒmain: our_gzgets
     -> PARSE   grok text -> typed fields; ok/bad split        (narrow)
     -> ENRICH  broadcast joins (role/tool/bytes/engine)       (narrow)
     -> SESSIONIZE gap-and-island windows                      (shuffle #1)
-    -> persist()  <- O2: ONE scan feeds every sink and report
+    -> persist()  <- O2: ONE scan feeds every sink and report;
+                     AQE sizes the cached partitions from the shuffle
+                     bytes, not spark.sql.shuffle.partitions (session.py)
     -> ROUTE   fan-out sinks: errors / tool_calls / per-role  (narrow)
     -> AGGREGATE report tables (time grains, dimensions)      (shuffle #2,
-                                       AQE-coalesced, tiny key spaces)
+                                       AQE-coalesced, tiny key spaces;
+                                       the conv_id-keyed per-site and
+                                       entry/exit tables reuse the
+                                       spine's clustering, no shuffle)
     -> TOPN    TakeOrderedAndProject per report
 
 The explicit persist is the design, not an afterthought: Spark will not

@@ -669,24 +669,18 @@ def emb_lsh_signatures(spark, sf):
     is order-independent). The ANN scale path: bucket by signature,
     search within bucket.
 
-    The weights are literal arrays built on the driver and each
-    signature is one per-row decimal fold (similarity._lsh_proj_fold,
-    the fold lsh_signatures uses) — zero Exchange. The weights are
-    seeded md5(j|i) (_lsh_wt_ji), not lsh_signatures' md5(t|j|i): this
-    single-table layout and its oracle CTE predate the multi-table
+    The signature is lsh_signatures' per-row fold
+    (similarity._lsh_sig: literal weight arrays built on the driver,
+    one decimal fold per plane) — zero Exchange. Only the seeding
+    differs: md5(j|i) (_lsh_wt_ji), not lsh_signatures' md5(t|j|i).
+    This single-table layout and its oracle CTE predate the multi-table
     operator, and lsh_signatures(num_tables=1) would hash a different
     key and so change every signature, and with them the emb_lsh_buckets
     histogram."""
-    from webalizer_spark.operators.similarity import _lsh_proj_fold
+    from webalizer_spark.operators.similarity import _lsh_sig
 
     e = _t(spark, sf, "embeddings")
-    sig = None
-    for j in range(8):
-        proj = _lsh_proj_fold("embedding",
-                              [_lsh_wt_ji(j, i) for i in range(64)])
-        bit = F.when(proj >= 0, F.lit(2 ** j).cast("bigint")) \
-            .otherwise(F.lit(0).cast("bigint"))
-        sig = bit if sig is None else sig + bit
+    sig = _lsh_sig("embedding", _lsh_wt_ji, num_planes=8, dim=64)
     return e.select("vec_id", sig.cast("bigint").alias("sig"))
 
 
