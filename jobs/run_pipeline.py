@@ -2,7 +2,7 @@
 
 Usage:
   python jobs/run_pipeline.py --input _gen/sf_test \
-      --output out --checkpoint ckpt --incremental
+      --output out --checkpoint ckpt
 
 --input/--dims name a directory of parquet tables (transcripts plus the
 five dimension tables); the job writes parquet and JSON under --output
@@ -10,11 +10,14 @@ and --checkpoint. The job also opens these paths with Python's os
 module, so on a cluster they sit on a shared mount.
 
 The job is the reference's EP1/EP2 lifecycle [webalizer.c ƒmain;
-preserve.c]: read -> parse -> enrich -> sessionize (resume-aware when
---incremental and a checkpoint exists) -> fan-out sinks + report tables
--> save checkpoint state + manifest. Prints the end-of-run summary line
-(records, seconds, records/sec) like the reference does at the end of
-ƒmain.
+preserve.c]: read -> parse -> enrich -> sessionize -> fan-out sinks +
+report tables -> save checkpoint state + manifest. --checkpoint is the
+incremental switch, like the reference's 'Incremental yes', which both
+restores and saves webalizer.current: a checkpoint with a committed
+manifest is resumed (only records past its watermark are processed and
+session numbering continues the saved state); one without a manifest
+starts a new one. Prints the end-of-run summary line (records, seconds,
+records/sec) like the reference does at the end of ƒmain.
 """
 
 from __future__ import annotations
@@ -27,12 +30,10 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def resolve_config(conf_path: str | None, visit_timeout: int | None,
-                   incremental: bool | None):
-    """Conf file + CLI override resolution: explicit CLI flags override
-    the conf file in BOTH directions (--no-incremental defeats an
-    'Incremental yes'; --visit-timeout 0 is honored, not treated as
-    unset). Returns (cfg, unknown_keywords)."""
+def resolve_config(conf_path: str | None, visit_timeout: int | None):
+    """Conf file + CLI override resolution: an explicit --visit-timeout
+    overrides the conf file (0 is honored, not treated as unset).
+    Returns (cfg, unknown_keywords)."""
     from dataclasses import replace
 
     from webalizer_spark import EngineConfig
@@ -43,13 +44,8 @@ def resolve_config(conf_path: str | None, visit_timeout: int | None,
         cfg, unknown = load_conf(conf_path)
     else:
         cfg = EngineConfig()
-    overrides = {}
     if visit_timeout is not None:
-        overrides["visit_timeout_s"] = visit_timeout
-    if incremental is not None:
-        overrides["incremental"] = incremental
-    if overrides:
-        cfg = replace(cfg, **overrides)
+        cfg = replace(cfg, visit_timeout_s=visit_timeout)
     return cfg, unknown
 
 
@@ -60,17 +56,14 @@ def main() -> None:
     ap.add_argument("--dims", default=None,
                     help="dimension tables location (default: same as input)")
     ap.add_argument("--output", required=True)
-    ap.add_argument("--checkpoint", default=None)
+    ap.add_argument("--checkpoint", default=None,
+                    help="checkpoint directory: resumed when it holds a "
+                         "committed manifest, started otherwise")
     ap.add_argument("--keep-checkpoints", type=int, default=None,
                     metavar="N",
                     help="after saving state, GC checkpoint versions "
                          "older than the newest N (the live snapshot "
                          "always survives); default: keep all")
-    ap.add_argument("--incremental", action=argparse.BooleanOptionalAction,
-                    default=None,
-                    help="resume from checkpoint; --no-incremental disables "
-                         "an 'Incremental yes' from --conf (explicit CLI "
-                         "flags override the conf file in both directions)")
     ap.add_argument("--grok", default="split",
                     choices=["split", "pandas", "multi"],
                     help="field-extraction strategy; 'multi' dispatches "
@@ -81,7 +74,7 @@ def main() -> None:
     ap.add_argument("--conf", default=None,
                     help="webalizer.conf-style config file (VisitTimeout, "
                          "Top*, Ignore*/Include*/Hide*/Group*, Dump*, "
-                         "MangleAgents, Incremental) — a reference user's "
+                         "MangleAgents) — a reference user's "
                          "existing conf drives this engine unchanged")
     args = ap.parse_args()
     if args.keep_checkpoints is not None:
@@ -103,8 +96,7 @@ def main() -> None:
     from webalizer_spark.sources.tables import TableIO
 
     spark = get_spark(app_name="webalizer_spark_pipeline", master="")
-    cfg, unknown = resolve_config(args.conf, args.visit_timeout,
-                                  args.incremental)
+    cfg, unknown = resolve_config(args.conf, args.visit_timeout)
     if unknown:
         print(f"conf: ignoring {len(unknown)} non-engine keyword(s): "
               + " ".join(sorted(set(unknown))))
@@ -118,8 +110,7 @@ def main() -> None:
 
     t0 = time.time()
     ckpt = CheckpointPaths(args.checkpoint) if args.checkpoint else None
-    resumed = (cfg.incremental and ckpt is not None
-               and os.path.exists(ckpt.manifest))
+    resumed = ckpt is not None and os.path.exists(ckpt.manifest)
     sessionizer = None
     if resumed:
         # multi-format mode: W3C #Fields: directive rows must survive the

@@ -1,8 +1,9 @@
 """End-to-end test of the spark-submit entry point (jobs/run_pipeline.py)
-as a real subprocess: full run, then incremental-with-checkpoint run,
-then resume over the complete input — the EP1/EP2 lifecycle the
-north_rule grades, exercised through the packaged CLI rather than the
-library functions (tests/test_resume.py covers those)."""
+as a real subprocess: a checkpointed run over half the input, then a
+run over the complete input that resumes from that checkpoint — the
+EP1/EP2 lifecycle the north_rule grades, exercised through the packaged
+CLI rather than the library functions (tests/test_resume.py covers
+those)."""
 
 from __future__ import annotations
 
@@ -57,7 +58,7 @@ def test_cli_incremental_resume(tmp_path):
 
     out1, ckpt = str(tmp_path / "out1"), str(tmp_path / "ckpt")
     stdout1 = _run_cli("--input", str(half), "--output", out1,
-                       "--checkpoint", ckpt, "--incremental")
+                       "--checkpoint", ckpt)
     assert f"{n_half} records" in stdout1
     with open(os.path.join(out1, "_metrics.json")) as f:
         metrics1 = json.load(f)
@@ -74,7 +75,7 @@ def test_cli_incremental_resume(tmp_path):
     # resume over the FULL input: only rows past the watermark process
     out2 = str(tmp_path / "out2")
     stdout2 = _run_cli("--input", full, "--output", out2,
-                       "--checkpoint", ckpt, "--incremental")
+                       "--checkpoint", ckpt)
     assert f"{n_total - n_half} records" in stdout2
     with open(os.path.join(out2, "_metrics.json")) as f:
         s2 = json.load(f)["sinks"]
@@ -84,7 +85,7 @@ def test_cli_incremental_resume(tmp_path):
     assert m2["total_rows"] == m1["total_rows"] + s2["by_role"]
     assert m2["version"] == 2
 
-    # cumulative daily state equals a single full non-incremental run's
+    # cumulative daily state equals a single full run's without a checkpoint
     # (visits too: the resumed sessionizer continues the saved numbering)
     daily = duckdb.sql(
         f"SELECT CAST(SUM(hits) AS BIGINT), CAST(SUM(visits) AS BIGINT) "
@@ -103,7 +104,7 @@ def test_cli_incremental_resume(tmp_path):
 
 
 def _committed(out: str, ckpt: str) -> dict:
-    """What a committed incremental run leaves: every sink's row count,
+    """What a committed checkpointed run leaves: every sink's row count,
     _metrics.json, the manifest and the history rows."""
     import pyarrow.dataset as ds
 
@@ -121,10 +122,11 @@ def _committed(out: str, ckpt: str) -> dict:
 
 
 def test_cli_rerun_of_committed_batch_keeps_sinks(tmp_path):
-    """Repeating a resumed run after it committed finds nothing past the
-    watermark; its sinks, _metrics.json, manifest and history must stay
-    exactly as the first run left them, not be overwritten with empty
-    tables."""
+    """Repeating a checkpointed run after it committed resumes from the
+    checkpoint and finds nothing past the watermark; its sinks,
+    _metrics.json, manifest and history must stay exactly as the first
+    run left them, neither overwritten with empty tables nor merged into
+    the saved state a second time."""
     from webalizer_spark.datagen import GenParams, ensure_fixture
 
     full = ensure_fixture(str(tmp_path / "fix"), GenParams(n_convs=100),
@@ -132,9 +134,8 @@ def test_cli_rerun_of_committed_batch_keeps_sinks(tmp_path):
     _stage_half(full, tmp_path / "half")
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
     _run_cli("--input", str(tmp_path / "half"), "--output",
-             str(tmp_path / "out1"), "--checkpoint", ckpt, "--incremental")
-    resume = ("--input", full, "--output", out, "--checkpoint", ckpt,
-              "--incremental")
+             str(tmp_path / "out1"), "--checkpoint", ckpt)
+    resume = ("--input", full, "--output", out, "--checkpoint", ckpt)
     _run_cli(*resume)
     first = _committed(out, ckpt)
     assert first["rows"]["by_role"] > 0 and first["manifest"]["version"] == 2
@@ -156,8 +157,7 @@ def test_cli_late_records_only_batch_keeps_sinks(tmp_path):
     half = tmp_path / "half"
     _stage_half(full, half)
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    _run_cli("--input", str(half), "--output", out, "--checkpoint", ckpt,
-             "--incremental")
+    _run_cli("--input", str(half), "--output", out, "--checkpoint", ckpt)
     first = _committed(out, ckpt)
     assert first["rows"]["by_role"] > 0 and first["manifest"]["version"] == 1
 
@@ -177,7 +177,7 @@ def test_cli_late_records_only_batch_keeps_sinks(tmp_path):
     assert n_late > 0
 
     stdout = _run_cli("--input", str(late), "--output", out,
-                      "--checkpoint", ckpt, "--incremental")
+                      "--checkpoint", ckpt)
     assert "no records past the checkpoint watermark" in stdout, stdout
     assert "0 records" in stdout
     assert _committed(out, ckpt) == first
@@ -234,7 +234,7 @@ def _mixed_format_fixture(full_dir, dims_src):
 
 
 def test_cli_multi_format_incremental(tmp_path):
-    """--grok multi --incremental over a mixed combined/squid/xferlog/w3c
+    """--grok multi with a checkpoint over a mixed combined/squid/xferlog/w3c
     fixture with a #Fields: directive, split across two batches: the
     directive survives the resume watermark (W3C rows in batch 2 still
     parse), every data row routes exactly once, and manifest totals
@@ -262,8 +262,7 @@ def test_cli_multi_format_incremental(tmp_path):
 
     out1, ckpt = str(tmp_path / "out1"), str(tmp_path / "ckpt")
     stdout1 = _run_cli("--input", half, "--output", out1,
-                       "--checkpoint", ckpt, "--incremental",
-                       "--grok", "multi")
+                       "--checkpoint", ckpt, "--grok", "multi")
     assert f"{n_half} records" in stdout1
     with open(os.path.join(out1, "_metrics.json")) as f:
         s1 = json.load(f)["sinks"]
@@ -272,8 +271,7 @@ def test_cli_multi_format_incremental(tmp_path):
 
     out2 = str(tmp_path / "out2")
     stdout2 = _run_cli("--input", full, "--output", out2,
-                       "--checkpoint", ckpt, "--incremental",
-                       "--grok", "multi")
+                       "--checkpoint", ckpt, "--grok", "multi")
     assert f"{n_data - n_half} records" in stdout2
     with open(os.path.join(out2, "_metrics.json")) as f:
         s2 = json.load(f)["sinks"]
@@ -321,7 +319,7 @@ def test_cli_degenerate_batches_route_to_errors(tmp_path):
                        f"'{inp}/transcripts.parquet'").fetchone()[0]
         out, ckpt = str(tmp_path / f"{name}_out"), str(tmp_path / f"{name}_ck")
         stdout = _run_cli("--input", str(inp), "--output", out,
-                          "--checkpoint", ckpt, "--incremental")
+                          "--checkpoint", ckpt)
         assert f"{n} records" in stdout, (name, stdout)
         with open(os.path.join(out, "_metrics.json")) as f:
             sinks = json.load(f)["sinks"]

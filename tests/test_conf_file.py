@@ -20,7 +20,6 @@ VisitTimeout 900
 TopURLs     5
 TopKSites   3
 MangleAgents 3
-Incremental yes
 IgnoreURL   msg/*
 IncludeURL  msg/keep*
 HideUser    u3*
@@ -34,6 +33,8 @@ BGColor     #E8E8E8
 HTMLHead    <b>x</b>
 # so is TopCountries: transcripts carry no country dimension
 TopCountries 5
+# and Incremental: the CLI's --checkpoint DIR restores and saves state
+Incremental yes
 """
 
 
@@ -41,7 +42,7 @@ def test_parse_conf_reference_grammar():
     cfg, unknown = parse_conf(SAMPLE)
     assert cfg.visit_timeout_s == 900
     assert cfg.topn.urls == 5 and cfg.topn.sites_by_kb == 3
-    assert cfg.mangle_agents == 3 and cfg.incremental is True
+    assert cfg.mangle_agents == 3
     assert cfg.lists.ignore_url == ("msg/*",)
     assert cfg.lists.include_url == ("msg/keep*",)
     assert cfg.lists.hide_user == ("u3*",)
@@ -49,7 +50,8 @@ def test_parse_conf_reference_grammar():
     # label defaults to the pattern when omitted
     assert cfg.lists.group_referrer == (("*eng-5*", "*eng-5*"),)
     assert cfg.dumps == ("tools",)
-    assert sorted(unknown) == ["BGColor", "HTMLHead", "TopCountries"]
+    assert sorted(unknown) == ["BGColor", "HTMLHead", "Incremental",
+                               "TopCountries"]
 
 
 def test_parse_conf_defaults_when_empty():
@@ -130,20 +132,20 @@ def test_cli_conf_file_drives_pipeline(tmp_path, fixture_dir):
 
 
 def test_cli_overrides_conf_both_directions(tmp_path):
-    """Explicit CLI flags override the conf file in BOTH directions:
-    --no-incremental defeats 'Incremental yes', --incremental enables it
-    over 'Incremental no', and absence of the flag defers to the conf."""
+    """An explicit --visit-timeout overrides the conf file in both
+    directions, 0 included (not treated as unset); absence of the flag
+    defers to the conf."""
     from jobs.run_pipeline import resolve_config
 
     p = tmp_path / "w.conf"
-    p.write_text("Incremental yes\nVisitTimeout 900\n")
-    cfg, _ = resolve_config(str(p), None, None)
-    assert cfg.incremental is True and cfg.visit_timeout_s == 900
-    cfg, _ = resolve_config(str(p), None, False)
-    assert cfg.incremental is False
-    p.write_text("Incremental no\n")
-    cfg, _ = resolve_config(str(p), 0, True)
-    assert cfg.incremental is True and cfg.visit_timeout_s == 0
+    p.write_text("VisitTimeout 900\n")
+    cfg, _ = resolve_config(str(p), None)
+    assert cfg.visit_timeout_s == 900
+    cfg, _ = resolve_config(str(p), 0)
+    assert cfg.visit_timeout_s == 0
+    p.write_text("VisitTimeout 0\n")
+    cfg, _ = resolve_config(str(p), 2400)
+    assert cfg.visit_timeout_s == 2400
 
 
 def test_parse_conf_pagetype_searchengine_groupdomains():

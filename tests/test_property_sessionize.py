@@ -1,13 +1,19 @@
 """Hypothesis property tests: sessionization semantics hold on arbitrary
-inputs, not just the fixture (SURVEY §5.2 item 3)."""
+inputs, not just the fixture (SURVEY §5.2 item 3), on both sessionize
+paths."""
 
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from webalizer_spark.operators.sessionize import sessionize
+from webalizer_spark.operators.sessionize import (
+    release_skew_caches,
+    sessionize,
+    sessionize_skew_safe,
+)
 
 TIMEOUT = 1800
 
@@ -37,14 +43,25 @@ def _pandas_sessions(rows):
             for r, s in zip(pdf.itertuples(), seq)}
 
 
-@settings(max_examples=15, deadline=None,
+def _skew_safe(df):
+    # few ranges, so convs straddle partition boundaries and the
+    # cross-partition corrections run
+    return sessionize_skew_safe(df, num_partitions=3)
+
+
+@pytest.mark.parametrize("path", [sessionize, _skew_safe],
+                         ids=["window", "skew_safe"])
+@settings(max_examples=15, deadline=None, derandomize=True,
           suppress_health_check=[HealthCheck.too_slow])
-@given(convs())
-def test_sessionize_matches_pandas_on_random_inputs(spark, rows):
+@given(rows=convs())
+def test_sessionize_matches_pandas_on_random_inputs(spark, path, rows):
     df = (spark.createDataFrame(rows, "conv_id string, turn_idx int, es long")
           .withColumn("ts", st_ts()))
-    got = {(r["conv_id"], r["turn_idx"]): r["session_seq"]
-           for r in sessionize(df).collect()}
+    try:
+        got = {(r["conv_id"], r["turn_idx"]): r["session_seq"]
+               for r in path(df).collect()}
+    finally:
+        release_skew_caches()
     assert got == _pandas_sessions(rows)
 
 

@@ -14,7 +14,8 @@ defaults [sample.conf; webalizer.1]:
   PageType htm* cgi        -> page predicate; recast: tool IS NOT NULL
   Ignore*/Include*/Hide*/Group* wildcard lists -> pattern lists
   MangleAgents 0-5         -> role/agent normalization level
-  Incremental yes/no       -> checkpoint/resume
+  Incremental              -> not recast (the CLI's --checkpoint DIR both
+                              restores and saves the state): unknown
 """
 
 from __future__ import annotations
@@ -81,9 +82,6 @@ class EngineConfig:
     # MangleAgents level 0-5 [webalizer.c agent mangle]: 0 = verbatim,
     # higher levels strip minor version / OS / everything but family.
     mangle_agents: int = 0
-    # Incremental [preserve.c ƒsave_state/ƒrestore_state]: resume from
-    # checkpoint, skipping records at-or-before the saved watermark.
-    incremental: bool = False
     # Dump* keywords [sample.conf DumpSites/DumpURLs/DumpReferrers/
     # DumpAgents/DumpUsers/DumpSearchstr]: families whose FULL sorted
     # table is written as an all_* sink (T5 .tab dump analog).
@@ -179,8 +177,8 @@ def parse_conf(text: str) -> tuple[EngineConfig, list[str]]:
     scalar: dict[str, object] = {}
     unknown: list[str] = []
 
-    known = ({"visittimeout", "mangleagents", "incremental", "pagetype",
-              "searchengine", "groupdomains"}
+    known = ({"visittimeout", "mangleagents", "pagetype", "searchengine",
+              "groupdomains"}
              | _TOPN_KEYS.keys() | _LIST_KEYS.keys()
              | _GROUP_KEYS.keys() | _DUMP_KEYS.keys())
     for raw in text.splitlines():
@@ -206,8 +204,6 @@ def parse_conf(text: str) -> tuple[EngineConfig, list[str]]:
             scalar["visit_timeout_s"] = num
         elif key == "mangleagents":
             scalar["mangle_agents"] = num
-        elif key == "incremental":
-            scalar["incremental"] = _BOOL.get(val.lower(), False)
         elif key == "groupdomains":
             scalar["group_domains"] = num
         elif key == "pagetype":

@@ -291,20 +291,19 @@ def sessionize_skew_safe(df: DataFrame, timeout_s: int = 1800,
 HOT_CONV_ROWS = 100_000
 
 
-def pick_sessionizer(df: DataFrame,
-                     key: str = "conv_id") -> Callable[..., DataFrame]:
+def pick_sessionizer(df: DataFrame) -> Callable[..., DataFrame]:
     """sessionize or sessionize_skew_safe, chosen from the data: skew-safe
-    only when the hottest key is estimated to hold HOT_CONV_ROWS rows.
+    only when the hottest conv is estimated to hold HOT_CONV_ROWS rows.
 
-    The estimate is a seeded 1% sample of the key column (one small job;
-    a key at the threshold lands ~1k sampled rows), not an exact groupBy
+    The estimate is a seeded 1% sample of the conv_id column (one small job;
+    a conv at the threshold lands ~1k sampled rows), not an exact groupBy
     pre-pass, which at scale would be a full shuffle before any work.
     Both paths produce identical output (property-tested), so estimator
     noise can only change which plan runs, never the result; the seed
     keeps a given input deterministic.
     """
-    hottest = (df.select(key).sample(fraction=0.01, seed=7)
-               .groupBy(key).count()
+    hottest = (df.select("conv_id").sample(fraction=0.01, seed=7)
+               .groupBy("conv_id").count()
                .agg(F.max("count")).collect()[0][0] or 0) * 100
     return sessionize_skew_safe if hottest >= HOT_CONV_ROWS else sessionize
 

@@ -207,9 +207,8 @@ def load_manifest(ckpt: CheckpointPaths) -> dict:
 
 
 def resume_filter(df: DataFrame, ckpt: CheckpointPaths,
-                  fold_seq_err: bool = False, ts_col: str = "ts",
-                  keep_directives: bool = False,
-                  text_col: str = "text") -> DataFrame:
+                  fold_seq_err: bool = False,
+                  keep_directives: bool = False) -> DataFrame:
     """P6: incremental restart skips records at-or-before the watermark
     [webalizer.c total_ignore tally]. On Iceberg the same predicate prunes
     ts-bucketed partitions at planning time.
@@ -230,26 +229,22 @@ def resume_filter(df: DataFrame, ckpt: CheckpointPaths,
     errors either way; they are never counted or checkpointed).
     """
     wm = F.lit(load_manifest(ckpt)["watermark"]).cast("timestamp")
+    ts = F.col("ts")
     if keep_directives:
-        directive = F.coalesce(F.col(text_col).startswith("#"),
-                               F.lit(False))
+        directive = F.coalesce(F.col("text").startswith("#"), F.lit(False))
         if not fold_seq_err:
-            return df.filter((F.col(ts_col) > wm) | directive)
-        return (df.withColumn(
-                    "seq_folded", (F.col(ts_col) <= wm) & ~directive)
-                .withColumn(ts_col,
-                            F.when(directive, F.col(ts_col))
-                            .otherwise(F.greatest(F.col(ts_col), wm))))
+            return df.filter((ts > wm) | directive)
+        return (df.withColumn("seq_folded", (ts <= wm) & ~directive)
+                .withColumn("ts", F.when(directive, ts)
+                            .otherwise(F.greatest(ts, wm))))
     if not fold_seq_err:
-        return df.filter(F.col(ts_col) > wm)
-    return (df.withColumn("seq_folded", F.col(ts_col) <= wm)
-            .withColumn(ts_col, F.greatest(F.col(ts_col), wm)))
+        return df.filter(ts > wm)
+    return (df.withColumn("seq_folded", ts <= wm)
+            .withColumn("ts", F.greatest(ts, wm)))
 
 
 def resume_sessionize(new_df: DataFrame, ckpt: CheckpointPaths,
-                      timeout_s: int = 1800,
-                      key: str = "conv_id", ts_col: str = "ts",
-                      tiebreak: str = "turn_idx") -> DataFrame:
+                      timeout_s: int = 1800) -> DataFrame:
     """Sessionize a resumed batch so numbering continues the saved state.
 
     Local gap-and-island first, then one shuffle join against conv_state:
@@ -265,26 +260,26 @@ def resume_sessionize(new_df: DataFrame, ckpt: CheckpointPaths,
     with the hot-conv path.
     """
     spark = new_df.sparkSession
-    local = pick_sessionizer(new_df, key)(new_df, timeout_s, key, ts_col,
-                                          tiebreak)
+    local = pick_sessionizer(new_df)(new_df, timeout_s)
     state = (spark.read.parquet(ckpt.conv_state)
-             .select(F.col(key).alias("_st_key"),
+             .select(F.col("conv_id").alias("_st_key"),
                      F.col("last_ts").alias("_st_last_ts"),
                      F.col("sessions").alias("_st_sessions")))
 
-    first_ts = (local.groupBy(key)
-                .agg(F.min(F.struct(ts_col, tiebreak)).alias("_first"))
-                .select(key, F.col(f"_first.{ts_col}").alias("_first_ts")))
-    adj = (first_ts.join(state, first_ts[key] == state["_st_key"], "left")
+    first_ts = (local.groupBy("conv_id")
+                .agg(F.min(F.struct("ts", "turn_idx")).alias("_first"))
+                .select("conv_id", F.col("_first.ts").alias("_first_ts")))
+    adj = (first_ts.join(state, first_ts["conv_id"] == state["_st_key"],
+                         "left")
            .select(
-               first_ts[key].alias("_adj_key"),
+               first_ts["conv_id"].alias("_adj_key"),
                F.coalesce("_st_sessions", F.lit(0)).alias("_prev_sessions"),
                (F.col("_st_last_ts").isNotNull()
                 & ((F.col("_first_ts").cast("timestamp").cast("long")
                     - F.col("_st_last_ts").cast("timestamp").cast("long"))
                    < timeout_s)).alias("_merge"),
            ))
-    out = local.join(adj, local[key] == adj["_adj_key"], "left")
+    out = local.join(adj, local["conv_id"] == adj["_adj_key"], "left")
     offset = F.coalesce(
         F.col("_prev_sessions") - F.when(F.col("_merge"), 1).otherwise(0),
         F.lit(0))

@@ -47,17 +47,16 @@ def _iceberg_available(spark: SparkSession) -> bool:
 
 @dataclass
 class TableIO:
-    """Unified read/write for fact + sink tables."""
+    """Reads of the input and dimension tables, upserts of the history
+    table."""
 
     spark: SparkSession
     base_path: str | None = None        # parquet mode root
     catalog: str | None = None          # iceberg mode: e.g. "lake.analytics"
-    force_parquet: bool = False
 
     def __post_init__(self) -> None:
         self.use_iceberg = (
             self.catalog is not None
-            and not self.force_parquet
             and _iceberg_available(self.spark)
         )
 
@@ -71,22 +70,6 @@ class TableIO:
         if self.use_iceberg:
             return self.spark.read.table(f"{self.catalog}.{name}")
         return self.spark.read.parquet(self._path(name))
-
-    def write(self, df: DataFrame, name: str, mode: str = "overwrite",
-              partition_by: list[str] | None = None) -> None:
-        if self.use_iceberg:
-            w = df.writeTo(f"{self.catalog}.{name}")
-            if partition_by:
-                # identity partitioning here; day/bucket transforms are set
-                # at table-creation DDL time on the real cluster
-                w = w.partitionedBy(*partition_by)
-            (w.createOrReplace() if mode == "overwrite" else w.append())
-            return
-        assert self.base_path is not None
-        writer = df.write.mode(mode)
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(os.path.join(self.base_path, name))
 
     def merge(self, df: DataFrame, name: str, keys: list[str]) -> None:
         """Upsert by key (S9 history-table semantics): rows in `df`
