@@ -4,7 +4,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from webalizer_spark.operators.dedup import (
-    exact_dedup,
     jaccard_pairs,
     lsh_candidate_pairs,
     minhash_signatures,
@@ -28,13 +27,6 @@ def docs(spark):
         F.concat("text", F.lit(" extra")).alias("text"),
         "lang", "source", "n_chars")
     return base.unionByName(d7).unionByName(d9).cache()
-
-
-def test_exact_dedup_keeps_lowest_id(spark, docs):
-    out = exact_dedup(docs)
-    assert out.count() == docs.count() - 1          # one exact dup removed
-    assert out.filter("doc_id = 100007").count() == 0
-    assert out.filter("doc_id = 7").count() == 1
 
 
 def test_minhash_lsh_finds_planted_dups(spark, docs):
@@ -211,6 +203,16 @@ def test_jaccard_candidates_first_matches_all_pairs(spark):
                      allp.join(cand, ["doc_a", "doc_b"], "left_semi")
                      .collect()))
     assert got == ref and len(got) == 3
+    # exact all-pairs value for an excerpt: a 5-token excerpt of a
+    # 20-token doc shares 5 of 20 distinct tokens, so Jaccard is 0.25
+    # however contained the excerpt is; unrelated docs pair with nothing
+    full = " ".join(f"w{i}" for i in range(20))
+    ex = spark.createDataFrame(
+        [(1, full), (2, "w0 w1 w2 w3 w4"), (3, "x1 x2 x3 x4 x5 x6")],
+        "doc_id long, text string")
+    jac = {(r["doc_a"], r["doc_b"]): r["jaccard"]
+           for r in jaccard_pairs(shingles(ex), threshold=0.1).collect()}
+    assert jac == {(1, 2): 0.25}
 
 
 def test_simhash_pairs_blocking_is_lossless(spark, docs):
@@ -423,79 +425,3 @@ def test_semantic_dedup_cluster_path(spark):
     kept_capped = semantic_dedup(emb, 0.45, n_cells=2,
                                  max_cell_size=1).count()
     assert kept_capped == len(all_ids)
-
-
-def test_drop_non_best_members_keeper_semantics(spark):
-    """Quality-keeper tail: highest score wins, id-asc tiebreak,
-    NULL-scored members cannot win, an all-NULL component falls back
-    to its min-id label, non-dup rows always survive."""
-    from webalizer_spark.operators.dedup import drop_non_best_members
-
-    docs = spark.createDataFrame(
-        [(1, 10), (2, 99), (3, 99), (4, None), (5, 7),
-         (6, None), (7, None), (9, 1)],
-        "doc_id bigint, score bigint")
-    # component A: {1,2,3,4} -> 2 and 3 tie at 99, keep 2 (min id)
-    # component B: {5} via no edge -> untouched; {6,7}: all NULL ->
-    # fall back to min-id label 6; 9 untouched
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (6, 7)], "doc_a bigint, doc_b bigint")
-    kept = sorted(r["doc_id"] for r in
-                  drop_non_best_members(docs, edges, "score").collect())
-    assert kept == [2, 5, 6, 9]
-
-
-def test_remove_seen_cross_corpus(spark):
-    """Cross-corpus dedup: exact and lightly-edited reference copies
-    remove their corpus twins; heavily-padded ref copies are LSH
-    candidates the Jaccard verify must REJECT; unrelated corpus docs
-    survive; corpus-internal duplicates are NOT removed (only
-    cross-side pairs count)."""
-    from webalizer_spark.operators.dedup import remove_seen
-
-    base = ("alpha beta gamma delta epsilon zeta eta theta iota kappa "
-            "lam mu nu xi omicron pi rho sigma tau upsilon")
-    corpus = spark.createDataFrame(
-        [(1, base), (2, base),                     # in-corpus dup pair
-         (3, "completely different text with its own tokens here now"),
-         (4, base + " extra")],
-        "doc_id bigint, text string")
-    ref = spark.createDataFrame(
-        [(10, base),                               # exact -> removes 1,2
-         (11, "completely different text with its own tokens here now "
-              "j1 j2 j3 j4 j5 j6 j7 j8 j9 j10 j11 j12 j13 j14 j15")],
-        "doc_id bigint, text string")              # padded -> keeps 3
-    kept = sorted(r["doc_id"] for r in
-                  remove_seen(corpus, ref, threshold=0.9).collect())
-    # 1, 2 and 4 are all >= 0.9 vs ref 10; 3 survives the padded ref
-    assert kept == [3]
-
-    # with no reference, nothing is "seen"
-    empty_ref = spark.createDataFrame([], "doc_id bigint, text string")
-    kept2 = sorted(r["doc_id"] for r in
-                   remove_seen(corpus, empty_ref).collect())
-    assert kept2 == [1, 2, 3, 4]
-
-
-def test_containment_vs_jaccard(spark):
-    """Containment finds the excerpt symmetric Jaccard misses: a
-    5-token excerpt of a 20-token doc scores containment 1.0 but
-    Jaccard 0.25; unrelated docs score low on both."""
-    from webalizer_spark.operators.dedup import (
-        containment_pairs,
-        jaccard_pairs,
-        shingles,
-    )
-
-    full = " ".join(f"w{i}" for i in range(20))
-    docs = spark.createDataFrame(
-        [(1, full), (2, "w0 w1 w2 w3 w4"),
-         (3, "x1 x2 x3 x4 x5 x6")],
-        "doc_id long, text string")
-    sh = shingles(docs)
-    cont = {(r["doc_a"], r["doc_b"]): r["containment"]
-            for r in containment_pairs(sh, threshold=0.9).collect()}
-    assert cont == {(1, 2): 1.0}
-    jac = {(r["doc_a"], r["doc_b"]): r["jaccard"]
-           for r in jaccard_pairs(sh, 0.9).collect()}
-    assert (1, 2) not in jac          # 5/20 = 0.25: Jaccard misses it

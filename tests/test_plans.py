@@ -269,3 +269,29 @@ def test_dedup_keep_anti_join_broadcasts_small_drop_set(spark):
     plan = kept._jdf.queryExecution().executedPlan().toString()
     assert re.search(r"BroadcastHashJoin.*LeftAnti", plan), plan
     assert "SortMergeJoin" not in plan, plan
+
+
+def test_driver_table_read_widens_only_an_unsplittable_file(spark, tmp_path):
+    """queries._t restores scan parallelism for a single-file fixture
+    with fewer row groups than defaultParallelism: sf0.01 lineitem
+    (1.04 MB, one row group) is round-robin repartitioned right after
+    the read. The same rows as a multi-file directory already scan
+    wide, so that read plans no Exchange at all."""
+    import pyarrow.parquet as pq
+
+    from webalizer_spark.queries import _t
+
+    sf = "/root/testdata/sf0.01"
+    single = _plan(_t(spark, sf, "lineitem"))
+    wide = spark.sparkContext.defaultParallelism > 1
+    assert ("RoundRobinPartitioning" in single) == wide, single
+
+    table = pq.read_table(f"{sf}/lineitem.parquet")
+    out = tmp_path / "lineitem.parquet"
+    out.mkdir()
+    half = table.num_rows // 2
+    pq.write_table(table.slice(0, half), out / "part-0.parquet")
+    pq.write_table(table.slice(half), out / "part-1.parquet")
+    multi = _t(spark, str(tmp_path), "lineitem")
+    assert "Exchange" not in _plan(multi), _plan(multi)
+    assert multi.count() == table.num_rows

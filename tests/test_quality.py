@@ -2,13 +2,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from webalizer_spark.operators.quality import (
-    bloom_contaminated_ids,
-    bloom_words,
-    contaminated_ids,
-    decontaminate,
-    ngram_repetition,
-)
+from webalizer_spark.operators.quality import ngram_repetition
 
 
 def _docs(spark, rows):
@@ -45,106 +39,6 @@ def test_ngram_repetition_is_shuffle_free(spark):
     plan = ngram_repetition(df, n=3)._jdf.queryExecution() \
         .executedPlan().toString()
     assert "Exchange" not in plan, plan
-
-
-def test_decontaminate_semantics(spark):
-    docs = _docs(spark, [
-        (1, "the quick brown fox jumps over the lazy dog today"),
-        (2, "a completely different document with no overlap at all"),
-        (3, "prefix words then the quick brown fox jumps over the lazy"),
-        (4, "short doc"),
-    ])
-    bench = _docs(spark, [
-        (100, "the quick brown fox jumps over the lazy"),
-    ]).select("text")
-    bad = {r["doc_id"] for r in
-           contaminated_ids(docs, bench, n=8).collect()}
-    assert bad == {1, 3}          # both contain the 8-token bench span
-    kept = {r["doc_id"] for r in
-            decontaminate(docs, bench, n=8).collect()}
-    assert kept == {2, 4}
-    # n larger than every doc -> nothing flagged, nothing dropped
-    assert contaminated_ids(docs, bench, n=50).count() == 0
-    assert decontaminate(docs, bench, n=50).count() == 4
-
-
-def test_decontaminate_joins_are_broadcast(spark):
-    """Neither join may shuffle the corpus: benchmark grams broadcast
-    into the semi join, contaminated ids broadcast into the anti join.
-    The only Exchange allowed is the tiny ids distinct."""
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    toks = F.split("text", " ")
-    bench = (docs.filter(F.col("doc_id") % 17 == 3)
-             .select(F.concat_ws(" ", F.slice(toks, 1, 8)).alias("text")))
-    plan = decontaminate(docs, bench, n=8)._jdf.queryExecution() \
-        .executedPlan().toString()
-    assert plan.count("BroadcastHashJoin") == 2, plan
-    assert "SortMergeJoin" not in plan, plan
-    for line in plan.splitlines():
-        if "Exchange hashpartitioning" in line:
-            assert "gram_key" not in line, line  # corpus grams never shuffle
-    # every benchmark source doc flags itself
-    bad = {r["doc_id"] for r in contaminated_ids(docs, bench, 8).collect()}
-    src = {r["doc_id"] for r in
-           docs.filter((F.col("doc_id") % 17 == 3)
-                       & (F.size(toks) >= 8)).collect()}
-    assert src and src <= bad
-
-
-def test_bloom_decontaminate_equals_exact(spark):
-    """Bloom prefilter + exact confirm must equal the exact operator —
-    including at a DELIBERATELY tiny bitmap (m=64, k=2: false positives
-    guaranteed on this corpus) where only the confirm join keeps the
-    answer exact."""
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    toks = F.split("text", " ")
-    bench = (docs.filter(F.col("doc_id") % 17 == 3)
-             .select(F.concat_ws(" ", F.slice(toks, 1, 8)).alias("text")))
-    exact = {r["doc_id"] for r in
-             contaminated_ids(docs, bench, n=8).collect()}
-    assert exact  # never vacuous: every bench source doc flags itself
-    for m_bits, k in ((1 << 16, 3), (64, 2)):
-        got = {r["doc_id"] for r in
-               bloom_contaminated_ids(docs, bench, n=8, m_bits=m_bits,
-                                      k=k).collect()}
-        assert got == exact, (m_bits, k)
-
-
-def test_bloom_words_properties(spark):
-    """Bitmap build: no false negatives ever; validation raises; empty
-    key set -> all-zero bitmap -> zero candidates."""
-    import pytest
-
-    keys = spark.createDataFrame(
-        [(i * 7919,) for i in range(200)], "gram_key bigint")
-    words = bloom_words(keys, m_bits=1 << 10, k=3)
-    assert len(words) == (1 << 10) // 64
-    from webalizer_spark.operators.quality import _bloom_hit
-    hits = keys.select(_bloom_hit(F.col("gram_key"), words, 3)
-                       .alias("h")).collect()
-    assert all(r["h"] for r in hits)  # membership is never missed
-    empty = bloom_words(keys.limit(0), m_bits=1 << 10, k=3)
-    assert set(empty) == {0}
-    with pytest.raises(ValueError):
-        bloom_words(keys, m_bits=100, k=3)       # not a multiple of 64
-    with pytest.raises(ValueError):
-        bloom_words(keys, m_bits=1 << 10, k=0)   # k out of range
-
-
-def test_bloom_confirm_join_never_ships_text(spark):
-    """Plan shape: the corpus reaches the confirm join as (doc_id,
-    gram_key) only — no text column in any Exchange — and the Bloom
-    test is a JVM literal-array filter, no Python UDF stage."""
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    toks = F.split("text", " ")
-    bench = (docs.filter(F.col("doc_id") % 17 == 3)
-             .select(F.concat_ws(" ", F.slice(toks, 1, 8)).alias("text")))
-    plan = bloom_contaminated_ids(docs, bench, n=8)._jdf \
-        .queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan and "ArrowEval" not in plan, plan
-    for line in plan.splitlines():
-        if "Exchange" in line:
-            assert "text" not in line, line
 
 
 def test_dedup_spans_semantics(spark):
@@ -333,14 +227,12 @@ def test_pagerank_matches_dense_reference(spark):
     assert got["e"] > (1 - 0.85) / n      # dangling node still scores
 
 
-def test_blocklist_filter_and_stats(spark):
-    """Word mode: occurrences (not distinct terms) count, case-folded;
-    filter keeps frac <= threshold inline with zero Exchange and no
-    join. Substring mode flags any term occurring inside the text."""
-    from webalizer_spark.operators.quality import (
-        blocklist_filter,
-        blocklist_stats,
-    )
+def test_blocklist_stats_word_and_substring_modes(spark):
+    """Word mode: occurrences (not distinct terms) count, case-folded.
+    Substring mode flags any term occurring inside the text, also
+    case-folded. Either way the stats are one narrow pass: no Exchange,
+    no join."""
+    from webalizer_spark.operators.quality import blocklist_stats
 
     docs = _docs(spark, [
         (1, "Bad bad apple pie"),          # 2/4 hits, case-folded
@@ -355,24 +247,17 @@ def test_blocklist_filter_and_stats(spark):
     assert stats[3]["blocked_frac"] == 0.2
     assert stats[4]["blocked_tokens"] == 0     # token mode: no substring hit
 
-    assert {r["doc_id"] for r in
-            blocklist_filter(docs, ["bad"]).collect()} == {2, 4}
-    assert {r["doc_id"] for r in
-            blocklist_filter(docs, ["bad"], max_frac=0.3).collect()} \
-        == {2, 3, 4}
     # substring mode catches the embedded term AND case-folds: a doc
-    # whose only occurrence is upper-case must still be dropped
-    assert {r["doc_id"] for r in
-            blocklist_filter(docs, ["bad"], substring=True).collect()} == {2}
+    # whose only occurrence is upper-case must still be flagged
+    sub = {r["doc_id"]: r["blocked_frac"] for r in
+           blocklist_stats(docs, ["bad"], substring=True).collect()}
+    assert sub == {1: 1.0, 2: 0.0, 3: 1.0, 4: 1.0}
     up = _docs(spark, [(9, "BADWORD here"), (10, "fine")])
-    assert {r["doc_id"] for r in
-            blocklist_filter(up, ["badword"], substring=True).collect()} \
-        == {10}
     s9 = blocklist_stats(up, ["badword"], substring=True).collect()
     assert {r["doc_id"]: r["blocked_frac"] for r in s9} == {9: 1.0, 10: 0.0}
 
     big = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    plan = blocklist_filter(big, ["slow", "hash"])._jdf.queryExecution() \
+    plan = blocklist_stats(big, ["slow", "hash"])._jdf.queryExecution() \
         .executedPlan().toString()
     assert "Exchange" not in plan and "Join" not in plan, plan
 
@@ -568,60 +453,6 @@ def test_dedup_substrings_no_text_through_anchor_exchange(spark):
     for line in plan.splitlines():
         if "Exchange hashpartitioning" in line:
             assert "text" not in line, line
-
-
-def test_dsir_prefers_target_like_docs(spark):
-    """Docs resembling the target distribution must out-weigh noise:
-    the importance log-ratio is positive exactly on target-heavy
-    buckets. Held-out target-like docs (NOT in the target set) score
-    above noise docs."""
-    from webalizer_spark.operators.quality import (
-        dsir_logweights,
-        dsir_sample,
-    )
-
-    rows = []
-    for i in range(40):
-        if i % 4 == 0:
-            rows.append((i, "alpha beta gamma delta alpha beta"))
-        elif i % 4 == 1:  # target-like but NOT in the target set
-            rows.append((i, "alpha beta gamma delta"))
-        else:
-            rows.append((i, f"noise{i} junk{i} filler{i} blob{i}"))
-    docs = _docs(spark, rows)
-    target = docs.filter(F.col("doc_id") % 4 == 0)
-    lw = {r["doc_id"]: r["logw"]
-          for r in dsir_logweights(docs, target).collect()}
-    assert set(lw) == set(range(40))
-    like = [lw[i] for i in range(40) if i % 4 == 1]
-    noise = [lw[i] for i in range(40) if i % 4 >= 2]
-    assert min(like) > max(noise), (like, noise)
-    # Gumbel-top-k: deterministic, bounded, and score = logw + gumbel
-    top = dsir_sample(docs, target, k=10).collect()
-    assert len(top) == 10
-    assert top == dsir_sample(docs, target, k=10).collect()
-    import hashlib
-    import math
-    for r in top:
-        h = int(hashlib.md5(str(r["doc_id"]).encode())
-                .hexdigest()[:13], 16)
-        g = -math.log(-math.log((h + 1) / float((1 << 52) + 2)))
-        assert abs(r["score"] - (r["logw"] + g)) < 2e-6, r
-
-
-def test_dsir_scoring_pass_is_zero_shuffle(spark):
-    """The 100 TB contract: model FITTING aggregates to <=B rows
-    (bounded, collected once); SCORING is a per-row HOF fold over a
-    literal ratio array — the returned frame's plan has no Exchange
-    and no Python stage."""
-    from webalizer_spark.operators.quality import dsir_logweights
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    target = docs.filter(F.col("doc_id") % 29 == 7)
-    plan = dsir_logweights(docs, target)._jdf.queryExecution() \
-        .executedPlan().toString()
-    assert "Exchange" not in plan, plan
-    assert "BatchEvalPython" not in plan and "ArrowEval" not in plan, plan
 
 
 def test_c4_line_filter_rules(spark):
@@ -904,21 +735,6 @@ def test_c4_whitespace_word_rule(spark):
     assert out[0]["text"] == ("a\tb\tc\td\te.\n"
                               "regular five word line here.")
     assert (out[0]["n_kept"], out[0]["n_dropped"]) == (2, 1)
-
-
-def test_keep_best_string_ids(spark):
-    """Review regression: the keeper tie-break must not do arithmetic
-    on the id — string ids work, highest score wins, tie -> min id."""
-    from webalizer_spark.operators.dedup import drop_non_best_members
-
-    docs = spark.createDataFrame(
-        [("u-b", 5), ("u-a", 5), ("u-c", 9), ("solo", 1)],
-        "doc_id string, score bigint")
-    edges = spark.createDataFrame(
-        [("u-b", "u-a"), ("u-a", "u-c")], "doc_a string, doc_b string")
-    kept = sorted(r["doc_id"] for r in
-                  drop_non_best_members(docs, edges, "score").collect())
-    assert kept == ["solo", "u-c"]
 
 
 def test_profile_table_wide_double_render(spark):

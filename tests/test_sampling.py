@@ -1,88 +1,8 @@
-"""Deterministic sampling / splitting / packing (operators/sampling.py)."""
+"""Deterministic mixture execution (operators/sampling.py)."""
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
-
-from webalizer_spark.operators.sampling import (
-    hash_split,
-    pack_sequences,
-    stratified_sample,
-)
-
-SF = "/root/testdata/sf0.1"
-
-
-@pytest.fixture(scope="module")
-def docs(spark):
-    return spark.read.parquet(f"{SF}/documents.parquet").cache()
-
-
-def test_hash_split_proportions_and_determinism(spark, docs):
-    out = hash_split(docs, {"train": 0.8, "valid": 0.1, "test": 0.1})
-    counts = {r["split"]: r["n"] for r in
-              out.groupBy("split").agg(F.count(F.lit(1)).alias("n")).collect()}
-    n = docs.count()
-    assert set(counts) == {"train", "valid", "test"}
-    assert abs(counts["train"] / n - 0.8) < 0.03
-    assert abs(counts["valid"] / n - 0.1) < 0.03
-    # deterministic: identical assignment on a re-run and under a
-    # different partitioning (the property randomSplit lacks)
-    a = sorted((r["doc_id"], r["split"]) for r in
-               out.select("doc_id", "split").collect())
-    b = sorted((r["doc_id"], r["split"]) for r in
-               hash_split(docs.repartition(7),
-                          {"train": 0.8, "valid": 0.1, "test": 0.1})
-               .select("doc_id", "split").collect())
-    assert a == b
-
-    with pytest.raises(ValueError, match="sum to 1"):
-        hash_split(docs, {"train": 0.5, "test": 0.4})
-
-
-def test_stratified_sample_per_stratum(spark, docs):
-    frac = 0.2
-    out = stratified_sample(docs, frac, "source")
-    tot = {r["source"]: r["n"] for r in docs.groupBy("source")
-           .agg(F.count(F.lit(1)).alias("n")).collect()}
-    got = {r["source"]: r["n"] for r in out.groupBy("source")
-           .agg(F.count(F.lit(1)).alias("n")).collect()}
-    # per-stratum tolerance sized for binomial noise at ~250-row strata
-    # (sigma ~ 2.5%); the overall fraction is much tighter
-    for src, n in tot.items():
-        assert abs(got.get(src, 0) / n - frac) < 0.09, (src, got.get(src), n)
-    assert abs(sum(got.values()) / sum(tot.values()) - frac) < 0.02
-    # independent subsets per stratum: hashing (stratum, key) means the
-    # kept key-sets differ between strata (same keys would indicate the
-    # key-only-hash bug)
-    kept = out.groupBy("doc_id").count()
-    assert kept.filter("count > 1").count() == 0   # doc in one stratum only
-
-
-def test_pack_sequences_respects_budget(spark, docs):
-    sized = docs.withColumn("n_tokens", F.size(F.split("text", " ")))
-    budget = 2000
-    packed = pack_sequences(sized, budget, num_partitions=8)
-    assert packed.count() == docs.count()          # every doc packed once
-    per_bin = packed.groupBy("bin_id").agg(
-        F.sum("n_tokens").alias("tot"),
-        F.count(F.lit(1)).alias("docs"),
-        F.max("n_tokens").alias("mx"))
-    # a bin only exceeds the budget when a single oversized doc owns it
-    bad = per_bin.filter((F.col("tot") > budget) & (F.col("docs") > 1))
-    assert bad.count() == 0
-    # packing is efficient: mean fill of multi-doc bins is high
-    fill = per_bin.filter(F.col("docs") > 1).agg(
-        F.avg("tot").alias("avg")).collect()[0]["avg"]
-    assert fill is None or fill > 0.5 * budget
-    # deterministic re-run
-    a = sorted((r["doc_id"], r["bin_id"]) for r in
-               packed.select("doc_id", "bin_id").collect())
-    b = sorted((r["doc_id"], r["bin_id"]) for r in
-               pack_sequences(sized, budget, num_partitions=8)
-               .select("doc_id", "bin_id").collect())
-    assert a == b
+from webalizer_spark.operators.sampling import materialize_mixture
 
 
 def test_materialize_mixture_rules(spark):
@@ -90,7 +10,6 @@ def test_materialize_mixture_rules(spark):
     twice; epochs=0.3 keeps a deterministic ~30% once; epochs=0 drops
     the source; copy indices are dense 1..n; and the draw is
     reproducible run-to-run."""
-    from webalizer_spark.operators.sampling import materialize_mixture
 
     docs = spark.createDataFrame(
         [(i, ["dbl", "frac", "zero"][i % 3]) for i in range(3000)],
@@ -109,44 +28,3 @@ def test_materialize_mixture_rules(spark):
     again = materialize_mixture(docs, weights).toPandas()
     key = lambda df: sorted(map(tuple, df[["doc_id", "copy"]].values))
     assert key(out) == key(again)
-
-
-def test_chunk_documents_semantics_and_plan(spark):
-    """Window math on a hand-built doc (chunk 4, overlap 1, stride 3):
-    12 tokens -> starts 0/3/6/9, last window short; a doc inside one
-    window yields exactly one chunk; empty text yields one ''-chunk;
-    overlapping tokens repeat across adjacent chunks; and the plan has
-    ZERO Exchange (pure higher-order functions + narrow explode)."""
-    from webalizer_spark.operators.sampling import chunk_documents
-
-    docs = spark.createDataFrame(
-        [(1, " ".join(f"t{i}" for i in range(12))),
-         (2, "a b c"),
-         (3, "")],
-        "doc_id long, text string")
-    out = chunk_documents(docs, chunk_tokens=4, overlap=1)
-    rows = {(r["doc_id"], r["chunk_idx"]): r for r in out.collect()}
-    assert len([k for k in rows if k[0] == 1]) == 4
-    assert rows[(1, 0)]["chunk_text"] == "t0 t1 t2 t3"
-    assert rows[(1, 1)]["chunk_text"] == "t3 t4 t5 t6"   # overlap repeats t3
-    assert rows[(1, 3)]["chunk_text"] == "t9 t10 t11"    # short tail
-    assert rows[(1, 3)]["n_tokens"] == 3
-    assert rows[(2, 0)]["chunk_text"] == "a b c"
-    assert len([k for k in rows if k[0] == 2]) == 1
-    assert rows[(3, 0)]["chunk_text"] == "" and rows[(3, 0)]["n_tokens"] == 1
-
-    # NULL text folds to one empty chunk (NOT a bogus full-size window
-    # — greatest/least skip NULL operands)
-    nulls = spark.createDataFrame([(7, None)], "doc_id long, text string")
-    nrows = chunk_documents(nulls, chunk_tokens=4, overlap=1).collect()
-    assert len(nrows) == 1
-    assert nrows[0]["chunk_text"] == "" and nrows[0]["n_tokens"] == 1
-
-    import pytest
-    with pytest.raises(ValueError, match="overlap"):
-        chunk_documents(docs, chunk_tokens=4, overlap=4)
-
-    big = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    plan = chunk_documents(big)._jdf.queryExecution() \
-        .executedPlan().toString()
-    assert "Exchange" not in plan, plan

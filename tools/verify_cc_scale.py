@@ -64,7 +64,6 @@ def main() -> int:
         _DUP_EDGES_CTE,
         _EMB_EDGES_CTE,
         QUERIES,
-        UNGRADED,
     )
 
     spark = get_spark(extra_confs={"spark.ui.showConsoleProgress": "false"})
@@ -101,25 +100,6 @@ def main() -> int:
           f"{'PASS' if ok else 'FAIL'} ({time.time()-t0:.1f}s)")
     fails += 0 if ok else 1
 
-    # keep_best: same components, keeper = (n_chars desc, id asc)
-    nchars = dict(con.sql(
-        "SELECT doc_id, n_chars FROM documents").fetchall())
-    best: dict = {}
-    for v, lbl in labels.items():
-        cand = (-nchars[v], v)
-        if lbl not in best or cand < best[lbl][0]:
-            best[lbl] = (cand, v)
-    dropped_best = {v for v, lbl in labels.items() if best[lbl][1] != v}
-    expect_keep_best = set(nchars) - dropped_best
-    t0 = time.time()
-    got_kb = {r["doc_id"] for r in
-              {**UNGRADED, **QUERIES}["doc_near_dup_keep_best"](
-                  spark, sf_dir).collect()}
-    ok = got_kb == expect_keep_best
-    print(f"doc_near_dup_keep_best: {len(got_kb)} kept, "
-          f"{'PASS' if ok else 'FAIL'} ({time.time()-t0:.1f}s)")
-    fails += 0 if ok else 1
-
     # --- embeddings family ------------------------------------------------
     t0 = time.time()
     con.execute("CREATE OR REPLACE TEMP TABLE emb_edges AS WITH "
@@ -138,7 +118,7 @@ def main() -> int:
           f"{'PASS' if ok else 'FAIL'} ({time.time()-t0:.1f}s)")
     fails += 0 if ok else 1
 
-    print(f"== {4 - fails} pass / {fails} fail ==")
+    print(f"== {3 - fails} pass / {fails} fail ==")
     return 1 if fails else 0
 
 

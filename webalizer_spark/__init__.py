@@ -17,8 +17,7 @@ Layout:
   sources/              table-format shim (Iceberg on cluster, parquet locally)
   functions/            grok parser + scalar function library
   operators/            sessionize, enrich, filters, aggregates, topn,
-                        dedup, similarity, quality, sampling, bpe,
-                        equality
+                        dedup, similarity, quality, sampling, equality
   plans/                end-to-end pipeline + checkpoint/resume
 """
 

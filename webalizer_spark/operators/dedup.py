@@ -1,13 +1,13 @@
 """Deduplication operators for training-data pipelines.
 
-Exact + near-dup families, all pure DataFrame plans (no Python in the hot
+Near-dup families, all pure DataFrame plans (no Python in the hot
 path). The all-pairs variants are exact baselines; the LSH variants are
 the 100 TB paths (candidate generation via bucket join instead of a
 quadratic self-join). Hash functions are md5-keyed and deterministic, so
 results are reproducible across runs/engines (oracle-checked through
 the queries.py rows that call them: doc_ngram_jaccard,
 doc_minhash_signatures, doc_minhash_lsh_pairs, doc_simhash,
-doc_simhash_pairs, doc_near_dup_keep, doc_containment, ...).
+doc_simhash_pairs, doc_near_dup_keep, ...).
 """
 
 from __future__ import annotations
@@ -23,20 +23,6 @@ _LOG = logging.getLogger("webalizer_spark.dedup")
 # into the keep anti-join; matches the default 10MB-ish autoBroadcast
 # budget with generous headroom
 _BROADCAST_DROP_MAX = 500_000
-
-
-def _drop_rows(df: DataFrame, drop: DataFrame,
-               on: str | F.Column) -> DataFrame:
-    """left_anti df against a drop set, broadcasting the drop set when it
-    has at most _BROADCAST_DROP_MAX rows. Every caller's drop set comes
-    out of a local checkpoint, whose unknown stats stop AQE from
-    broadcasting it itself — the anti-join would plan as a SortMergeJoin
-    (double Exchange+Sort on ids). The count is cheap (already
-    materialized); above the gate SMJ stays — at 100 TB a giant drop set
-    must not be forced driver-side."""
-    if drop.limit(_BROADCAST_DROP_MAX + 1).count() <= _BROADCAST_DROP_MAX:
-        drop = F.broadcast(drop)
-    return df.join(drop, on, "left_anti")
 
 
 def _cap_hot_keys(keys: DataFrame, key_cols: list[str], cap: int | None,
@@ -72,20 +58,6 @@ def _hash64(col: F.Column, seed: F.Column | None = None) -> F.Column:
     xxhash64/murmur which DuckDB lacks)."""
     src = col if seed is None else F.concat_ws("|", seed.cast("string"), col)
     return F.conv(F.substring(F.md5(src), 1, 15), 16, 10).cast("bigint")
-
-
-def exact_dedup(df: DataFrame, content_col: str = "text",
-                order_col: str = "doc_id") -> DataFrame:
-    """Exact dedup: keep the lowest-key row per content hash.
-
-    Shuffle shape: ONE groupBy on the 128-bit content hash — at 100 TB
-    this is the canonical hash-partition dedup; no sort, no window over
-    the full data (row_number per hash via min_by instead).
-    """
-    h = F.md5(F.col(content_col)).alias("_fp")
-    keep = (df.select(h, F.col(order_col))
-            .groupBy("_fp").agg(F.min(order_col).alias(order_col)))
-    return df.join(keep, order_col, "left_semi")
 
 
 def shingles(df: DataFrame, content_col: str = "text", n: int = 1,
@@ -157,24 +129,17 @@ def lsh_candidate_pairs(sig: DataFrame, rows_per_band: int = 2,
 ALL_PAIRS_MAX_DOCS = 100_000
 
 
-def _guard_all_pairs(df: DataFrame, id_col: str, op: str) -> None:
-    n = df.select(id_col).distinct().count()
-    if n > ALL_PAIRS_MAX_DOCS:
-        raise ValueError(
-            f"{op}: {n} docs exceeds the all-pairs baseline bound "
-            f"({ALL_PAIRS_MAX_DOCS}); use the LSH candidate path "
-            "(lsh_candidate_pairs -> jaccard_pairs(candidates=...))")
-
-
-def _overlap_counts(sh: DataFrame, id_col: str,
-                    candidates: DataFrame | None, op: str) -> DataFrame:
-    """(doc_a, doc_b, i, sza, szb): shared-shingle count i and both
-    shingle-set sizes for each doc_a < doc_b pair that shares a shingle.
-    With `candidates` (doc_a, doc_b) only those pairs are counted: a's
+def jaccard_pairs(sh: DataFrame, threshold: float = 0.8,
+                  id_col: str = "doc_id",
+                  candidates: DataFrame | None = None) -> DataFrame:
+    """Exact token-set Jaccard. With `candidates` (doc_a, doc_b) from
+    LSH, intersection counting runs ONLY over candidate pairs: a's
     shingles fan out to its candidate partners first (equi-join on
-    doc_a), then one equi-join on (doc_b, shingle) counts matches, so
-    the hot-shingle quadratic blowup never materializes. Without
-    candidates it is the all-pairs self-join (size-guarded)."""
+    doc_a), then one equi-join on (doc_b, shingle) counts matches — the
+    shingle fan-out goes through the candidate edge list BEFORE any pair
+    aggregation, so the hot-token quadratic blowup never materializes.
+    Without candidates it is the exact all-pairs self-join baseline
+    (size-guarded; small inputs only)."""
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
     if candidates is not None:
         fan = (sh.withColumnRenamed(id_col, "doc_a")
@@ -186,7 +151,12 @@ def _overlap_counts(sh: DataFrame, id_col: str,
                  .groupBy("doc_a", "doc_b")
                  .agg(F.count(F.lit(1)).alias("i")))
     else:
-        _guard_all_pairs(sh, id_col, op)
+        n = sh.select(id_col).distinct().count()
+        if n > ALL_PAIRS_MAX_DOCS:
+            raise ValueError(
+                f"jaccard_pairs: {n} docs exceeds the all-pairs baseline "
+                f"bound ({ALL_PAIRS_MAX_DOCS}); use the LSH candidate path "
+                "(lsh_candidate_pairs -> jaccard_pairs(candidates=...))")
         a, b = sh.alias("a"), sh.alias("b")
         inter = (a.join(b, (F.col("a.shingle") == F.col("b.shingle"))
                         & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
@@ -195,18 +165,7 @@ def _overlap_counts(sh: DataFrame, id_col: str,
                  .agg(F.count(F.lit(1)).alias("i")))
     sa = sizes.select(F.col(id_col).alias("doc_a"), F.col("sz").alias("sza"))
     sb = sizes.select(F.col(id_col).alias("doc_b"), F.col("sz").alias("szb"))
-    return inter.join(sa, "doc_a").join(sb, "doc_b")
-
-
-def jaccard_pairs(sh: DataFrame, threshold: float = 0.8,
-                  id_col: str = "doc_id",
-                  candidates: DataFrame | None = None) -> DataFrame:
-    """Exact token-set Jaccard. With `candidates` (from LSH) intersection
-    counting runs ONLY over candidate pairs — the shingle fan-out goes
-    through the candidate edge list BEFORE any pair aggregation, so the
-    hot-token quadratic blowup never materializes. Without candidates it
-    is the exact all-pairs baseline (size-guarded; small inputs only)."""
-    pairs = _overlap_counts(sh, id_col, candidates, "jaccard_pairs")
+    pairs = inter.join(sa, "doc_a").join(sb, "doc_b")
     jac = F.col("i").cast("double") / (F.col("sza") + F.col("szb") - F.col("i"))
     return (pairs.filter(jac >= threshold)
             .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard")))
@@ -436,11 +395,21 @@ def drop_non_min_members(df: DataFrame, edges: DataFrame,
     """Shared dedup tail (used by near_dup_remove here and
     similarity.near_dup_remove_lsh): connected components over the
     verified (doc_a, doc_b) edges, then drop every row whose vertex is
-    not its component's minimum id."""
+    not its component's minimum id.
+
+    The drop set comes out of the components loop's local checkpoint,
+    whose unknown stats stop AQE from broadcasting it itself — the
+    anti-join would plan as a SortMergeJoin (double Exchange+Sort on
+    ids). So it is broadcast here when it has at most
+    _BROADCAST_DROP_MAX rows; the count is cheap (already materialized),
+    and above the gate SMJ stays — at 100 TB a giant drop set must not
+    be forced driver-side."""
     comp = connected_min_label(edges)
     drop = (comp.filter(F.col("label") != F.col("v"))
             .select(F.col("v").alias(id_col)))
-    return _drop_rows(df, drop, id_col)
+    if drop.limit(_BROADCAST_DROP_MAX + 1).count() <= _BROADCAST_DROP_MAX:
+        drop = F.broadcast(drop)
+    return df.join(drop, id_col, "left_anti")
 
 
 def near_dup_remove(df: DataFrame, content_col: str = "text",
@@ -461,125 +430,3 @@ def near_dup_remove(df: DataFrame, content_col: str = "text",
         max_bucket_size=max_bucket_size)
     dup = jaccard_pairs(sh, threshold, id_col, candidates=cand)
     return drop_non_min_members(df, dup.select("doc_a", "doc_b"), id_col)
-
-
-def drop_non_best_members(df: DataFrame, edges: DataFrame, score_col: str,
-                          id_col: str = "doc_id") -> DataFrame:
-    """Quality-keeper dedup tail: connected components over the
-    verified edges, then keep the member with the HIGHEST score (tie:
-    lowest id) of each component — the practical variant of
-    drop_non_min_members when duplicates differ in completeness (keep
-    the longest / best-scored copy, not the accidental min id).
-
-    keeper = min id among the members tying the component's max score —
-    two aggregates over the (tiny) component table plus a join back, no
-    window, and NO arithmetic on the id (the tempting max_by(v,
-    struct(score, -v)) tie-break crashes on string ids under ANSI,
-    where drop_non_min_members handles them fine). eqNullSafe against
-    the max makes an all-NULL-score component keep its min id, so rows
-    are never dropped without a surviving keeper. The final anti-join is
-    _drop_rows, as in drop_non_min_members."""
-    comp = connected_min_label(edges)
-    scored = comp.join(
-        df.select(F.col(id_col).alias("v"), F.col(score_col).alias("_s")),
-        "v").localCheckpoint(eager=False)
-    best = scored.groupBy("label").agg(F.max("_s").alias("_m"))
-    keep = (scored.join(best, "label")
-            .where(F.col("_s").eqNullSafe(F.col("_m")))
-            .groupBy("label").agg(F.min("v").alias("keeper")))
-    drop = (scored.join(keep, "label")
-            .filter(F.col("v") != F.col("keeper"))
-            .select(F.col("v").alias(id_col)))
-    return _drop_rows(df, drop, id_col)
-
-
-def near_dup_remove_best(df: DataFrame, score_col: str,
-                         content_col: str = "text",
-                         id_col: str = "doc_id", threshold: float = 0.9,
-                         num_hashes: int = 8, rows_per_band: int = 2,
-                         max_bucket_size: int | None = None) -> DataFrame:
-    """near_dup_remove with the quality keeper: identical MinHash ->
-    LSH -> Jaccard-verify -> CC pipeline, but each dup component keeps
-    its best-`score_col` member instead of its minimum id."""
-    sh = shingles(df, content_col, 1, id_col)
-    cand = lsh_candidate_pairs(
-        minhash_signatures(sh, num_hashes, id_col), rows_per_band, id_col,
-        max_bucket_size=max_bucket_size)
-    dup = jaccard_pairs(sh, threshold, id_col, candidates=cand)
-    return drop_non_best_members(df, dup.select("doc_a", "doc_b"),
-                                 score_col, id_col)
-
-
-def cross_near_dup_pairs(corpus: DataFrame, reference: DataFrame,
-                         content_col: str = "text",
-                         id_col: str = "doc_id", threshold: float = 0.9,
-                         num_hashes: int = 8, rows_per_band: int = 2,
-                         max_bucket_size: int | None = None) -> DataFrame:
-    """Near-dup pairs BETWEEN two corpora (corpus doc ~ reference doc):
-    the cross-corpus form of the MinHash->LSH->Jaccard pipeline, used
-    to dedup a new crawl against an existing training set. Both sides
-    union under side-tagged string ids ('c:<id>' / 'r:<id>'); band
-    buckets come from ONE signature pass over the union and only
-    CROSS-side candidates are verified ('c:' < 'r:' lexicographically,
-    so the ordered candidate join already yields (corpus, reference)
-    pairs — same-side pairs are filtered before any Jaccard work).
-    Returns (doc_a = corpus id string-form, doc_b = reference id
-    string-form, jaccard)."""
-    cid = F.concat(F.lit("c:"), F.col(id_col).cast("string"))
-    rid = F.concat(F.lit("r:"), F.col(id_col).cast("string"))
-    u = (corpus.select(cid.alias("_uid"), F.col(content_col).alias("_txt"))
-         .unionByName(reference.select(rid.alias("_uid"),
-                                       F.col(content_col).alias("_txt"))))
-    sh = shingles(u, "_txt", 1, "_uid")
-    cand = lsh_candidate_pairs(
-        minhash_signatures(sh, num_hashes, "_uid"), rows_per_band, "_uid",
-        max_bucket_size=max_bucket_size)
-    cross = cand.where(F.col("doc_a").startswith("c:")
-                       & F.col("doc_b").startswith("r:"))
-    return jaccard_pairs(sh, threshold, "_uid", candidates=cross)
-
-
-def remove_seen(corpus: DataFrame, reference: DataFrame,
-                content_col: str = "text", id_col: str = "doc_id",
-                threshold: float = 0.9, num_hashes: int = 8,
-                rows_per_band: int = 2,
-                max_bucket_size: int | None = None) -> DataFrame:
-    """Drop every corpus document near-duplicate to ANY reference
-    document — decontaminate a new crawl against the previous training
-    set (the cross-corpus sibling of near_dup_remove; no components
-    needed, membership in one verified cross pair is enough). The seen
-    set carries string-form ids only and rides the same smallness-
-    gated broadcast anti-join as the other dedup tails."""
-    dup = cross_near_dup_pairs(corpus, reference, content_col, id_col,
-                               threshold, num_hashes, rows_per_band,
-                               max_bucket_size)
-    # materialize the seen set before the smallness-gate count: its
-    # lineage is the whole cross-corpus MinHash->LSH->Jaccard pipeline,
-    # which the count and the anti-join would otherwise each execute
-    # once (round-6 ADVICE — the sibling dedup tails already barrier
-    # their drop sets via the CC loop's checkpoints)
-    seen = (dup.select(F.expr("substring(doc_a, 3)").alias("_sid"))
-            .distinct().localCheckpoint(eager=False))
-    return _drop_rows(corpus, seen,
-                      F.col(id_col).cast("string") == F.col("_sid"))
-
-
-def containment_pairs(sh: DataFrame, threshold: float = 0.8,
-                      id_col: str = "doc_id",
-                      candidates: DataFrame | None = None) -> DataFrame:
-    """One-sided Jaccard (containment): |A n B| / min(|A|, |B|) —
-    catches a document CONTAINED in another (quotes, excerpts,
-    wrapper pages) that symmetric Jaccard dilutes below any useful
-    threshold when the container is much larger. Same physical shape
-    as jaccard_pairs (candidates-first fan-out or the size-guarded
-    all-pairs baseline). Honest recall note: MinHash approximates
-    SYMMETRIC Jaccard, so LSH candidates under-recall asymmetric
-    containment pairs — at scale pair generation should come from the
-    winnowing/span fingerprint families (which key on shared content
-    directly) with this operator as the verifier; the all-pairs form
-    is exact."""
-    pairs = _overlap_counts(sh, id_col, candidates, "containment_pairs")
-    cont = F.col("i").cast("double") / F.least("sza", "szb")
-    return (pairs.where(cont >= threshold)
-            .select("doc_a", "doc_b",
-                    F.round(cont, 6).alias("containment")))

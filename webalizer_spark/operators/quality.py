@@ -1,6 +1,5 @@
-"""Training-corpus quality operators: repetition metrics, benchmark
-decontamination, cross-document span dedup, LM scoring, and length
-distributions.
+"""Training-corpus quality operators: repetition metrics,
+cross-document span dedup, LM scoring, and length distributions.
 
 These extend the engine's LLM-data-pipeline family (dedup, similarity,
 lang-ID, quality buckets) with the filters every large-scale text
@@ -10,9 +9,6 @@ pipeline runs before training:
   what fraction of a document is duplicated n-grams, and how much of it
   the single most frequent n-gram covers. Documents dominated by
   boilerplate or template spam light up on both.
-- ``decontaminate``: test-set overlap removal — drop every document
-  that shares an n-token span with a benchmark/eval prompt, so the
-  training corpus cannot leak evaluation data.
 - ``duplicate_spans`` / ``dedup_spans``: C4-style cross-document span
   dedup — every duplicated non-overlapping n-token span loses all but
   its first occurrence, with the text rebuilt in place.
@@ -30,11 +26,6 @@ Scale design (100 TB):
   count — O(d log d) per doc, all JVM-side, zero Python). An
   explode+groupBy formulation would shuffle every gram of the corpus;
   this one shuffles nothing.
-- ``decontaminate`` explodes only GRAM KEYS (16-hex-digit md5 prefixes,
-  never text) on the corpus side and broadcasts the benchmark gram set
-  — contamination joins are narrow. The contaminated-id set (small by
-  construction: contamination is rare) is broadcast back for the
-  left_anti, so no wide Exchange ever carries the corpus.
 
 Reference parity: the upstream engine has no training-data notion; these
 recast its spam/robot filtering INTENT (webalizer.conf IgnoreSite /
@@ -50,6 +41,12 @@ from pyspark.sql import functions as F
 
 def _toks(text_col: str) -> Column:
     return F.split(F.col(text_col), " ")
+
+
+def _toks_safe(text_col: str) -> Column:
+    """NULL text scores like the empty string (one '' unigram) instead
+    of poisoning HOF aggregates with NULL arrays."""
+    return F.split(F.coalesce(F.col(text_col), F.lit("")), " ")
 
 
 def _grams(toks: Column, n: int) -> Column:
@@ -109,137 +106,6 @@ def ngram_repetition(docs: DataFrame, n: int = 2,
             run.cast("double") / safe_total, F.lit(0.0)),
             6).alias("top_ngram_frac"),
     )
-
-
-def _gram_keys(toks: Column, n: int) -> Column:
-    """n-gram join keys: 15-hex-digit md5 prefix as bigint (the repo's
-    cross-engine hash recipe) — grams never travel as text."""
-    joined = F.transform(
-        F.sequence(F.lit(1), F.size(toks) - n + 1),
-        lambda i: F.conv(F.substring(
-            F.md5(F.concat_ws(" ", F.slice(toks, i, n))), 1, 15),
-            16, 10).cast("bigint"))
-    return F.when(F.size(toks) >= n, joined).otherwise(
-        F.array().cast("array<bigint>"))
-
-
-def contaminated_ids(docs: DataFrame, benchmark: DataFrame, n: int = 8,
-                     text_col: str = "text",
-                     bench_text_col: str = "text") -> DataFrame:
-    """doc_ids of documents sharing at least one token n-gram with any
-    benchmark text. Corpus side explodes bigint gram keys (narrow);
-    benchmark grams are collected per row then exploded and broadcast —
-    the benchmark table is small by definition (an eval set)."""
-    # no distinct: left_semi never multiplies matches, and the broadcast
-    # HashedRelation collapses duplicate keys — a distinct here would
-    # only add an Exchange
-    bench = benchmark.select(
-        F.explode(_gram_keys(_toks(bench_text_col), n)).alias("gram_key"))
-    doc_grams = docs.select(
-        "doc_id",
-        F.explode(_gram_keys(_toks(text_col), n)).alias("gram_key"))
-    return (doc_grams
-            .join(F.broadcast(bench), "gram_key", "left_semi")
-            .select("doc_id").distinct())
-
-
-def decontaminate(docs: DataFrame, benchmark: DataFrame, n: int = 8,
-                  text_col: str = "text",
-                  bench_text_col: str = "text") -> DataFrame:
-    """Remove benchmark-contaminated documents: docs minus every row
-    flagged by contaminated_ids. The contaminated set is broadcast for
-    the anti-join — contamination is rare, the corpus never shuffles."""
-    bad = contaminated_ids(docs, benchmark, n, text_col, bench_text_col)
-    return docs.join(F.broadcast(bad), "doc_id", "left_anti")
-
-
-# ---------------------------------------------------------------------------
-# Bloom-prefilter decontamination (exact result, broadcast-free confirm)
-# ---------------------------------------------------------------------------
-
-
-def bloom_words(keys: DataFrame, key_col: str = "gram_key",
-                m_bits: int = 1 << 16, k: int = 3) -> list[int]:
-    """Build a Bloom bitmap over a bigint key column, returned as
-    ``m_bits/64`` long words.
-
-    The build is distributed: each key expands to its k bit positions
-    (``pmod(xxhash64(key, seed), m)``), positions group to 64-bit words
-    with a map-side-combining ``bit_or`` — ONE shuffle of at most
-    ``m_bits/64`` (word, bits) rows — and only the finished words are
-    collected (bounded by the bitmap size the caller chose, never by
-    the key count)."""
-    if m_bits % 64 or m_bits < 64:
-        raise ValueError("m_bits must be a positive multiple of 64")
-    if not 1 <= k <= 16:
-        raise ValueError("k must be in 1..16")
-    key = F.col(key_col)
-    pos = F.explode(F.array(*[
-        F.pmod(F.xxhash64(key, F.lit(seed)), F.lit(m_bits))
-        for seed in range(k)])).alias("pos")
-    rows = (keys.select(pos)
-            .select((F.col("pos") / 64).cast("int").alias("w"),
-                    F.call_function(
-                        "shiftleft", F.lit(1).cast("bigint"),
-                        (F.col("pos") % 64).cast("int")).alias("b"))
-            .groupBy("w").agg(F.bit_or("b").alias("bits"))
-            .collect())
-    words = [0] * (m_bits // 64)
-    for r in rows:
-        words[r["w"]] = r["bits"]
-    return words
-
-
-def _bloom_hit(key: Column, words: list[int], k: int) -> Column:
-    """True iff every one of the key's k Bloom positions is set in the
-    literal word array — pure JVM expressions, no Python in the row
-    path. ``words`` as a plan literal is the m_bits <= ~2^20 tier; at
-    a bigger m the same test ships the numpy bitmap in an Arrow UDF
-    closure instead (not needed at any fixture scale here)."""
-    arr = F.array(*[F.lit(int(w)).cast("bigint") for w in words])
-    m_bits = 64 * len(words)
-    hits = []
-    for seed in range(k):
-        pos = F.pmod(F.xxhash64(key, F.lit(seed)), F.lit(m_bits))
-        word = F.element_at(arr, (pos / 64).cast("int") + 1)
-        bit = F.call_function("shiftleft", F.lit(1).cast("bigint"),
-                              (pos % 64).cast("int"))
-        hits.append(word.bitwiseAND(bit) != 0)
-    out = hits[0]
-    for h in hits[1:]:
-        out = out & h
-    return out
-
-
-def bloom_contaminated_ids(docs: DataFrame, benchmark: DataFrame,
-                           n: int = 8, text_col: str = "text",
-                           bench_text_col: str = "text",
-                           m_bits: int = 1 << 16, k: int = 3) -> DataFrame:
-    """``contaminated_ids`` with a Bloom prefilter — bit-identical
-    output, built for the scale where the benchmark gram set outgrows
-    a broadcast HashedRelation.
-
-    100 TB shape: ``contaminated_ids`` broadcasts every benchmark gram
-    key; fine for an eval set, impossible when "benchmark" is itself a
-    large held-out corpus (dedup-against-eval at CCNet scale). Here the
-    benchmark compresses to an m-bit Bloom bitmap (16 MiB covers ~10^8
-    grams at k=3 with a small FP rate) that rides the plan; corpus grams
-    test membership JVM-side and only the surviving CANDIDATES — a tiny,
-    contamination-rate-sized fraction — reach an exact left_semi join
-    against the true gram set (AQE sizes it; no broadcast needed on
-    either side). Bloom filters have no false negatives, so prefilter +
-    exact confirm == the exact operator, row for row; false positives
-    only cost confirm-join traffic. Reference intent parity: same as
-    ``decontaminate`` (IgnoreSite/HideAgent corpus-hygiene recast)."""
-    bench = benchmark.select(
-        F.explode(_gram_keys(_toks(bench_text_col), n)).alias("gram_key"))
-    words = bloom_words(bench, "gram_key", m_bits, k)
-    doc_grams = docs.select(
-        "doc_id",
-        F.explode(_gram_keys(_toks(text_col), n)).alias("gram_key"))
-    candidates = doc_grams.filter(_bloom_hit(F.col("gram_key"), words, k))
-    return (candidates.join(bench, "gram_key", "left_semi")
-            .select("doc_id").distinct())
 
 
 # ---------------------------------------------------------------------------
@@ -572,126 +438,6 @@ def c4_line_filter(docs: DataFrame, min_words: int = 5,
 
 
 # ---------------------------------------------------------------------------
-# DSIR: data selection via importance resampling (hashed n-grams)
-# ---------------------------------------------------------------------------
-
-
-def _feat_buckets(toks: Column, n_buckets: int) -> Column:
-    """DSIR's hashed n-gram features: every unigram and bigram, md5-
-    prefix-hashed into ``n_buckets`` buckets (the repo's cross-engine
-    bigint hash recipe, mod B)."""
-    feats = F.concat(toks, _grams(toks, 2))
-    return F.transform(
-        feats,
-        lambda g: (F.conv(F.substring(F.md5(g), 1, 15), 16, 10)
-                   .cast("bigint") % n_buckets).cast("int"))
-
-
-def dsir_bucket_logratios(docs: DataFrame, target: DataFrame,
-                          n_buckets: int = 1024, alpha: float = 0.5,
-                          text_col: str = "text",
-                          target_text_col: str = "text") -> DataFrame:
-    """Fit the two DSIR bag-of-hashed-ngrams models and return one row
-    per bucket with the importance log-ratio
-    ``ln(p_target(b)) - ln(p_raw(b))`` (add-alpha smoothed, ROUND 6 for
-    the cross-engine determinism recipe).
-
-    Scale design: model fitting is two feature-count aggregations whose
-    outputs are bounded by B (map-side combine collapses each task to
-    <= B rows before the Exchange), plus two scalar totals. Nothing
-    here grows with the corpus."""
-    def counts(df: DataFrame, tc: str, out: str) -> DataFrame:
-        return (df.select(F.explode(
-                    _feat_buckets(_toks_safe(tc), n_buckets)).alias("b"))
-                .groupBy("b").agg(F.count(F.lit(1)).alias(out)))
-
-    # materialize the (<= n_buckets)-row count tables ONCE: the scalar
-    # totals below and the broadcast joins both read them, and without
-    # the checkpoint each corpus aggregation would execute twice (once
-    # for .first(), again when the joined plan runs)
-    raw_cnt = counts(docs, text_col, "rc").localCheckpoint(eager=True)
-    tgt_cnt = counts(target, target_text_col, "tc") \
-        .localCheckpoint(eager=True)
-    totals = (raw_cnt.agg(F.sum("rc")).first()[0] or 0,
-              tgt_cnt.agg(F.sum("tc")).first()[0] or 0)
-    denom_r = float(totals[0]) + alpha * n_buckets
-    denom_t = float(totals[1]) + alpha * n_buckets
-    spark = docs.sparkSession
-    allb = spark.range(n_buckets).select(F.col("id").alias("b"))
-    return (allb
-            .join(F.broadcast(raw_cnt), "b", "left")
-            .join(F.broadcast(tgt_cnt), "b", "left")
-            .select(
-                F.col("b").cast("int").alias("b"),
-                F.round(
-                    F.log((F.coalesce("tc", F.lit(0)) + alpha) / denom_t)
-                    - F.log((F.coalesce("rc", F.lit(0)) + alpha) / denom_r),
-                    6).cast("decimal(18,6)").alias("log_ratio")))
-
-
-def _toks_safe(text_col: str) -> Column:
-    """NULL text scores like the empty string (one '' unigram) instead
-    of poisoning HOF aggregates with NULL arrays."""
-    return F.split(F.coalesce(F.col(text_col), F.lit("")), " ")
-
-
-def dsir_logweights(docs: DataFrame, target: DataFrame,
-                    n_buckets: int = 1024, alpha: float = 0.5,
-                    id_col: str = "doc_id", text_col: str = "text",
-                    target_text_col: str = "text") -> DataFrame:
-    """Per-document DSIR importance log-weight
-    ``sum over features f of (ln p_t(f) - ln p_r(f))``.
-
-    Scale design: the fitted B-bucket log-ratio table is collected
-    (bounded by B, never by data) and embedded as a literal decimal
-    array, so SCORING is a zero-shuffle per-row HOF pass — each doc
-    folds its own feature buckets through element_at + exact decimal
-    adds. No join, no Exchange, no Python in the row path (contrast
-    lm_perplexity, which demonstrates the broadcast-join formulation;
-    at B beyond literal-plan size the same table rides a broadcast
-    join instead)."""
-    ratios = dsir_bucket_logratios(docs, target, n_buckets, alpha,
-                                   text_col, target_text_col).collect()
-    by_b = {r["b"]: r["log_ratio"] for r in ratios}
-    arr = F.array(*[F.lit(str(by_b[b])).cast("decimal(18,6)")
-                    for b in range(n_buckets)])
-    logw = F.aggregate(
-        _feat_buckets(_toks_safe(text_col), n_buckets),
-        F.lit("0").cast("decimal(28,6)"),
-        lambda acc, b: (acc + F.element_at(arr, b + 1))
-        .cast("decimal(28,6)"))
-    return docs.select(
-        F.col(id_col),
-        F.round(logw.cast("double"), 6).alias("logw"))
-
-
-def dsir_sample(docs: DataFrame, target: DataFrame, k: int,
-                n_buckets: int = 1024, alpha: float = 0.5,
-                id_col: str = "doc_id", text_col: str = "text",
-                target_text_col: str = "text") -> DataFrame:
-    """DSIR selection: top-k documents by importance log-weight plus
-    deterministic Gumbel noise (Gumbel-top-k == sampling without
-    replacement proportionally to the importance weights).
-
-    The Gumbel draw must be reproducible across engines, so u comes
-    from the doc id's md5 (13 hex digits -> (0,1), exact in a double)
-    and g = -ln(-ln(u)) rounds to 6dp before the add — no RNG state
-    anywhere. Selection is orderBy+limit (TakeOrderedAndProject: per-
-    partition heaps, no global sort) with doc_id as the tiebreak."""
-    h = F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 13),
-               16, 10).cast("bigint")
-    u = (h + 1).cast("double") / F.lit(float((1 << 52) + 2))
-    g = F.round(-F.log(-F.log(u)), 6)
-    lw = dsir_logweights(docs, target, n_buckets, alpha, id_col,
-                         text_col, target_text_col)
-    return (lw.select(
-                id_col, "logw",
-                F.round(F.col("logw") + g, 6).alias("score"))
-            .orderBy(F.desc("score"), id_col)
-            .limit(k))
-
-
-# ---------------------------------------------------------------------------
 # Corpus length distributions
 # ---------------------------------------------------------------------------
 
@@ -748,7 +494,7 @@ def mixing_weights(docs: DataFrame, targets: DataFrame,
     sums — a handful of output rows), targets and the two scalar
     totals broadcast; no window, no second corpus pass. The per-doc
     sampling step downstream is a broadcast join of these weights onto
-    the corpus (same shape as sampling.stratified_sample).
+    the corpus (sampling.materialize_mixture).
     """
     ntok = F.size(_toks(text_col)).cast("bigint")
     avail = (docs.groupBy(by)
@@ -909,45 +655,24 @@ def blocklist_stats(docs: DataFrame, terms: list[str],
     mode instead flags any term occurring as a substring (the URL/slur
     variant of the rule). The term list is a bounded config artifact,
     so it rides the plan as a LITERAL array — per-row higher-order
-    functions only, zero shuffle, no join."""
-    blocked, frac = _blocklist_frac(terms, text_col, substring)
-    n = F.size(F.split(F.lower(F.col(text_col)), " "))
+    functions only, zero shuffle, no join. Both modes case-fold the
+    text against the lowercased term list."""
+    blk = F.array(*[F.lit(t.lower()) for t in terms])
+    toks = F.split(F.lower(F.col(text_col)), " ")
+    n = F.size(toks)
+    if substring:
+        hits = F.size(F.filter(
+            blk, lambda b: F.lower(F.col(text_col)).contains(b)))
+        blocked = F.lit(None).cast("bigint")
+        frac = F.when(hits > 0, 1.0).otherwise(0.0)
+    else:
+        blocked = F.size(F.filter(
+            toks, lambda t: F.array_contains(blk, t))).cast("bigint")
+        frac = F.when(n > 0, blocked / n).otherwise(F.lit(0.0))
     return docs.select(
         F.col(id_col), n.cast("bigint").alias("n_tokens"),
         blocked.alias("blocked_tokens"),
         F.round(frac, 6).alias("blocked_frac"))
-
-
-def _blocklist_frac(terms: list[str], text_col: str,
-                    substring: bool) -> tuple[F.Column, F.Column]:
-    """(blocked_tokens, blocked_frac) expressions shared by stats and
-    filter so the two can never disagree on which docs are dirty. BOTH
-    modes case-fold the text against the lowercased term list."""
-    blk = F.array(*[F.lit(t.lower()) for t in terms])
-    if substring:
-        hits = F.size(F.filter(
-            blk, lambda b: F.lower(F.col(text_col)).contains(b)))
-        return (F.lit(None).cast("bigint"),
-                F.when(hits > 0, 1.0).otherwise(0.0))
-    toks = F.split(F.lower(F.col(text_col)), " ")
-    n = F.size(toks)
-    blocked = F.size(F.filter(
-        toks, lambda t: F.array_contains(blk, t))).cast("bigint")
-    return blocked, F.when(n > 0, blocked / n).otherwise(F.lit(0.0))
-
-
-def blocklist_filter(docs: DataFrame, terms: list[str],
-                     max_frac: float = 0.0, id_col: str = "doc_id",
-                     text_col: str = "text",
-                     substring: bool = False) -> DataFrame:
-    """Keep docs whose blocklist fraction is <= max_frac (default 0 —
-    any hit drops, the strict C4 rule; Gopher-style thresholds pass
-    e.g. 0.05). The predicate evaluates INLINE on each row (no join,
-    no id collection — a keep-set join would move most of the corpus
-    through a broadcast for nothing), so the whole filter is one
-    narrow pass."""
-    _blocked, frac = _blocklist_frac(terms, text_col, substring)
-    return docs.filter(F.round(frac, 6) <= max_frac)
 
 
 def normalize_text(docs: DataFrame, form: str = "NFC",
@@ -1395,13 +1120,12 @@ def chunk_by_sentences(docs: DataFrame, max_tokens: int = 64,
                        id_col: str = "doc_id",
                        text_col: str = "text") -> DataFrame:
     """Sentence-aware chunking: greedily pack whole SENTENCES into
-    chunks of at most ``max_tokens`` whitespace words — the
-    RAG/embedding-era sibling of sampling.chunk_documents, which cuts
-    at fixed token offsets mid-sentence. A sentence longer than the
-    budget becomes its own oversized chunk (never split). The greedy
-    fold is inherently sequential PER DOCUMENT but each document's
-    fold runs inside its own row — one HOF aggregate, zero shuffle
-    before the final narrow posexplode."""
+    chunks of at most ``max_tokens`` whitespace words — unlike
+    fixed-token-offset windows, a chunk never cuts mid-sentence. A
+    sentence longer than the budget becomes its own oversized chunk
+    (never split). The greedy fold is inherently sequential PER
+    DOCUMENT but each document's fold runs inside its own row — one HOF
+    aggregate, zero shuffle before the final narrow posexplode."""
     if max_tokens < 1:
         raise ValueError("max_tokens must be >= 1")
     sents = _sentences(text_col)

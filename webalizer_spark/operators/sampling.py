@@ -1,23 +1,15 @@
-"""Deterministic sampling, splitting, and sequence packing — the
-training-data-pipeline staples downstream of dedup/quality filtering.
+"""Deterministic mixture execution — the training-data-pipeline step
+downstream of dedup/quality filtering that turns a mixture plan into
+rows.
 
-All three are engineered for the 100 TB tier:
-
-- hash_split / stratified_sample are pure NARROW projections/filters
-  (md5-bucket arithmetic, no shuffle, no RNG state): the same key maps
-  to the same split/sample decision on any cluster, any partitioning,
-  any run — the property `df.sample()`/`randomSplit()` (seeded per
-  partition) cannot give under repartitioning.
-- pack_sequences shuffles ONCE (deterministic hash partition on id) and
-  then packs each partition independently in an Arrow-batched pass; bin
-  ids are globally unique without any driver coordination.
+The per-row draw is md5-bucket arithmetic (no RNG state): the same key
+maps to the same decision on any cluster, any partitioning, any run —
+the property `df.sample()` (seeded per partition) cannot give under
+repartitioning.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -32,108 +24,6 @@ def _bucket(col: Column, salt: str) -> Column:
     return h.cast("bigint") % _BUCKETS
 
 
-def hash_split(df: DataFrame, weights: dict[str, float],
-               key_col: str = "doc_id", salt: str = "split") -> DataFrame:
-    """Deterministic train/valid/test split: adds a `split` column.
-
-    Same key -> same split, forever, on any engine — no RNG, no shuffle
-    (one narrow projection). Weights must sum to 1; boundaries are
-    cumulative bucket thresholds, so changing one weight only moves
-    keys across the adjacent boundary.
-    """
-    total = sum(weights.values())
-    if abs(total - 1.0) > 1e-9:
-        raise ValueError(f"split weights must sum to 1 (got {total})")
-    b = _bucket(F.col(key_col), salt)
-    expr = None
-    cum = 0.0
-    names = list(weights)
-    for name in names[:-1]:
-        cum += weights[name]
-        cond = b < int(round(cum * _BUCKETS))
-        expr = F.when(cond, name) if expr is None else expr.when(cond, name)
-    expr = (F.lit(names[-1]) if expr is None
-            else expr.otherwise(names[-1]))
-    return df.withColumn("split", expr)
-
-
-def stratified_sample(df: DataFrame, fraction: float, strata_col: str,
-                      key_col: str = "doc_id",
-                      salt: str = "sample") -> DataFrame:
-    """Deterministic per-stratum sampling: keeps ~fraction of every
-    stratum (language, source, quality band...). The bucket hashes
-    (stratum, key) so each stratum draws an INDEPENDENT subset — hashing
-    the key alone would select the same keys in every stratum. Pure
-    narrow filter; reproducible across runs and engines."""
-    if not 0.0 <= fraction <= 1.0:
-        raise ValueError("fraction must be in [0, 1]")
-    # md5 the stratum before concatenating: hex digests contain no '|',
-    # so a delimiter inside stratum values cannot collide two (stratum,
-    # key) pairs into the same hash input
-    b = _bucket(F.concat_ws("|", F.md5(F.col(strata_col).cast("string")),
-                            F.col(key_col).cast("string")), salt)
-    return df.filter(b < int(round(fraction * _BUCKETS)))
-
-
-def pack_sequences(df: DataFrame, budget: int,
-                   token_col: str = "n_tokens", id_col: str = "doc_id",
-                   num_partitions: int = 32) -> DataFrame:
-    """Greedy next-fit-decreasing packing (one open bin per partition,
-    closed when the next doc would overflow) into token-budget bins —
-    the sequence-packing step before example concatenation. Adds
-    `bin_id` (globally unique) and `bin_fill` (bin's running total).
-
-    Scale shape: ONE hash-partition shuffle on id (deterministic —
-    repartitionByRange would sample split points non-deterministically),
-    a size-desc sort WITHIN each partition, then each partition packs
-    independently in an Arrow-batched pass (the greedy scan is
-    inherently sequential, so it runs per-partition, not globally); bin
-    ids are `partition_id * 2^40 + local_bin`, unique with zero driver
-    coordination. Deterministic for a given (input, budget,
-    num_partitions). A document larger than the budget gets its own bin
-    (callers split/truncate upstream).
-    """
-    if budget <= 0:
-        raise ValueError("budget must be positive")
-    src = df.select(id_col, token_col) \
-        .repartition(num_partitions, F.col(id_col)) \
-        .sortWithinPartitions(F.col(token_col).desc(), F.col(id_col))
-
-    def pack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        base = pid << 40
-        local_bin, fill = 0, 0
-        first = True
-        for pdf in batches:
-            bins, fills = [], []
-            for tok in pdf[token_col]:
-                t = int(tok)
-                if not first and fill + t > budget:
-                    local_bin += 1
-                    fill = 0
-                first = False
-                fill += t
-                bins.append(base + local_bin)
-                fills.append(fill)
-            out = pdf.copy()
-            out["bin_id"] = pd.Series(bins, dtype="int64", index=pdf.index)
-            out["bin_fill"] = pd.Series(fills, dtype="int64", index=pdf.index)
-            yield out
-
-    # carry the id through in its ORIGINAL type (string UUIDs etc.): a
-    # hardcoded long cast would NULL them out and the final join would
-    # silently return nothing
-    id_type = df.schema[id_col].dataType.simpleString()
-    schema = (f"{id_col} {id_type}, {token_col} long,"
-              " bin_id long, bin_fill long")
-    packed = src.select(F.col(id_col),
-                        F.col(token_col).cast("long")) \
-        .mapInPandas(pack, schema=schema)
-    return df.join(packed.select(id_col, "bin_id", "bin_fill"), id_col)
-
-
 def materialize_mixture(df: DataFrame, weights: DataFrame,
                         by: str = "source", key_col: str = "doc_id",
                         salt: str = "mix") -> DataFrame:
@@ -144,11 +34,11 @@ def materialize_mixture(df: DataFrame, weights: DataFrame,
     repeats every doc twice and an unbiased, reproducible 30% of docs
     a third time. Adds `copy` (1..n); epochs 0 rows drop.
 
-    Same hashing convention as stratified_sample (md5 the stratum into
-    the key so each source draws an independent fractional subset).
+    The source is md5'd into the key so each source draws an
+    independent fractional subset (hashing the key alone would select
+    the same keys in every source).
     100 TB shape: the plan table is tiny -> broadcast join; duplication
-    is explode(sequence(..)) — a NARROW op, no corpus shuffle; the
-    output feeds pack_sequences' one hash-partition pass.
+    is explode(sequence(..)) — a NARROW op, no corpus shuffle.
     """
     w = weights.select(F.col(by), F.col("epochs").cast("double"))
     b = _bucket(F.concat_ws("|", F.md5(F.col(by).cast("string")),
@@ -163,47 +53,3 @@ def materialize_mixture(df: DataFrame, weights: DataFrame,
             .withColumn("copy",
                         F.explode(F.sequence(F.lit(1), F.col("_n"))))
             .drop("_n", "epochs"))
-
-
-def chunk_documents(df: DataFrame, chunk_tokens: int = 128,
-                    overlap: int = 16, id_col: str = "doc_id",
-                    text_col: str = "text") -> DataFrame:
-    """Split documents into fixed-size token windows with overlap — the
-    training-window prep step between cleaning and packing. Chunk i
-    covers tokens [i*stride, i*stride + chunk_tokens) with stride =
-    chunk_tokens - overlap; the final window is allowed short, and a
-    doc short enough for one window yields exactly one chunk.
-
-    100 TB shape: tokenize, window-count, per-window slice and rebuild
-    are ALL per-row higher-order functions (sequence + transform +
-    slice); the only row-multiplying op is the narrow explode — no
-    shuffle anywhere, the same zero-Exchange contract as
-    quality.ngram_repetition. Output rows are (id, chunk_idx,
-    chunk_text, n_tokens); feed them straight into pack_sequences.
-    """
-    if overlap >= chunk_tokens:
-        raise ValueError("overlap must be smaller than chunk_tokens")
-    stride = chunk_tokens - overlap
-    # NULL text folds to '' (one empty chunk) — without the coalesce,
-    # greatest/least skip the NULL size and emit a bogus full-length
-    # window that corrupts downstream packing budgets
-    toks = F.split(F.coalesce(F.col(text_col), F.lit("")), " ")
-    n = F.size(toks)
-    n_chunks = (F.lit(1) + F.greatest(
-        F.lit(0),
-        F.ceil((n - F.lit(chunk_tokens))
-               / F.lit(float(stride))))).cast("int")
-    chunks = F.transform(
-        F.sequence(F.lit(0), n_chunks - 1),
-        lambda i: F.struct(
-            i.cast("int").alias("chunk_idx"),
-            F.concat_ws(
-                " ", F.slice(toks, i * stride + 1, chunk_tokens))
-            .alias("chunk_text"),
-            F.least(F.lit(chunk_tokens),
-                    n - i * stride).cast("int").alias("n_tokens")))
-    return (df.select(F.col(id_col), F.explode(chunks).alias("_c"))
-            .select(id_col,
-                    F.col("_c.chunk_idx").alias("chunk_idx"),
-                    F.col("_c.chunk_text").alias("chunk_text"),
-                    F.col("_c.n_tokens").alias("n_tokens")))

@@ -968,35 +968,6 @@ def doc_near_dup_keep(spark, sf):
         .select("doc_id", "source")
 
 
-@qu("doc_near_dup_keep_best", _DUP_CC_CTE + """
-, ranked AS (
-  SELECT labels.v, labels.label, d.n_chars,
-         row_number() OVER (PARTITION BY labels.label
-                            ORDER BY d.n_chars DESC, labels.v ASC) AS rn
-  FROM labels JOIN documents d ON labels.v = d.doc_id
-)
-SELECT doc_id, source FROM documents
-WHERE doc_id NOT IN (SELECT v FROM ranked WHERE rn > 1)
-""")
-def doc_near_dup_keep_best(spark, sf):
-    """Quality-keeper near-dup removal (ungraded oracle): the same
-    MinHash -> LSH -> Jaccard-verify -> CC pipeline as
-    doc_near_dup_keep, but each dup component keeps its LONGEST member
-    (n_chars desc, id asc tiebreak) — the practical keeper when
-    duplicates differ in completeness. The engine picks the keeper via
-    a max-score aggregate + null-safe tie join + min(v) (string-id
-    safe — the max_by(-id) struct form crashes on string ids under
-    ANSI; round-6 review); DuckDB re-derives it with a row_number
-    window over the recursive-CTE closure — opposite physical plans,
-    same kept set."""
-    from webalizer_spark.operators.dedup import near_dup_remove_best
-    d = _t(spark, sf, "documents")
-    return near_dup_remove_best(d, "n_chars", "text", "doc_id",
-                                threshold=0.9, num_hashes=8,
-                                rows_per_band=2) \
-        .select("doc_id", "source")
-
-
 @q("doc_simhash_pairs", _TOKS_CTE + """
 , h AS (
   SELECT doc_id,
@@ -1268,31 +1239,6 @@ def emb_semdedup_keep(spark, sf):
         .select("vec_id")
 
 
-@qu("doc_hash_split", f"""
-WITH b AS (
-  SELECT doc_id,
-         CAST(('0x' || substr(md5('split|' || CAST(doc_id AS VARCHAR)),
-                              1, 15)) AS BIGINT) % 1000000 AS bkt
-  FROM documents
-)
-SELECT CASE WHEN bkt < 800000 THEN 'train'
-            WHEN bkt < 900000 THEN 'valid'
-            ELSE 'test' END AS split,
-       COUNT(*) AS n
-FROM b GROUP BY 1
-""")
-def doc_hash_split(spark, sf):
-    """Deterministic train/valid/test split oracle (ungraded; the 50-row
-    graded window is full): sampling.hash_split's md5-bucket assignment
-    re-derived independently in DuckDB — same key -> same split on any
-    engine, which is the whole point of hash-based (not RNG) splits."""
-    from webalizer_spark.operators.sampling import hash_split
-
-    d = hash_split(_t(spark, sf, "documents"),
-                   {"train": 0.8, "valid": 0.1, "test": 0.1})
-    return d.groupBy("split").agg(F.count(F.lit(1)).alias("n"))
-
-
 @qu("doc_redact", """
 WITH t AS (
   SELECT doc_id,
@@ -1371,61 +1317,6 @@ def doc_repetition(spark, sf):
     return r.select("doc_id", F.col("ntok").cast("bigint").alias("ntok"),
                     F.col("ngrams").cast("bigint").alias("ngrams"),
                     "dup_ngram_frac", "top_ngram_frac")
-
-
-@qu("doc_decontam", """
-WITH t AS (
-  SELECT doc_id, string_split(text, ' ') AS toks FROM documents
-), bench AS (
-  SELECT DISTINCT array_to_string(list_slice(toks, 1, 8), ' ') AS snip
-  FROM t WHERE doc_id % 17 = 3 AND len(toks) >= 8
-), grams AS (
-  SELECT doc_id, unnest(list_transform(range(1, len(toks) - 6),
-      i -> array_to_string(list_slice(toks, i, i + 7), ' '))) AS gram
-  FROM t WHERE len(toks) >= 8
-)
-SELECT DISTINCT g.doc_id AS doc_id
-FROM grams g JOIN bench b ON g.gram = b.snip
-""")
-def doc_decontam(spark, sf):
-    """Benchmark decontamination (ungraded): every doc sharing an
-    8-token span with a synthesized eval set (the first 8 tokens of
-    each doc_id % 17 == 3 document, standing in for benchmark prompts).
-    quality.contaminated_ids joins broadcast md5 gram KEYS; the oracle
-    joins the gram TEXT — agreement rules out both key-hash and
-    extraction-window slips. Each benchmark source doc must flag itself
-    (its own prefix is the snippet), so the result is never vacuous."""
-    from webalizer_spark.operators.quality import contaminated_ids
-
-    docs = _t(spark, sf, "documents")
-    toks = F.split("text", " ")
-    bench = (docs.filter(F.col("doc_id") % 17 == 3)
-             .filter(F.size(toks) >= 8)
-             .select(F.concat_ws(" ", F.slice(toks, 1, 8)).alias("text")))
-    return contaminated_ids(docs, bench, n=8)
-
-
-_DECONTAM_ORACLE = UNGRADED_ORACLE["doc_decontam"]
-
-
-@qu("doc_decontam_bloom", _DECONTAM_ORACLE)
-def doc_decontam_bloom(spark, sf):
-    """Bloom-prefilter decontamination (ungraded): SAME oracle SQL as
-    doc_decontam — the Bloom bitmap has no false negatives and the
-    exact confirm join removes its false positives, so prefilter +
-    confirm must reproduce the exact contaminated set row for row.
-    m=2^12 is deliberately small for the fixture so the prefilter
-    really passes false positives into the confirm join (the at-scale
-    rationale: a benchmark gram set too big to broadcast compresses to
-    a bitmap that rides the plan; only candidates reach any join)."""
-    from webalizer_spark.operators.quality import bloom_contaminated_ids
-
-    docs = _t(spark, sf, "documents")
-    toks = F.split("text", " ")
-    bench = (docs.filter(F.col("doc_id") % 17 == 3)
-             .filter(F.size(toks) >= 8)
-             .select(F.concat_ws(" ", F.slice(toks, 1, 8)).alias("text")))
-    return bloom_contaminated_ids(docs, bench, n=8, m_bits=1 << 12, k=3)
 
 
 @q("doc_span_dedup", """
@@ -1894,57 +1785,6 @@ def doc_sentence_chunks(spark, sf):
     return chunk_by_sentences(synth, max_tokens=12)
 
 
-@qu("doc_containment", """
-WITH base AS (
-  -- planted excerpts: every 6th doc spawns a SHORT excerpt doc made of
-  -- its first 5 distinct tokens — symmetric Jaccard dilutes these far
-  -- below threshold, containment finds them
-  SELECT doc_id, coalesce(text, '') AS text FROM documents
-  UNION ALL
-  SELECT doc_id + 1000000,
-         array_to_string(list_slice(
-           list_sort(list_distinct(string_split(coalesce(text, ''), ' '))),
-           1, 5), ' ')
-  FROM documents WHERE doc_id % 6 = 0
-), toks AS (
-  SELECT DISTINCT doc_id, tok FROM (
-    SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM base)
-), sizes AS (SELECT doc_id, COUNT(*) AS sz FROM toks GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS i
-  FROM toks a JOIN toks b ON a.tok = b.tok AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
-SELECT doc_a, doc_b,
-       ROUND(CAST(i AS DOUBLE) / LEAST(sa.sz, sb.sz), 6) AS containment
-FROM inter
-JOIN sizes sa ON sa.doc_id = doc_a
-JOIN sizes sb ON sb.doc_id = doc_b
-WHERE CAST(i AS DOUBLE) / LEAST(sa.sz, sb.sz) >= 0.99
-""")
-def doc_containment(spark, sf):
-    """Containment pairs (ungraded oracle): short excerpt docs are
-    SYNTHESIZED (first 5 SORTED distinct tokens of every 6th doc,
-    id+1e6; sorted because DuckDB's list_distinct does not preserve
-    first-occurrence order while Spark's array_distinct does) —
-    pairs symmetric Jaccard dilutes to ~0.1 but containment scores
-    1.0. Exact all-pairs form (size-guarded; the scale path pairs this
-    verifier with the winnowing/span fingerprint candidate families,
-    since MinHash-LSH under-recalls asymmetric overlap — documented).
-    DuckDB re-derives the synthesis and the one-sided measure."""
-    from webalizer_spark.operators.dedup import containment_pairs, shingles
-
-    docs = _t(spark, sf, "documents")
-    did = F.col("doc_id")
-    txt = F.coalesce(F.col("text"), F.lit(""))
-    excerpt = (docs.where(did % 6 == 0)
-               .select((did + 1000000).alias("doc_id"),
-                       F.array_join(F.slice(F.array_sort(F.array_distinct(
-                           F.split(txt, " "))), 1, 5), " ").alias("text")))
-    base = docs.select("doc_id", txt.alias("text")).unionByName(excerpt)
-    return containment_pairs(shingles(base), threshold=0.99)
-
-
 @qu("evt_top_values", """
 WITH stacked AS (
   SELECT 'event_type' AS column_name, CAST(event_type AS VARCHAR) AS value
@@ -1978,79 +1818,6 @@ def evt_top_values(spark, sf):
 
     return column_top_values(_t(spark, sf, "events"),
                              ["event_type", "user_id", "props"], k=5)
-
-
-@qu("doc_remove_seen", """
-WITH u AS (
-  SELECT 'c:' || doc_id AS uid, text FROM documents
-  UNION ALL
-  SELECT 'r:' || doc_id AS uid,
-         text || CASE WHEN doc_id % 8 = 0 THEN ' refextra'
-                      WHEN doc_id % 8 = 4
-                        THEN ' jx1 jx2 jx3 jx4 jx5 jx6 jx7 jx8 jx9 jx10'
-                             || ' jx11 jx12 jx13 jx14 jx15'
-                      ELSE '' END
-  FROM documents WHERE doc_id % 4 = 0
-), toks AS (
-  SELECT DISTINCT uid, tok FROM (
-    SELECT uid, unnest(string_split(text, ' ')) AS tok FROM u)
-), seeds AS (SELECT unnest(range(8)) AS seed),
-sig AS (
-  SELECT uid, CAST(seed AS INT) AS seed, CAST(seed // 2 AS INT) AS band,
-         MIN(CAST(('0x' || substr(md5(CAST(seed AS VARCHAR) || '|' || tok),
-                                  1, 15)) AS BIGINT)) AS minhash
-  FROM toks CROSS JOIN seeds GROUP BY uid, seed
-), bands AS (
-  SELECT uid, band,
-         string_agg(CAST(minhash AS VARCHAR), ',' ORDER BY seed)
-           AS band_key
-  FROM sig GROUP BY uid, band
-), cand AS (
-  SELECT DISTINCT a.uid AS ua, b.uid AS ub
-  FROM bands a JOIN bands b
-    ON a.band = b.band AND a.band_key = b.band_key
-  WHERE starts_with(a.uid, 'c:') AND starts_with(b.uid, 'r:')
-), sizes AS (SELECT uid, COUNT(*) AS sz FROM toks GROUP BY uid),
-inter AS (
-  SELECT c.ua, c.ub, COUNT(*) AS i
-  FROM cand c
-  JOIN toks a ON a.uid = c.ua
-  JOIN toks b ON b.uid = c.ub AND b.tok = a.tok
-  GROUP BY 1, 2
-), seen AS (
-  SELECT DISTINCT substr(ua, 3) AS sid
-  FROM inter
-  JOIN sizes sa ON sa.uid = ua
-  JOIN sizes sb ON sb.uid = ub
-  WHERE CAST(i AS DOUBLE) / (sa.sz + sb.sz - i) >= 0.9
-)
-SELECT doc_id, source FROM documents
-WHERE CAST(doc_id AS VARCHAR) NOT IN (SELECT sid FROM seen)
-""")
-def doc_remove_seen(spark, sf):
-    """Cross-corpus dedup (ungraded oracle): a reference corpus is
-    SYNTHESIZED from every 4th document (exact copies; lightly-edited
-    copies every 8th — one appended token, still >= 0.9 Jaccard; and
-    heavily-padded copies on the %8==4 schedule — 15 junk tokens,
-    candidates that the Jaccard verification must REJECT), then
-    dedup.remove_seen drops corpus docs near-dup to any reference doc
-    via side-tagged union -> one MinHash pass -> cross-side-only LSH
-    candidates -> Jaccard verify. DuckDB replays the full banding +
-    verification over the same union — bit-exact."""
-    from webalizer_spark.operators.dedup import remove_seen
-
-    docs = _t(spark, sf, "documents")
-    did = F.col("doc_id")
-    ref = (docs.where(did % 4 == 0)
-           .select("doc_id",
-                   F.concat(
-                       F.col("text"),
-                       F.when(did % 8 == 0, F.lit(" refextra"))
-                       .when(did % 8 == 4,
-                             F.lit(" jx1 jx2 jx3 jx4 jx5 jx6 jx7 jx8 jx9"
-                                   " jx10 jx11 jx12 jx13 jx14 jx15"))
-                       .otherwise("")).alias("text")))
-    return remove_seen(docs, ref).select("doc_id", "source")
 
 
 @qu("doc_entropy", """
@@ -2409,93 +2176,6 @@ def doc_c4_lines(spark, sf):
     return out.select("doc_id", F.md5("text").alias("text_md5"),
                       F.col("n_kept").cast("bigint").alias("n_kept"),
                       F.col("n_dropped").cast("bigint").alias("n_dropped"))
-
-
-_DSIR_CTE = """
-WITH t AS (
-  SELECT doc_id, string_split(coalesce(text, ''), ' ') AS toks
-  FROM documents
-), fb AS (
-  SELECT doc_id,
-         CAST('0x' || substr(md5(g), 1, 15) AS BIGINT) % 1024 AS b
-  FROM (
-    SELECT doc_id, unnest(list_concat(
-      toks,
-      list_transform(range(1, len(toks)),
-                     i -> toks[i] || ' ' || toks[i + 1])
-    )) AS g FROM t
-  )
-), tot AS (
-  SELECT COUNT(*) AS r_tot,
-         COUNT(*) FILTER (WHERE doc_id % 29 = 7) AS t_tot
-  FROM fb
-), cnt AS (
-  SELECT b, COUNT(*) AS rc,
-         COUNT(*) FILTER (WHERE doc_id % 29 = 7) AS tc
-  FROM fb GROUP BY b
-), ratios AS (
-  SELECT gs.b,
-         CAST(ROUND(
-           ln((coalesce(c.tc, 0) + 0.5) / (t_tot + 0.5 * 1024))
-           - ln((coalesce(c.rc, 0) + 0.5) / (r_tot + 0.5 * 1024)),
-         6) AS DECIMAL(18,6)) AS log_ratio
-  FROM (SELECT unnest(range(0, 1024)) AS b) gs
-  LEFT JOIN cnt c USING (b), tot
-), lw AS (
-  SELECT fb.doc_id,
-         ROUND(CAST(SUM(r.log_ratio) AS DOUBLE), 6) AS logw
-  FROM fb JOIN ratios r USING (b) GROUP BY fb.doc_id
-)
-"""
-
-
-def _dsir_target(docs):
-    return docs.filter(F.col("doc_id") % 29 == 7)
-
-
-@qu("doc_dsir_weights", _DSIR_CTE + """
-SELECT doc_id, logw FROM lw
-""")
-def doc_dsir_weights(spark, sf):
-    """DSIR importance log-weights (ungraded oracle): hashed uni+bigram
-    features (1024 md5 buckets), add-alpha models fit on the corpus
-    (raw) and on doc_id % 29 == 7 (the stand-in high-quality target),
-    per-doc log-weight = exact decimal sum of 6dp-rounded bucket
-    log-ratios. DuckDB refits both models and rescores every doc from
-    scratch — agreement pins feature extraction, bucket hashing,
-    smoothing and the fold. Scoring side is a zero-shuffle HOF pass
-    over a literal ratio array (plan-asserted in pytest)."""
-    from webalizer_spark.operators.quality import dsir_logweights
-
-    docs = _t(spark, sf, "documents")
-    return dsir_logweights(docs, _dsir_target(docs))
-
-
-@qu("doc_dsir_sample", _DSIR_CTE + """
-, g AS (
-  SELECT doc_id,
-         ROUND(-ln(-ln(
-           (CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 13)
-                 AS BIGINT) + 1) / 4503599627370498.0)), 6) AS gum
-  FROM t
-)
-SELECT lw.doc_id AS doc_id, lw.logw AS logw,
-       ROUND(lw.logw + g.gum, 6) AS score
-FROM lw JOIN g USING (doc_id)
-ORDER BY score DESC, doc_id
-LIMIT 50
-""")
-def doc_dsir_sample(spark, sf):
-    """DSIR Gumbel-top-k selection (ungraded oracle): importance
-    log-weight plus a DETERMINISTIC Gumbel draw (u from 13 md5 hex
-    digits of the doc id — exact in a double — g = -ln(-ln(u)) rounded
-    6dp), top-50 by (score DESC, doc_id). Gumbel-top-k equals sampling
-    without replacement proportional to the importance weights, with
-    no RNG state to reproduce across engines."""
-    from webalizer_spark.operators.quality import dsir_sample
-
-    docs = _t(spark, sf, "documents")
-    return dsir_sample(docs, _dsir_target(docs), k=50)
 
 
 @qu("doc_length_stats", """
@@ -3072,61 +2752,11 @@ def doc_blocklist(spark, sf):
     fraction for a 3-term case-folded list (quality.blocklist_stats —
     the Gopher/C4 'dirty word' metric; the term list rides the plan as
     a literal array, zero shuffle). The oracle re-derives the token
-    filter and fraction with DuckDB list lambdas; the companion
-    blocklist_filter inlines the same predicate row-narrow (no
-    keep-set join) and is pinned in tests/test_quality.py."""
+    filter and fraction with DuckDB list lambdas."""
     from webalizer_spark.operators.quality import blocklist_stats
 
     return blocklist_stats(_t(spark, sf, "documents"),
                            ["slow", "hash", "spill"])
-
-
-@qu("doc_chunks", """
-WITH t AS (
-  SELECT doc_id, string_split(text, ' ') AS toks,
-         len(string_split(text, ' ')) AS n
-  FROM documents
-),
-c AS (
-  SELECT doc_id, n, toks,
-         CAST(1 + GREATEST(0, CEIL((n - 32) / CAST(24 AS DOUBLE)))
-              AS INT) AS n_chunks
-  FROM t
-)
-SELECT doc_id, CAST(i AS INT) AS chunk_idx,
-       array_to_string(list_slice(toks, i * 24 + 1, i * 24 + 32), ' ')
-           AS chunk_text,
-       CAST(LEAST(32, n - i * 24) AS INT) AS n_tokens
-FROM c, LATERAL (SELECT unnest(range(n_chunks)) AS i) s
-""")
-def doc_chunks(spark, sf):
-    """Document chunking (ungraded): 32-token windows with 8-token
-    overlap (stride 24) over every document — the training-window prep
-    between cleaning and packing (sampling.chunk_documents, a pure
-    higher-order-function pipeline: the only row-multiplying op is the
-    narrow explode, zero Exchange). The oracle re-derives window
-    counts, per-window slices and the rebuilt chunk text with
-    DuckDB list functions."""
-    from webalizer_spark.operators.sampling import chunk_documents
-
-    return chunk_documents(_t(spark, sf, "documents"),
-                           chunk_tokens=32, overlap=8)
-
-
-@qu("doc_bpe_stats")
-def doc_bpe_stats(spark, sf):
-    """Trained-BPE segmentation stats (ungraded, rows-only — BPE merge
-    learning is iterative and not SQL-expressible, the documented
-    weaker check): train 64 merges on the deterministic md5-ordered
-    1024-doc sample, apply corpus-wide, report per-doc word / BPE-token
-    / unmerged-char counts for doc_id < 200. The full semantics are
-    pinned in tests/test_bpe.py against hand-computed merges and an
-    independent sequential-replay encoder."""
-    from webalizer_spark.operators.bpe import bpe_segment, bpe_train_sample
-
-    d = _t(spark, sf, "documents")
-    merges = bpe_train_sample(d, n_merges=64)
-    return bpe_segment(d, merges).filter(F.col("doc_id") < 200)
 
 
 def _pagerank_oracle_sql(n_iters: int = 8, damping: float = 0.85) -> str:
