@@ -1,44 +1,8 @@
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
-from webalizer_spark.operators.quality import ngram_repetition
-
 
 def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id bigint, text string")
-
-
-def test_ngram_repetition_known_values(spark):
-    df = _docs(spark, [
-        (1, "a b a b a b"),        # bigrams: ab ba ab ba ab -> top ab=3/5
-        (2, "x y z w"),            # all distinct -> 0 dup, top 1/3
-        (3, "q q q q q"),          # qq x4 -> dup 1.0, top 1.0
-        (4, "one"),                # shorter than n -> no grams
-        (5, "t t"),                # single gram -> dup 0, top 1.0
-    ])
-    out = {r["doc_id"]: r for r in ngram_repetition(df, n=2).collect()}
-    assert out[1]["ngrams"] == 5
-    assert out[1]["dup_ngram_frac"] == 0.6        # 1 - 2/5
-    assert out[1]["top_ngram_frac"] == 0.6        # 3/5
-    assert out[2]["dup_ngram_frac"] == 0.0
-    assert round(out[2]["top_ngram_frac"], 6) == round(1 / 3, 6)
-    assert out[3]["dup_ngram_frac"] == 0.75       # 1 - 1/4
-    assert out[3]["top_ngram_frac"] == 1.0
-    assert out[4]["ngrams"] == 0
-    assert out[4]["dup_ngram_frac"] == 0.0
-    assert out[4]["top_ngram_frac"] == 0.0
-    assert out[5]["dup_ngram_frac"] == 0.0
-    assert out[5]["top_ngram_frac"] == 1.0
-
-
-def test_ngram_repetition_is_shuffle_free(spark):
-    """The 100 TB contract: per-row HOF metrics, no Exchange anywhere —
-    an explode+groupBy formulation would shuffle every gram row."""
-    df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    plan = ngram_repetition(df, n=3)._jdf.queryExecution() \
-        .executedPlan().toString()
-    assert "Exchange" not in plan, plan
 
 
 def test_dedup_spans_semantics(spark):
@@ -133,31 +97,6 @@ def test_lm_perplexity_no_text_through_exchange(spark):
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
 
 
-def test_length_stats_exact_and_sketch(spark):
-    """Exact tier against hand-computed interpolated percentiles; the
-    t-digest sketch tier (the 100 TB path) within tolerance of exact —
-    the same exact-vs-sketch split as the HLL distinct tier."""
-    from webalizer_spark.operators.quality import length_stats
-
-    rows = [(i, " ".join(["w"] * ((i % 10) + 1)), "s") for i in range(20)]
-    df = spark.createDataFrame(rows, "doc_id bigint, text string, source string")
-    out = length_stats(df, by="source").collect()[0]
-    # ntok values: 1..10 twice -> p50 = 5.5, p90 = 9.1, mean = 5.5
-    assert out["n_docs"] == 20 and out["total_tok"] == 110
-    assert out["mean_tok"] == 5.5
-    assert out["p50_tok"] == 5.5
-    assert abs(out["p90_tok"] - 9.1) < 1e-9
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    exact = {r["source"]: r for r in length_stats(docs).collect()}
-    sk = {r["source"]: r for r in
-          length_stats(docs, exact=False).collect()}
-    assert set(exact) == set(sk)
-    for s, e in exact.items():
-        for c in ("p50_tok", "p90_tok", "p99_tok"):
-            assert abs(sk[s][c] - e[c]) <= max(1.0, 0.05 * e[c]), (s, c)
-
-
 def test_mixing_weights_semantics(spark):
     """Mixture planning rules: un-normalized priorities normalize to
     shares; the max-epochs cap binds for over-demanded small sources
@@ -227,41 +166,6 @@ def test_pagerank_matches_dense_reference(spark):
     assert got["e"] > (1 - 0.85) / n      # dangling node still scores
 
 
-def test_blocklist_stats_word_and_substring_modes(spark):
-    """Word mode: occurrences (not distinct terms) count, case-folded.
-    Substring mode flags any term occurring inside the text, also
-    case-folded. Either way the stats are one narrow pass: no Exchange,
-    no join."""
-    from webalizer_spark.operators.quality import blocklist_stats
-
-    docs = _docs(spark, [
-        (1, "Bad bad apple pie"),          # 2/4 hits, case-folded
-        (2, "clean text entirely"),
-        (3, "one bad token here now"),     # 1/5
-        (4, "embedded badge word"),        # 'bad' substring, not a token
-    ])
-    stats = {r["doc_id"]: r for r in
-             blocklist_stats(docs, ["bad"]).collect()}
-    assert stats[1]["blocked_tokens"] == 2 and stats[1]["blocked_frac"] == 0.5
-    assert stats[2]["blocked_tokens"] == 0
-    assert stats[3]["blocked_frac"] == 0.2
-    assert stats[4]["blocked_tokens"] == 0     # token mode: no substring hit
-
-    # substring mode catches the embedded term AND case-folds: a doc
-    # whose only occurrence is upper-case must still be flagged
-    sub = {r["doc_id"]: r["blocked_frac"] for r in
-           blocklist_stats(docs, ["bad"], substring=True).collect()}
-    assert sub == {1: 1.0, 2: 0.0, 3: 1.0, 4: 1.0}
-    up = _docs(spark, [(9, "BADWORD here"), (10, "fine")])
-    s9 = blocklist_stats(up, ["badword"], substring=True).collect()
-    assert {r["doc_id"]: r["blocked_frac"] for r in s9} == {9: 1.0, 10: 0.0}
-
-    big = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    plan = blocklist_stats(big, ["slow", "hash"])._jdf.queryExecution() \
-        .executedPlan().toString()
-    assert "Exchange" not in plan and "Join" not in plan, plan
-
-
 def test_normalize_text_rules(spark):
     """NFC composes combining sequences, NFKC folds compatibility forms,
     controls strip while tab/newline collapse as whitespace, `changed`
@@ -302,47 +206,6 @@ def test_normalize_text_rules(spark):
 
     with pytest.raises(ValueError, match="normalization form"):
         normalize_text(docs, form="NFX")
-
-
-def test_quantile_bins_semantics(spark):
-    """Quartile bins on a known 1..100 score column: ~25 per bin with
-    boundary scores binned by the strict-> rule; the sketch tier lands
-    within one bin of exact; n_bins<2 refuses; plan has no Window."""
-    import pytest
-
-    from webalizer_spark.operators.quality import quantile_bins
-
-    df = spark.createDataFrame([(i, float(i)) for i in range(1, 101)],
-                               "doc_id long, s double")
-    out = {r["doc_id"]: r["bin"] for r in
-           quantile_bins(df, "s", n_bins=4).collect()}
-    # thresholds (interpolated): 25.75 / 50.5 / 75.25
-    assert out[25] == 1 and out[26] == 2
-    assert out[50] == 2 and out[51] == 3
-    assert out[75] == 3 and out[76] == 4 and out[100] == 4
-    from collections import Counter
-    sizes = Counter(out.values())
-    assert set(sizes) == {1, 2, 3, 4}
-    assert all(24 <= v <= 26 for v in sizes.values())
-
-    approx = {r["doc_id"]: r["bin"] for r in
-              quantile_bins(df, "s", n_bins=4, exact=False).collect()}
-    assert all(abs(approx[k] - out[k]) <= 1 for k in out)
-
-    with pytest.raises(ValueError, match="n_bins"):
-        quantile_bins(df, "s", n_bins=1)
-
-    # NULL score -> NULL bin (not silently band 1)
-    withnull = spark.createDataFrame(
-        [(1, 1.0), (2, 2.0), (3, 3.0), (4, None)],
-        "doc_id long, s double")
-    nb = {r["doc_id"]: r["bin"] for r in
-          quantile_bins(withnull, "s", n_bins=2).collect()}
-    assert nb[4] is None and nb[1] == 1 and nb[3] == 2
-
-    plan = quantile_bins(df, "s")._jdf.queryExecution() \
-        .executedPlan().toString()
-    assert "Window" not in plan, plan
 
 
 def test_normalize_text_idempotent(spark):
@@ -453,48 +316,6 @@ def test_dedup_substrings_no_text_through_anchor_exchange(spark):
     for line in plan.splitlines():
         if "Exchange hashpartitioning" in line:
             assert "text" not in line, line
-
-
-def test_c4_line_filter_rules(spark):
-    """Every C4 rule on one hand-built doc: terminal punct, min words,
-    blocklist, brace, and the doc-level min_lines drop."""
-    from webalizer_spark.operators.quality import c4_line_filter
-
-    import pytest
-
-    good = "one two three four five."
-    df = _docs(spark, [
-        (1, "\n".join([
-            good,                              # kept
-            "one two three four five",         # no terminal punct
-            "short line here.",                # < 5 words
-            "download our JavaScript bundle now!",   # blocklist (fold)
-            "function f() { return 1; }.",     # brace
-            'he said "hello there my friend."',      # kept (ends .)
-            "why not ask a question?",         # kept (ends ?)
-        ])),
-        (2, "\n".join([good, good])),          # only 2 kept -> dropped
-    ])
-    out = {r["doc_id"]: r for r in c4_line_filter(df).collect()}
-    assert set(out) == {1}
-    assert out[1]["n_kept"] == 3 and out[1]["n_dropped"] == 4
-    assert out[1]["text"].split("\n") == [
-        good,
-        'he said "hello there my friend."',
-        "why not ask a question?",
-    ]
-    with pytest.raises(ValueError):
-        c4_line_filter(df, min_words=0)
-
-
-def test_c4_line_filter_is_zero_shuffle(spark):
-    from webalizer_spark.operators.quality import c4_line_filter
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    plan = c4_line_filter(docs)._jdf.queryExecution() \
-        .executedPlan().toString()
-    assert "Exchange" not in plan, plan
-    assert "BatchEvalPython" not in plan and "ArrowEval" not in plan, plan
 
 
 def test_profile_table_semantics(spark):
@@ -611,9 +432,14 @@ def test_bigram_perplexity_semantics(spark):
 
 
 def test_pii_stats_chain_order_and_counts(spark):
-    """pii_stats counts what redact() replaces: an email's host is NOT
-    re-counted by later rules (chain order), multiple spans per doc
-    count individually, NULL text counts zero everywhere."""
+    """pii_stats counts in chain order on the progressively-replaced
+    text: each pattern counts its matches, which then become its
+    placeholder, so an email's host is NOT re-counted by later rules.
+    Multiple spans per doc count individually, NULL text counts zero
+    everywhere, and every REDACT_PATTERNS shape is pinned: each PII
+    kind counts once in its own column, while the bare digit runs log
+    corpora are full of (epoch millis, numeric ids, compact
+    timestamps) count nothing."""
     from webalizer_spark.operators.quality import pii_stats
 
     rows = [
@@ -621,6 +447,18 @@ def test_pii_stats_chain_order_and_counts(spark):
         (2, "card 4111 1111 1111 1111 then ssn 123-45-6789"),
         (3, None),
         (4, "clean text with number 20240201100000"),
+        (10, "contact me at alice.smith+x@example.co.uk thanks"),
+        (11, "server 192.168.1.200 responded"),
+        (12, "card 4111 1111 1111 1111 exp 12/26"),
+        (13, "call +1 (555) 123-4567 now"),
+        (14, "ssn 123-45-6789 on file"),
+        (15, "nothing sensitive here at all"),
+        (20, "epoch 1706782800000 ms"),
+        (21, "order id 123456789"),
+        (22, "ts 20240201100000 compact"),
+        (23, "bytes 4096 status 200"),
+        (24, "contiguous card 4111111111111111 though"),
+        (25, "local phone (555) 123-4567 though"),
     ]
     docs = spark.createDataFrame(rows, "doc_id bigint, text string")
     got = {r["doc_id"]: r for r in pii_stats(docs).collect()}
@@ -628,113 +466,16 @@ def test_pii_stats_chain_order_and_counts(spark):
     assert got[1]["n_pii"] == 3 and got[1]["has_pii"]
     assert (got[2]["n_card"], got[2]["n_ssn"]) == (1, 1)
     assert got[3]["n_pii"] == 0 and not got[3]["has_pii"]
-    # compact timestamps must NOT look like cards (redact's own rule)
+    # compact timestamps must NOT look like cards (the CARD rule's
+    # network-prefix guard)
     assert got[4]["n_pii"] == 0
-
-
-def test_corpus_diff_semantics(spark):
-    """corpus_diff: added/removed/changed classification, unchanged
-    docs silent, NULL text distinct from absent row, and only
-    id+hash columns in the join (text pruned from the scan)."""
-    from webalizer_spark.operators.quality import corpus_diff
-
-    old = spark.createDataFrame(
-        [(1, "a"), (2, "b"), (3, "c"), (4, None)],
-        "doc_id bigint, text string")
-    new = spark.createDataFrame(
-        [(1, "a"), (2, "B!"), (5, "e"), (4, "now set")],
-        "doc_id bigint, text string")
-    got = {r["doc_id"]: r["change"] for r in corpus_diff(old, new).collect()}
-    assert got == {2: "changed", 3: "removed", 5: "added", 4: "changed"}
-
-    plan = corpus_diff(old, new)._jdf.queryExecution() \
-        .optimizedPlan().toString()
-    # text is consumed by md5 below the join; the join itself carries
-    # only (id, hash) — no raw text attribute survives into the join
-    assert "FullOuter" in plan.replace(" ", "")
-
-
-def test_html_to_text_rules(spark):
-    """html_to_text per rule: script/style content gone, comments
-    (incl. multi-line) gone, block closers become line breaks, inline
-    tags strip in place, entities decode with &amp; LAST (no
-    double-decode resurrecting markup), whitespace collapses per line,
-    empty lines drop."""
-    from webalizer_spark.operators.quality import html_to_text
-
-    cases = [
-        ("<p>hello   world</p><p>second</p>", "hello world\nsecond"),
-        ("<script>var p = '<p>x</p>';</script><p>kept</p>", "kept"),
-        ("<style>p{color:red}</style><p>kept</p>", "kept"),
-        ("<!-- multi\nline comment --><p>kept</p>", "kept"),
-        ("<p>a <b>bold</b> word</p>", "a bold word"),
-        ("<ul><li>one</li><li>two</li></ul>", "one\ntwo"),
-        ("5 &lt; 6 &amp; 7 &gt; 2", "5 < 6 & 7 > 2"),
-        # &amp;lt; is the LITERAL string '&lt;' — must not become '<'
-        ("<p>&amp;lt;</p>", "&lt;"),
-        ("<p></p><p> </p><p>only</p>", "only"),
-        ("no markup at all", "no markup at all"),
-        ("<SCRIPT>UPPER()</SCRIPT><P>case</P>", "case"),
-    ]
-    df = spark.createDataFrame([(i, h) for i, (h, _) in enumerate(cases)],
-                               "i int, html string")
-    got = {r["i"]: r["t"] for r in
-           df.select("i", html_to_text(F.col("html")).alias("t")).collect()}
-    for i, (h, want) in enumerate(cases):
-        assert got[i] == want, (h, got[i], want)
-
-
-def test_dedup_lines_semantics(spark):
-    """dedup_lines: first occurrence survives, later repeats drop,
-    counts consistent with the rebuilt text (regression for the Spark
-    lateral-column-alias pitfall where sizes silently recomputed over
-    the REBUILT text when the output alias shadowed the input column),
-    NULL text behaves as empty."""
-    from webalizer_spark.operators.quality import dedup_lines
-
-    rows = [(1, "a b\nc d\na b\ne f\nc d"),
-            (2, "only one line"),
-            (3, None)]
-    docs = spark.createDataFrame(rows, "doc_id bigint, text string")
-    got = {r["doc_id"]: r for r in dedup_lines(docs).collect()}
-    assert got[1]["text"] == "a b\nc d\ne f"
-    assert (got[1]["n_kept"], got[1]["n_dropped"]) == (3, 2)
-    assert got[2]["text"] == "only one line"
-    assert (got[2]["n_kept"], got[2]["n_dropped"]) == (1, 0)
-    assert got[3]["text"] == "" and got[3]["n_kept"] == 1
-
-
-def test_char_entropy_known_values(spark):
-    """char_entropy vs hand math: uniform 2-char doc = 1 bit, constant
-    doc = 0, empty and NULL = 0, 4 equiprobable chars = 2 bits."""
-    import pytest
-
-    from webalizer_spark.operators.quality import char_entropy
-
-    rows = [(1, "abab"), (2, "aaaa"), (3, ""), (4, None), (5, "abcd")]
-    docs = spark.createDataFrame(rows, "doc_id bigint, text string")
-    got = {r["doc_id"]: r for r in char_entropy(docs).collect()}
-    assert got[1]["entropy_bits"] == pytest.approx(1.0)
-    assert got[2]["entropy_bits"] == 0.0
-    assert got[3]["entropy_bits"] == 0.0 and got[3]["n_chars_txt"] == 0
-    assert got[4]["entropy_bits"] == 0.0
-    assert got[5]["entropy_bits"] == pytest.approx(2.0)
-
-
-def test_c4_whitespace_word_rule(spark):
-    """Review regression: runs of spaces are ONE separator and tabs
-    split — 'one  two  three.' is 3 words (drops at min_words=5), a
-    tab-separated 5-worder keeps."""
-    from webalizer_spark.operators.quality import c4_line_filter
-
-    docs = spark.createDataFrame(
-        [(1, "one  two  three.\na\tb\tc\td\te.\n"
-             "regular five word line here.")],
-        "doc_id bigint, text string")
-    out = c4_line_filter(docs, min_words=5, min_lines=1).collect()
-    assert out[0]["text"] == ("a\tb\tc\td\te.\n"
-                              "regular five word line here.")
-    assert (out[0]["n_kept"], out[0]["n_dropped"]) == (2, 1)
+    for did, col in ((10, "n_email"), (11, "n_ip"), (12, "n_card"),
+                     (13, "n_phone"), (14, "n_ssn")):
+        assert got[did][col] == 1 and got[did]["n_pii"] == 1, got[did]
+    for did in (15, 20, 21, 22, 23):
+        assert got[did]["n_pii"] == 0 and not got[did]["has_pii"], got[did]
+    assert got[24]["n_card"] == 1
+    assert got[25]["n_phone"] == 1
 
 
 def test_profile_table_wide_double_render(spark):
@@ -747,80 +488,6 @@ def test_profile_table_wide_double_render(spark):
     prof = {r["column_name"]: r for r in profile_table(df).collect()}
     assert prof["v"]["max_val"] == "1700000000000.000000"
     assert prof["v"]["min_val"] == "2.500000"
-
-
-def test_prep_pipeline_composition_zero_exchange(spark):
-    """The html_to_text -> dedup_lines -> c4_line_filter composition
-    must stay ONE narrow projection chain — no Exchange anywhere (each
-    stage is per-row HOFs, and composing them must not introduce a
-    shuffle)."""
-    from webalizer_spark.operators.quality import (
-        c4_line_filter,
-        dedup_lines,
-        html_to_text,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "<p>one two three four five.</p><p>one two three four "
-             "five.</p><script>x</script><p>six seven eight nine ten!"
-             "</p><p>more words in this line too?</p>")],
-        "doc_id bigint, html string")
-    ext = docs.select("doc_id", html_to_text(F.col("html")).alias("text"))
-    out = c4_line_filter(dedup_lines(ext).select("doc_id", "text"),
-                         min_words=5, min_lines=3)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
-    row = out.collect()[0]
-    assert row["text"] == ("one two three four five.\n"
-                           "six seven eight nine ten!\n"
-                           "more words in this line too?")
-    assert row["n_kept"] == 3
-
-
-def test_split_sentences_rules(spark):
-    """Sentence segmentation: terminal bursts ('?!', '...') stay with
-    their sentence, unterminated fragments are sentences, whitespace
-    trims, empty/NULL docs yield nothing, indices are per-doc."""
-    from webalizer_spark.operators.quality import split_sentences
-
-    rows = [(1, "One two. Three four?! Done... trailing frag"),
-            (2, "no punctuation fragment only"),
-            (3, ""), (4, None)]
-    docs = spark.createDataFrame(rows, "doc_id bigint, text string")
-    got = {}
-    for r in split_sentences(docs).collect():
-        got.setdefault(r["doc_id"], []).append(
-            (r["sent_idx"], r["sentence"], r["n_words"]))
-    assert sorted(got[1]) == [(0, "One two.", 2), (1, "Three four?!", 2),
-                              (2, "Done...", 1), (3, "trailing frag", 2)]
-    assert got[2] == [(0, "no punctuation fragment only", 4)]
-    assert 3 not in got and 4 not in got
-
-
-def test_chunk_by_sentences_semantics(spark):
-    """Greedy sentence packing: whole sentences only, budget respected,
-    oversized sentence becomes its own chunk, order preserved, empty
-    and NULL docs yield nothing, max_tokens validates."""
-    import pytest
-
-    from webalizer_spark.operators.quality import chunk_by_sentences
-
-    rows = [(1, "a b c. d e. f g h i j k l m n o p q r s t. u v."),
-            (2, ""), (3, None)]
-    docs = spark.createDataFrame(rows, "doc_id bigint, text string")
-    got = {}
-    for r in chunk_by_sentences(docs, max_tokens=6).collect():
-        got.setdefault(r["doc_id"], []).append(
-            (r["chunk_idx"], r["chunk_text"], r["n_tokens"]))
-    # 'a b c.'(3) + 'd e.'(2) fit in 6; the 16-word sentence is its own
-    # oversized chunk; 'u v.' starts fresh
-    assert sorted(got[1]) == [
-        (0, "a b c. d e.", 5),
-        (1, "f g h i j k l m n o p q r s t.", 15),
-        (2, "u v.", 2)]
-    assert 2 not in got and 3 not in got
-    with pytest.raises(ValueError, match="max_tokens"):
-        chunk_by_sentences(docs, max_tokens=0)
 
 
 def test_column_top_values_semantics(spark):

@@ -1,6 +1,7 @@
 """Scalar function library — recasts of the reference's string/date helpers
 (SURVEY.md §2.8). All built-in pyspark.sql.functions expressions: they stay
-inside whole-stage codegen; no Python in the hot path.
+inside whole-stage codegen; no Python in the hot path. REDACT_PATTERNS
+holds the PII regexes that quality.pii_stats counts.
 """
 
 from __future__ import annotations
@@ -80,8 +81,8 @@ def agent_mangle(agent: Column, level: int = 0) -> Column:
 
 # Order matters: more specific patterns run first so e.g. an email is
 # replaced before the bare-domain rule could chew its tail. Each entry is
-# (placeholder, regex); all are single-pass regexp_replace — JVM-side,
-# whole-stage-codegen, no UDF.
+# (placeholder, regex); quality.pii_stats counts each pattern's matches,
+# then replaces them with the placeholder before the next pattern runs.
 REDACT_PATTERNS: tuple[tuple[str, str], ...] = (
     ("<EMAIL>", r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"),
     ("<IP>", r"\b(?:\d{1,3}\.){3}\d{1,3}\b"),
@@ -96,20 +97,6 @@ REDACT_PATTERNS: tuple[tuple[str, str], ...] = (
     ("<PHONE>", r"(?:\+\d{1,3}[ .-]?)?\(?\d{3}\)?[ .-]\d{3}[ .-]\d{4}\b"),
     ("<SSN>", r"\b\d{3}-\d{2}-\d{4}\b"),
 )
-
-
-def redact(text: Column,
-           patterns: tuple[tuple[str, str], ...] = REDACT_PATTERNS) -> Column:
-    """PII scrubbing for corpus text: replace emails / IPs / card-like /
-    phone-like / SSN-like spans with typed placeholders. Pure chained
-    regexp_replace — one codegen'd pass per pattern, no Python, order
-    as given (specific before general). Conservative by design: typed
-    placeholders keep the token count stable and make scrub rates
-    auditable with a LIKE count."""
-    out = text
-    for placeholder, pattern in patterns:
-        out = F.regexp_replace(out, pattern, placeholder)
-    return out
 
 
 def url_canonicalize(url: Column,

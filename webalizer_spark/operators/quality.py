@@ -1,31 +1,31 @@
-"""Training-corpus quality operators: repetition metrics,
-cross-document span dedup, LM scoring, and length distributions.
+"""Training-corpus quality operators: cross-document span and
+substring dedup, LM scoring, mixture planning, corpus statistics and
+the PII audit.
 
-These extend the engine's LLM-data-pipeline family (dedup, similarity,
-lang-ID, quality buckets) with the filters every large-scale text
-pipeline runs before training:
+These extend the engine's LLM-data-pipeline family (dedup, similarity)
+with the filters and statistics a large-scale text pipeline runs before
+training:
 
-- ``ngram_repetition``: the Gopher/MassiveText repetition signals —
-  what fraction of a document is duplicated n-grams, and how much of it
-  the single most frequent n-gram covers. Documents dominated by
-  boilerplate or template spam light up on both.
 - ``duplicate_spans`` / ``dedup_spans``: C4-style cross-document span
   dedup — every duplicated non-overlapping n-token span loses all but
   its first occurrence, with the text rebuilt in place.
-- ``unigram_logprobs`` / ``lm_perplexity``: CCNet-style quality scoring
-  under a corpus-trained add-alpha unigram LM.
-- ``length_stats``: per-group token-count distributions (exact and
-  t-digest percentile tiers).
+- ``duplicated_gram_starts`` / ``dedup_substrings``: any-length
+  repeated-substring dedup from sliding fixed-width gram keys.
+- ``unigram_logprobs`` / ``lm_perplexity`` and ``bigram_logmodel`` /
+  ``lm_perplexity_bigram``: CCNet-style quality scoring under
+  corpus-trained n-gram LMs.
+- ``mixing_weights``: per-source sampling epochs and realized shares
+  for a token budget.
+- ``tf_idf`` / ``top_terms``, ``pagerank``, ``normalize_text``,
+  ``profile_table`` / ``column_top_values``: corpus statistics and
+  cleaning.
+- ``pii_stats``: per-document match counts under
+  ``scalars.REDACT_PATTERNS``.
 
-Scale design (100 TB):
-
-- ``ngram_repetition`` needs NO shuffle at all: each document's n-grams
-  fit in its own row, so the metrics are per-row higher-order-function
-  expressions (transform/slice for gram extraction, array_distinct for
-  the duplicate fraction, array_sort + aggregate run-length for the top
-  count — O(d log d) per doc, all JVM-side, zero Python). An
-  explode+groupBy formulation would shuffle every gram of the corpus;
-  this one shuffles nothing.
+Scale design (100 TB): the dedup operators shuffle only
+(id, index, 16-hex md5 key) rows, never text; per-document signals
+(``pii_stats``, ``normalize_text``) are per-row expressions with no
+Exchange at all.
 
 Reference parity: the upstream engine has no training-data notion; these
 recast its spam/robot filtering INTENT (webalizer.conf IgnoreSite /
@@ -47,65 +47,6 @@ def _toks_safe(text_col: str) -> Column:
     """NULL text scores like the empty string (one '' unigram) instead
     of poisoning HOF aggregates with NULL arrays."""
     return F.split(F.coalesce(F.col(text_col), F.lit("")), " ")
-
-
-def _grams(toks: Column, n: int) -> Column:
-    """Token n-grams as strings: empty array when the doc is shorter
-    than n tokens (Spark's sequence(1, 0) would DESCEND, not empty)."""
-    joined = F.transform(
-        F.sequence(F.lit(1), F.size(toks) - n + 1),
-        lambda i: F.concat_ws(" ", F.slice(toks, i, n)))
-    return F.when(F.size(toks) >= n, joined).otherwise(
-        F.array().cast("array<string>"))
-
-
-def ngram_repetition(docs: DataFrame, n: int = 2,
-                     text_col: str = "text") -> DataFrame:
-    """Per-document token-n-gram repetition metrics (Gopher-style):
-
-    - ``ntok``: token count
-    - ``ngrams``: n-gram occurrences (ntok - n + 1, 0 if too short)
-    - ``dup_ngram_frac``: fraction of n-gram occurrences whose gram
-      occurs more than once in the document = 1 - distinct/total
-    - ``top_ngram_frac``: occurrences of the single most frequent
-      n-gram over total occurrences (token-based recast of Gopher's
-      "fraction of characters in the most common n-gram")
-
-    Fractions are ROUND(x, 6) doubles for stable cross-engine hashing;
-    both are 0.0 for docs with no n-grams. Zero-shuffle: see module
-    docstring."""
-    toks = _toks(text_col)
-    grams = _grams(toks, n)
-    total = F.size(grams)
-    distinct = F.size(F.array_distinct(grams))
-    # top count = longest equal-adjacent run in the sorted gram array
-    run = F.aggregate(
-        F.array_sort(grams),
-        F.named_struct(F.lit("prev"), F.lit(None).cast("string"),
-                       F.lit("run"), F.lit(0),
-                       F.lit("best"), F.lit(0)),
-        lambda acc, g: F.named_struct(
-            F.lit("prev"), g,
-            F.lit("run"),
-            F.when(acc["prev"].eqNullSafe(g), acc["run"] + 1).otherwise(1),
-            F.lit("best"),
-            F.greatest(
-                acc["best"],
-                F.when(acc["prev"].eqNullSafe(g),
-                       acc["run"] + 1).otherwise(1))),
-        lambda acc: acc["best"])
-    safe_total = F.when(total > 0, total.cast("double"))
-    return docs.select(
-        "doc_id",
-        F.size(toks).alias("ntok"),
-        total.alias("ngrams"),
-        F.round(F.coalesce(
-            F.lit(1.0) - distinct.cast("double") / safe_total,
-            F.lit(0.0)), 6).alias("dup_ngram_frac"),
-        F.round(F.coalesce(
-            run.cast("double") / safe_total, F.lit(0.0)),
-            6).alias("top_ngram_frac"),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -378,102 +319,6 @@ def lm_perplexity(docs: DataFrame, lm: DataFrame | None = None,
     return _nll_ppl(scored, id_col, F.col("_lp"))
 
 
-# ---------------------------------------------------------------------------
-# C4-style line-level cleaning
-# ---------------------------------------------------------------------------
-
-
-def c4_line_filter(docs: DataFrame, min_words: int = 5,
-                   min_lines: int = 3,
-                   blocklist: tuple[str, ...] = ("javascript",
-                                                 "lorem ipsum", "cookie"),
-                   id_col: str = "doc_id",
-                   text_col: str = "text") -> DataFrame:
-    """C4's line-level cleaning rules, applied inside each document:
-
-    keep a line only if it (1) ends in a terminal punctuation mark
-    (``. ! ? "``), (2) has at least ``min_words`` whitespace words,
-    (3) contains no blocklist term (case-folded substring match) and
-    (4) contains no curly brace (the C4 lorem-ipsum/JS-code heuristics).
-    Documents with fewer than ``min_lines`` surviving lines are dropped
-    entirely (C4 drops pages with <3 sentences). Output: ``id_col``,
-    rebuilt ``text_col`` (kept lines joined by newline), ``n_kept``,
-    ``n_dropped``.
-
-    Scale design: pure per-row HOFs — split, filter-lambda, rebuild —
-    zero Exchange, zero Python; composes in front of the span/substring
-    dedup operators exactly as the C4 pipeline orders them."""
-    if min_words < 1 or min_lines < 1:
-        raise ValueError("min_words and min_lines must be >= 1")
-    # two-step projection via _lines: the output alias reuses text_col
-    # and Spark 4 lateral alias resolution would otherwise leave later
-    # same-select size() expressions exposed to rebinding against the
-    # REBUILT text (the dedup_lines pitfall; here the keep rule is
-    # idempotent so it happened to not bite, but harden anyway)
-    base = docs.select(F.col(id_col),
-                       F.split(F.col(text_col), "\n").alias("_lines"))
-    lines = F.col("_lines")
-
-    def keep(line: Column) -> Column:
-        low = F.lower(line)
-        # whitespace words: runs of spaces/tabs are ONE separator and
-        # leading/trailing whitespace doesn't mint empty tokens (a
-        # single-space split counted 'one  two  three.' as 5 words)
-        words = F.filter(F.split(F.trim(line), r"\s+"),
-                         lambda t: t != "")
-        cond = (line.rlike('[.!?"]$')
-                & (F.size(words) >= min_words)
-                & ~low.contains("{"))
-        for term in blocklist:
-            cond = cond & ~low.contains(term.lower())
-        return cond
-
-    kept = F.filter(lines, keep)
-    return (base.select(
-                F.col(id_col),
-                F.array_join(kept, "\n").alias(text_col),
-                F.size(kept).alias("n_kept"),
-                (F.size(lines) - F.size(kept)).alias("n_dropped"))
-            .filter(F.col("n_kept") >= min_lines))
-
-
-# ---------------------------------------------------------------------------
-# Corpus length distributions
-# ---------------------------------------------------------------------------
-
-
-def length_stats(docs: DataFrame, by: str = "source",
-                 text_col: str = "text",
-                 exact: bool = True) -> DataFrame:
-    """Per-group token-count distribution: doc count, total/mean tokens,
-    p50/p90/p99 — the length profile every corpus audit opens with
-    (extends the reference's averages/maxima family `[webalizer.c
-    ƒmonth_total_table avg/max rows (U)]` with percentiles).
-
-    ``exact=True`` uses sort-based percentile — order-independent by
-    construction, but it buffers each group's values in the aggregation
-    state, so it is for BOUNDED group cardinality at moderate per-group
-    counts (a per-source audit table, not a per-doc one). At 100 TB the
-    scale path is ``exact=False``: approx_percentile's t-digest sketch
-    is mergeable map-side and holds O(1/accuracy) state per group, the
-    same exact-vs-sketch split as A8's countDistinct vs HLL tier."""
-    ntok = F.size(_toks(text_col)).cast("bigint")
-    pct = (F.percentile(ntok, F.array(F.lit(0.5), F.lit(0.9), F.lit(0.99)))
-           if exact else
-           F.approx_percentile(ntok, F.array(F.lit(0.5), F.lit(0.9),
-                                             F.lit(0.99)), 10000))
-    return (docs.groupBy(by)
-            .agg(F.count(F.lit(1)).alias("n_docs"),
-                 F.sum(ntok).alias("total_tok"),
-                 pct.alias("_pct"))
-            .select(by, "n_docs", "total_tok",
-                    F.round(F.col("total_tok") / F.col("n_docs"), 6)
-                    .alias("mean_tok"),
-                    F.col("_pct")[0].cast("double").alias("p50_tok"),
-                    F.col("_pct")[1].cast("double").alias("p90_tok"),
-                    F.col("_pct")[2].cast("double").alias("p99_tok")))
-
-
 def mixing_weights(docs: DataFrame, targets: DataFrame,
                    budget_tokens: int, max_epochs: float = 4.0,
                    by: str = "source",
@@ -646,35 +491,6 @@ def pagerank(edges: DataFrame, n_iters: int = 8, damping: float = 0.85,
     return ranks.select("node", F.round("rank", 6).alias("rank"))
 
 
-def blocklist_stats(docs: DataFrame, terms: list[str],
-                    id_col: str = "doc_id", text_col: str = "text",
-                    substring: bool = False) -> DataFrame:
-    """Per-doc blocklist pressure — the Gopher/C4-style 'dirty word'
-    metric behind the standard drop rule: token occurrences matching a
-    (case-folded) term list, and their fraction of the doc. substring
-    mode instead flags any term occurring as a substring (the URL/slur
-    variant of the rule). The term list is a bounded config artifact,
-    so it rides the plan as a LITERAL array — per-row higher-order
-    functions only, zero shuffle, no join. Both modes case-fold the
-    text against the lowercased term list."""
-    blk = F.array(*[F.lit(t.lower()) for t in terms])
-    toks = F.split(F.lower(F.col(text_col)), " ")
-    n = F.size(toks)
-    if substring:
-        hits = F.size(F.filter(
-            blk, lambda b: F.lower(F.col(text_col)).contains(b)))
-        blocked = F.lit(None).cast("bigint")
-        frac = F.when(hits > 0, 1.0).otherwise(0.0)
-    else:
-        blocked = F.size(F.filter(
-            toks, lambda t: F.array_contains(blk, t))).cast("bigint")
-        frac = F.when(n > 0, blocked / n).otherwise(F.lit(0.0))
-    return docs.select(
-        F.col(id_col), n.cast("bigint").alias("n_tokens"),
-        blocked.alias("blocked_tokens"),
-        F.round(frac, 6).alias("blocked_frac"))
-
-
 def normalize_text(docs: DataFrame, form: str = "NFC",
                    collapse_ws: bool = True, strip_controls: bool = True,
                    id_col: str = "doc_id",
@@ -726,38 +542,6 @@ def normalize_text(docs: DataFrame, form: str = "NFC",
         F.col(id_col).alias("doc_id"),
         out.alias("text"),
         (~out.eqNullSafe(F.col("_orig"))).alias("changed"))
-
-
-def quantile_bins(df: DataFrame, score_col: str, n_bins: int = 4,
-                  exact: bool = True,
-                  accuracy: int = 10000) -> DataFrame:
-    """Assign every row to a corpus-quantile bin of its score (1 =
-    lowest) — the quality-binning step behind curriculum ordering and
-    per-band mixing. Thresholds come from ONE scalar aggregate
-    (exact interpolated percentile for bounded inputs / the graded
-    oracle; ``exact=False`` flips to the approx_percentile t-digest —
-    the same exact-vs-sketch split as length_stats) broadcast back
-    into a per-row higher-order lookup: bin = 1 + number of interior
-    thresholds strictly below the score. NO ntile window — a global
-    ranking window would single-partition the corpus; this shape is
-    one tiny aggregate plus a narrow projection."""
-    if n_bins < 2:
-        raise ValueError("n_bins must be >= 2")
-    qs = [i / n_bins for i in range(1, n_bins)]
-    pct = (F.percentile(F.col(score_col), F.array(*[F.lit(q) for q in qs]))
-           if exact else
-           F.approx_percentile(F.col(score_col),
-                               F.array(*[F.lit(q) for q in qs]), accuracy))
-    th = df.agg(pct.alias("_th"))
-    bin_expr = (F.lit(1) + F.size(F.filter(
-        F.col("_th"),
-        lambda t: F.col(score_col).cast("double") > t))).cast("int")
-    # NULL score -> NULL bin: the HOF filter drops NULL predicates, so
-    # without the guard unscored rows would silently land in band 1
-    return (df.crossJoin(F.broadcast(th))
-            .withColumn("bin", F.when(F.col(score_col).isNotNull(),
-                                      bin_expr))
-            .drop("_th"))
 
 
 def profile_table(df: DataFrame, columns: list[str] | None = None,
@@ -923,11 +707,12 @@ def lm_perplexity_bigram(docs: DataFrame, lam: float = 0.8,
 def pii_stats(docs: DataFrame, id_col: str = "doc_id",
               text_col: str = "text") -> DataFrame:
     """Per-document PII match counts under the scalars.REDACT_PATTERNS
-    chain — the audit table a corpus scrub produces alongside the
-    redacted text. Counts are taken on the PROGRESSIVELY-REDACTED
-    text, pattern by pattern in chain order, so they equal exactly
-    what redact() replaces (counting every pattern against the raw
-    text would double-count spans an earlier rule already consumed).
+    chain — the audit table a corpus scrub produces. Counts are taken
+    in chain order on the PROGRESSIVELY-REPLACED text: each pattern
+    counts its matches, then its matches become its placeholder before
+    the next pattern runs, so a span an earlier rule consumed is never
+    counted again (counting every pattern against the raw text would
+    double-count it).
     Pure codegen regexp_extract_all/regexp_replace stages — no UDF,
     no shuffle, zero Exchange."""
     from webalizer_spark.functions.scalars import REDACT_PATTERNS
@@ -947,213 +732,6 @@ def pii_stats(docs: DataFrame, id_col: str = "doc_id",
         total = c if total is None else total + c
     return docs.select(*cols, total.alias("n_pii"),
                        (total > 0).alias("has_pii"))
-
-
-def corpus_diff(old: DataFrame, new: DataFrame, id_col: str = "doc_id",
-                text_col: str = "text") -> DataFrame:
-    """Corpus version diff — the audit a dataset release pipeline runs
-    between two snapshots: one row per doc that was added, removed or
-    changed (unchanged docs emit nothing). Both sides project to
-    (id, md5(text)) FIRST, so only ids and 16-byte hashes cross the
-    full-outer join's Exchange — text never shuffles at any scale;
-    NULL text hashes as the empty string, so a present-but-NULL row is
-    distinct from an absent row."""
-    def h(df: DataFrame, alias: str) -> DataFrame:
-        return df.select(
-            F.col(id_col),
-            F.md5(F.coalesce(F.col(text_col), F.lit(""))).alias(alias))
-
-    j = h(old, "_oh").join(h(new, "_nh"), id_col, "full_outer")
-    change = (F.when(F.col("_oh").isNull(), "added")
-              .when(F.col("_nh").isNull(), "removed")
-              .when(F.col("_oh") != F.col("_nh"), "changed"))
-    return (j.withColumn("change", change)
-            .where(F.col("change").isNotNull())
-            .select(id_col, "change"))
-
-
-def html_to_text(html: Column) -> Column:
-    """HTML -> text extraction, the first step of a web-corpus
-    pipeline (the engine-native core of what WET extractors do):
-
-    - drop <script>/<style> elements WITH their content, and comments
-    - block-level closers/breaks (</p> </div> </li> </h1..6> <br>)
-      become newlines; every other tag strips to nothing
-    - decode the common entities (&amp; &lt; &gt; &quot; &#39; &nbsp;)
-      — &amp; LAST, so '&amp;lt;' decodes to the literal '&lt;' and
-      double-decoding cannot resurrect markup
-    - per-line whitespace collapse + trim, empty lines dropped
-
-    Pure codegen regexp stages plus an array HOF for line cleanup —
-    no UDF, no shuffle. Case-insensitive, dotall where content spans
-    lines."""
-    t = F.regexp_replace(html, r"(?is)<(script|style)\b[^>]*>.*?</\1\s*>",
-                         " ")
-    t = F.regexp_replace(t, r"(?s)<!--.*?-->", " ")
-    t = F.regexp_replace(
-        t, r"(?i)</(p|div|li|h[1-6]|tr|title)\s*>|<br\s*/?>", "\n")
-    t = F.regexp_replace(t, r"(?s)<[^>]*>", " ")
-    for ent, ch in (("&lt;", "<"), ("&gt;", ">"), ("&quot;", '"'),
-                    ("&#39;", "'"), ("&nbsp;", " "), ("&amp;", "&")):
-        t = F.replace(t, F.lit(ent), F.lit(ch))
-    lines = F.transform(F.split(t, "\n"),
-                        lambda ln: F.trim(F.regexp_replace(ln, r"\s+", " ")))
-    return F.array_join(F.filter(lines, lambda ln: ln != ""), "\n")
-
-
-def dedup_lines(docs: DataFrame, id_col: str = "doc_id",
-                text_col: str = "text") -> DataFrame:
-    """WITHIN-document line dedup (the Dolma/ccnet paragraph rule's
-    in-doc form): each line keeps only its FIRST occurrence inside the
-    document; later repeats drop (navigation chrome, repeated footers,
-    chat-log echo). Pure per-row HOFs — the line array never leaves
-    its row, zero shuffle, zero Exchange. Returns the rebuilt text
-    plus kept/dropped counts; NULL text behaves as empty."""
-    # two-step projection: the output column reuses the INPUT's name,
-    # and Spark 4's lateral column alias resolution would rebind any
-    # later same-select reference to text_col against the NEW alias
-    # (silently recomputing sizes over the rebuilt text — caught by
-    # the oracle). All expressions below reference _lines instead.
-    base = docs.select(
-        F.col(id_col),
-        F.split(F.coalesce(F.col(text_col), F.lit("")), "\n")
-        .alias("_lines"))
-    la = F.col("_lines")
-    kept = F.filter(la, lambda ln, i: F.array_position(la, ln) == i + 1)
-    return base.select(
-        F.col(id_col),
-        F.array_join(kept, "\n").alias(text_col),
-        F.size(kept).cast("bigint").alias("n_kept"),
-        (F.size(la) - F.size(kept)).cast("bigint").alias("n_dropped"))
-
-
-def char_entropy(docs: DataFrame, id_col: str = "doc_id",
-                 text_col: str = "text") -> DataFrame:
-    """Per-document Shannon character entropy in bits — the cheap
-    gibberish/repetition signal (natural text sits ~4 bits/char;
-    'aaaa...' is 0; uniform random base64 approaches 6): H = -sum
-    p_c * log2(p_c) over the document's character distribution.
-
-    Zero-shuffle per-row HOFs: characters enumerate via substring
-    (NOT split(col, ''), whose empty-tail behavior differs between
-    engines), counts come from filter-size over the SORTED distinct
-    set, and the fold runs in sorted char order so the floating sum
-    is identical in any engine that evaluates the same IEEE ops in
-    the same sequence. Rounded to 6dp; empty/NULL text scores 0."""
-    txt = F.coalesce(F.col(text_col), F.lit(""))
-    n = F.length(txt)
-    chars = F.transform(F.sequence(F.lit(1), n),
-                        lambda i: F.substring(txt, i, 1))
-    chars = F.when(n > 0, chars).otherwise(F.array().cast("array<string>"))
-    # natural log + one shared literal divisor: log2() itself may be
-    # correctly-rounded in one engine and ln(x)/ln(2) in another — an
-    # ulp split the 6dp round could expose; ln agrees bit-for-bit
-    ln2 = 0.6931471805599453
-
-    def term(run):
-        p = run.cast("double") / n.cast("double")
-        return p * F.log(p)
-
-    # counts via ONE run-length fold over the sorted chars (the
-    # filter-per-distinct-char formulation was O(len * distinct) per
-    # row); each run completes in sorted-char order, so the float-sum
-    # SEQUENCE is identical to folding the sorted distinct set — the
-    # DuckDB oracle is unchanged
-    folded = F.aggregate(
-        F.array_sort(chars),
-        F.named_struct(F.lit("prev"), F.lit(None).cast("string"),
-                       F.lit("run"), F.lit(0),
-                       F.lit("nats"), F.lit(0.0)),
-        lambda acc, c: F.named_struct(
-            F.lit("prev"), c,
-            F.lit("run"),
-            F.when(acc["prev"].eqNullSafe(c), acc["run"] + 1).otherwise(1),
-            F.lit("nats"),
-            F.when(acc["prev"].eqNullSafe(c) | acc["prev"].isNull(),
-                   acc["nats"]).otherwise(acc["nats"] + term(acc["run"]))),
-        lambda acc: F.when(acc["run"] > 0,
-                           acc["nats"] + term(acc["run"]))
-        .otherwise(acc["nats"]))
-    nats = folded
-    return docs.select(
-        F.col(id_col),
-        n.cast("bigint").alias("n_chars_txt"),
-        F.round(F.coalesce(F.when(n > 0, -nats / F.lit(ln2)),
-                           F.lit(0.0)), 6).alias("entropy_bits"))
-
-
-def _sentences(text_col: str) -> Column:
-    """A document's sentences in order, as split_sentences defines them
-    (NULL text has none)."""
-    return F.filter(
-        F.transform(
-            F.regexp_extract_all(F.coalesce(F.col(text_col), F.lit("")),
-                                 F.lit(r"[^.!?]*[.!?]+|[^.!?]+$"),
-                                 F.lit(0)),
-            lambda s: F.trim(s)),
-        lambda s: s != "")
-
-
-def _n_words(s: Column) -> Column:
-    """Whitespace-separated word count of a string column."""
-    return F.size(F.filter(F.split(s, r"\s+"), lambda t: t != ""))
-
-
-def split_sentences(docs: DataFrame, id_col: str = "doc_id",
-                    text_col: str = "text") -> DataFrame:
-    """Sentence segmentation — the unit C4/CCNet rules actually speak
-    in: runs of non-terminal characters up to a [.!?]+ burst form one
-    sentence (punctuation kept), a trailing unterminated fragment is
-    its own sentence, whitespace trims, empties drop. One
-    regexp_extract_all + HOF cleanup per row, zero shuffle; the
-    pattern uses NO lookarounds so it runs identically under Java
-    regex and RE2. Output: (id, sent_idx 0-based, sentence, n_words
-    whitespace-word count)."""
-    e = docs.select(F.col(id_col), F.posexplode(_sentences(text_col))
-                    .alias("sent_idx", "sentence"))
-    return e.select(id_col, "sent_idx", "sentence",
-                    _n_words(F.col("sentence")).cast("bigint")
-                    .alias("n_words"))
-
-
-def chunk_by_sentences(docs: DataFrame, max_tokens: int = 64,
-                       id_col: str = "doc_id",
-                       text_col: str = "text") -> DataFrame:
-    """Sentence-aware chunking: greedily pack whole SENTENCES into
-    chunks of at most ``max_tokens`` whitespace words — unlike
-    fixed-token-offset windows, a chunk never cuts mid-sentence. A
-    sentence longer than the budget becomes its own oversized chunk
-    (never split). The greedy fold is inherently sequential PER
-    DOCUMENT but each document's fold runs inside its own row — one HOF
-    aggregate, zero shuffle before the final narrow posexplode."""
-    if max_tokens < 1:
-        raise ValueError("max_tokens must be >= 1")
-    sents = _sentences(text_col)
-    empty = F.array().cast("array<string>")
-    folded = F.aggregate(
-        sents,
-        F.named_struct(F.lit("chunks"), empty,
-                       F.lit("cur"), F.lit(""),
-                       F.lit("cur_n"), F.lit(0)),
-        lambda acc, s: (lambda n: F.named_struct(
-            F.lit("chunks"),
-            F.when((acc["cur"] != "") & (acc["cur_n"] + n > max_tokens),
-                   F.concat(acc["chunks"], F.array(acc["cur"])))
-            .otherwise(acc["chunks"]),
-            F.lit("cur"),
-            F.when((acc["cur"] != "") & (acc["cur_n"] + n <= max_tokens),
-                   F.concat_ws(" ", acc["cur"], s)).otherwise(s),
-            F.lit("cur_n"),
-            F.when((acc["cur"] != "") & (acc["cur_n"] + n <= max_tokens),
-                   acc["cur_n"] + n).otherwise(n)))(_n_words(s)),
-        lambda acc: F.when(acc["cur"] == "", acc["chunks"])
-        .otherwise(F.concat(acc["chunks"], F.array(acc["cur"]))))
-    e = (docs.select(F.col(id_col), folded.alias("_chunks"))
-         .select(F.col(id_col),
-                 F.posexplode("_chunks").alias("chunk_idx", "chunk_text")))
-    return e.select(id_col, "chunk_idx", "chunk_text",
-                    _n_words(F.col("chunk_text")).cast("bigint")
-                    .alias("n_tokens"))
 
 
 def column_top_values(df: DataFrame, columns: list[str],

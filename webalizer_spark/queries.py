@@ -30,7 +30,6 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from webalizer_spark.operators import aggregates as A  # noqa: F401 (parity)
 from webalizer_spark.operators.sessionize import sessionize
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -515,67 +514,6 @@ def doc_minhash_lsh_pairs(spark, sf):
     sig = minhash_signatures(shingles(_t(spark, sf, "documents")),
                              num_hashes=8)
     return lsh_candidate_pairs(sig, rows_per_band=2)
-
-
-@qu("doc_lang_id", """
-WITH scored AS (
-  SELECT doc_id, lang,
-         CAST(len(list_filter(string_split(text, ' '),
-                              t -> t IN ('the','a','of','and','to','in','is')))
-              AS DOUBLE) / len(string_split(text, ' ')) AS stop_ratio
-  FROM documents
-)
-SELECT CASE WHEN stop_ratio >= 0.02 THEN 'en' ELSE 'unk' END AS lang_pred,
-       COUNT(*) AS docs,
-       CAST(COUNT(*) FILTER (WHERE lang = 'en') AS BIGINT) AS labeled_en
-FROM scored GROUP BY 1
-""")
-def doc_lang_id(spark, sf):
-    """Language-ID heuristic: stopword-ratio thresholding."""
-    stop = ["the", "a", "of", "and", "to", "in", "is"]
-    d = _t(spark, sf, "documents")
-    toks = F.split("text", " ")
-    ratio = (F.size(F.filter(toks, lambda t: t.isin(stop))).cast("double")
-             / F.size(toks))
-    scored = d.withColumn(
-        "lang_pred", F.when(ratio >= 0.02, "en").otherwise("unk"))
-    return scored.groupBy("lang_pred").agg(
-        F.count(F.lit(1)).alias("docs"),
-        F.count_if(F.col("lang") == "en").alias("labeled_en"),
-    )
-
-
-@qu("doc_quality", """
-WITH feats AS (
-  SELECT doc_id, n_chars,
-         len(string_split(text, ' ')) AS ntok,
-         CAST(length(text) - length(replace(text, ' ', '')) AS DOUBLE)
-           / length(text) AS space_ratio
-  FROM documents
-)
-SELECT CASE WHEN ntok >= 60 THEN 'long' WHEN ntok >= 30 THEN 'mid'
-            ELSE 'short' END AS quality_bucket,
-       COUNT(*) AS docs,
-       ROUND(AVG(space_ratio), 6) AS avg_space_ratio,
-       CAST(SUM(n_chars) AS BIGINT) AS total_chars
-FROM feats GROUP BY 1
-""")
-def doc_quality(spark, sf):
-    """Quality scoring: length/token/whitespace features -> buckets."""
-    d = _t(spark, sf, "documents")
-    ntok = F.size(F.split("text", " "))
-    space_ratio = ((F.length("text")
-                    - F.length(F.replace(F.col("text"), F.lit(" "), F.lit(""))))
-                   .cast("double") / F.length("text"))
-    feats = d.select(
-        "n_chars", ntok.alias("ntok"), space_ratio.alias("space_ratio"))
-    bucket = (F.when(F.col("ntok") >= 60, "long")
-              .when(F.col("ntok") >= 30, "mid").otherwise("short"))
-    return feats.groupBy(bucket.alias("quality_bucket")).agg(
-        F.count(F.lit(1)).alias("docs"),
-        F.round(F.avg("space_ratio"), 6).alias("avg_space_ratio"),
-        F.sum("n_chars").alias("total_chars"),
-    )
 
 
 # =========================================================================
@@ -1239,86 +1177,6 @@ def emb_semdedup_keep(spark, sf):
         .select("vec_id")
 
 
-@qu("doc_redact", """
-WITH t AS (
-  SELECT doc_id,
-         'mail u' || doc_id || '@ex-ample.co ip 10.1.' || (doc_id % 256)
-         || '.7 card 4111-2222-3333-44' || (doc_id % 100)
-         || ' ph (555) 01' || (doc_id % 10) || '-2345 ssn 123-45-6789 ok'
-         AS text
-  FROM documents WHERE doc_id < 200
-)
-SELECT doc_id,
-  regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-    regexp_replace(text,
-      '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-      '\\b(?:\\d{1,3}\\.){3}\\d{1,3}\\b', '<IP>', 'g'),
-      '\\b(?:\\d{4}[ -]){3}\\d{1,7}\\b|\\b[3-6]\\d{12,18}\\b',
-      '<CARD>', 'g'),
-      '(?:\\+\\d{1,3}[ .-]?)?\\(?\\d{3}\\)?[ .-]\\d{3}[ .-]\\d{4}\\b',
-      '<PHONE>', 'g'),
-      '\\b\\d{3}-\\d{2}-\\d{4}\\b', '<SSN>', 'g') AS redacted
-FROM t
-""")
-def doc_redact(spark, sf):
-    """PII-redaction oracle (ungraded): scalars.redact's chained
-    regexp_replace vs DuckDB applying the SAME five patterns in the same
-    order over identically-synthesized PII-bearing text (emails / IPs /
-    card / phone / SSN from doc_id — the documents fixture itself
-    carries no PII). Same regex dialect subset on both engines."""
-    from webalizer_spark.functions.scalars import redact
-
-    s = lambda c: c.cast("string")  # noqa: E731
-    did = F.col("doc_id")
-    text = F.concat(
-        F.lit("mail u"), s(did), F.lit("@ex-ample.co ip 10.1."),
-        s(did % 256), F.lit(".7 card 4111-2222-3333-44"), s(did % 100),
-        F.lit(" ph (555) 01"), s(did % 10),
-        F.lit("-2345 ssn 123-45-6789 ok"))
-    return (_t(spark, sf, "documents").filter(did < 200)
-            .select("doc_id", redact(text).alias("redacted")))
-
-
-@qu("doc_repetition", """
-WITH t AS (
-  SELECT doc_id, string_split(text, ' ') AS toks FROM documents
-), g AS (
-  SELECT doc_id, CAST(len(toks) AS BIGINT) AS ntok,
-         list_transform(range(1, len(toks)),
-                        i -> toks[i] || ' ' || toks[i + 1]) AS grams
-  FROM t
-), c AS (
-  SELECT doc_id, gram, COUNT(*) AS cnt
-  FROM (SELECT doc_id, unnest(grams) AS gram FROM g)
-  GROUP BY 1, 2
-), agg AS (
-  SELECT doc_id, CAST(SUM(cnt) AS BIGINT) AS total,
-         COUNT(*) AS distinct_n, MAX(cnt) AS top
-  FROM c GROUP BY 1
-)
-SELECT g.doc_id AS doc_id, g.ntok AS ntok,
-       COALESCE(agg.total, 0) AS ngrams,
-       ROUND(COALESCE(1.0 - CAST(agg.distinct_n AS DOUBLE) / agg.total,
-                      0.0), 6) AS dup_ngram_frac,
-       ROUND(COALESCE(CAST(agg.top AS DOUBLE) / agg.total, 0.0), 6)
-         AS top_ngram_frac
-FROM g LEFT JOIN agg ON g.doc_id = agg.doc_id
-""")
-def doc_repetition(spark, sf):
-    """Gopher-style intra-document repetition metrics (ungraded; the
-    50-row graded window is full): quality.ngram_repetition's
-    ZERO-SHUFFLE per-row formulation (transform/array_distinct/sorted
-    run-length aggregate) vs DuckDB independently re-deriving the same
-    bigram statistics the classical way (unnest -> group -> max/count).
-    Same numbers from two opposite physical plans is the point."""
-    from webalizer_spark.operators.quality import ngram_repetition
-
-    r = ngram_repetition(_t(spark, sf, "documents"), n=2)
-    return r.select("doc_id", F.col("ntok").cast("bigint").alias("ntok"),
-                    F.col("ngrams").cast("bigint").alias("ngrams"),
-                    "dup_ngram_frac", "top_ngram_frac")
-
-
 @q("doc_span_dedup", """
 WITH t AS (
   SELECT doc_id, text, string_split(text, ' ') AS toks FROM documents
@@ -1575,216 +1433,6 @@ def doc_lm_ppl2(spark, sf):
     return lm_perplexity_bigram(_t(spark, sf, "documents"))
 
 
-@qu("doc_corpus_diff", """
-WITH old AS (
-  SELECT doc_id, md5(coalesce(text, '')) AS h FROM documents
-), new AS (
-  SELECT doc_id,
-         md5(CASE WHEN doc_id % 5 = 0
-                  THEN coalesce(text, '') || ' v2'
-                  ELSE coalesce(text, '') END) AS h
-  FROM documents WHERE doc_id % 7 <> 0
-  UNION ALL
-  SELECT doc_id + 1000000 AS doc_id,
-         md5('fresh doc ' || doc_id) AS h
-  FROM documents WHERE doc_id % 13 = 0
-)
-SELECT COALESCE(old.doc_id, new.doc_id) AS doc_id,
-       CASE WHEN old.h IS NULL THEN 'added'
-            WHEN new.h IS NULL THEN 'removed'
-            ELSE 'changed' END AS change
-FROM old FULL JOIN new ON old.doc_id = new.doc_id
-WHERE old.h IS NULL OR new.h IS NULL OR old.h <> new.h
-""")
-def doc_corpus_diff(spark, sf):
-    """Corpus snapshot diff (ungraded oracle): a v2 corpus is
-    SYNTHESIZED from `documents` in both engines (every 7th doc
-    removed, every 5th modified, every 13th spawning a fresh high-id
-    doc), then quality.corpus_diff classifies added/removed/changed by
-    content hash while DuckDB re-derives the classification with a
-    FULL JOIN. Only ids + 16-byte md5s cross the engine's Exchange."""
-    from webalizer_spark.operators.quality import corpus_diff
-
-    docs = _t(spark, sf, "documents")
-    did = F.col("doc_id")
-    txt = F.coalesce(F.col("text"), F.lit(""))
-    new = (docs.where(did % 7 != 0)
-           .select("doc_id",
-                   F.when(did % 5 == 0, F.concat(txt, F.lit(" v2")))
-                   .otherwise(txt).alias("text"))
-           .unionByName(
-               docs.where(did % 13 == 0)
-               .select((did + 1000000).alias("doc_id"),
-                       F.concat(F.lit("fresh doc "),
-                                did.cast("string")).alias("text"))))
-    return corpus_diff(docs, new)
-
-
-@qu("doc_sentences", """
-WITH t AS (
-  SELECT doc_id, string_split(coalesce(text, ''), ' ') AS toks,
-         CAST(doc_id % 4 + 3 AS INTEGER) AS w
-  FROM documents
-), synth AS (
-  -- sentence-shaped text: w-token groups punctuated by a schedule
-  -- that includes MULTI-punct bursts ('?!'), plus an unterminated
-  -- trailing fragment on every 3rd doc
-  SELECT doc_id,
-         array_to_string(list_transform(
-           range(1, CAST(floor((len(toks) + w - 1) / w) AS INTEGER) + 1),
-           j -> array_to_string(list_slice(toks, (j - 1) * w + 1, j * w),
-                                ' ')
-                || CASE (doc_id + j) % 4 WHEN 0 THEN '.' WHEN 1 THEN '?!'
-                        WHEN 2 THEN '!' ELSE '...' END
-         ), ' ')
-         || CASE WHEN doc_id % 3 = 0 THEN ' trailing frag' ELSE '' END
-           AS text
-  FROM t
-), sents AS (
-  SELECT doc_id,
-         list_filter(list_transform(
-           regexp_extract_all(text, '[^.!?]*[.!?]+|[^.!?]+$'),
-           x -> trim(x)), x -> x <> '') AS s
-  FROM synth
-), e AS (
-  SELECT doc_id, generate_subscripts(s, 1) - 1 AS sent_idx,
-         unnest(s) AS sentence
-  FROM sents
-)
-SELECT doc_id, CAST(sent_idx AS INT) AS sent_idx, sentence,
-       CAST(len(list_filter(regexp_split_to_array(trim(sentence), '\\s+'),
-                            t2 -> t2 <> '')) AS BIGINT) AS n_words
-FROM e
-""")
-def doc_sentences(spark, sf):
-    """Sentence segmentation (ungraded oracle): sentence-shaped text is
-    SYNTHESIZED from `documents` (w-token groups with a punctuation
-    schedule including '?!' bursts and '...' ellipses, an unterminated
-    trailing fragment every 3rd doc), then quality.split_sentences
-    segments it while DuckDB replays the same RE2-safe pattern (no
-    lookarounds — RE2 has none) and re-derives indices and word
-    counts. Bit-exact."""
-    from webalizer_spark.operators.quality import split_sentences
-
-    docs = _t(spark, sf, "documents")
-    did = F.col("doc_id")
-    toks = F.split(F.coalesce(F.col("text"), F.lit("")), " ")
-    w = (did % 4 + 3).cast("int")
-    n = F.floor((F.size(toks) + w - 1) / w).cast("int")
-
-    def mk(j):
-        m = (did + j) % 4
-        punct = (F.when(m == 0, ".").when(m == 1, "?!")
-                 .when(m == 2, "!").otherwise("..."))
-        return F.concat(
-            F.concat_ws(" ", F.slice(toks, (j - 1) * w + 1, w)), punct)
-
-    synth = docs.select(
-        "doc_id",
-        F.concat(
-            F.array_join(F.transform(F.sequence(F.lit(1), n), mk), " "),
-            F.when(did % 3 == 0, F.lit(" trailing frag")).otherwise(""))
-        .alias("text"))
-    return split_sentences(synth)
-
-
-@qu("doc_sentence_chunks", """
-WITH RECURSIVE t AS (
-  SELECT doc_id, string_split(coalesce(text, ''), ' ') AS toks,
-         CAST(doc_id % 4 + 3 AS INTEGER) AS w
-  FROM documents
-), synth AS (
-  SELECT doc_id,
-         array_to_string(list_transform(
-           range(1, CAST(floor((len(toks) + w - 1) / w) AS INTEGER) + 1),
-           j -> array_to_string(list_slice(toks, (j - 1) * w + 1, j * w),
-                                ' ')
-                || CASE (doc_id + j) % 4 WHEN 0 THEN '.' WHEN 1 THEN '?!'
-                        WHEN 2 THEN '!' ELSE '...' END
-         ), ' ')
-         || CASE WHEN doc_id % 3 = 0 THEN ' trailing frag' ELSE '' END
-           AS text
-  FROM t
-), sl AS (
-  SELECT doc_id,
-         list_filter(list_transform(
-           regexp_extract_all(text, '[^.!?]*[.!?]+|[^.!?]+$'),
-           x -> trim(x)), x -> x <> '') AS s
-  FROM synth
-), sx AS (
-  SELECT doc_id, generate_subscripts(s, 1) AS i, unnest(s) AS sentence,
-         len(s) AS cnt
-  FROM sl
-), sn AS (
-  SELECT doc_id, i, sentence, cnt,
-         len(list_filter(regexp_split_to_array(trim(sentence), '\\s+'),
-                         t2 -> t2 <> '')) AS n
-  FROM sx
-), step AS (
-  SELECT doc_id, 0 AS i, CAST('' AS VARCHAR) AS cur, 0 AS cur_n,
-         CAST([] AS VARCHAR[]) AS chunks, cnt
-  FROM (SELECT DISTINCT doc_id, cnt FROM sn)
-  UNION ALL
-  SELECT st.doc_id, st.i + 1,
-         CASE WHEN st.cur <> '' AND st.cur_n + s.n <= 12
-              THEN st.cur || ' ' || s.sentence ELSE s.sentence END,
-         CASE WHEN st.cur <> '' AND st.cur_n + s.n <= 12
-              THEN st.cur_n + s.n ELSE s.n END,
-         CASE WHEN st.cur <> '' AND st.cur_n + s.n > 12
-              THEN list_append(st.chunks, st.cur) ELSE st.chunks END,
-         st.cnt
-  FROM step st JOIN sn s ON s.doc_id = st.doc_id AND s.i = st.i + 1
-  WHERE st.i < st.cnt
-), final AS (
-  SELECT doc_id,
-         CASE WHEN cur = '' THEN chunks
-              ELSE list_append(chunks, cur) END AS chunks
-  FROM step WHERE i = cnt
-), e AS (
-  SELECT doc_id, generate_subscripts(chunks, 1) - 1 AS chunk_idx,
-         unnest(chunks) AS chunk_text
-  FROM final
-)
-SELECT doc_id, CAST(chunk_idx AS INT) AS chunk_idx, chunk_text,
-       CAST(len(list_filter(regexp_split_to_array(trim(chunk_text),
-                                                  '\\s+'),
-                            t2 -> t2 <> '')) AS BIGINT) AS n_tokens
-FROM e
-""")
-def doc_sentence_chunks(spark, sf):
-    """Sentence-aware chunking (ungraded oracle): the same synthesized
-    sentence corpus as doc_sentences, greedily packed into chunks of
-    <= 12 whitespace words without splitting any sentence (oversized
-    sentences become their own chunk). The engine folds per document
-    inside one HOF aggregate (zero shuffle before the final explode);
-    DuckDB replays the greedy fold as a RECURSIVE CTE stepping all
-    documents through their sentence indices in lockstep — an
-    independent sequential implementation of the same packing rule.
-    Bit-exact."""
-    from webalizer_spark.operators.quality import chunk_by_sentences
-
-    docs = _t(spark, sf, "documents")
-    did = F.col("doc_id")
-    toks = F.split(F.coalesce(F.col("text"), F.lit("")), " ")
-    w = (did % 4 + 3).cast("int")
-    n = F.floor((F.size(toks) + w - 1) / w).cast("int")
-
-    def mk(j):
-        m = (did + j) % 4
-        punct = (F.when(m == 0, ".").when(m == 1, "?!")
-                 .when(m == 2, "!").otherwise("..."))
-        return F.concat(
-            F.concat_ws(" ", F.slice(toks, (j - 1) * w + 1, w)), punct)
-
-    synth = docs.select(
-        "doc_id",
-        F.concat(
-            F.array_join(F.transform(F.sequence(F.lit(1), n), mk), " "),
-            F.when(did % 3 == 0, F.lit(" trailing frag")).otherwise(""))
-        .alias("text"))
-    return chunk_by_sentences(synth, max_tokens=12)
-
-
 @qu("evt_top_values", """
 WITH stacked AS (
   SELECT 'event_type' AS column_name, CAST(event_type AS VARCHAR) AS value
@@ -1818,188 +1466,6 @@ def evt_top_values(spark, sf):
 
     return column_top_values(_t(spark, sf, "events"),
                              ["event_type", "user_id", "props"], k=5)
-
-
-@qu("doc_entropy", """
-WITH t AS (
-  SELECT doc_id, coalesce(text, '') AS txt FROM documents
-), c AS (
-  SELECT doc_id, len(txt) AS n,
-         list_transform(range(1, len(txt) + 1),
-                        i -> substr(txt, i, 1)) AS chars
-  FROM t
-), u AS (
-  SELECT doc_id, n, chars,
-         list_sort(list_distinct(chars)) AS uniq
-  FROM c
-), terms AS (
-  SELECT doc_id, n,
-         list_transform(uniq, ch ->
-           (CAST(len(list_filter(chars, x -> x = ch)) AS DOUBLE) / n)
-           * ln(CAST(len(list_filter(chars, x -> x = ch)) AS DOUBLE) / n))
-           AS tl
-  FROM u
-)
-SELECT doc_id, CAST(n AS BIGINT) AS n_chars_txt,
-       ROUND(CASE WHEN n = 0 THEN 0.0
-             ELSE -list_reduce(list_prepend(0.0, tl), (a, b) -> a + b)
-                  / 0.6931471805599453 END, 6) AS entropy_bits
-FROM terms
-""")
-def doc_entropy(spark, sf):
-    """Character-entropy quality signal (ungraded oracle): Shannon
-    entropy in bits per doc via zero-shuffle HOFs — characters via
-    substring enumeration (split-on-empty differs between engines),
-    counts by filter-size over the SORTED distinct set, sequential
-    fold in sorted order so the float sum sequence is identical, ln +
-    one shared literal ln(2) divisor (log2 itself could split an ulp
-    between libm implementations). DuckDB re-derives with
-    list_transform/list_reduce — same fold order, bit-exact."""
-    from webalizer_spark.operators.quality import char_entropy
-
-    return char_entropy(_t(spark, sf, "documents"))
-
-
-@qu("doc_line_dedup", """
-WITH t AS (
-  SELECT doc_id, string_split(coalesce(text, ''), ' ') AS toks,
-         CAST(doc_id % 3 + 4 AS INTEGER) AS w
-  FROM documents
-), chunks AS (
-  SELECT doc_id,
-         list_transform(
-           range(1, CAST(floor((len(toks) + w - 1) / w) AS INTEGER) + 1),
-           j -> array_to_string(list_slice(toks, (j - 1) * w + 1, j * w),
-                                ' ')) AS c
-  FROM t
-), synth AS (
-  -- every 3rd line is REPLACED by a copy of line 1: planted in-doc dups
-  SELECT doc_id,
-         list_transform(range(1, len(c) + 1),
-                        j -> CASE WHEN j % 3 = 0 THEN c[1]
-                                  ELSE c[j] END) AS lines
-  FROM chunks
-), kept AS (
-  SELECT doc_id,
-         list_filter(
-           list_transform(range(1, len(lines) + 1),
-                          i -> CASE WHEN list_position(lines, lines[i]) = i
-                                    THEN lines[i] END),
-           x -> x IS NOT NULL) AS k,
-         len(lines) AS n_all
-  FROM synth
-)
-SELECT doc_id, md5(array_to_string(k, chr(10))) AS text_md5,
-       CAST(len(k) AS BIGINT) AS n_kept,
-       CAST(n_all - len(k) AS BIGINT) AS n_dropped
-FROM kept
-""")
-def doc_line_dedup(spark, sf):
-    """Within-document line dedup (ungraded oracle): multi-line docs
-    are SYNTHESIZED from `documents` (4..6-token chunks, every 3rd
-    line replaced by a copy of line 1 — planted in-doc repeats), then
-    quality.dedup_lines keeps each line's first occurrence via a pure
-    per-row HOF (zero Exchange) while DuckDB re-derives the synthesis
-    AND the first-occurrence filter with list_position. Rebuilt text
-    compared by md5."""
-    from webalizer_spark.operators.quality import dedup_lines
-
-    docs = _t(spark, sf, "documents")
-    did = F.col("doc_id")
-    toks = F.split(F.coalesce(F.col("text"), F.lit("")), " ")
-    w = (did % 3 + 4).cast("int")
-    nl = F.floor((F.size(toks) + w - 1) / w).cast("int")
-    chunks = F.transform(
-        F.sequence(F.lit(1), nl),
-        lambda j: F.concat_ws(" ", F.slice(toks, (j - 1) * w + 1, w)))
-    lines = F.transform(
-        F.sequence(F.lit(1), F.size(chunks)),
-        lambda j: F.when(j % 3 == 0,
-                         F.element_at(chunks, 1))
-        .otherwise(F.element_at(chunks, j)))
-    synth = docs.select("doc_id", F.array_join(lines, "\n").alias("text"))
-    out = dedup_lines(synth)
-    return out.select("doc_id", F.md5("text").alias("text_md5"),
-                      "n_kept", "n_dropped")
-
-
-@qu("doc_html_text", """
-WITH t AS (
-  SELECT doc_id, string_split(coalesce(text, ''), ' ') AS toks,
-         CAST(doc_id % 3 + 5 AS INTEGER) AS w
-  FROM documents
-), paras AS (
-  SELECT doc_id,
-         list_transform(
-           range(1, CAST(floor((len(toks) + w - 1) / w) AS INTEGER) + 1),
-           j -> trim(array_to_string(
-                  list_slice(toks, (j - 1) * w + 1, j * w), ' ')
-                || CASE WHEN (doc_id + j) % 4 = 0
-                        THEN ' AT&T' ELSE '' END)) AS lines
-  FROM t
-), expected AS (
-  SELECT doc_id,
-         'Page ' || (doc_id % 10) || chr(10)
-         || array_to_string(list_filter(lines, x -> x <> ''), chr(10))
-           AS text
-  FROM paras
-), final AS (
-  SELECT doc_id, CASE WHEN text LIKE '%' || chr(10)
-                      THEN substr(text, 1, len(text) - 1)
-                      ELSE text END AS text
-  FROM expected
-)
-SELECT doc_id, md5(text) AS text_md5,
-       CAST(CASE WHEN text = '' THEN 0
-            ELSE len(string_split(text, chr(10))) END AS BIGINT) AS n_lines
-FROM final
-""")
-def doc_html_text(spark, sf):
-    """HTML -> text extraction (ungraded oracle): HTML pages are
-    SYNTHESIZED from `documents` (title + <style> head, paragraphs of
-    5..7 tokens, every 2nd paragraph <b>-wrapped, comments and
-    <script> blocks on fixed schedules, an '&amp;' entity marker every
-    4th paragraph), then quality.html_to_text extracts the text.
-    The oracle NEVER strips HTML — it derives the expected text
-    directly from the same synthesis inputs (title line + paragraph
-    lines + decoded markers; junk elements simply absent), so the
-    extraction semantics are pinned independently of any regex engine.
-    Rebuilt text compared by md5."""
-    from webalizer_spark.operators.quality import html_to_text
-
-    docs = _t(spark, sf, "documents")
-    did = F.col("doc_id")
-    toks = F.split(F.coalesce(F.col("text"), F.lit("")), " ")
-    w = (did % 3 + 5).cast("int")
-    np_ = F.floor((F.size(toks) + w - 1) / w).cast("int")
-
-    def para(j):
-        body = F.concat_ws(" ", F.slice(toks, (j - 1) * w + 1, w))
-        body = F.concat(body,
-                        F.when((did + j) % 4 == 0,
-                               F.lit(" AT&amp;T")).otherwise(""))
-        body = (F.when(j % 2 == 0,
-                       F.concat(F.lit("<b>"), body, F.lit("</b>")))
-                .otherwise(body))
-        return F.concat(
-            F.when((did + j) % 7 == 0,
-                   F.lit("<!-- nav\nboilerplate -->")).otherwise(""),
-            F.lit("<p>"), body, F.lit("</p>"),
-            F.when((did * 7 + j) % 5 == 0,
-                   F.lit("<script type=\"text/javascript\">var x = "
-                         "'<p>not text</p>';</script>")).otherwise(""))
-
-    html = F.concat(
-        F.lit("<html><head><title>Page "), (did % 10).cast("string"),
-        F.lit("</title><style>p { color: red; }</style></head><body>"),
-        F.array_join(F.transform(F.sequence(F.lit(1), np_), para), ""),
-        F.lit("</body></html>"))
-    txt = html_to_text(html)
-    n_lines = F.when(txt == "", F.lit(0)) \
-        .otherwise(F.size(F.split(txt, "\n"))).cast("bigint")
-    return docs.select("doc_id",
-                       F.md5(txt).alias("text_md5"),
-                       n_lines.alias("n_lines"))
 
 
 @qu("doc_pii_stats", """
@@ -2068,8 +1534,9 @@ def doc_pii_stats(spark, sf):
     IPs, grouped AND contiguous card numbers, an international phone,
     SSNs — overlapping schedules so many docs carry several
     categories), then quality.pii_stats counts matches pattern-by-
-    pattern on the progressively-redacted text (exactly what redact()
-    replaces) while DuckDB replays the same chain with RE2
+    pattern on the progressively-replaced text (chain order, each
+    pattern's matches swapped for its placeholder before the next
+    pattern runs) while DuckDB replays the same chain with RE2
     regexp_extract_all/regexp_replace — two independent regex engines
     agreeing on every count."""
     from webalizer_spark.operators.quality import pii_stats
@@ -2090,174 +1557,6 @@ def doc_pii_stats(spark, sf):
         F.when(did % 7 == 0, F.lit(" tel +1 (555) 123-4567")).otherwise(""),
         F.when(did % 11 == 0, F.lit(" ssn 123-45-6789")).otherwise(""))
     return pii_stats(docs.select("doc_id", text.alias("text")))
-
-
-@qu("doc_c4_lines", """
-WITH t AS (
-  SELECT doc_id, string_split(text, ' ') AS toks,
-         CAST(doc_id % 3 + 4 AS INTEGER) AS w
-  FROM documents
-), synth AS (
-  SELECT doc_id,
-         array_to_string(list_transform(
-           range(1, CAST(floor((len(toks) + w - 1) / w) AS INTEGER) + 1),
-           j -> CASE WHEN (doc_id + j) % 9 = 0 AND w > 1
-                     -- coalesce: DuckDB array_to_string(empty) is
-                     -- NULL where Spark concat_ws gives ''
-                     THEN toks[(j - 1) * w + 1] || '  '
-                          || coalesce(array_to_string(list_slice(
-                               toks, (j - 1) * w + 2, j * w), ' '), '')
-                     ELSE array_to_string(
-                            list_slice(toks, (j - 1) * w + 1, j * w), ' ')
-                END
-                || CASE WHEN (doc_id * 3 + j) % 13 = 0
-                        THEN ' cookie' ELSE '' END
-                || CASE (doc_id + j) % 4 WHEN 0 THEN '.' WHEN 1 THEN '!'
-                        WHEN 2 THEN '' ELSE '?' END
-         ), chr(10)) AS text
-  FROM t
-), cleaned AS (
-  SELECT doc_id,
-         list_filter(string_split(text, chr(10)), x ->
-             regexp_matches(x, '[.!?"]$')
-             AND len(list_filter(regexp_split_to_array(trim(x), '\\s+'),
-                                 t2 -> t2 <> '')) >= 5
-             AND NOT contains(lower(x), '{')
-             AND NOT contains(lower(x), 'javascript')
-             AND NOT contains(lower(x), 'lorem ipsum')
-             AND NOT contains(lower(x), 'cookie')) AS kept,
-         len(string_split(text, chr(10))) AS nlines
-  FROM synth
-)
-SELECT doc_id, md5(array_to_string(kept, chr(10))) AS text_md5,
-       CAST(len(kept) AS BIGINT) AS n_kept,
-       CAST(nlines - len(kept) AS BIGINT) AS n_dropped
-FROM cleaned WHERE len(kept) >= 3
-""")
-def doc_c4_lines(spark, sf):
-    """C4 line-level cleaning (ungraded oracle): multi-line docs are
-    SYNTHESIZED deterministically from `documents` in both engines
-    (lines of 4..6 tokens; terminal punctuation from (doc_id+line)%4 —
-    one branch yields NO punctuation; a ' cookie' blocklist injection
-    every 13th line), then quality.c4_line_filter applies the C4 rules
-    (terminal punct, >=5 words, no blocklist term, no brace; docs with
-    <3 surviving lines dropped) while DuckDB re-derives the synthesis
-    AND the filter with list_filter — every rule branch fires on the
-    fixture by construction. Rebuilt text compared by md5."""
-    from webalizer_spark.operators.quality import c4_line_filter
-
-    docs = _t(spark, sf, "documents")
-    toks = F.split("text", " ")
-    w = (F.col("doc_id") % 3 + 4).cast("int")
-    nl = F.floor((F.size(toks) + w - 1) / w).cast("int")
-
-    def mk(j):
-        plain = F.concat_ws(" ", F.slice(toks, (j - 1) * w + 1, w))
-        # double-space injection every 9th line: a single-space word
-        # split would count one extra (empty) word and keep lines the
-        # whitespace-word rule must drop — grades the \\s+ semantics
-        dbl = F.concat(F.element_at(toks, (j - 1) * w + 1), F.lit("  "),
-                       F.concat_ws(" ",
-                                   F.slice(toks, (j - 1) * w + 2, w - 1)))
-        base = F.when(((F.col("doc_id") + j) % 9 == 0) & (w > 1),
-                      dbl).otherwise(plain)
-        blocked = F.when((F.col("doc_id") * 3 + j) % 13 == 0,
-                         F.lit(" cookie")).otherwise("")
-        m = (F.col("doc_id") + j) % 4
-        punct = (F.when(m == 0, ".").when(m == 1, "!")
-                 .when(m == 2, "").otherwise("?"))
-        return F.concat(base, blocked, punct)
-
-    synth = docs.select(
-        "doc_id",
-        F.array_join(F.transform(F.sequence(F.lit(1), nl), mk),
-                     "\n").alias("text"))
-    out = c4_line_filter(synth)
-    return out.select("doc_id", F.md5("text").alias("text_md5"),
-                      F.col("n_kept").cast("bigint").alias("n_kept"),
-                      F.col("n_dropped").cast("bigint").alias("n_dropped"))
-
-
-@qu("doc_length_stats", """
-WITH t AS (
-  SELECT source, CAST(len(string_split(text, ' ')) AS BIGINT) AS ntok
-  FROM documents
-)
-SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-       CAST(SUM(ntok) AS BIGINT) AS total_tok,
-       ROUND(CAST(SUM(ntok) AS DOUBLE) / COUNT(*), 6) AS mean_tok,
-       quantile_cont(ntok, 0.5) AS p50_tok,
-       quantile_cont(ntok, 0.9) AS p90_tok,
-       quantile_cont(ntok, 0.99) AS p99_tok
-FROM t GROUP BY 1
-""")
-def doc_length_stats(spark, sf):
-    """Per-source token-length distribution (ungraded): the corpus
-    audit table — doc counts, total/mean tokens, EXACT interpolated
-    p50/p90/p99 (quality.length_stats exact tier). Spark's sort-based
-    percentile and DuckDB's quantile_cont share the same rank*(n-1)
-    linear-interpolation definition, so the match is bit-exact
-    including interpolation artifacts; the sketch tier
-    (approx_percentile) is tolerance-tested in pytest like A8's HLL."""
-    from webalizer_spark.operators.quality import length_stats
-
-    return length_stats(_t(spark, sf, "documents"), by="source")
-
-
-@qu("doc_mixing", """
-WITH avail AS (
-  SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-         CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS available_tok
-  FROM documents GROUP BY 1
-),
-raw AS (
-  SELECT source,
-         CAST((CAST(substr(source, 4) AS INT) % 5) + 1 AS DOUBLE) AS r
-  FROM (SELECT DISTINCT source FROM documents)
-),
-tshare AS (
-  SELECT source, r / (SELECT SUM(r) FROM raw) AS target_share FROM raw
-),
-mixed AS (
-  SELECT a.source, a.n_docs, a.available_tok,
-         COALESCE(t.target_share, 0.0) AS target_share,
-         COALESCE(t.target_share, 0.0) * 1000000.0 AS desired_tok,
-         ROUND(LEAST(COALESCE(t.target_share, 0.0) * 1000000.0
-                     / a.available_tok, 4.0), 6) AS epochs
-  FROM avail a LEFT JOIN tshare t ON a.source = t.source
-),
-real AS (
-  SELECT *, CAST(ROUND(epochs * available_tok) AS BIGINT) AS realized_tok
-  FROM mixed
-)
-SELECT source, n_docs, available_tok,
-       ROUND(target_share, 6) AS target_share,
-       ROUND(desired_tok, 2) AS desired_tok, epochs, realized_tok,
-       ROUND(CAST(realized_tok AS DOUBLE)
-             / (SELECT SUM(realized_tok) FROM real), 6) AS realized_share
-FROM real
-""")
-def doc_mixing(spark, sf):
-    """Source-mixture planning (ungraded): per-source sampling epochs
-    for a 1M-token budget under non-uniform target shares (priority
-    (source_id % 5) + 1, normalized) with the standard max-epochs=4
-    over-repetition cap — quality.mixing_weights, the one-aggregation
-    mixture planner. The oracle re-derives availability, share
-    normalization, the capped epoch rule and both share totals in
-    SQL; scalar totals are broadcast in the Spark plan (no global
-    window, the engine-wide with_share recipe)."""
-    from webalizer_spark.operators.quality import mixing_weights
-
-    # narrow read (wide=False): mixture planning/execution is a cheap
-    # broadcast-join path over the corpus — the scan-widening Exchange
-    # measured as pure overhead here (round 7)
-    d = _t(spark, sf, "documents", wide=False)
-    targets = (d.select("source").distinct()
-               .select("source",
-                       ((F.substring("source", 4, 10).cast("int") % 5) + 1)
-                       .cast("double").alias("target_share")))
-    return mixing_weights(d, targets, budget_tokens=1_000_000,
-                          max_epochs=4.0)
 
 
 @q("doc_tfidf_top", """
@@ -2298,35 +1597,6 @@ def doc_tfidf_top(spark, sf):
 
     return top_terms(_t(spark, sf, "documents"), k=5) \
         .filter(F.col("doc_id") < 100)
-
-
-@qu("doc_quality_bins", """
-WITH th AS (
-  SELECT [quantile_cont(n_chars, 0.25),
-          quantile_cont(n_chars, 0.5),
-          quantile_cont(n_chars, 0.75)] AS t
-  FROM documents
-)
-SELECT doc_id, n_chars,
-       CAST(1 + len(list_filter(th.t,
-                                x -> CAST(n_chars AS DOUBLE) > x))
-            AS INT) AS bin
-FROM documents, th
-""")
-def doc_quality_bins(spark, sf):
-    """Corpus-quantile binning (ungraded): every doc assigned to its
-    n_chars quartile (quality.quantile_bins — ONE scalar exact-
-    percentile aggregate broadcast into a per-row threshold lookup; no
-    ntile window, so no single-partition global ranking; the sketch
-    tier swaps in approx_percentile at scale, same split as
-    length_stats). Spark's percentile and DuckDB's quantile_cont share
-    the rank*(n-1) interpolation, so thresholds and bins agree
-    bit-exact."""
-    from webalizer_spark.operators.quality import quantile_bins
-
-    return quantile_bins(_t(spark, sf, "documents")
-                         .select("doc_id", "n_chars"),
-                         "n_chars", n_bins=4)
 
 
 @qu("evt_url_canon", """
@@ -2729,36 +1999,6 @@ def doc_normalize(spark, sf):
     return normalize_text(staged)
 
 
-@qu("doc_blocklist", """
-WITH t AS (
-  SELECT doc_id,
-         string_split(lower(text), ' ') AS toks,
-         CAST(len(string_split(lower(text), ' ')) AS BIGINT) AS n
-  FROM documents
-)
-SELECT doc_id, n AS n_tokens,
-       CAST(len(list_filter(toks,
-                t -> list_contains(['slow', 'hash', 'spill'], t)))
-            AS BIGINT) AS blocked_tokens,
-       ROUND(CASE WHEN n > 0
-                  THEN len(list_filter(toks,
-                       t -> list_contains(['slow', 'hash', 'spill'], t)))
-                       / CAST(n AS DOUBLE)
-                  ELSE 0.0 END, 6) AS blocked_frac
-FROM t
-""")
-def doc_blocklist(spark, sf):
-    """Blocklist pressure (ungraded): per-doc occurrence counts and
-    fraction for a 3-term case-folded list (quality.blocklist_stats —
-    the Gopher/C4 'dirty word' metric; the term list rides the plan as
-    a literal array, zero shuffle). The oracle re-derives the token
-    filter and fraction with DuckDB list lambdas."""
-    from webalizer_spark.operators.quality import blocklist_stats
-
-    return blocklist_stats(_t(spark, sf, "documents"),
-                           ["slow", "hash", "spill"])
-
-
 def _pagerank_oracle_sql(n_iters: int = 8, damping: float = 0.85) -> str:
     """Unrolled fixed-iteration PageRank in plain SQL (no recursive
     aggregation — each iteration is its own CTE chain), mirroring
@@ -2863,9 +2103,10 @@ FROM n WHERE copies > 0
 """)
 def doc_mixture_rows(spark, sf):
     """Mixture EXECUTION (ungraded): the materialized training mix for
-    a 60k-token budget under the doc_mixing target rule with
-    max_epochs=2.5 — every doc duplicated floor(epochs) times plus a
-    deterministic-hash fractional draw (sampling.materialize_mixture,
+    a 60k-token budget under non-uniform target shares (priority
+    (source_id % 5) + 1, normalized) with max_epochs=2.5 — every doc
+    duplicated floor(epochs) times plus a deterministic-hash fractional
+    draw (sampling.materialize_mixture,
     fed by quality.mixing_weights). The oracle re-derives the plan,
     the per-doc hash fraction and the generate_series duplication
     independently; the budget is sized so the fixture exercises whole
