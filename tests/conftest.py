@@ -20,6 +20,24 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def skew_calls(monkeypatch) -> list:
+    """One entry per sessionize_skew_safe call during the test.
+    pick_sessionizer looks the path up in its module, so the spy set
+    there sees every pick."""
+    from webalizer_spark.operators import sessionize as S
+
+    calls: list = []
+    real = S.sessionize_skew_safe
+
+    def spy(*args, **kwargs):
+        calls.append(args)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(S, "sessionize_skew_safe", spy)
+    return calls
+
+
 @pytest.fixture(scope="session")
 def fixture_dir() -> str:
     return ensure_fixture(FIXTURE_BASE, GenParams())

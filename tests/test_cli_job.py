@@ -14,6 +14,8 @@ import subprocess
 import sys
 
 import duckdb
+import pytest
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 DIMS = ["role_class", "tool_family", "byte_ranges", "engine_params",
         "name_groups"]
@@ -44,17 +46,47 @@ def _stage_half(full: str, half) -> int:
         f"SELECT COUNT(*) FROM '{half}/transcripts.parquet'").fetchone()[0]
 
 
-def test_cli_incremental_resume(tmp_path):
-    from webalizer_spark.datagen import GenParams, ensure_fixture
+def _hottest(inp: str) -> int:
+    return duckdb.sql(
+        f"SELECT COUNT(*) AS n FROM '{inp}/transcripts.parquet' "
+        f"GROUP BY conv_id ORDER BY n DESC LIMIT 1").fetchone()[0]
 
-    full = ensure_fixture(str(tmp_path / "fix"),
-                          GenParams(n_convs=300, hot_convs=1, hot_mult=20),
+
+def _batches(spark, full: str, half) -> list:
+    from pyspark.sql import functions as F
+
+    tr = spark.read.parquet(f"{full}/transcripts.parquet")
+    first = spark.read.parquet(f"{half}/transcripts.parquet")
+    wm = first.agg(F.max("ts")).first()[0]
+    return [tr, first, tr.filter(F.col("ts") > F.lit(wm))]
+
+
+# "whale": one 120,000-turn conv, so pick_sessionizer takes the skew-safe
+# path on the full input while each time-half (51k and 69k turns of it)
+# keeps the window path; the daily == full_daily check below then holds
+# the one-shot skew path against the resumed window path, visits included
+@pytest.mark.parametrize("params, hottest, full_path", [
+    (dict(n_convs=300, hot_convs=1, hot_mult=20), 3_040, "sessionize"),
+    (dict(n_convs=300, hot_convs=1, hot_mult=600, seed=4), 120_000,
+     "sessionize_skew_safe"),
+], ids=["flat", "whale"])
+def test_cli_incremental_resume(spark, tmp_path, params, hottest, full_path):
+    from webalizer_spark.datagen import GenParams, ensure_fixture
+    from webalizer_spark.operators.sessionize import pick_sessionizer
+
+    full = ensure_fixture(str(tmp_path / "fix"), GenParams(**params),
                           tag="cli")
     n_total = duckdb.sql(
         f"SELECT COUNT(*) FROM '{full}/transcripts.parquet'").fetchone()[0]
 
     half = tmp_path / "half"
     n_half = _stage_half(full, half)
+    assert _hottest(full) == hottest
+    # the sessionize path each run below takes: the one-shot run over
+    # full, the first batch over half, the resumed batch past half's max ts
+    picked = [pick_sessionizer(df).__name__
+              for df in _batches(spark, full, half)]
+    assert picked == [full_path, "sessionize", "sessionize"]
 
     out1, ckpt = str(tmp_path / "out1"), str(tmp_path / "ckpt")
     stdout1 = _run_cli("--input", str(half), "--output", out1,

@@ -128,7 +128,7 @@ def test_skew_safe_pipeline_equivalence(spark, transcripts, dims, result):
 
 
 def test_auto_skew_selection_and_metrics(spark, transcripts, dims, tmp_path,
-                                        monkeypatch):
+                                        monkeypatch, skew_calls):
     """The pipeline picks the skew-safe path once the sampled hottest conv
     reaches HOT_CONV_ROWS; write_sinks emits the per-partition lineage
     metrics manifest."""
@@ -137,12 +137,11 @@ def test_auto_skew_selection_and_metrics(spark, transcripts, dims, tmp_path,
     from webalizer_spark.plans.pipeline import write_sinks
 
     monkeypatch.setattr(S, "HOT_CONV_ROWS", 100)  # fixture has >100-turn convs
-    S.release_skew_caches()
     res = run_pipeline(spark, transcripts, dims)
     try:
+        assert skew_calls, "the skew-safe path did not run"
         out = str(tmp_path / "sinks")
         counts = write_sinks(res, out)
-        assert S._SKEW_CACHES, "the skew-safe path did not run"
         m = json.load(open(f"{out}/_metrics.json"))
         assert m["sinks"] == {k: int(v) for k, v in counts.items()}
         assert sum(p["rows"] for p in m["spine_partitions"]) == \

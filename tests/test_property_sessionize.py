@@ -10,7 +10,6 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from webalizer_spark.operators.sessionize import (
-    release_skew_caches,
     sessionize,
     sessionize_skew_safe,
 )
@@ -57,11 +56,8 @@ def _skew_safe(df):
 def test_sessionize_matches_pandas_on_random_inputs(spark, path, rows):
     df = (spark.createDataFrame(rows, "conv_id string, turn_idx int, es long")
           .withColumn("ts", st_ts()))
-    try:
-        got = {(r["conv_id"], r["turn_idx"]): r["session_seq"]
-               for r in path(df).collect()}
-    finally:
-        release_skew_caches()
+    got = {(r["conv_id"], r["turn_idx"]): r["session_seq"]
+           for r in path(df).collect()}
     assert got == _pandas_sessions(rows)
 
 

@@ -179,7 +179,7 @@ def test_second_incremental_run_preserves_prior_state(spark, parsed_ok):
 
 
 def test_resume_sessionize_skew_safe_matches_window(spark, parsed_ok, halves,
-                                                    monkeypatch):
+                                                    monkeypatch, skew_calls):
     """Resume composes with the range-partitioned skew path: identical
     per-row output to the window path."""
     from webalizer_spark.operators import sessionize as S
@@ -191,34 +191,14 @@ def test_resume_sessionize_skew_safe_matches_window(spark, parsed_ok, halves,
 
     cols = ["conv_id", "turn_idx", "is_new_session", "session_seq"]
     new = resume_filter(parsed_ok, ckpt)
-    S.release_skew_caches()
     a = (resume_sessionize(new, ckpt).select(*cols).toPandas()
          .sort_values(["conv_id", "turn_idx"]).reset_index(drop=True))
-    assert not S._SKEW_CACHES      # small convs: the window path
+    assert not skew_calls          # small convs: the window path
     monkeypatch.setattr(S, "HOT_CONV_ROWS", 1)
     b = (resume_sessionize(new, ckpt).select(*cols).toPandas()
          .sort_values(["conv_id", "turn_idx"]).reset_index(drop=True))
-    assert S._SKEW_CACHES          # the skew-safe path ran
-    S.release_skew_caches()
+    assert skew_calls              # the skew-safe path ran
     assert a.equals(b)
-
-
-def test_skew_cache_released(spark, parsed_ok):
-    """sessionize_skew_safe registers its ranged cache; release drops it."""
-    from webalizer_spark.operators.sessionize import (
-        _SKEW_CACHES,
-        release_skew_caches,
-        sessionize_skew_safe,
-    )
-
-    out = sessionize_skew_safe(parsed_ok)
-    out.count()
-    assert len(_SKEW_CACHES) >= 1
-    cached = _SKEW_CACHES[-1]
-    assert cached.storageLevel.useMemory or cached.storageLevel.useDisk
-    release_skew_caches()
-    assert not _SKEW_CACHES
-    assert not (cached.storageLevel.useMemory or cached.storageLevel.useDisk)
 
 
 def test_tableio_merge_upsert(spark, tmp_path):

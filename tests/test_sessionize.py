@@ -1,6 +1,9 @@
 from __future__ import annotations
 
+from functools import partial
+
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from tests import oracle_pandas as O
@@ -54,7 +57,11 @@ def test_order_independence(spark, transcripts):
     assert a.equals(b)
 
 
-def test_session_semantics_handcrafted(spark):
+# two ranges on the skew-safe path, so a conv can straddle their boundary
+@pytest.mark.parametrize(
+    "path", [sessionize, partial(sessionize_skew_safe, num_partitions=2)],
+    ids=["window", "skew_safe"])
+def test_session_semantics_handcrafted(spark, path):
     rows = [
         # conv A: gaps 10s, 1800s (boundary => NEW), 1799s (same)
         ("A", 0, "2024-01-01 00:00:00"),
@@ -63,16 +70,29 @@ def test_session_semantics_handcrafted(spark):
         ("A", 3, "2024-01-01 01:00:09"),   # gap == 1799 -> same session
         # conv B: single turn
         ("B", 0, "2024-01-01 05:00:00"),
+        # convs F and P lie outside pandas' nanosecond timestamp range
+        # (after 2262-04-11, before 1677-09-21); Spark's microsecond
+        # timestamps hold them, so both paths must too
+        ("F", 0, "2300-01-01 00:00:00"),
+        ("F", 1, "2300-01-01 00:29:59"),   # gap == 1799 -> same session
+        ("F", 2, "2300-01-01 01:00:00"),   # gap == 1801 -> new session
+        ("P", 0, "1600-06-01 00:00:00"),
+        ("P", 1, "1600-06-01 00:30:00"),   # gap == 1800 -> new session
+        ("P", 2, "1600-06-01 00:30:05"),   # gap == 5 -> same session
     ]
     df = spark.createDataFrame(rows, "conv_id string, turn_idx int, ts_s string") \
               .withColumn("ts", F.col("ts_s").cast("timestamp")).drop("ts_s")
     got = {(r["conv_id"], r["turn_idx"]): (r["is_new_session"], r["session_seq"])
-           for r in sessionize(df).collect()}
+           for r in path(df).collect()}
     assert got[("A", 0)] == (True, 1)
     assert got[("A", 1)] == (False, 1)
     assert got[("A", 2)] == (True, 2)    # >= timeout starts a new visit
     assert got[("A", 3)] == (False, 2)
     assert got[("B", 0)] == (True, 1)
+    assert [got[("F", i)] for i in range(3)] == [(True, 1), (False, 1),
+                                                 (True, 2)]
+    assert [got[("P", i)] for i in range(3)] == [(True, 1), (True, 2),
+                                                 (False, 2)]
 
 
 def test_entry_exit_counts(spark, transcripts, fixture_dir):

@@ -75,14 +75,11 @@ class PipelineResult:
     cached_aggs: list[DataFrame] = field(default_factory=list)
 
     def unpersist(self) -> None:
-        from webalizer_spark.operators.sessionize import release_skew_caches
-
         self.enriched.unpersist()
         if self.parsed is not None:
             self.parsed.unpersist()
         for df in self.cached_aggs:
             df.unpersist()
-        release_skew_caches()
 
 
 def run_pipeline(
@@ -157,8 +154,8 @@ def run_pipeline(
     # joins are row-preserving 1:at-most-1 broadcasts, so running them
     # AFTER the window moves their five added columns (four of them
     # strings) out of the conv_id Exchange — and out of the skew path's
-    # Arrow hop — with row-for-row identical output. A final select
-    # restores the historical spine column order.
+    # range shuffle and local checkpoint — with row-for-row identical
+    # output. A final select restores the historical spine column order.
     # sessionizer override: resume mode passes a checkpoint-stitching
     # variant (plans/checkpoint.resume_sessionize) so numbering continues
     # the saved state. Otherwise the path is picked from the data; the
