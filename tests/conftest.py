@@ -15,8 +15,9 @@ FIXTURE_BASE = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__fi
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="webalizer_spark_tests", shuffle_partitions=8,
-                  extra_confs={"spark.ui.showConsoleProgress": "false"})
+    s = get_spark(app_name="webalizer_spark_tests",
+                  extra_confs={"spark.sql.shuffle.partitions": "8",
+                               "spark.ui.showConsoleProgress": "false"})
     yield s
 
 

@@ -413,8 +413,7 @@ def test_semantic_dedup_cluster_path(spark):
                     | {r["vec_b"] for r in pairs})
     for cents in (fixed_centroids(emb, 4), None):
         kept = {r["vec_id"]
-                for r in semantic_dedup(emb, 0.45, n_cells=8,
-                                        centroids=cents)
+                for r in semantic_dedup(emb, 0.45, centroids=cents)
                 .select("vec_id").collect()}
         dropped = all_ids - kept
         assert dropped <= in_some_pair
@@ -422,6 +421,5 @@ def test_semantic_dedup_cluster_path(spark):
 
     # hot-cell cap: capping every cell to 1 member leaves no pairs at
     # all -> nothing is dropped (and the drop is logged, not silent)
-    kept_capped = semantic_dedup(emb, 0.45, n_cells=2,
-                                 max_cell_size=1).count()
+    kept_capped = semantic_dedup(emb, 0.45, max_cell_size=1).count()
     assert kept_capped == len(all_ids)

@@ -47,6 +47,39 @@ def test_routed_row_equality_errors(result, oracle):
     assert got_set == ref_set
 
 
+def test_errors_sink_keeps_raw_line(spark, dims):
+    """The errors sink holds each bad turn's input line exactly, per
+    (conv_id, turn_idx), under both grok strategies: the grok reads a
+    sanitized copy, so control characters and text past its 4,096-char
+    bound survive in the sink. A good line still parses to its fields."""
+    import datetime as dt
+
+    good = ('actor0 - u1 [01/Feb/2024:10:00:00 +0000] '
+            '"GET /t/x PROTO/1.1" 200 10 "-" "a/1.0 (os)"')
+    ts = dt.datetime(2024, 2, 1, 10)
+    rows = [("c1", 0, "user", "corrupt\tline\x01 with ctl", None, ts),
+            ("c1", 1, "user", "y" * 5000, None, ts),
+            ("c2", 0, "user", good, "t", ts)]
+    df = spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string,"
+              " tool string, ts timestamp")
+    for strategy in ("split", "pandas"):
+        res = run_pipeline(spark, df, dims, grok_strategy=strategy)
+        try:
+            got = {(r["conv_id"], r["turn_idx"]): r["text"]
+                   for r in res.errors.collect()}
+            assert got == {("c1", 0): rows[0][3], ("c1", 1): rows[1][3]}, \
+                strategy
+            (r,) = res.enriched.collect()
+            assert (r["actor"], r["ident"], r["auth_user"], r["verb"],
+                    r["path"], r["status"], r["nbytes"], r["referrer"],
+                    r["agent_str"], r["ts_text"]) == (
+                "actor0", None, "u1", "GET", "t/x", 200, 10, None,
+                "a/1.0 (os)", ts), (strategy, r)
+        finally:
+            res.unpersist()
+
+
 def test_daily_totals_match_oracle(result, oracle):
     _, _, _, sessions = oracle
     got = (result.reports["daily"].toPandas()

@@ -225,7 +225,7 @@ def test_semantic_dedup_cell_equi_join_no_cartesian(spark):
     from webalizer_spark.operators.similarity import semantic_dedup
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    plan = _plan(semantic_dedup(emb, threshold=0.45, n_cells=4))
+    plan = _plan(semantic_dedup(emb, threshold=0.45))
     assert "CartesianProduct" not in plan
 
 

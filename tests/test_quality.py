@@ -68,7 +68,7 @@ def test_lm_perplexity_known_values(spark):
 
     train = _docs(spark, [(1, "a a b"), (2, "b c")])
     # counts: a=2 b=2 c=1, total=5, vocab=3; denom = 5 + .5*4 = 7
-    lm = unigram_logprobs(train, alpha=0.5)
+    lm = unigram_logprobs(train)
     got = {r["token"]: r["logp"] for r in lm.collect()}
     assert abs(got["a"] - math.log(2.5 / 7)) < 1e-12
     assert abs(got["c"] - math.log(1.5 / 7)) < 1e-12
@@ -167,20 +167,19 @@ def test_pagerank_matches_dense_reference(spark):
 
 
 def test_normalize_text_rules(spark):
-    """NFC composes combining sequences, NFKC folds compatibility forms,
-    controls strip while tab/newline collapse as whitespace, `changed`
-    marks only rewritten rows, NULL text passes through, and unknown
-    forms refuse."""
-    import pytest
-
+    """NFC composes combining sequences and keeps compatibility forms,
+    C0/C1 controls strip while tab/newline collapse as whitespace,
+    `changed` marks only rewritten rows, and NULL text passes
+    through."""
     from webalizer_spark.operators.quality import normalize_text
 
     docs = spark.createDataFrame(
         [(1, "éclair  stuffed"),        # combining acute + ws run
          (2, "clean text"),
          (3, "ctl\x01\x02here"),
-         (4, "ﬁne ligature"),            # ﬁ — NFKC-only fold
-         (5, None)],
+         (4, "ﬁne ligature"),            # ﬁ — a compatibility form
+         (5, None),
+         (6, "c1\x85ctl")],              # U+0085 NEL, a C1 control
         "doc_id long, text string")
     out = {r["doc_id"]: r for r in normalize_text(docs).collect()}
     assert out[1]["text"] == "éclair stuffed" and out[1]["changed"]
@@ -189,30 +188,14 @@ def test_normalize_text_rules(spark):
     assert out[4]["text"] == "ﬁne ligature"    # NFC keeps ligature
     assert not out[4]["changed"]
     assert out[5]["text"] is None and not out[5]["changed"]
-
-    nfkc = {r["doc_id"]: r["text"]
-            for r in normalize_text(docs, form="NFKC").collect()}
-    assert nfkc[4] == "fine ligature"               # ligature folds
-
-    # order matters: NFKC folds NBSP INTO whitespace, and because the
-    # form runs BEFORE the collapse, the introduced space collapses too
-    nb = spark.createDataFrame([(21, "a  b"), (22, "c1ctl")],
-                               "doc_id long, text string")
-    nbo = {r["doc_id"]: r for r in
-           normalize_text(nb, form="NFKC").collect()}
-    assert nbo[21]["text"] == "a b" and nbo[21]["changed"]
     # C1 controls (U+0085 NEL and friends) strip per the C0/C1 contract
-    assert nbo[22]["text"] == "c1ctl" and nbo[22]["changed"]
-
-    with pytest.raises(ValueError, match="normalization form"):
-        normalize_text(docs, form="NFX")
+    assert out[6]["text"] == "c1ctl" and out[6]["changed"]
 
 
 def test_normalize_text_idempotent(spark):
     """Normalization is a projection: applying the pass to its own
-    output changes nothing (NFC and NFKC are idempotent, the collapse
-    and strip leave no residue), so changed=False on every second-pass
-    row."""
+    output changes nothing (NFC is idempotent, the collapse and strip
+    leave no residue), so changed=False on every second-pass row."""
     from webalizer_spark.operators.quality import normalize_text
 
     docs = spark.createDataFrame(
@@ -220,19 +203,17 @@ def test_normalize_text_idempotent(spark):
          (2, "plain"),
          (3, None)],
         "doc_id long, text string")
-    for form in ("NFC", "NFKC"):
-        once = normalize_text(docs, form=form)
-        twice = normalize_text(once, form=form)
-        rows = {r["doc_id"]: r for r in twice.collect()}
-        assert not any(r["changed"] for r in rows.values())
-        first = {r["doc_id"]: r["text"] for r in once.collect()}
-        assert {k: v["text"] for k, v in rows.items()} == first
+    once = normalize_text(docs)
+    twice = normalize_text(once)
+    rows = {r["doc_id"]: r for r in twice.collect()}
+    assert not any(r["changed"] for r in rows.values())
+    first = {r["doc_id"]: r["text"] for r in once.collect()}
+    assert {k: v["text"] for k, v in rows.items()} == first
 
 
-def test_tf_idf_min_df_prunes_hapax(spark):
-    """min_df drops terms below the document-frequency floor BEFORE the
-    weight join (the Zipf-tail prune): hapax terms vanish at min_df=2
-    while shared terms keep exact tf/df; idf is the smoothed form."""
+def test_tf_idf_weights(spark):
+    """Every (doc, term) pair gets its exact tf and df, hapax terms
+    included; idf is the smoothed form."""
     import math
 
     from webalizer_spark.operators.quality import tf_idf
@@ -240,15 +221,15 @@ def test_tf_idf_min_df_prunes_hapax(spark):
     docs = _docs(spark, [(1, "apple banana apple"),
                          (2, "banana cherry"),
                          (3, "banana")])
-    out = {(r["doc_id"], r["term"]): r
-           for r in tf_idf(docs, min_df=2).collect()}
-    assert all(t == "banana" for _, t in out)      # apple/cherry pruned
+    out = {(r["doc_id"], r["term"]): r for r in tf_idf(docs).collect()}
+    assert set(out) == {(1, "apple"), (1, "banana"), (2, "banana"),
+                        (2, "cherry"), (3, "banana")}
     assert out[(1, "banana")]["tf"] == 1 and out[(1, "banana")]["df"] == 3
     expect = round(1 * (math.log((3 + 1) / (3 + 1)) + 1.0), 6)
     assert out[(3, "banana")]["tfidf"] == expect   # idf = 1 at df == N
-
-    allterms = {r["term"] for r in tf_idf(docs, min_df=1).collect()}
-    assert allterms == {"apple", "banana", "cherry"}
+    assert out[(1, "apple")]["tf"] == 2 and out[(1, "apple")]["df"] == 1
+    expect = round(2 * (math.log((3 + 1) / (1 + 1)) + 1.0), 6)
+    assert out[(1, "apple")]["tfidf"] == expect
 
 
 def test_lm_perplexity_rejects_lm_without_unk(spark):
@@ -319,12 +300,8 @@ def test_dedup_substrings_no_text_through_anchor_exchange(spark):
 
 
 def test_profile_table_semantics(spark):
-    """profile_table: null counting, exact distincts, the min/max
-    render policy (double -> DECIMAL(18,6) string), column subset,
-    unknown-column and empty refusals, and the approx tier staying
-    within HLL tolerance."""
-    import pytest
-
+    """profile_table: null counting, exact distincts and the min/max
+    render policy (double -> DECIMAL(18,6) string)."""
     from webalizer_spark.operators.quality import profile_table
 
     rows = [(1, 2.5, "a"), (2, None, "b"), (3, 0.1234567, "b"),
@@ -340,43 +317,13 @@ def test_profile_table_semantics(spark):
     assert prof["score"]["max_val"] == "2.500000"
     assert prof["tag"]["min_val"] == "a" and prof["tag"]["max_val"] == "b"
 
-    sub = profile_table(df, columns=["tag"]).collect()
-    assert len(sub) == 1 and sub[0]["column_name"] == "tag"
-
-    with pytest.raises(ValueError, match="unknown columns"):
-        profile_table(df, columns=["nope"])
-    with pytest.raises(ValueError, match="at least one"):
-        profile_table(df, columns=[])
-
-    approx = {r["column_name"]: r
-              for r in profile_table(df, exact=False).collect()}
-    for c in prof:
-        exact_nd, approx_nd = prof[c]["n_distinct"], approx[c]["n_distinct"]
-        assert abs(approx_nd - exact_nd) <= max(1, int(0.2 * exact_nd))
-
-
-def test_profile_table_single_aggregate_plan(spark):
-    """The exact=False tier must compile to ONE aggregate pass with no
-    Expand (the multi-count_distinct Expand is the thing the approx
-    tier exists to avoid at scale)."""
-    from webalizer_spark.operators.quality import profile_table
-
-    df = spark.range(100).selectExpr("id", "id % 7 AS a",
-                                     "CAST(id % 3 AS STRING) AS b")
-    plan = profile_table(df, exact=False)._jdf.queryExecution() \
-        .executedPlan().toString()
-    assert "Expand" not in plan
-    exact_plan = profile_table(df, exact=True)._jdf.queryExecution() \
-        .executedPlan().toString()
-    assert "Expand" in exact_plan  # documents the exact-tier trade
-
 
 def test_bigram_perplexity_semantics(spark):
     """lm_perplexity_bigram vs a from-scratch numpy re-derivation on a
     tiny corpus: doc-initial tokens score unigram-only, seen bigrams
     get the interpolated conditional, unseen bigrams fall to the
-    smoothing floor; lam bounds refuse; word order MATTERS (the
-    property unigram perplexity lacks)."""
+    smoothing floor; word order MATTERS (the property unigram
+    perplexity lacks)."""
     import math
 
     import pytest
@@ -426,9 +373,6 @@ def test_bigram_perplexity_semantics(spark):
         "doc_id bigint, text string")
     g2 = {r["doc_id"]: r["ppl"] for r in lm_perplexity_bigram(docs2).collect()}
     assert g2[3] > g2[1]
-
-    with pytest.raises(ValueError, match="lam"):
-        lm_perplexity_bigram(docs, lam=1.0)
 
 
 def test_pii_stats_chain_order_and_counts(spark):

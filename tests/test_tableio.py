@@ -22,8 +22,8 @@ def test_merge_sql_statement():
         "WHEN MATCHED THEN UPDATE SET *\n"
         "WHEN NOT MATCHED THEN INSERT *")
     # composite keys AND-ed in order
-    sql2 = merge_sql("c.t", ["a", "b"], source="src")
-    assert "ON t.a = s.a AND t.b = s.b" in sql2 and "USING src s" in sql2
+    sql2 = merge_sql("c.t", ["a", "b"])
+    assert "ON t.a = s.a AND t.b = s.b" in sql2
 
 
 def test_parquet_merge_matches_merge_into_semantics(spark, tmp_path):

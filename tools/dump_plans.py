@@ -58,7 +58,7 @@ SECTIONS = [
      lambda spark: _ungraded(spark, "doc_lm_ppl2")),
     ("evt_profile — one-pass table profile (exact tier)",
      "ONE aggregate over the table (the exact multi-distinct Expand is "
-     "the documented trade; exact=False removes it), then a narrow "
+     "the documented trade for oracle parity), then a narrow "
      "literal-array explode — no per-column scans.",
      lambda spark: _ungraded(spark, "evt_profile")),
 ]

@@ -89,8 +89,8 @@ class GenParams:
     corrupt_p: float = 0.01
 
 
-def _zipf_weights(n: int, s: float = 1.1) -> np.ndarray:
-    w = 1.0 / np.arange(1, n + 1) ** s
+def _zipf_weights(n: int) -> np.ndarray:
+    w = 1.0 / np.arange(1, n + 1) ** 1.1
     return w / w.sum()
 
 
@@ -213,8 +213,7 @@ def _gen_chunk(conv_lo: int, sizes: np.ndarray, starts_us: np.ndarray,
     return tbl.take(pa.array(perm))
 
 
-def gen_transcripts(out_dir: str, params: GenParams | None = None,
-                    convs_per_chunk: int = 50_000) -> str:
+def gen_transcripts(out_dir: str, params: GenParams | None = None) -> str:
     """Write transcripts.parquet under out_dir; returns the file path."""
     p = params or GenParams()
     os.makedirs(out_dir, exist_ok=True)
@@ -229,6 +228,8 @@ def gen_transcripts(out_dir: str, params: GenParams | None = None,
     # a single-file local fixture (100 TB inputs have many files anyway)
     writer = pq.ParquetWriter(path, TRANSCRIPT_SCHEMA)
     row_group_rows = 128 * 1024
+    # the chunk size seeds each chunk's rng: changing it changes the data
+    convs_per_chunk = 50_000
     try:
         for lo in range(0, p.n_convs, convs_per_chunk):
             hi = min(lo + convs_per_chunk, p.n_convs)

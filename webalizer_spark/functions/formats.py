@@ -4,9 +4,9 @@ The reference dispatches on LogType to four parsers [parser.c
 ƒparse_record ~40 dispatching to ƒparse_record_web (CLF/combined),
 ƒparse_record_ftp (xferlog), ƒparse_record_squid (native), and
 ƒparse_record_w3c (#Fields-driven)]. The engine's recast: per-format
-regexes normalized into the SAME canonical raw-field struct, with
-format either declared (config, like the reference's LogType) or
-detected per row by cheap shape tests — a `when()` ladder, zero Python.
+regexes normalized into the SAME canonical raw-field struct, with the
+format detected per row by cheap shape tests — a `when()` ladder, zero
+Python — where the reference reads it from its LogType setting.
 
 Canonical fields: actor ident auth_user dt_text verb path status_text
 bytes_text referrer agent_str (GROK_FIELDS). Formats that lack a field
@@ -247,7 +247,7 @@ _W3C_CANONICAL = {
 }
 
 
-def w3c_field_order(df: DataFrame, text_col: str = "text") -> list[str]:
+def w3c_field_order(df: DataFrame) -> list[str]:
     """Extract the #Fields: directive that defines this table's field
     order [parser.c ƒparse_record_w3c: the directive precedes data rows].
 
@@ -257,9 +257,9 @@ def w3c_field_order(df: DataFrame, text_col: str = "text") -> list[str]:
     field orders must be split per source file first; we raise rather
     than silently mis-map.
     """
-    rows = (df.filter(F.col(text_col).startswith("#Fields:"))
-            .select(text_col).distinct().collect())
-    orders = {tuple(r[text_col].split()[1:]) for r in rows}
+    rows = (df.filter(F.col("text").startswith("#Fields:"))
+            .select("text").distinct().collect())
+    orders = {tuple(r["text"].split()[1:]) for r in rows}
     if not orders:
         raise ValueError("w3c: no #Fields: directive found")
     if len(orders) > 1:
@@ -298,36 +298,31 @@ def _pack_w3c(text: Column, fields: Sequence[str]) -> Column:
     return F.concat(F.lit(_US), F.concat_ws(_US, *cells))
 
 
-def apply_grok_multi(df: DataFrame, text_col: str = "text",
-                     format_col: str | None = None,
-                     w3c_fields: Sequence[str] | None = None,
-                     sanitize_text: bool = False) -> DataFrame:
-    """Format-dispatched grok: adds `log_format` + the canonical
-    GROK_FIELDS raw columns. Each format's regex runs only on its rows
-    (the when() ladder short-circuits), all JVM-side.
+def apply_grok_multi(df: DataFrame,
+                     w3c_fields: Sequence[str] | None = None) -> DataFrame:
+    """Format-dispatched grok of the `text` column: adds `log_format` +
+    the canonical GROK_FIELDS raw columns. Each format's regex runs only
+    on its rows (the when() ladder short-circuits), all JVM-side.
 
-    w3c_fields: the #Fields: order (from w3c_field_order() or config).
-    Without it, rows detected as w3c yield NULL fields (routed as bad);
+    w3c_fields: the #Fields: order (from w3c_field_order()). Without
+    it, rows detected as w3c yield NULL fields (routed as bad);
     directive rows ('#...') always yield NULL fields — the caller skips
     them like the reference does [parser.c: directives are neither hits
     nor errors].
 
     PLAN NOTE: format detection runs on the RAW text head (cheap rlikes
-    over 40 chars) while sanitize (sanitize_text) nests INSIDE the pack
-    branches. Sanitizing in a prior projection looks cleaner but
-    CollapseProject merges it into the detection projection and the
-    full-text regex then evaluates TWICE per row (measured in the plan);
-    nested in the exclusive when() branches it runs exactly once. The
-    output `text` column stays the raw line — the errors sink preserves
-    the original bytes, like the reference's Debug dump.
+    over 40 chars) while sanitize nests INSIDE the pack branches.
+    Sanitizing in a prior projection looks cleaner but CollapseProject
+    merges it into the detection projection and the full-text regex
+    then evaluates TWICE per row (measured in the plan); nested in the
+    exclusive when() branches it runs exactly once. The output `text`
+    column stays the raw line — the errors sink preserves the original
+    bytes, like the reference's Debug dump.
     """
-    src = sanitize(F.col(text_col)) if sanitize_text else F.col(text_col)
-    if format_col:
-        fmt = F.col(format_col)
-    else:
-        fmt = detect_format(
-            F.col(text_col),
-            default="w3c" if w3c_fields is not None else "combined")
+    text = F.col("text")
+    src = sanitize(text)
+    fmt = detect_format(
+        text, default="w3c" if w3c_fields is not None else "combined")
     tagged = df.withColumn("log_format", fmt)
     ladder = (
         F.when(F.col("log_format") == "squid",
@@ -343,7 +338,7 @@ def apply_grok_multi(df: DataFrame, text_col: str = "text",
     if w3c_fields is not None:
         ladder = ladder.when(
             (F.col("log_format") == "w3c")
-            & ~F.col(text_col).startswith("#"),
+            & ~text.startswith("#"),
             _pack_w3c(src, w3c_fields))
     packed = ladder.otherwise(
         F.when(F.col("log_format") == "w3c", src)  # no field mapping

@@ -19,11 +19,12 @@ def url_decode(col: Column) -> Column:
     return F.coalesce(F.try_url_decode(col), col)
 
 
-def sanitize(col: Column, max_len: int = 4096) -> Column:
+def sanitize(col: Column) -> Column:
     """Bound + clean a string field [webalizer.h MAX* caps; ƒisurlchar].
 
-    Truncation is the reference's memory-safety valve; here it bounds
-    adversarial rows so a single huge `text` cannot blow an executor.
+    Truncation to 4,096 characters is the reference's memory-safety
+    valve; here it bounds adversarial rows so a single huge `text`
+    cannot blow an executor.
     Control characters are stripped like ƒisurlchar rejects them.
 
     translate() deletes the same fixed character set the old
@@ -34,7 +35,7 @@ def sanitize(col: Column, max_len: int = 4096) -> Column:
     per-task work).
     """
     ctl = "".join(chr(c) for c in [*range(0x20), 0x7F])
-    return F.translate(F.substring(col, 1, max_len), ctl, "")
+    return F.translate(F.substring(col, 1, 4096), ctl, "")
 
 
 def get_domain(host: Column, levels: int = 2) -> Column:
@@ -99,9 +100,7 @@ REDACT_PATTERNS: tuple[tuple[str, str], ...] = (
 )
 
 
-def url_canonicalize(url: Column,
-                     drop_params: tuple[str, ...] = (
-                         "utm_", "fbclid", "gclid", "ref")) -> Column:
+def url_canonicalize(url: Column) -> Column:
     """Canonical URL form for URL-level dedup — the normalization a
     web-corpus pipeline applies before grouping by page identity
     (extends the reference's URL handling [webalizer.c ƒunescape /
@@ -111,8 +110,8 @@ def url_canonicalize(url: Column,
     - lowercase scheme and host
     - drop default ports (``:80`` for http, ``:443`` for https)
     - empty path -> ``/``
-    - drop tracking query params (prefix match on ``drop_params``;
-      bare ``ref`` matches exactly or as ``ref=``), sort survivors
+    - drop tracking query params (``utm_*``; ``fbclid``, ``gclid`` and
+      ``ref`` match exactly or as ``name=``), sort survivors
       byte-wise, drop the ``?`` when none survive
 
     Pure codegen expressions (regexp + array HOFs), no Python, no
@@ -130,17 +129,17 @@ def url_canonicalize(url: Column,
     rest = F.regexp_extract(u, r"^[^:]*://[^/?#]*([^#]*)", 1)
     path = F.substring_index(rest, "?", 1)
     path = F.when(path == "", F.lit("/")).otherwise(path)
-    return _url_rebuild(u, scheme, host, path, rest, drop_params)
+    return _url_rebuild(u, scheme, host, path, rest)
 
 
 def _url_rebuild(u: Column, scheme: Column, host: Column, path: Column,
-                 rest: Column, drop_params: tuple[str, ...]) -> Column:
+                 rest: Column) -> Column:
     query = F.when(rest.contains("?"),
                    F.regexp_extract(rest, r"\?(.*)$", 1)).otherwise("")
 
     def keep(p: Column) -> Column:
         cond = p != ""
-        for d in drop_params:
+        for d in ("utm_", "fbclid", "gclid", "ref"):
             if d.endswith("_"):
                 cond = cond & ~F.startswith(p, F.lit(d))
             else:

@@ -67,24 +67,24 @@ def _core() -> list[Column]:
     return [HITS(), FILES(), PAGE_ROWS(), ERRORS(), KBYTES()]
 
 
-def _grain(ts_col: str, grain: str) -> Column:
-    return F.date_trunc(grain, F.col(ts_col)).alias(f"{grain}_ts")
+def _grain(grain: str) -> Column:
+    return F.date_trunc(grain, F.col("ts")).alias(f"{grain}_ts")
 
 
-def time_totals(df: DataFrame, grain: str = "day", ts_col: str = "ts",
+def time_totals(df: DataFrame, grain: str = "day",
                 with_sessions: bool = False) -> DataFrame:
     """A7/A8/A9: hourly/daily/monthly totals incl. per-bucket distinct
     sites (reference daily table sd_htab) and visit starts."""
     metrics = [*_core(), SITES()]
     if with_sessions:
         metrics.append(VISITS())
-    return df.groupBy(_grain(ts_col, grain)).agg(*metrics)
+    return df.groupBy(_grain(grain)).agg(*metrics)
 
 
-def hour_of_day_profile(df: DataFrame, ts_col: str = "ts") -> DataFrame:
+def hour_of_day_profile(df: DataFrame) -> DataFrame:
     """A7 variant: the reference's hourly table is hour-OF-DAY within the
     month [webalizer.c th_* arrays] — a 24-row profile."""
-    return df.groupBy(F.hour(ts_col).alias("hour")).agg(*_core())
+    return df.groupBy(F.hour("ts").alias("hour")).agg(*_core())
 
 
 def per_site(df: DataFrame) -> DataFrame:
@@ -145,10 +145,10 @@ def per_class(df: DataFrame, class_col: str = "actor_class") -> DataFrame:
     return df.groupBy(class_col).agg(HITS(), FILES(), KBYTES())
 
 
-def month_summary(df: DataFrame, ts_col: str = "ts") -> DataFrame:
+def month_summary(df: DataFrame) -> DataFrame:
     """A9: month totals + distinct cardinalities (t_site/t_url/t_agent/
     t_user) — the webalizer.hist row [preserve.c ƒput_history]."""
-    return df.groupBy(_grain(ts_col, "month")).agg(
+    return df.groupBy(_grain("month")).agg(
         *_core(), VISITS(), SITES(),
         F.countDistinct("tool").alias("urls"),
         F.countDistinct("agent_str").alias("agents"),
@@ -183,18 +183,17 @@ def grouped_rollup(df: DataFrame, key: str,
 
 
 def rolling_zscore(df: DataFrame, value_col: str, order_col: str,
-                   partition_col: str | None = None, window: int = 7,
-                   z_threshold: float = 3.0) -> DataFrame:
+                   partition_col: str | None = None) -> DataFrame:
     """Rolling z-score anomaly detection over an (already-aggregated)
     time series — the traffic-spike flag on top of the daily rollup
-    family (A8): each row is scored against the mean/std of the
-    `window` PRECEDING units of order_col (the current row is excluded
-    so a spike cannot mask itself). The frame is a RANGE frame over a
-    NUMERIC order column (e.g. a day number), so calendar gaps shrink
-    the baseline instead of silently stretching it across weeks of
-    missing days, and rows sharing an order value get identical
-    windows (no arbitrary row-order tie-breaking — a ROWS frame over
-    duplicate keys is nondeterministic).
+    family (A8): each row is scored against the mean/std of the 7
+    PRECEDING units of order_col (the current row is excluded so a
+    spike cannot mask itself), and |z| > 3 flags an anomaly. The frame
+    is a RANGE frame over a NUMERIC order column (e.g. a day number),
+    so calendar gaps shrink the baseline instead of silently stretching
+    it across weeks of missing days, and rows sharing an order value get
+    identical windows (no arbitrary row-order tie-breaking — a ROWS
+    frame over duplicate keys is nondeterministic).
 
     Determinism recipe: the rolling mean/variance come from exact
     DECIMAL window sums of x and x^2 (x is cast to decimal BEFORE
@@ -213,7 +212,7 @@ def rolling_zscore(df: DataFrame, value_col: str, order_col: str,
     partial-aggregation path before this operator ever runs."""
     part = [partition_col] if partition_col else []
     w = Window.partitionBy(*part).orderBy(F.col(order_col)) \
-        .rangeBetween(-window, -1)
+        .rangeBetween(-7, -1)
     x = F.col(value_col).cast("double")
     xd = F.col(value_col).cast("decimal(19,0)")
     s = F.sum(F.col(value_col).cast("decimal(38,6)")).over(w) \
@@ -227,12 +226,11 @@ def rolling_zscore(df: DataFrame, value_col: str, order_col: str,
     return df.select(
         *df.columns,
         F.round(z, 6).alias("z"),
-        F.coalesce(F.abs(z) > z_threshold, F.lit(False))
+        F.coalesce(F.abs(z) > 3.0, F.lit(False))
         .alias("is_anomaly"))
 
 
-def cohort_retention(events: DataFrame, user_col: str = "user_id",
-                     ts_col: str = "ts") -> DataFrame:
+def cohort_retention(events: DataFrame) -> DataFrame:
     """Cohort retention over the event stream: users grouped by their
     FIRST-seen day (the cohort), then counted per (cohort_day,
     day_offset) where offset is days since the cohort day — the
@@ -242,14 +240,14 @@ def cohort_retention(events: DataFrame, user_col: str = "user_id",
 
     Scale shape: one groupBy(user) min-aggregation for cohort
     assignment (map-side partial), one distinct over (user, day)
-    activity pairs, then an equi-join on user_col — the join carries
-    only (user, day) pairs, never event payloads; the final
+    activity pairs, then an equi-join on user_id — the join carries
+    only (user_id, day) pairs, never event payloads; the final
     (cohort, offset) aggregate is tiny by construction. At whale user
     counts the join is the one shuffle and AQE sizes both sides."""
-    first = (events.groupBy(F.col(user_col).alias("u"))
-             .agg(F.min(F.to_date(F.col(ts_col))).alias("cohort_day")))
-    active = (events.select(F.col(user_col).alias("u"),
-                            F.to_date(F.col(ts_col)).alias("day"))
+    first = (events.groupBy(F.col("user_id").alias("u"))
+             .agg(F.min(F.to_date("ts")).alias("cohort_day")))
+    active = (events.select(F.col("user_id").alias("u"),
+                            F.to_date("ts").alias("day"))
               .distinct())
     return (active.join(first, "u")
             .groupBy("cohort_day",
@@ -258,10 +256,9 @@ def cohort_retention(events: DataFrame, user_col: str = "user_id",
             .withColumn("cohort_day", F.col("cohort_day").cast("string")))
 
 
-def funnel_counts(events: DataFrame, steps: list[str],
-                  user_col: str = "user_id", step_col: str = "event_type",
-                  ts_col: str = "ts") -> DataFrame:
-    """Ordered funnel conversion: how many users reached step k having
+def funnel_counts(events: DataFrame, steps: list[str]) -> DataFrame:
+    """Ordered funnel conversion over (user_id, event_type, ts): how
+    many users reached step k having
     passed steps 1..k-1 IN ORDER (each step's first occurrence must be
     strictly after the previous step's). One aggregation computes every
     user's first-occurrence time per step (pivot-style min-filter
@@ -271,8 +268,8 @@ def funnel_counts(events: DataFrame, steps: list[str],
     rollup)."""
     if len(steps) < 2:
         raise ValueError("a funnel needs at least 2 steps")
-    firsts = events.groupBy(F.col(user_col).alias("u")).agg(*[
-        F.min(F.when(F.col(step_col) == s, F.col(ts_col)))
+    firsts = events.groupBy(F.col("user_id").alias("u")).agg(*[
+        F.min(F.when(F.col("event_type") == s, F.col("ts")))
         .alias(f"_t{i}") for i, s in enumerate(steps)])
     reached = [F.col("_t0").isNotNull()]
     for i in range(1, len(steps)):

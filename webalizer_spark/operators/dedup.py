@@ -34,9 +34,16 @@ def _cap_hot_keys(keys: DataFrame, key_cols: list[str], cap: int | None,
     capping bounds the join output at cap^2 per bucket. cap=None disables
     (the exact, oracle-checked configuration). Never silent: the number
     of dropped keys is counted and logged (one cheap aggregate over the
-    key table — tiny next to the join it protects)."""
+    key table — tiny next to the join it protects).
+
+    Either way the returned table sits behind a checkpoint, so the
+    caller's self-join reads it twice without re-running the lineage
+    that built it (signatures, band aggregation, winnowing windows,
+    centroid scoring)."""
     if cap is None:
-        return keys
+        # lazy barrier: the key table is ids x keys rows, tiny next to
+        # the pipeline it summarizes
+        return keys.localCheckpoint(eager=False)
     # materialize the key table ONCE (it may sit on an expensive plan —
     # e.g. the full LSH signature projection): the count, the anti-join
     # left side, and the hot-key derivation all read the checkpoint
@@ -107,13 +114,6 @@ def lsh_candidate_pairs(sig: DataFrame, rows_per_band: int = 2,
                 lambda s: s["minhash"].cast("string")), ",").alias("band_key")))
     keys = _cap_hot_keys(keys, ["band", "band_key"], max_bucket_size,
                          "lsh_candidate_pairs")
-    if max_bucket_size is None:
-        # the self-join below reads keys twice; without a barrier each
-        # side re-runs the whole MinHash signature + band aggregation
-        # lineage (the cap path already materialized inside
-        # _cap_hot_keys). The key table is docs x bands rows — tiny
-        # next to the signature pipeline it summarizes.
-        keys = keys.localCheckpoint(eager=False)
     a, b = keys.alias("a"), keys.alias("b")
     return (a.join(b, (F.col("a.band") == F.col("b.band"))
                    & (F.col("a.band_key") == F.col("b.band_key"))
@@ -171,22 +171,22 @@ def jaccard_pairs(sh: DataFrame, threshold: float = 0.8,
             .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard")))
 
 
-def simhash(sh: DataFrame, bits: int = 16, id_col: str = "doc_id") -> DataFrame:
+def simhash(sh: DataFrame, bits: int = 16) -> DataFrame:
     """SimHash fingerprint: integer-exact bitwise majority vote."""
     spark = sh.sparkSession
     bits_df = spark.range(bits).select(F.col("id").cast("int").alias("j"))
     per_bit = (sh.withColumn("th", _hash64(F.col("shingle")))
                .crossJoin(F.broadcast(bits_df))
-               .groupBy(id_col, "j")
+               .groupBy("doc_id", "j")
                .agg(F.sum(F.expr("2 * (shiftright(th, j) & 1) - 1")).alias("w")))
     bit = F.when(F.col("w") >= 0,
                  F.pow(F.lit(2), F.col("j")).cast("bigint")).otherwise(F.lit(0))
-    return per_bit.groupBy(id_col).agg(
+    return per_bit.groupBy("doc_id").agg(
         F.sum(bit).cast("bigint").alias("simhash"))
 
 
 def simhash_pairs(sig: DataFrame, max_hamming: int = 2, bits: int = 16,
-                  n_blocks: int = 4, id_col: str = "doc_id",
+                  n_blocks: int = 4,
                   max_block_freq: int | None = None) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance <= max_hamming.
 
@@ -221,20 +221,15 @@ def simhash_pairs(sig: DataFrame, max_hamming: int = 2, bits: int = 16,
     keys = (sig.crossJoin(F.broadcast(blk))
             .withColumn("bval",
                         F.expr(f"shiftright(simhash, blk * {bw}) & {mask}"))
-            .select(id_col, "simhash", "blk", "bval"))
+            .select("doc_id", "simhash", "blk", "bval"))
     keys = _cap_hot_keys(keys, ["blk", "bval"], max_block_freq,
                          "simhash_pairs")
-    if max_block_freq is None:
-        # barrier before the self-join: sig is often the full SimHash
-        # token aggregation, which both join sides would otherwise
-        # recompute (the cap path materializes inside _cap_hot_keys)
-        keys = keys.localCheckpoint(eager=False)
     a, b = keys.alias("a"), keys.alias("b")
     cand = (a.join(b, (F.col("a.blk") == F.col("b.blk"))
                    & (F.col("a.bval") == F.col("b.bval"))
-                   & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-            .select(F.col(f"a.{id_col}").alias("doc_a"),
-                    F.col(f"b.{id_col}").alias("doc_b"),
+                   & (F.col("a.doc_id") < F.col("b.doc_id")))
+            .select(F.col("a.doc_id").alias("doc_a"),
+                    F.col("b.doc_id").alias("doc_b"),
                     F.col("a.simhash").alias("sh_a"),
                     F.col("b.simhash").alias("sh_b"))
             .distinct())
@@ -244,11 +239,11 @@ def simhash_pairs(sig: DataFrame, max_hamming: int = 2, bits: int = 16,
             .select("doc_a", "doc_b", "hamming"))
 
 
-def winnow_fingerprints(df: DataFrame, k: int = 3, window: int = 4,
-                        content_col: str = "text",
-                        id_col: str = "doc_id") -> DataFrame:
+def winnow_fingerprints(df: DataFrame, k: int = 3,
+                        window: int = 4) -> DataFrame:
     """Winnowing document fingerprints [Schleimer/Wilkerson/Aiken,
-    SIGMOD'03 — the MOSS algorithm]: hash every k-gram at its position,
+    SIGMOD'03 — the MOSS algorithm] of (doc_id, text) rows: hash every
+    k-gram at its position,
     slide a window of `window` consecutive k-gram hashes, select each
     window's minimum (rightmost on ties, per the paper), dedupe. Any
     shared substring of length >= window + k - 1 tokens is guaranteed
@@ -262,16 +257,16 @@ def winnow_fingerprints(df: DataFrame, k: int = 3, window: int = 4,
     engine-portable; oracle-checked vs DuckDB window functions
     (doc_winnow_fingerprints).
     """
-    toks = F.split(F.col(content_col), " ")
+    toks = F.split(F.col("text"), " ")
     n_grams = F.size(toks) - k + 1
     idx = F.when(n_grams > 0, F.sequence(F.lit(0), n_grams - 1)) \
         .otherwise(F.array().cast("array<int>"))
     grams = df.select(
-        id_col,
+        "doc_id",
         F.posexplode(F.transform(idx, lambda i: F.array_join(
             F.slice(toks, i + 1, k), " "))).alias("pos", "gram"))
-    hashed = grams.select(id_col, "pos", _hash64(F.col("gram")).alias("h"))
-    w = (Window.partitionBy(id_col).orderBy("pos")
+    hashed = grams.select("doc_id", "pos", _hash64(F.col("gram")).alias("h"))
+    w = (Window.partitionBy("doc_id").orderBy("pos")
          .rowsBetween(0, window - 1))
     # rightmost-min tie-break: min over (h, -pos) structs picks the
     # LARGEST pos among equal hashes — standard winnowing's rightmost-min
@@ -286,17 +281,16 @@ def winnow_fingerprints(df: DataFrame, k: int = 3, window: int = 4,
     # explosion + md5 a second time just to learn each doc's gram count
     # (round 7, guide §2.4); the per-doc table joins broadcast-style and
     # the gram-stream Exchange stays at its original 3 columns.
-    counts = (df.select(F.col(id_col), (n_grams - 1).alias("max_pos"))
+    counts = (df.select("doc_id", (n_grams - 1).alias("max_pos"))
               .where(n_grams > 0))
-    return (sel.join(counts, id_col)
+    return (sel.join(counts, "doc_id")
             .filter(F.col("pos") <= F.col("max_pos") - window + 1)
-            .select(id_col, F.col("win_min.h").alias("fingerprint"),
+            .select("doc_id", F.col("win_min.h").alias("fingerprint"),
                     (-F.col("win_min.np")).cast("int").alias("at_pos"))
             .distinct())
 
 
 def winnow_copy_pairs(fp: DataFrame, min_shared: int = 3,
-                      id_col: str = "doc_id",
                       max_fp_freq: int | None = None) -> DataFrame:
     """Copy detection over winnowing fingerprints — the MOSS match step:
     pairs of docs sharing >= min_shared selected fingerprints, via a
@@ -308,30 +302,26 @@ def winnow_copy_pairs(fp: DataFrame, min_shared: int = 3,
     copy signal — drop them (logged) before the join. None (default)
     keeps the exact join semantics (oracle-checked, doc_winnow_pairs).
     """
-    keys = fp.select(id_col, "fingerprint").distinct()
+    keys = fp.select("doc_id", "fingerprint").distinct()
     keys = _cap_hot_keys(keys, ["fingerprint"], max_fp_freq,
                          "winnow_copy_pairs")
-    if max_fp_freq is None:
-        # barrier before the self-join: fp is the winnowing window
-        # pipeline (k-gram hash + per-doc window min), which both join
-        # sides would otherwise recompute
-        keys = keys.localCheckpoint(eager=False)
     a, b = keys.alias("a"), keys.alias("b")
     return (a.join(b, (F.col("a.fingerprint") == F.col("b.fingerprint"))
-                   & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-            .groupBy(F.col(f"a.{id_col}").alias("doc_a"),
-                     F.col(f"b.{id_col}").alias("doc_b"))
+                   & (F.col("a.doc_id") < F.col("b.doc_id")))
+            .groupBy(F.col("a.doc_id").alias("doc_a"),
+                     F.col("b.doc_id").alias("doc_b"))
             .agg(F.count(F.lit(1)).alias("shared_fps"))
             .filter(F.col("shared_fps") >= min_shared))
 
 
-def connected_min_label(edges: DataFrame, max_rounds: int = 20) -> DataFrame:
+def connected_min_label(edges: DataFrame) -> DataFrame:
     """Connected components over (doc_a, doc_b) edges via iterative
     min-label propagation with pointer jumping: each round propagates
     labels across edges (join + groupBy) AND short-circuits each label
     to its label's label, so remaining chain depth HALVES per round —
     O(log diameter) rounds, not O(diameter). Long dup chains at corpus
-    scale converge in a handful of shuffles. Returns (v, label) where
+    scale converge in a handful of shuffles; the loop stops after 20
+    rounds whatever the labels. Returns (v, label) where
     label = min doc id of v's component. Deterministic; oracle-checked
     against a DuckDB recursive-CTE closure (doc_dup_components).
 
@@ -359,7 +349,7 @@ def connected_min_label(edges: DataFrame, max_rounds: int = 20) -> DataFrame:
     labels = (sym.groupBy("v")
               .agg(F.least(F.col("v"), F.min("u")).alias("label"))
               .localCheckpoint(eager=True))
-    for _ in range(max_rounds):
+    for _ in range(20):
         neigh = (sym.join(labels.select(F.col("v").alias("u"),
                                         F.col("label").alias("ulabel")), "u")
                  .groupBy("v").agg(F.min("ulabel").alias("nlabel")))

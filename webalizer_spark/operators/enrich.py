@@ -34,24 +34,22 @@ def enrich_role_class(df: DataFrame, role_class: DataFrame,
     )
 
 
-def enrich_tool_family(df: DataFrame, tool_family: DataFrame,
-                       tool_col: str = "tool") -> DataFrame:
+def enrich_tool_family(df: DataFrame, tool_family: DataFrame) -> DataFrame:
     """J2 analog: tool -> tool_family broadcast map (TLD->country recast).
 
     NULL tool (non-tool turn) maps to NULL family; unknown tool -> 'unknown'.
     """
     dim = F.broadcast(tool_family.select(
         F.col("tool").alias("_tf_tool"), "tool_family"))
-    out = df.join(dim, df[tool_col] == dim["_tf_tool"], "left").drop("_tf_tool")
+    out = df.join(dim, df["tool"] == dim["_tf_tool"], "left").drop("_tf_tool")
     return out.withColumn(
         "tool_family",
-        F.when(F.col(tool_col).isNull(), F.lit(None))
+        F.when(F.col("tool").isNull(), F.lit(None))
         .otherwise(F.coalesce("tool_family", F.lit("unknown"))),
     )
 
 
-def enrich_size_class(df: DataFrame, byte_ranges: DataFrame,
-                      bytes_col: str = "nbytes") -> DataFrame:
+def enrich_size_class(df: DataFrame, byte_ranges: DataFrame) -> DataFrame:
     """J3 analog: numeric range lookup (GeoDB ip-in-[lo,hi] recast).
 
     Broadcast + BETWEEN condition -> BroadcastNestedLoopJoin. With a ~6-row
@@ -59,18 +57,17 @@ def enrich_size_class(df: DataFrame, byte_ranges: DataFrame,
     are non-overlapping so the join is 1:at-most-1.
     """
     dim = F.broadcast(byte_ranges.select("lo", "hi", "size_class"))
-    cond = (F.col(bytes_col) >= F.col("lo")) & (F.col(bytes_col) <= F.col("hi"))
+    cond = (F.col("nbytes") >= F.col("lo")) & (F.col("nbytes") <= F.col("hi"))
     return df.join(dim, cond, "left").drop("lo", "hi").withColumn(
         "size_class", F.coalesce("size_class", F.lit("unknown")))
 
 
-def enrich_search_terms(df: DataFrame, engine_params: DataFrame,
-                        referrer_col: str = "referrer") -> DataFrame:
+def enrich_search_terms(df: DataFrame, engine_params: DataFrame) -> DataFrame:
     """J4 analog: SearchEngine list match + query-param term extraction
     [webalizer.c ƒsrch_string]. Adds `engine_host` and `search_term`
     (NULL when the referrer is absent or not a known engine).
     """
-    host = F.parse_url(F.col(referrer_col), F.lit("HOST"))
+    host = F.parse_url(F.col("referrer"), F.lit("HOST"))
     dim = F.broadcast(engine_params.select(
         F.col("engine_host").alias("_ep_host"), "query_param"))
     out = (
@@ -80,7 +77,7 @@ def enrich_search_terms(df: DataFrame, engine_params: DataFrame,
     )
     term = F.when(
         F.col("query_param").isNotNull(),
-        search_terms(F.col(referrer_col), F.col("query_param")),
+        search_terms(F.col("referrer"), F.col("query_param")),
     )
     return (
         out.withColumn("engine_host", F.col("_ref_host"))
@@ -132,15 +129,13 @@ def _cidr_bounds(cidr: str) -> tuple[int, int, int]:
     return start, start | (~mask & 0xFFFFFFFF), plen
 
 
-def enrich_ip_class(df: DataFrame, blocks: list[tuple[str, str]],
-                    ip_col: str = "actor",
-                    out_col: str = "ip_class",
-                    default: str = "unknown") -> DataFrame:
+def enrich_ip_class(df: DataFrame, blocks: list[tuple[str, str]]) -> DataFrame:
     """Longest-prefix-match CIDR classification — the GeoIP/netblock
     recast of the reference's country table `[webalizer.c ƒctry
-    hostname-TLD mapping (U)]`: each row's IPv4 gets the class of the
-    MOST SPECIFIC matching block (real CIDR semantics — an overlapping
-    /24 inside a /8 wins), NULL/malformed/unmatched rows the default.
+    hostname-TLD mapping (U)]`: each row's IPv4 `actor` gets, as
+    `ip_class`, the class of the MOST SPECIFIC matching block (real CIDR
+    semantics — an overlapping /24 inside a /8 wins),
+    NULL/malformed/unmatched rows 'unknown'.
 
     100 TB shape: the block table is bounded config, so it rides the
     plan as a LITERAL struct array and the whole classification is one
@@ -148,10 +143,10 @@ def enrich_ip_class(df: DataFrame, blocks: list[tuple[str, str]],
     Exchange, no shuffle of any kind (stronger than the J3 range-join
     shape: even the tiny dim never materializes as a relation)."""
     if not blocks:
-        # no netblocks configured: everything is the default class
+        # no netblocks configured: everything is 'unknown'
         # (an empty literal array would type as VOID and crash the
         # struct-field access with an opaque AnalysisException)
-        return df.withColumn(out_col, F.lit(default))
+        return df.withColumn("ip_class", F.lit("unknown"))
     rows = []
     for cidr, cls in blocks:
         start, end, plen = _cidr_bounds(cidr)
@@ -172,14 +167,14 @@ def enrich_ip_class(df: DataFrame, blocks: list[tuple[str, str]],
     best = F.get(F.reverse(F.array_sort(
         matches, lambda a, b: F.when(a["p"] < b["p"], -1)
         .when(a["p"] > b["p"], 1).otherwise(0))), 0)
-    return (df.withColumn("_ip_v", ip_aton(F.col(ip_col)))
-            .withColumn(out_col, F.coalesce(best["c"], F.lit(default)))
+    return (df.withColumn("_ip_v", ip_aton(F.col("actor")))
+            .withColumn("ip_class", F.coalesce(best["c"], F.lit("unknown")))
             .drop("_ip_v"))
 
 
-def parse_robots(robots: DataFrame, host_col: str = "host",
-                 text_col: str = "text") -> DataFrame:
-    """Parse robots.txt bodies into (host, agent, allow, prefix) rules
+def parse_robots(robots: DataFrame) -> DataFrame:
+    """Parse robots.txt bodies (host, text) into (host, agent, allow,
+    prefix) rules
     under the REP spec's grouping: consecutive User-agent lines STACK
     into one group and every following Allow/Disallow rule belongs to
     ALL of them (the classic parser gotcha); a new User-agent after a
@@ -194,8 +189,8 @@ def parse_robots(robots: DataFrame, host_col: str = "host",
     from pyspark.sql import Window
 
     lines = robots.select(
-        F.col(host_col).alias("host"),
-        F.posexplode(F.split(F.coalesce(F.col(text_col), F.lit("")), "\n"))
+        "host",
+        F.posexplode(F.split(F.coalesce(F.col("text"), F.lit("")), "\n"))
         .alias("i", "raw"))
     clean = F.trim(F.regexp_replace(F.col("raw"), "#.*$", ""))
     kind = (F.when(clean.rlike(r"(?i)^user-agent\s*:"), "ua")
@@ -229,10 +224,10 @@ def parse_robots(robots: DataFrame, host_col: str = "host",
             .select("host", "agent", "allow", "prefix"))
 
 
-def robots_filter(urls: DataFrame, rules: DataFrame, agent: str = "*",
-                  id_col: str = "url_id", host_col: str = "host",
-                  path_col: str = "path") -> DataFrame:
-    """Apply parsed robots rules to a URL table: per the REP spec, the
+def robots_filter(urls: DataFrame, rules: DataFrame,
+                  agent: str = "*") -> DataFrame:
+    """Apply parsed robots rules to a URL table (url_id, host, path):
+    per the REP spec, the
     applicable group is the SPECIFIC agent's rules when the host has
     any, else the '*' rules; among matching path prefixes the LONGEST
     wins, Allow beating Disallow on equal length; no matching rule
@@ -258,14 +253,14 @@ def robots_filter(urls: DataFrame, rules: DataFrame, agent: str = "*",
     # the groupBy with a NULL verdict -> allowed
     m = F.when(
         F.col("prefix").isNotNull()
-        & F.col(path_col).startswith(F.col("prefix")),
+        & F.col("path").startswith(F.col("prefix")),
         F.struct(F.length("prefix").alias("l"), F.col("allow").alias("a")))
     per_url = (urls.join(sel, "host", "left")
                .withColumn("_m", m)
-               .groupBy(id_col)
-               .agg(F.first(host_col).alias(host_col),
-                    F.first(path_col).alias(path_col),
+               .groupBy("url_id")
+               .agg(F.first("host").alias("host"),
+                    F.first("path").alias("path"),
                     F.max("_m").alias("_best")))
     return per_url.select(
-        id_col, host_col, path_col,
+        "url_id", "host", "path",
         F.coalesce(F.col("_best.a"), F.lit(True)).alias("allowed"))

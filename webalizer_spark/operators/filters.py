@@ -44,9 +44,7 @@ def wildcard_match(col: Column, patterns: Sequence[str]) -> Column:
     return F.coalesce(out, F.lit(False))
 
 
-def page_predicate(page_types: Sequence[str],
-                   path_col: str = "path",
-                   tool_col: str = "tool") -> Column:
+def page_predicate(page_types: Sequence[str]) -> Column:
     """P7: the "is this row a page?" predicate [webalizer.c ƒispage].
 
     With PageType patterns configured, reference ispage() semantics
@@ -58,8 +56,8 @@ def page_predicate(page_types: Sequence[str],
     tool-call turns are the page analog).
     """
     if not page_types:
-        return F.col(tool_col).isNotNull()
-    p = F.col(path_col)
+        return F.col("tool").isNotNull()
+    p = F.col("path")
     # ispage: cp2==str (last dot at index 0 or absent) or trailing '/'
     extension_less = F.locate(".", p, 2) == 0
     trailing_slash = p.endswith("/")

@@ -36,8 +36,10 @@ def parse_transcripts(df: DataFrame, strategy: str = "split") -> DataFrame:
     """
     if strategy == "multi":
         return parse_transcripts_multi(df)
-    clean = df.withColumn("text", sanitize(F.col("text")))
-    raw = apply_grok(clean, "text", strategy)
+    # the grok reads a sanitized copy; `text` stays the raw line, which
+    # the errors sink keeps
+    clean = df.withColumn("_grok_text", sanitize(F.col("text")))
+    raw = apply_grok(clean, "_grok_text", strategy)
     out = raw.select(
         *BASE_COLS,
         "actor",
@@ -65,12 +67,7 @@ def parse_transcripts(df: DataFrame, strategy: str = "split") -> DataFrame:
     return out.withColumn("parse_ok", parse_ok)
 
 
-def parse_transcripts_multi(
-    df: DataFrame,
-    format_col: str | None = None,
-    w3c_fields: list[str] | None = None,
-    drop_directives: bool = True,
-) -> DataFrame:
+def parse_transcripts_multi(df: DataFrame) -> DataFrame:
     """S2 end-to-end: LogType-dispatched parse producing the SAME typed
     schema as parse_transcripts for all four grammars [parser.c
     ƒparse_record dispatch].
@@ -81,8 +78,7 @@ def parse_transcripts_multi(
     FORMAT defines: xferlog has no verb/status [ƒparse_record_ftp fills
     blanks], so those are exempt there; all formats require
     actor/path/ts/bytes. W3C '#' directive rows are dropped (neither
-    hits nor errors, like the reference skips them); disable with
-    drop_directives=False to route them as bad records instead.
+    hits nor errors, like the reference skips them).
     """
     from webalizer_spark.functions.formats import (
         TS_PATTERNS,
@@ -90,18 +86,15 @@ def parse_transcripts_multi(
         w3c_field_order,
     )
 
-    if w3c_fields is None:
-        # one metadata-cheap pass over directive rows only
-        try:
-            w3c_fields = w3c_field_order(df)
-        except ValueError:
-            w3c_fields = None  # no w3c data in this table
+    # one metadata-cheap pass over directive rows only
+    try:
+        w3c_fields = w3c_field_order(df)
+    except ValueError:
+        w3c_fields = None  # no w3c data in this table
     # sanitize nests inside the grok branches (see apply_grok_multi plan
     # note) — exactly one full-text regex eval per row
-    raw = apply_grok_multi(df, "text", format_col, w3c_fields,
-                           sanitize_text=True)
-    if drop_directives:
-        raw = raw.filter(~F.col("text").startswith("#"))
+    raw = (apply_grok_multi(df, w3c_fields)
+           .filter(~F.col("text").startswith("#")))
     fmt = F.col("log_format")
     ts_text = (
         F.when(fmt == "squid",

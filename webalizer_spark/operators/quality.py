@@ -39,14 +39,14 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def _toks(text_col: str) -> Column:
-    return F.split(F.col(text_col), " ")
+def _toks() -> Column:
+    return F.split(F.col("text"), " ")
 
 
-def _toks_safe(text_col: str) -> Column:
+def _toks_safe() -> Column:
     """NULL text scores like the empty string (one '' unigram) instead
     of poisoning HOF aggregates with NULL arrays."""
-    return F.split(F.coalesce(F.col(text_col), F.lit("")), " ")
+    return F.split(F.coalesce(F.col("text"), F.lit("")), " ")
 
 
 # ---------------------------------------------------------------------------
@@ -59,13 +59,12 @@ def _span_key(span: Column) -> Column:
     return F.substring(F.md5(span), 1, 16)
 
 
-def duplicate_spans(docs: DataFrame, n: int = 8, id_col: str = "doc_id",
-                    text_col: str = "text") -> DataFrame:
+def duplicate_spans(docs: DataFrame, n: int = 8) -> DataFrame:
     """C4-style cross-document span duplication: every NON-OVERLAPPING
     n-token span that occurs more than once corpus-wide, minus one
     keeper occurrence (the first by (doc_id, span_idx)).
 
-    Returns (id_col, span_idx) rows to REMOVE — C4 "discard all but one
+    Returns (doc_id, span_idx) rows to REMOVE — C4 "discard all but one
     of any three-sentence span occurring more than once in the data
     set" recast to token windows, since the engine's corpus rows are
     untokenized word streams. Non-overlapping windows keep the exploded
@@ -78,10 +77,10 @@ def duplicate_spans(docs: DataFrame, n: int = 8, id_col: str = "doc_id",
     webalizer's hashed URL table `[hashtab.c ƒadd_url (U)]` onto
     corpus-level spans, like operators/dedup.py does for whole docs.
     """
-    toks = _toks(text_col)
+    toks = _toks()
     nspans = (F.size(toks) / n).cast("int")
     spans = (docs
-             .select(F.col(id_col),
+             .select(F.col("doc_id"),
                      F.posexplode(
                          F.transform(
                              F.sequence(F.lit(0), nspans - 1),
@@ -97,25 +96,24 @@ def duplicate_spans(docs: DataFrame, n: int = 8, id_col: str = "doc_id",
     # Exchange + a per-partition sort on the same 16-hex keys (round 7,
     # guide §2.4). Output rows are identical.
     w = Window.partitionBy("key")
-    me = F.struct(F.col(id_col), F.col("span_idx"))
+    me = F.struct(F.col("doc_id"), F.col("span_idx"))
     return (spans
             .withColumn("_cnt", F.count(F.lit(1)).over(w))
             .withColumn("_keep", F.min(me).over(w))
             .where((F.col("_cnt") > 1) & (me != F.col("_keep")))
-            .select(id_col, "span_idx"))
+            .select("doc_id", "span_idx"))
 
 
-def dedup_spans(docs: DataFrame, n: int = 8, id_col: str = "doc_id",
-                text_col: str = "text") -> DataFrame:
+def dedup_spans(docs: DataFrame, n: int = 8) -> DataFrame:
     """Rewrite each document with its duplicated spans removed (keeper
     occurrences and the <n-token tail survive). Adds
-    ``n_spans_removed``; all other columns pass through with text_col
+    ``n_spans_removed``; all other columns pass through with ``text``
     rebuilt via per-row higher-order functions — the corpus joins the
     SMALL removal set on id (AQE picks the strategy; removals are rare
     by construction), it never shuffles on span keys itself."""
-    rm = (duplicate_spans(docs, n, id_col, text_col)
-          .groupBy(id_col).agg(F.collect_set("span_idx").alias("_rm")))
-    toks = _toks(text_col)
+    rm = (duplicate_spans(docs, n)
+          .groupBy("doc_id").agg(F.collect_set("span_idx").alias("_rm")))
+    toks = _toks()
     nspans = (F.size(toks) / n).cast("int")
     kept = F.filter(
         F.sequence(F.lit(0), nspans - 1),
@@ -126,11 +124,11 @@ def dedup_spans(docs: DataFrame, n: int = 8, id_col: str = "doc_id",
             F.transform(kept, lambda i: F.slice(toks, i * n + 1, n)),
             F.array(F.slice(toks, nspans * n + 1, F.size(toks) - nspans * n)),
         )))
-    out = (docs.join(rm, id_col, "left")
+    out = (docs.join(rm, "doc_id", "left")
            .withColumn("_nrm", F.coalesce(F.size("_rm"), F.lit(0)))
-           .withColumn(text_col,
+           .withColumn("text",
                        F.when(F.col("_nrm") > 0, rebuilt)
-                       .otherwise(F.col(text_col))))
+                       .otherwise(F.col("text"))))
     return (out.select(*docs.columns, F.col("_nrm")
                        .cast("int").alias("n_spans_removed")))
 
@@ -140,11 +138,9 @@ def dedup_spans(docs: DataFrame, n: int = 8, id_col: str = "doc_id",
 # ---------------------------------------------------------------------------
 
 
-def duplicated_gram_starts(docs: DataFrame, min_len: int = 16,
-                           id_col: str = "doc_id",
-                           text_col: str = "text") -> DataFrame:
+def duplicated_gram_starts(docs: DataFrame, min_len: int = 16) -> DataFrame:
     """SLIDING min_len-gram occurrences that duplicate corpus-wide,
-    minus one keeper per gram: (id_col, s) rows whose token window
+    minus one keeper per gram: (doc_id, s) rows whose token window
     [s, s+min_len) must be removed.
 
     This is the candidate layer of suffix-array substring dedup
@@ -164,10 +160,10 @@ def duplicated_gram_starts(docs: DataFrame, min_len: int = 16,
     duplicate_spans: NON-overlapping fixed spans (the C4 rule, 1/n the
     key volume) vs. sliding grams here (any-length semantics, ~n keys).
     """
-    toks = _toks(text_col)
+    toks = _toks()
     nkeys = F.size(toks) - min_len + 1
     grams = (docs
-             .select(F.col(id_col),
+             .select(F.col("doc_id"),
                      F.posexplode(
                          F.transform(
                              F.sequence(F.lit(0), nkeys - 1),
@@ -183,21 +179,19 @@ def duplicated_gram_starts(docs: DataFrame, min_len: int = 16,
     # pays one Exchange + a per-partition sort on the same 16-hex keys
     # (round 7, guide §2.4). Output rows are identical.
     w = Window.partitionBy("key")
-    me = F.struct(F.col(id_col), F.col("s"))
+    me = F.struct(F.col("doc_id"), F.col("s"))
     return (grams
             .withColumn("_cnt", F.count(F.lit(1)).over(w))
             .withColumn("_keep", F.min(me).over(w))
             .where((F.col("_cnt") > 1) & (me != F.col("_keep")))
-            .select(id_col, "s"))
+            .select("doc_id", "s"))
 
 
-def dedup_substrings(docs: DataFrame, min_len: int = 16,
-                     id_col: str = "doc_id",
-                     text_col: str = "text") -> DataFrame:
+def dedup_substrings(docs: DataFrame, min_len: int = 16) -> DataFrame:
     """Rewrite each document with every duplicated substring of
     >= min_len tokens removed (the corpus-first occurrence survives).
     Adds ``n_tokens_removed``; other columns pass through with
-    text_col rebuilt. The any-length companion to dedup_spans: a
+    ``text`` rebuilt. The any-length companion to dedup_spans: a
     300-token boilerplate block repeated across pages disappears
     wholesale, not just its span-aligned chunks.
 
@@ -209,24 +203,24 @@ def dedup_substrings(docs: DataFrame, min_len: int = 16,
     covers it (exists() over the doc's own starts — O(dups) per token,
     zero extra Exchange, text never shuffles).
     """
-    rm = (duplicated_gram_starts(docs, min_len, id_col, text_col)
-          .groupBy(id_col)
+    rm = (duplicated_gram_starts(docs, min_len)
+          .groupBy("doc_id")
           .agg(F.sort_array(F.collect_set("s")).alias("_rm")))
-    toks = _toks(text_col)
+    toks = _toks()
 
     def _covered(i: Column) -> Column:
         return F.exists("_rm", lambda st: (st <= i)
                         & (i < st + F.lit(min_len)))
 
     kept = F.filter(toks, lambda _t, i: ~_covered(i))
-    out = (docs.join(rm, id_col, "left")
+    out = (docs.join(rm, "doc_id", "left")
            .withColumn("_nrm",
                        F.when(F.col("_rm").isNotNull(),
                               F.size(toks) - F.size(kept))
                        .otherwise(F.lit(0)))
-           .withColumn(text_col,
+           .withColumn("text",
                        F.when(F.col("_nrm") > 0, F.concat_ws(" ", kept))
-                       .otherwise(F.col(text_col))))
+                       .otherwise(F.col("text"))))
     return (out.select(*docs.columns, F.col("_nrm")
                        .cast("int").alias("n_tokens_removed")))
 
@@ -236,45 +230,42 @@ def dedup_substrings(docs: DataFrame, min_len: int = 16,
 # ---------------------------------------------------------------------------
 
 
-def unigram_logprobs(docs: DataFrame, text_col: str = "text",
-                     alpha: float = 0.5) -> DataFrame:
-    """Corpus unigram LM with add-alpha smoothing: (token, logp) plus
+def unigram_logprobs(docs: DataFrame) -> DataFrame:
+    """Corpus unigram LM with add-0.5 smoothing: (token, logp) plus
     one UNK row (token NULL) for out-of-vocabulary mass. Two scalars
     (corpus size, vocab size) ride a scalar-aggregate crossJoin —
     broadcast, no global window. CCNet scores corpora with a reference
     KenLM; this is the engine-native equivalent trained on the corpus
     itself (or any reference DataFrame you pass)."""
-    counts = (docs.select(F.explode(_toks(text_col)).alias("token"))
+    counts = (docs.select(F.explode(_toks()).alias("token"))
               .groupBy("token").agg(F.count(F.lit(1)).alias("cnt")))
     tot = counts.agg(F.sum("cnt").alias("_total"),
                      F.count(F.lit(1)).alias("_vocab"))
-    denom = F.col("_total") + F.lit(alpha) * (F.col("_vocab") + 1)
+    denom = F.col("_total") + F.lit(0.5) * (F.col("_vocab") + 1)
     with_unk = counts.unionByName(          # tot has exactly one row,
         tot.select(F.lit(None).cast("string").alias("token"),   # so this
                    F.lit(0).cast("bigint").alias("cnt")))       # adds UNK
     return (with_unk.crossJoin(F.broadcast(tot.select(
                 F.col("_total"), F.col("_vocab"))))
             .select("token", "cnt",
-                    F.log((F.col("cnt") + alpha) / denom).alias("logp")))
+                    F.log((F.col("cnt") + 0.5) / denom).alias("logp")))
 
 
-def _nll_ppl(scored: DataFrame, id_col: str, logp: Column) -> DataFrame:
+def _nll_ppl(scored: DataFrame, logp: Column) -> DataFrame:
     """(id, ntok, nll, ppl) from one row per scored token. Each token's
     logp is rounded to 6dp decimal before the exact sum, so the answer
     does not depend on aggregation order."""
     dec = F.round(logp, 6).cast("decimal(24,6)")
-    return (scored.groupBy(id_col)
+    return (scored.groupBy("doc_id")
             .agg(F.count(F.lit(1)).alias("ntok"),
                  (-F.sum(dec)).cast("double").alias("nll"))
-            .select(id_col, "ntok",
+            .select("doc_id", "ntok",
                     F.round("nll", 6).alias("nll"),
                     F.round(F.exp(F.col("nll") / F.col("ntok")), 6)
                     .alias("ppl")))
 
 
-def lm_perplexity(docs: DataFrame, lm: DataFrame | None = None,
-                  id_col: str = "doc_id", text_col: str = "text",
-                  alpha: float = 0.5) -> DataFrame:
+def lm_perplexity(docs: DataFrame, lm: DataFrame | None = None) -> DataFrame:
     """Per-document unigram negative-log-likelihood + perplexity under
     ``lm`` (default: trained on ``docs`` itself). The quality filter
     CCNet/C4 pipelines run: high perplexity = far from the reference
@@ -288,7 +279,7 @@ def lm_perplexity(docs: DataFrame, lm: DataFrame | None = None,
     (decimal) before the exact sum so the answer is independent of
     aggregation order — the engine-wide oracle-determinism recipe."""
     if lm is None:
-        lm = unigram_logprobs(docs, text_col, alpha)
+        lm = unigram_logprobs(docs)
     # materialize the LM once (lazy local checkpoint — the with_rank
     # recipe): the UNK validation count, the UNK-row broadcast and the
     # vocab-row broadcast below are three separate reads of lm, and a
@@ -309,27 +300,25 @@ def lm_perplexity(docs: DataFrame, lm: DataFrame | None = None,
             f"lm must contain exactly one NULL-token (UNK) row, found "
             f"{'0' if n_unk == 0 else '>=2'} — train it with "
             "unigram_logprobs() or add the UNK fallback row")
-    toks = (docs.select(id_col, F.explode(_toks(text_col)).alias("token")))
+    toks = (docs.select("doc_id", F.explode(_toks()).alias("token")))
     scored = (toks
               .join(F.broadcast(lm.where(F.col("token").isNotNull())),
                     "token", "left")
               .crossJoin(F.broadcast(unk))
-              .select(id_col,
+              .select("doc_id",
                       F.coalesce("logp", "_unk_logp").alias("_lp")))
-    return _nll_ppl(scored, id_col, F.col("_lp"))
+    return _nll_ppl(scored, F.col("_lp"))
 
 
 def mixing_weights(docs: DataFrame, targets: DataFrame,
-                   budget_tokens: int, max_epochs: float = 4.0,
-                   by: str = "source",
-                   text_col: str = "text") -> DataFrame:
+                   budget_tokens: int, max_epochs: float = 4.0) -> DataFrame:
     """Static source-mixture planning — the step that turns a curated
     corpus into a training mixture: given per-source target shares and
     a total token budget, compute per-source sampling epochs capped at
     max_epochs (the standard guard against over-repeating a small
     source) and the realized token counts/shares after capping.
 
-    targets is a (by, target_share) table; shares are normalized
+    targets is a (source, target_share) table; shares are normalized
     in-operator so callers can pass un-normalized priorities. Sources
     missing from targets mix at share 0 (epochs 0); desired tokens =
     budget * share, epochs = min(desired / available, max_epochs),
@@ -341,17 +330,17 @@ def mixing_weights(docs: DataFrame, targets: DataFrame,
     sampling step downstream is a broadcast join of these weights onto
     the corpus (sampling.materialize_mixture).
     """
-    ntok = F.size(_toks(text_col)).cast("bigint")
-    avail = (docs.groupBy(by)
+    ntok = F.size(_toks()).cast("bigint")
+    avail = (docs.groupBy("source")
              .agg(F.count(F.lit(1)).alias("n_docs"),
                   F.sum(ntok).alias("available_tok")))
-    tshare = targets.select(F.col(by), F.col("target_share")
+    tshare = targets.select(F.col("source"), F.col("target_share")
                             .cast("double").alias("_raw"))
     tot_raw = tshare.agg(F.sum("_raw").alias("_tot"))
     tshare = (tshare.crossJoin(F.broadcast(tot_raw))
-              .select(by, (F.col("_raw") / F.col("_tot"))
+              .select("source", (F.col("_raw") / F.col("_tot"))
                       .alias("target_share")))
-    mixed = (avail.join(F.broadcast(tshare), by, "left")
+    mixed = (avail.join(F.broadcast(tshare), "source", "left")
              .withColumn("target_share",
                          F.coalesce("target_share", F.lit(0.0)))
              .withColumn("desired_tok",
@@ -365,7 +354,7 @@ def mixing_weights(docs: DataFrame, targets: DataFrame,
                                  * F.col("available_tok")).cast("bigint")))
     tot_real = mixed.agg(F.sum("realized_tok").alias("_rt"))
     return (mixed.crossJoin(F.broadcast(tot_real))
-            .select(by, "n_docs", "available_tok",
+            .select("source", "n_docs", "available_tok",
                     F.round("target_share", 6).alias("target_share"),
                     F.round("desired_tok", 2).alias("desired_tok"),
                     "epochs", "realized_tok",
@@ -373,68 +362,57 @@ def mixing_weights(docs: DataFrame, targets: DataFrame,
                     .alias("realized_share")))
 
 
-def tf_idf(docs: DataFrame, id_col: str = "doc_id",
-           text_col: str = "text", min_df: int = 1,
-           smooth: bool = True) -> DataFrame:
+def tf_idf(docs: DataFrame) -> DataFrame:
     """Per-(doc, term) TF-IDF weights — the corpus-statistics weighting
     behind quality filtering, keyword extraction and sparse retrieval.
-    tf = in-doc term count; idf = ln((N+1)/(df+1)) + 1 when smooth
-    (the standard smoothed form — never zero, division-safe) else
-    ln(N/df); weight = tf * idf rounded to 6dp (the engine-wide
-    cross-engine float recipe).
+    tf = in-doc term count; idf = ln((N+1)/(df+1)) + 1 (the standard
+    smoothed form — never zero, division-safe); weight = tf * idf
+    rounded to 6dp (the engine-wide cross-engine float recipe).
 
     100 TB shape: tokenize/explode is NARROW; term counts shuffle once
     on (doc, term) with map-side partial aggregation; document
     frequencies aggregate the (doc, term) pairs again on term (partial
     combine — each partition contributes at most one (term, count)
     fragment); the corpus row count is a scalar aggregate BROADCAST
-    into the idf projection, not a window. min_df prunes the hapax
-    tail BEFORE the tf join, which at web scale removes most of the
-    vocabulary (Zipf) and with it most of the join's right side.
+    into the idf projection, not a window.
     """
-    pairs = (docs.select(F.col(id_col),
-                         F.explode(_toks(text_col)).alias("term"))
+    pairs = (docs.select(F.col("doc_id"),
+                         F.explode(_toks()).alias("term"))
              .filter(F.col("term") != "")
-             .groupBy(id_col, "term")
+             .groupBy("doc_id", "term")
              .agg(F.count(F.lit(1)).alias("tf")))
-    df_t = (pairs.groupBy("term")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") >= min_df))
+    df_t = pairs.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n_docs = docs.select(
         F.count(F.lit(1)).cast("double").alias("_n"))
-    if smooth:
-        idf = F.log((F.col("_n") + 1.0) / (F.col("df") + 1.0)) + 1.0
-    else:
-        idf = F.log(F.col("_n") / F.col("df"))
+    idf = F.log((F.col("_n") + 1.0) / (F.col("df") + 1.0)) + 1.0
     weighted = (pairs.join(df_t, "term")
                 .crossJoin(F.broadcast(n_docs))
-                .select(id_col, "term", "tf", "df",
+                .select("doc_id", "term", "tf", "df",
                         F.round(F.col("tf") * idf, 6).alias("tfidf")))
     return weighted
 
 
-def top_terms(docs: DataFrame, k: int = 5, id_col: str = "doc_id",
-              text_col: str = "text", min_df: int = 1) -> DataFrame:
+def top_terms(docs: DataFrame, k: int = 5) -> DataFrame:
     """Top-k terms per document by TF-IDF (tie-break: term ascending) —
     keyword extraction over the corpus. The per-doc ranking window
     partitions on the document id, so unlike a global ranking it scales
     with no single hot partition."""
     from pyspark.sql import Window
 
-    w = Window.partitionBy(id_col).orderBy(
+    w = Window.partitionBy("doc_id").orderBy(
         F.col("tfidf").desc(), F.col("term").asc())
-    return (tf_idf(docs, id_col, text_col, min_df)
+    return (tf_idf(docs)
             .withColumn("rank", F.row_number().over(w).cast("int"))
             .filter(F.col("rank") <= k)
-            .select(id_col, "rank", "term", "tf", "df", "tfidf"))
+            .select("doc_id", "rank", "term", "tf", "df", "tfidf"))
 
 
-def pagerank(edges: DataFrame, n_iters: int = 8, damping: float = 0.85,
-             src_col: str = "src", dst_col: str = "dst") -> DataFrame:
-    """Fixed-iteration PageRank over an edge list — the canonical
-    iterative graph scorer (link-based quality weighting for crawled
-    corpora). Dangling-node mass (nodes with no out-edges) is
-    redistributed uniformly each iteration, the standard correction.
+def pagerank(edges: DataFrame, n_iters: int = 8) -> DataFrame:
+    """Fixed-iteration PageRank (damping 0.85) over a (src, dst) edge
+    list — the canonical iterative graph scorer (link-based quality
+    weighting for crawled corpora). Dangling-node mass (nodes with no
+    out-edges) is redistributed uniformly each iteration, the standard
+    correction.
 
     Determinism recipe (cross-engine, order-independent): per-edge
     contributions round to 6dp and sum as DECIMAL(38,6) — exact
@@ -454,8 +432,7 @@ def pagerank(edges: DataFrame, n_iters: int = 8, damping: float = 0.85,
     # loop invariants materialize ONCE — without the checkpoint every
     # iteration would re-derive the edge scan, the nodes distinct and
     # the out-degree aggregate through raw lineage (3x per round)
-    e = edges.select(F.col(src_col).alias("node"),
-                     F.col(dst_col).alias("dst")) \
+    e = edges.select(F.col("src").alias("node"), "dst") \
         .localCheckpoint(eager=True)
     nodes = (e.select("node").union(e.select(F.col("dst").alias("node")))
              .distinct().localCheckpoint(eager=True))
@@ -478,12 +455,13 @@ def pagerank(edges: DataFrame, n_iters: int = 8, damping: float = 0.85,
                           .cast("decimal(38,6)")),
                     F.lit(0).cast("decimal(38,6)"))
                     .cast("double").alias("_m")))
+        # (1.0 - 0.85) as the oracle SQL writes it: not the float 0.15
         ranks = (nodes.join(contrib,
                             nodes["node"] == contrib["dst"], "left")
                  .crossJoin(F.broadcast(dang))
                  .select(nodes["node"],
-                         ((1.0 - damping) / n
-                          + damping * (F.coalesce(F.col("contrib"),
+                         ((1.0 - 0.85) / n
+                          + 0.85 * (F.coalesce(F.col("contrib"),
                                                   F.lit(0.0))
                                        + F.col("_m") / n)).alias("rank")))
         if (it + 1) % 3 == 0:
@@ -491,61 +469,50 @@ def pagerank(edges: DataFrame, n_iters: int = 8, damping: float = 0.85,
     return ranks.select("node", F.round("rank", 6).alias("rank"))
 
 
-def normalize_text(docs: DataFrame, form: str = "NFC",
-                   collapse_ws: bool = True, strip_controls: bool = True,
-                   id_col: str = "doc_id",
-                   text_col: str = "text") -> DataFrame:
-    """Unicode + whitespace normalization — the cleaning stage between
-    raw extraction and every downstream hash/dedup/tokenize step
-    (un-normalized text makes byte-level dedup miss visually identical
-    docs). Three rules, each optional: canonical Unicode form (NFC by
-    default; NFKC for the aggressive variant), C0/C1 control-character
-    removal (tab/newline survive as whitespace), and whitespace
-    collapse (runs of whitespace -> one space, ends trimmed).
+def normalize_text(docs: DataFrame) -> DataFrame:
+    """Unicode + whitespace normalization of (doc_id, text) rows — the
+    cleaning stage between raw extraction and every downstream
+    hash/dedup/tokenize step (un-normalized text makes byte-level dedup
+    miss visually identical docs). Three rules: canonical Unicode
+    composition (NFC), C0/C1 control-character removal (tab/newline
+    survive as whitespace), and whitespace collapse (runs of whitespace
+    -> one space, ends trimmed).
 
-    The Unicode form runs FIRST (NFKC can fold characters INTO
-    whitespace — e.g. NBSP — which the collapse must then see), as an
-    Arrow-batched mapInPandas over stdlib unicodedata (Spark SQL has
-    no normalization builtin); the control/whitespace rules then run
-    as codegen'd regexp_replace (JVM). Text stays in its partition —
-    no shuffle. `changed` marks rows the pass rewrote."""
+    NFC runs FIRST, as an Arrow-batched mapInPandas over stdlib
+    unicodedata (Spark SQL has no normalization builtin); the
+    control/whitespace rules then run as codegen'd regexp_replace
+    (JVM). Text stays in its partition — no shuffle. `changed` marks
+    rows the pass rewrote."""
     import unicodedata
     from collections.abc import Iterator
 
     import pandas as pd
 
-    if form not in ("NFC", "NFD", "NFKC", "NFKD"):
-        raise ValueError(f"unknown normalization form {form!r}")
-
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield pd.DataFrame({
-                id_col: pdf[id_col].astype("int64"),
-                "_orig": pdf[text_col],
-                "_normed": [unicodedata.normalize(form, t)
+                "doc_id": pdf["doc_id"].astype("int64"),
+                "_orig": pdf["text"],
+                "_normed": [unicodedata.normalize("NFC", t)
                             if t is not None else None
-                            for t in pdf[text_col]],
+                            for t in pdf["text"]],
             })
 
-    staged = docs.select(F.col(id_col), F.col(text_col)).mapInPandas(
-        fn, schema=f"{id_col} bigint, _orig string, _normed string")
-    out = F.col("_normed")
-    if strip_controls:
-        # C0 (minus tab/newline/CR, which survive as whitespace), DEL,
-        # and the C1 range U+0080-U+009F (cp1252-mojibake controls)
-        out = F.regexp_replace(
-            out,
-            r"[\x00-\x08\x0B\x0C\x0E-\x1F\x7F\x{0080}-\x{009F}]", "")
-    if collapse_ws:
-        out = F.trim(F.regexp_replace(out, r"\s+", " "))
+    staged = docs.select("doc_id", "text").mapInPandas(
+        fn, schema="doc_id bigint, _orig string, _normed string")
+    # C0 (minus tab/newline/CR, which survive as whitespace), DEL, and
+    # the C1 range U+0080-U+009F (cp1252-mojibake controls)
+    out = F.regexp_replace(
+        F.col("_normed"),
+        r"[\x00-\x08\x0B\x0C\x0E-\x1F\x7F\x{0080}-\x{009F}]", "")
+    out = F.trim(F.regexp_replace(out, r"\s+", " "))
     return staged.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         out.alias("text"),
         (~out.eqNullSafe(F.col("_orig"))).alias("changed"))
 
 
-def profile_table(df: DataFrame, columns: list[str] | None = None,
-                  exact: bool = True, rsd: float = 0.05) -> DataFrame:
+def profile_table(df: DataFrame) -> DataFrame:
     """Per-column data profile — the first sweep any large-scale
     ingest runs over a new table: one row per column with row count,
     null count, distinct count and min/max rendered to strings under a
@@ -557,19 +524,12 @@ def profile_table(df: DataFrame, columns: list[str] | None = None,
 
     Scale shape: ONE aggregate pass over the table computes every
     metric (count/min/max are plain partial aggregates; distinct
-    counts are exact by default for oracle parity — Catalyst plans
-    multi-distinct via Expand, fine at graded scale — and
-    ``exact=False`` flips every distinct to approx_count_distinct's
-    HyperLogLog++, restoring the single-pass no-Expand plan for the
-    100 TB tier). The wide 1-row result then unpivots through a
-    narrow literal-array explode — no per-column scans, no shuffle of
-    table data beyond the aggregate's own partials."""
-    cols = columns if columns is not None else list(df.columns)
-    if not cols:
-        raise ValueError("profile_table needs at least one column")
-    missing = [c for c in cols if c not in df.columns]
-    if missing:
-        raise ValueError(f"unknown columns: {missing}")
+    counts are exact for oracle parity — Catalyst plans multi-distinct
+    via Expand, fine at graded scale). The wide 1-row result then
+    unpivots through a narrow literal-array explode — no per-column
+    scans, no shuffle of table data beyond the aggregate's own
+    partials."""
+    cols = list(df.columns)
     dtypes = dict(df.dtypes)
 
     def render(c: str, agg) -> Column:
@@ -580,10 +540,8 @@ def profile_table(df: DataFrame, columns: list[str] | None = None,
 
     aggs = [F.count(F.lit(1)).alias("_nrows")]
     for c in cols:
-        nd = (F.count_distinct(F.col(c)) if exact
-              else F.approx_count_distinct(F.col(c), rsd))
         aggs += [F.count(F.col(c)).alias(f"_nn_{c}"),
-                 nd.alias(f"_nd_{c}"),
+                 F.count_distinct(F.col(c)).alias(f"_nd_{c}"),
                  render(c, F.min).alias(f"_min_{c}"),
                  render(c, F.max).alias(f"_max_{c}")]
     wide = df.agg(*aggs)
@@ -604,15 +562,14 @@ def profile_table(df: DataFrame, columns: list[str] | None = None,
                     F.col("e.mx").alias("max_val")))
 
 
-def bigram_logmodel(docs: DataFrame, text_col: str = "text",
-                    alpha: float = 0.5) -> tuple[DataFrame, DataFrame]:
+def bigram_logmodel(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Corpus bigram model components: ((prev, token, cnt_vw) pair
     counts, (prev, cnt_v) context totals). Conditional probability is
-    assembled at scoring time as (cnt_vw + alpha) / (cnt_v + alpha *
-    (V + 1)) with V the UNIGRAM vocabulary — add-alpha over the
+    assembled at scoring time as (cnt_vw + 0.5) / (cnt_v + 0.5 *
+    (V + 1)) with V the UNIGRAM vocabulary — add-0.5 over the
     closed vocab + UNK, the same smoothing family as
     unigram_logprobs. Two plain groupBy counts; nothing collected."""
-    pairs = (docs.select(F.explode(_bigram_pairs(text_col)).alias("p"))
+    pairs = (docs.select(F.explode(_bigram_pairs()).alias("p"))
              .select(F.col("p.prev").alias("prev"),
                      F.col("p.tok").alias("token"))
              .where(F.col("prev").isNotNull()))
@@ -625,12 +582,12 @@ def bigram_logmodel(docs: DataFrame, text_col: str = "text",
     return vw, v
 
 
-def _bigram_pairs(text_col: str) -> Column:
+def _bigram_pairs() -> Column:
     """(prev, tok) structs per position: prev NULL at position 0 (the
     doc-initial token scores with the unigram model alone — no BOS
     event pollutes the bigram counts). Pure HOF, no window, no
     shuffle."""
-    toks = _toks_safe(text_col)
+    toks = _toks_safe()
     return F.transform(
         F.sequence(F.lit(1), F.size(toks)),
         lambda i: F.struct(
@@ -638,11 +595,9 @@ def _bigram_pairs(text_col: str) -> Column:
             F.element_at(toks, i).alias("tok")))
 
 
-def lm_perplexity_bigram(docs: DataFrame, lam: float = 0.8,
-                         id_col: str = "doc_id", text_col: str = "text",
-                         alpha: float = 0.5) -> DataFrame:
+def lm_perplexity_bigram(docs: DataFrame) -> DataFrame:
     """Per-document perplexity under an INTERPOLATED bigram LM trained
-    on the corpus: p(w|v) = lam * p_bigram(w|v) + (1-lam) *
+    on the corpus: p(w|v) = 0.8 * p_bigram(w|v) + 0.2 *
     p_unigram(w); doc-initial tokens score with the unigram component
     alone. One step up the n-gram ladder from lm_perplexity toward
     CCNet's KenLM reference — catches word-SALAD that unigram
@@ -654,21 +609,17 @@ def lm_perplexity_bigram(docs: DataFrame, lam: float = 0.8,
     smaller than the token stream); the unigram LM broadcasts like
     lm_perplexity; per-token logp rounds to 6dp decimal pre-sum so the
     result is aggregation-order-independent."""
-    if not 0.0 < lam < 1.0:
-        raise ValueError("lam must be in (0, 1) — lam=1 drops the "
-                         "unigram floor and unseen bigrams hit log(0)")
     # coalesce NULL text ONCE so the unigram model and the pair stream
     # tokenize identically (_toks drops NULL-text docs from training
     # while _toks_safe scores them — a total/vocab split the DuckDB
     # oracle's coalesce would expose on any corpus with NULL text)
-    docs = docs.withColumn(text_col,
-                           F.coalesce(F.col(text_col), F.lit("")))
-    uni = unigram_logprobs(docs, text_col, alpha)
+    docs = docs.withColumn("text", F.coalesce(F.col("text"), F.lit("")))
+    uni = unigram_logprobs(docs)
     vocab = uni.where(F.col("token").isNotNull()) \
         .agg(F.count(F.lit(1)).alias("_vocab"))
     unk = uni.where(F.col("token").isNull()) \
         .select(F.col("logp").alias("_unk_logp"))
-    vw, v = bigram_logmodel(docs, text_col, alpha)
+    vw, v = bigram_logmodel(docs)
     uni_nn = uni.where(F.col("token").isNotNull()).select("token", "logp")
 
     # Round 7 (guide §2.3/§2.4): assemble ONE (prev, token) -> p score
@@ -680,20 +631,21 @@ def lm_perplexity_bigram(docs: DataFrame, lam: float = 0.8,
     # below is the SAME double expression tree as the old per-pair form,
     # evaluated once per distinct pair instead of once per occurrence —
     # bit-identical results.
-    p_big = ((F.coalesce(F.col("cnt_vw"), F.lit(0)) + alpha)
+    p_big = ((F.coalesce(F.col("cnt_vw"), F.lit(0)) + 0.5)
              / (F.coalesce(F.col("cnt_v"), F.lit(0))
-                + alpha * (F.col("_vocab") + 1)))
+                + 0.5 * (F.col("_vocab") + 1)))
     p_uni = F.exp(F.coalesce("logp", "_unk_logp"))
+    # (1.0 - 0.8) as the oracle SQL writes it: not the float 0.2
     score = (vw.join(v, "prev")
              .join(F.broadcast(uni_nn), "token")
              .crossJoin(F.broadcast(unk))
              .crossJoin(F.broadcast(vocab))
              .select("prev", "token",
-                     (lam * p_big + (1.0 - lam) * p_uni).alias("_p_pair")))
+                     (0.8 * p_big + (1.0 - 0.8) * p_uni).alias("_p_pair")))
 
-    pairs = (docs.select(id_col,
-                         F.explode(_bigram_pairs(text_col)).alias("p"))
-             .select(id_col, F.col("p.prev").alias("prev"),
+    pairs = (docs.select("doc_id",
+                         F.explode(_bigram_pairs()).alias("p"))
+             .select("doc_id", F.col("p.prev").alias("prev"),
                      F.col("p.tok").alias("token")))
     scored = (pairs
               .join(score, ["prev", "token"], "left")
@@ -701,11 +653,10 @@ def lm_perplexity_bigram(docs: DataFrame, lam: float = 0.8,
               .crossJoin(F.broadcast(unk)))
     p = F.when(F.col("prev").isNull(), p_uni) \
         .otherwise(F.col("_p_pair"))
-    return _nll_ppl(scored, id_col, F.log(p))
+    return _nll_ppl(scored, F.log(p))
 
 
-def pii_stats(docs: DataFrame, id_col: str = "doc_id",
-              text_col: str = "text") -> DataFrame:
+def pii_stats(docs: DataFrame) -> DataFrame:
     """Per-document PII match counts under the scalars.REDACT_PATTERNS
     chain — the audit table a corpus scrub produces. Counts are taken
     in chain order on the PROGRESSIVELY-REPLACED text: each pattern
@@ -717,7 +668,7 @@ def pii_stats(docs: DataFrame, id_col: str = "doc_id",
     no shuffle, zero Exchange."""
     from webalizer_spark.functions.scalars import REDACT_PATTERNS
 
-    cur = F.coalesce(F.col(text_col), F.lit(""))
+    cur = F.coalesce(F.col("text"), F.lit(""))
     counts = {}
     for placeholder, pattern in REDACT_PATTERNS:
         name = "n_" + placeholder.strip("<>").lower()
@@ -725,7 +676,7 @@ def pii_stats(docs: DataFrame, id_col: str = "doc_id",
                                                    F.lit(0)))
         cur = F.regexp_replace(cur, pattern, placeholder)
     total = None
-    cols = [F.col(id_col)]
+    cols = [F.col("doc_id")]
     for name, c in counts.items():
         c = c.cast("bigint")
         cols.append(c.alias(name))

@@ -24,11 +24,10 @@ def _bucket(col: Column, salt: str) -> Column:
     return h.cast("bigint") % _BUCKETS
 
 
-def materialize_mixture(df: DataFrame, weights: DataFrame,
-                        by: str = "source", key_col: str = "doc_id",
-                        salt: str = "mix") -> DataFrame:
+def materialize_mixture(df: DataFrame, weights: DataFrame) -> DataFrame:
     """Execute a mixture plan (the downstream half of
-    quality.mixing_weights): weights is a (by, epochs) table; every row
+    quality.mixing_weights) over (doc_id, source) rows: weights is a
+    (source, epochs) table; every row
     is emitted floor(epochs) times plus one more when its deterministic
     hash fraction falls below frac(epochs) — so a source at epochs=2.3
     repeats every doc twice and an unbiased, reproducible 30% of docs
@@ -40,14 +39,14 @@ def materialize_mixture(df: DataFrame, weights: DataFrame,
     100 TB shape: the plan table is tiny -> broadcast join; duplication
     is explode(sequence(..)) — a NARROW op, no corpus shuffle.
     """
-    w = weights.select(F.col(by), F.col("epochs").cast("double"))
-    b = _bucket(F.concat_ws("|", F.md5(F.col(by).cast("string")),
-                            F.col(key_col).cast("string")), salt)
+    w = weights.select("source", F.col("epochs").cast("double"))
+    b = _bucket(F.concat_ws("|", F.md5(F.col("source").cast("string")),
+                            F.col("doc_id").cast("string")), "mix")
     frac_thresh = F.round((F.col("epochs") - F.floor("epochs"))
                           * _BUCKETS).cast("bigint")
     n = (F.floor("epochs").cast("int")
          + F.when(b < frac_thresh, 1).otherwise(0))
-    return (df.join(F.broadcast(w), by, "inner")
+    return (df.join(F.broadcast(w), "source", "inner")
             .withColumn("_n", n)
             .filter(F.col("_n") > 0)
             .withColumn("copy",

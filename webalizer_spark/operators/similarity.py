@@ -3,10 +3,11 @@
 Brute-force cosine top-k is the exact baseline (broadcast the query set,
 never shuffle the corpus); random-hyperplane LSH bucketing is the scale
 path (signature equi-join restricts the candidate set). All arithmetic
-is built-in expressions (zip_with/aggregate folds) — no Python.
-Oracle-checked through the queries.py rows that call these operators
-(emb_cosine_topk, emb_ann_topk, emb_ivf_topk, emb_near_dup_cosine,
-emb_near_dup_keep, emb_semdedup_keep).
+is built-in expressions (zip_with/aggregate folds) — no Python. Every
+operator reads vectors as (vec_id, embedding) rows, the shape of the
+embeddings table. Oracle-checked through the queries.py rows that
+call these operators (emb_cosine_topk, emb_ann_topk, emb_ivf_topk,
+emb_near_dup_cosine, emb_near_dup_keep, emb_semdedup_keep).
 """
 
 from __future__ import annotations
@@ -43,12 +44,13 @@ def _pair_cos(a: str, b: str, na: str, nb: str) -> F.Column:
     return F.expr(_DOT.format(a=a, b=b)) / (F.col(na) * F.col(nb))
 
 
-def _normed(df: DataFrame, id_col: str, vec_col: str, id_as: str,
-            vec_as: str, norm_as: str) -> DataFrame:
+def _normed(df: DataFrame, id_as: str, vec_as: str,
+            norm_as: str) -> DataFrame:
     """(id, vector, L2 norm) under the given names: each row's norm is
     computed once, before any pair join, for _pair_cos."""
-    return df.select(F.col(id_col).alias(id_as), F.col(vec_col).alias(vec_as),
-                     _norm_col(vec_col).alias(norm_as))
+    return df.select(F.col("vec_id").alias(id_as),
+                     F.col("embedding").alias(vec_as),
+                     _norm_col("embedding").alias(norm_as))
 
 
 def _top_k(pairs: DataFrame, k: int) -> DataFrame:
@@ -63,16 +65,16 @@ def _top_k(pairs: DataFrame, k: int) -> DataFrame:
                     F.round("cos", 6).alias("cos")))
 
 
-def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
-                     id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+def brute_force_topk(corpus: DataFrame, queries: DataFrame,
+                     k: int = 5) -> DataFrame:
     """Exact top-k: broadcast(queries) x corpus, per-query size-k window.
 
     At scale the corpus never moves: each executor streams its corpus
     partition against the broadcast queries; ranking is per-query
     row_number (size-k heap semantics via TakeOrdered per partition would
     need an agg — the window over query_id keys is small)."""
-    q = _normed(queries, id_col, vec_col, "query_id", "qv", "qn")
-    c = _normed(corpus, id_col, vec_col, "neighbor_id", "cv", "cn")
+    q = _normed(queries, "query_id", "qv", "qn")
+    c = _normed(corpus, "neighbor_id", "cv", "cn")
     pairs = (F.broadcast(q).crossJoin(c)
              .filter(F.col("query_id") != F.col("neighbor_id"))
              .withColumn("cos", _pair_cos("qv", "cv", "qn", "cn")))
@@ -80,7 +82,6 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
 
 
 def lsh_signatures(emb: DataFrame, num_planes: int = 8, dim: int = 64,
-                   id_col: str = "vec_id", vec_col: str = "embedding",
                    num_tables: int = 1) -> DataFrame:
     """Deterministic random-hyperplane signatures: md5-seeded +-1 weights,
     exact-decimal projections (sign is order-independent).
@@ -101,11 +102,11 @@ def lsh_signatures(emb: DataFrame, num_planes: int = 8, dim: int = 64,
     caller stays at or below 8*8*64.
     """
     structs = [F.struct(F.lit(t).alias("t"),
-                        _lsh_sig(vec_col, partial(_lsh_weight, t),
+                        _lsh_sig("embedding", partial(_lsh_weight, t),
                                  num_planes, dim).alias("sig"))
                for t in range(num_tables)]
-    out = emb.select(F.col(id_col), F.inline(F.array(*structs)))
-    return out.select(id_col, F.col("t").cast("int").alias("t"),
+    out = emb.select("vec_id", F.inline(F.array(*structs)))
+    return out.select("vec_id", F.col("t").cast("int").alias("t"),
                       F.col("sig").cast("bigint").alias("sig"))
 
 
@@ -153,21 +154,23 @@ def _lsh_proj_fold(vec_col: str, weights: list[float]) -> F.Column:
 
 
 def ann_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
-             num_planes: int = 4, num_tables: int = 8, dim: int = 64,
-             id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+             num_planes: int = 4, num_tables: int = 8,
+             dim: int = 64) -> DataFrame:
     """ANN top-k: exact ranking restricted to LSH-bucket candidates,
     unioned across num_tables independent tables (standard multi-table
     random-hyperplane LSH: per-table collision prob ~ (1 - theta/pi)^b,
     recall 1-(1-p)^L). The (table, signature) equi-join + distinct
     replaces the full cross join; recall vs the exact baseline is
     asserted in tests/test_dedup_similarity.py."""
-    sig_c = lsh_signatures(corpus, num_planes, dim, id_col, vec_col, num_tables)
-    sig_q = lsh_signatures(queries, num_planes, dim, id_col, vec_col, num_tables)
-    q = (queries.join(sig_q, id_col)
-         .select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"),
+    sig_c = lsh_signatures(corpus, num_planes, dim, num_tables)
+    sig_q = lsh_signatures(queries, num_planes, dim, num_tables)
+    q = (queries.join(sig_q, "vec_id")
+         .select(F.col("vec_id").alias("query_id"),
+                 F.col("embedding").alias("qv"),
                  F.col("t").alias("qt"), F.col("sig").alias("qsig")))
-    c = (corpus.join(sig_c, id_col)
-         .select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"),
+    c = (corpus.join(sig_c, "vec_id")
+         .select(F.col("vec_id").alias("neighbor_id"),
+                 F.col("embedding").alias("cv"),
                  F.col("t").alias("ct"), F.col("sig").alias("csig")))
     # distinct on ids only (cheap), vectors joined back after — never
     # dedupe on array payloads
@@ -177,25 +180,24 @@ def ann_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id")
         .distinct())
-    qv = _normed(queries, id_col, vec_col, "query_id", "qv", "qn")
-    cv = _normed(corpus, id_col, vec_col, "neighbor_id", "cv", "cn")
+    qv = _normed(queries, "query_id", "qv", "qn")
+    cv = _normed(corpus, "neighbor_id", "cv", "cn")
     pairs = (cand_ids.join(F.broadcast(qv), "query_id").join(cv, "neighbor_id")
              .withColumn("cos", _pair_cos("qv", "cv", "qn", "cn")))
     return _top_k(pairs, k)
 
 
 def ivf_assign(corpus: DataFrame, centroids: DataFrame,
-               id_col: str = "vec_id", vec_col: str = "embedding",
-               n_probe: int = 1) -> DataFrame:
+               n_probe: int) -> DataFrame:
     """Assign each vector to its n_probe nearest centroids by cosine.
 
     centroids is tiny (n_cells rows) -> broadcast cross join + per-vector
     top-n_probe window; the corpus never shuffles on the payload.
     """
     c = centroids.select(F.col("cell_id"), F.col("centroid"))
-    scored = (corpus.select(F.col(id_col), F.col(vec_col))
+    scored = (corpus.select("vec_id", "embedding")
               .crossJoin(F.broadcast(c))
-              .withColumn("csim", cosine(vec_col, "centroid")))
+              .withColumn("csim", cosine("embedding", "centroid")))
     if n_probe == 1:
         # the common case is a pure argmax: max_by over a
         # (csim, -cell_id) struct is a hash aggregate with map-side
@@ -204,16 +206,16 @@ def ivf_assign(corpus: DataFrame, centroids: DataFrame,
         # struct ordering reproduces the window's tie-break exactly
         # (csim desc, then cell_id asc), so the assignment is
         # identical row for row.
-        return (scored.groupBy(id_col)
+        return (scored.groupBy("vec_id")
                 .agg(F.max_by("cell_id",
                               F.struct(F.col("csim"),
                                        (-F.col("cell_id")).alias("nc")))
                      .alias("cell_id")))
-    w = Window.partitionBy(id_col).orderBy(
+    w = Window.partitionBy("vec_id").orderBy(
         F.col("csim").desc(), F.col("cell_id").asc())
     return (scored.withColumn("_r", F.row_number().over(w))
             .filter(F.col("_r") <= n_probe)
-            .select(id_col, "cell_id"))
+            .select("vec_id", "cell_id"))
 
 
 # Standalone all-pairs baselines refuse inputs past this many vectors —
@@ -222,20 +224,18 @@ def ivf_assign(corpus: DataFrame, centroids: DataFrame,
 ALL_PAIRS_MAX_VECS = 100_000
 
 
-def near_dup_cosine(emb: DataFrame, threshold: float = 0.95,
-                    id_col: str = "vec_id",
-                    vec_col: str = "embedding") -> DataFrame:
+def near_dup_cosine(emb: DataFrame, threshold: float = 0.95) -> DataFrame:
     """Embedding-cosine near-dup pairs — the EXACT all-pairs baseline of
     semantic dedup (size-guarded). The scale path is the LSH twin:
     lsh_signatures bucket join, then this cosine only on candidates."""
-    n = emb.select(id_col).distinct().count()
+    n = emb.select("vec_id").distinct().count()
     if n > ALL_PAIRS_MAX_VECS:
         raise ValueError(
             f"near_dup_cosine: {n} vectors exceeds the all-pairs baseline "
             f"bound ({ALL_PAIRS_MAX_VECS}); use lsh_signatures/ann_topk "
             "bucket candidates instead")
-    a = _normed(emb, id_col, vec_col, "vec_a", "ea", "_na")
-    b = _normed(emb, id_col, vec_col, "vec_b", "eb", "_nb")
+    a = _normed(emb, "vec_a", "ea", "_na")
+    b = _normed(emb, "vec_b", "eb", "_nb")
     return (a.crossJoin(b).filter(F.col("vec_a") < F.col("vec_b"))
             .withColumn("_c", _pair_cos("ea", "eb", "_na", "_nb"))
             .filter(F.col("_c") >= threshold)
@@ -243,29 +243,26 @@ def near_dup_cosine(emb: DataFrame, threshold: float = 0.95,
 
 
 def _keep_min_of_verified(emb: DataFrame, cand: DataFrame,
-                          threshold: float, id_col: str,
-                          vec_col: str) -> DataFrame:
+                          threshold: float) -> DataFrame:
     """The tail of both embedding-dedup operators: exact cosine on the
     candidate (va, vb) id pairs only — vectors and norms join back by
     id after candidate pruning — then keep the minimum-id member of
     each component of the >= threshold edges."""
     from webalizer_spark.operators.dedup import drop_non_min_members
 
-    ea = _normed(emb, id_col, vec_col, "va", "_ea", "_na")
-    eb = _normed(emb, id_col, vec_col, "vb", "_eb", "_nb")
+    ea = _normed(emb, "va", "_ea", "_na")
+    eb = _normed(emb, "vb", "_eb", "_nb")
     edges = (cand.join(ea, "va").join(eb, "vb")
              .filter(_pair_cos("_ea", "_eb", "_na", "_nb") >= threshold)
              .select(F.col("va").alias("doc_a"), F.col("vb").alias("doc_b")))
-    return drop_non_min_members(emb, edges, id_col)
+    return drop_non_min_members(emb, edges, "vec_id")
 
 
 def near_dup_remove_lsh(emb: DataFrame, threshold: float = 0.45,
-                        num_planes: int = 4, num_tables: int = 8,
-                        dim: int = 64, id_col: str = "vec_id",
-                        vec_col: str = "embedding",
                         max_bucket_size: int | None = None) -> DataFrame:
     """Semantic near-dup removal END-TO-END at scale: multi-table
-    hyperplane-LSH bucket candidates -> exact cosine verify (only on
+    hyperplane-LSH bucket candidates (8 tables x 4 planes over 64
+    dimensions) -> exact cosine verify (only on
     candidate pairs) -> connected components (min-label, pointer-jump)
     -> keep exactly the minimum-id member of each dup component. The
     scale twin of near_dup_cosine (the size-guarded all-pairs
@@ -275,32 +272,30 @@ def near_dup_remove_lsh(emb: DataFrame, threshold: float = 0.45,
     (emb_near_dup_keep, vs a recursive-CTE closure)."""
     from webalizer_spark.operators.dedup import _cap_hot_keys
 
-    sig = lsh_signatures(emb, num_planes, dim, id_col, vec_col, num_tables)
+    sig = lsh_signatures(emb, num_planes=4, dim=64, num_tables=8)
     # hot-bucket cap (same hazard as text LSH: near-constant embeddings
     # — e.g. zero vectors — collapse into one (t, sig) bucket)
     sig = _cap_hot_keys(sig, ["t", "sig"], max_bucket_size,
                         "near_dup_remove_lsh")
-    a = sig.select(F.col(id_col).alias("va"), F.col("t").alias("ta"),
+    a = sig.select(F.col("vec_id").alias("va"), F.col("t").alias("ta"),
                    F.col("sig").alias("sa"))
-    b = sig.select(F.col(id_col).alias("vb"), F.col("t").alias("tb"),
+    b = sig.select(F.col("vec_id").alias("vb"), F.col("t").alias("tb"),
                    F.col("sig").alias("sb"))
     cand = (a.join(b, (F.col("ta") == F.col("tb"))
                    & (F.col("sa") == F.col("sb"))
                    & (F.col("va") < F.col("vb")))
             .select("va", "vb").distinct())
-    return _keep_min_of_verified(emb, cand, threshold, id_col, vec_col)
+    return _keep_min_of_verified(emb, cand, threshold)
 
 
-def ivf_centroids(corpus: DataFrame, n_cells: int = 16,
-                  id_col: str = "vec_id", vec_col: str = "embedding",
-                  sample_size: int = 1024, iters: int = 10) -> DataFrame:
+def ivf_centroids(corpus: DataFrame, n_cells: int) -> DataFrame:
     """Deterministic sampled spherical k-means centroids.
 
     Production IVF shape [inverted-file ANN]: train on a bounded sample,
-    not the corpus. Here the sample is the sample_size vectors with the
+    not the corpus. Here the sample is the 1024 vectors with the
     LOWEST md5(id) — a seeded, engine-portable pseudo-random pick that is
-    one distributed TakeOrdered, never a full sort. Lloyd iterations run
-    on the driver over <= sample_size points (numpy, fixed init = first
+    one distributed TakeOrdered, never a full sort. 10 Lloyd iterations
+    run on the driver over <= 1024 points (numpy, fixed init = first
     n_cells of the hash order), so the result is bit-deterministic and
     the cluster never iterates. cell_id is the centroid's position in
     the init order (no monotonically_increasing_id / limit-coalesce
@@ -308,18 +303,18 @@ def ivf_centroids(corpus: DataFrame, n_cells: int = 16,
     """
     import numpy as np
 
-    rows = (corpus.select(id_col, vec_col)
+    rows = (corpus.select("vec_id", "embedding")
             .orderBy(F.md5(F.concat(F.lit("ivf|"),
-                                    F.col(id_col).cast("string"))).asc(),
-                     F.col(id_col).asc())
-            .limit(sample_size).collect())
-    pts = np.array([r[vec_col] for r in rows], dtype=np.float64)
+                                    F.col("vec_id").cast("string"))).asc(),
+                     F.col("vec_id").asc())
+            .limit(1024).collect())
+    pts = np.array([r["embedding"] for r in rows], dtype=np.float64)
     norms = np.linalg.norm(pts, axis=1, keepdims=True)
     norms[norms == 0] = 1.0
     unit = pts / norms
     k = min(n_cells, len(unit))
     cents = unit[:k].copy()
-    for _ in range(iters):
+    for _ in range(10):
         assign = np.argmax(unit @ cents.T, axis=1)
         for j in range(k):
             members = unit[assign == j]
@@ -335,20 +330,19 @@ def ivf_centroids(corpus: DataFrame, n_cells: int = 16,
 
 
 def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
-             n_cells: int = 16, n_probe: int = 2,
-             id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+             n_cells: int = 16, n_probe: int = 2) -> DataFrame:
     """IVF ANN top-k: inverted-file search. Corpus vectors live in their
     1 nearest cell; each query probes its n_probe nearest cells and ranks
     exactly within the probed candidates. n_probe == n_cells degenerates
     to exhaustive search (asserted equal to brute force in tests)."""
-    cents = ivf_centroids(corpus, n_cells, id_col, vec_col)
-    corpus_cells = ivf_assign(corpus, cents, id_col, vec_col, 1) \
-        .withColumnRenamed(id_col, "neighbor_id")
-    query_probes = ivf_assign(queries, cents, id_col, vec_col, n_probe) \
-        .withColumnRenamed(id_col, "query_id")
-    cv = _normed(corpus, id_col, vec_col, "neighbor_id", "cv", "cn") \
+    cents = ivf_centroids(corpus, n_cells)
+    corpus_cells = ivf_assign(corpus, cents, 1) \
+        .withColumnRenamed("vec_id", "neighbor_id")
+    query_probes = ivf_assign(queries, cents, n_probe) \
+        .withColumnRenamed("vec_id", "query_id")
+    cv = _normed(corpus, "neighbor_id", "cv", "cn") \
         .join(corpus_cells, "neighbor_id")
-    qv = _normed(queries, id_col, vec_col, "query_id", "qv", "qn") \
+    qv = _normed(queries, "query_id", "qv", "qn") \
         .join(query_probes, "query_id")
     # no dedupe needed: corpus vectors are assigned to exactly ONE cell
     # (n_probe=1 above), so a (query, neighbor) pair can match in at most
@@ -361,28 +355,25 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     return _top_k(pairs, k)
 
 
-def fixed_centroids(emb: DataFrame, n_cells: int,
-                    id_col: str = "vec_id",
-                    vec_col: str = "embedding") -> DataFrame:
+def fixed_centroids(emb: DataFrame, n_cells: int) -> DataFrame:
     """Deterministic no-training centroids: the embeddings of the
     n_cells smallest ids, cell_id = position in id order. Exists so
     cluster-bucketed operators have an engine-portable oracle twin
     (DuckDB re-derives the same centroids with ORDER BY + LIMIT); the
     production path is ivf_centroids' sampled spherical k-means."""
-    return (emb.orderBy(F.col(id_col).asc()).limit(n_cells)
-            .select(F.col(id_col), F.col(vec_col).alias("centroid"))
+    return (emb.orderBy(F.col("vec_id").asc()).limit(n_cells)
+            .select("vec_id", F.col("embedding").alias("centroid"))
             .withColumn("cell_id", (F.row_number().over(
-                Window.orderBy(F.col(id_col).asc())) - 1).cast("int"))
+                Window.orderBy(F.col("vec_id").asc())) - 1).cast("int"))
             .select("cell_id", "centroid"))
 
 
 def semantic_dedup(emb: DataFrame, threshold: float = 0.45,
-                   n_cells: int = 16, id_col: str = "vec_id",
-                   vec_col: str = "embedding",
                    centroids: DataFrame | None = None,
                    max_cell_size: int | None = None) -> DataFrame:
     """SemDeDup-style semantic dedup (cluster-then-prune, per the
-    published SemDeDup recipe): k-means-cluster the embeddings, compare
+    published SemDeDup recipe): k-means-cluster the embeddings (16
+    cells unless `centroids` are given), compare
     pairs ONLY within a cluster (near-dups land in the same cell
     because they are near the same centroid), exact cosine on the
     within-cell candidates, connected components over the >= threshold
@@ -404,21 +395,15 @@ def semantic_dedup(emb: DataFrame, threshold: float = 0.45,
     from webalizer_spark.operators.dedup import _cap_hot_keys
 
     if centroids is None:
-        centroids = ivf_centroids(emb, n_cells, id_col, vec_col)
-    assign = ivf_assign(emb, centroids, id_col, vec_col, 1)
+        centroids = ivf_centroids(emb, 16)
+    assign = ivf_assign(emb, centroids, 1)
     assign = _cap_hot_keys(assign, ["cell_id"], max_cell_size,
                            "semantic_dedup")
-    if max_cell_size is None:
-        # barrier before the within-cell self-join: both sides would
-        # otherwise recompute the full corpus x centroids scoring
-        # (the cap path materializes inside _cap_hot_keys); the
-        # assignment table is (id, cell) rows — tiny at any scale
-        assign = assign.localCheckpoint(eager=False)
-    a = assign.select(F.col(id_col).alias("va"),
+    a = assign.select(F.col("vec_id").alias("va"),
                       F.col("cell_id").alias("ca"))
-    b = assign.select(F.col(id_col).alias("vb"),
+    b = assign.select(F.col("vec_id").alias("vb"),
                       F.col("cell_id").alias("cb"))
     cand = (a.join(b, (F.col("ca") == F.col("cb"))
                    & (F.col("va") < F.col("vb")))
             .select("va", "vb"))
-    return _keep_min_of_verified(emb, cand, threshold, id_col, vec_col)
+    return _keep_min_of_verified(emb, cand, threshold)

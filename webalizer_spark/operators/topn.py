@@ -20,12 +20,11 @@ from pyspark.sql import functions as F
 
 
 def top_n(df: DataFrame, metric: str | Column, key: str | Column,
-          n: int, extra_tiebreak: list[str] | None = None) -> DataFrame:
-    """Deterministic top-N: metric desc, key asc (then extras asc)."""
+          n: int) -> DataFrame:
+    """Deterministic top-N: metric desc, key asc."""
     m = F.col(metric) if isinstance(metric, str) else metric
     k = F.col(key) if isinstance(key, str) else key
-    order = [m.desc(), k.asc()] + [F.col(c).asc() for c in (extra_tiebreak or [])]
-    return df.orderBy(*order).limit(n)
+    return df.orderBy(m.desc(), k.asc()).limit(n)
 
 
 def with_rank(df: DataFrame, metric: str, key: str, n: int) -> DataFrame:
@@ -67,7 +66,7 @@ def with_rank(df: DataFrame, metric: str, key: str, n: int) -> DataFrame:
     )
 
 
-def with_share(df: DataFrame, metric: str, total: float | None = None) -> DataFrame:
+def with_share(df: DataFrame, metric: str) -> DataFrame:
     """Append pct share of total — the %-of-total column every reference
     top-N table prints [output.c table bodies].
 
@@ -81,9 +80,6 @@ def with_share(df: DataFrame, metric: str, total: float | None = None) -> DataFr
     aggregates (cardinality bounded by the dimension, like every
     reference %-column table), so the checkpoint is small by contract.
     """
-    if total is not None:
-        return df.withColumn(
-            "pct", F.round(F.col(metric) * 100.0 / F.lit(total), 4))
     df = df.localCheckpoint(eager=False)
     tot = df.agg(F.sum(metric).alias("_share_total"))
     return (

@@ -189,6 +189,12 @@ def run_pipeline(
         page_pred=F.col("is_page")).persist(PERSIST_LEVEL)
     per_site = A.per_site(spine).persist(PERSIST_LEVEL)
     per_url = A.per_url(spine).persist(PERSIST_LEVEL)
+    # one per-key table per family: the top-N report and the Dump* sink
+    # below read the same DataFrame
+    per_referrer = A.per_referrer(spine)
+    per_agent = A.per_agent(spine)
+    per_user = A.per_user(spine)
+    per_search = A.per_search_term(spine)
     n = cfg.topn
     reports: dict[str, DataFrame] = {
         "hourly": A.hour_of_day_profile(spine),
@@ -210,34 +216,32 @@ def run_pipeline(
                              "hits", "tool", n.urls),
         "top_tools_by_kb": T.top_n(hide(per_url, "tool", cfg.lists.hide_url),
                                    "kbytes", "tool", n.urls_by_kb),
-        "top_referrers": T.top_n(hide(A.per_referrer(spine), "referrer",
+        "top_referrers": T.top_n(hide(per_referrer, "referrer",
                                       cfg.lists.hide_referrer),
                                  "hits", "referrer", n.referrers),
-        "top_agents": T.top_n(hide(A.per_agent(spine), "agent",
-                                   cfg.lists.hide_agent),
+        "top_agents": T.top_n(hide(per_agent, "agent", cfg.lists.hide_agent),
                               "hits", "agent", n.agents),
-        "top_users": T.top_n(hide(A.per_user(spine), "user",
-                                  cfg.lists.hide_user),
+        "top_users": T.top_n(hide(per_user, "user", cfg.lists.hide_user),
                              "hits", "user", n.users),
-        "top_search": T.top_n(A.per_search_term(spine), "hits", "search_term",
-                              n.search),
+        "top_search": T.top_n(per_search, "hits", "search_term", n.search),
         "top_entry": T.top_n(entry_counts(sess_pages), "entries", "page", n.entry),
         "top_exit": T.top_n(exit_counts(sess_pages), "exits", "page", n.exit),
     }
     # T5/S6 full dumps (Dump* keywords): the WHOLE sorted table as an
     # all_* sink — a true global sort (range partition + local sort),
-    # only materialized for families the config asks for
-    _dump_sources = {
-        "sites": lambda: (per_site, "hits", "conv_id"),
-        "tools": lambda: (per_url, "hits", "tool"),
-        "agents": lambda: (A.per_agent(spine), "hits", "agent"),
-        "referrers": lambda: (A.per_referrer(spine), "hits", "referrer"),
-        "users": lambda: (A.per_user(spine), "hits", "user"),
-        "search": lambda: (A.per_search_term(spine), "hits", "search_term"),
+    # only materialized for families the config asks for. Dumps list
+    # hidden entries too: Hide* filters only the top-N display.
+    dump_sources = {
+        "sites": (per_site, "conv_id"),
+        "tools": (per_url, "tool"),
+        "agents": (per_agent, "agent"),
+        "referrers": (per_referrer, "referrer"),
+        "users": (per_user, "user"),
+        "search": (per_search, "search_term"),
     }
     for fam in cfg.dumps:
-        src, metric, key = _dump_sources[fam]()
-        reports[f"all_{fam}"] = T.full_dump(src, metric, key)
+        src, key = dump_sources[fam]
+        reports[f"all_{fam}"] = T.full_dump(src, "hits", key)
 
     # Group* families: named-group rollups IN ADDITION to individuals
     # (GROUPING SETS, one shuffle each) [linklist.c ƒisinglist]

@@ -1999,10 +1999,11 @@ def doc_normalize(spark, sf):
     return normalize_text(staged)
 
 
-def _pagerank_oracle_sql(n_iters: int = 8, damping: float = 0.85) -> str:
-    """Unrolled fixed-iteration PageRank in plain SQL (no recursive
-    aggregation — each iteration is its own CTE chain), mirroring
-    quality.pagerank's decimal-sum determinism recipe term for term.
+def _pagerank_oracle_sql() -> str:
+    """Unrolled 8-iteration PageRank (damping 0.85) in plain SQL (no
+    recursive aggregation — each iteration is its own CTE chain),
+    mirroring quality.pagerank's decimal-sum determinism recipe term
+    for term.
     Edge rule: src = 'n' || (user_id % 40), dst = 'n' || (event_id %
     60), DISTINCT — nodes 40..59 appear only as destinations, so the
     dangling-mass branch is live."""
@@ -2020,7 +2021,7 @@ outdeg AS (
 nn AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM nodes),
 r0 AS (SELECT node, 1.0 / nn.n AS rank FROM nodes, nn)"""
     parts = [head]
-    for k in range(n_iters):
+    for k in range(8):
         parts.append(f""",
 c{k} AS (
   SELECT e.dst AS node,
@@ -2038,12 +2039,12 @@ d{k} AS (
 ),
 r{k + 1} AS (
   SELECT n.node,
-         (1.0 - {damping}) / nn.n
-         + {damping} * (COALESCE(c.contrib, 0.0) + d.m / nn.n) AS rank
+         (1.0 - 0.85) / nn.n
+         + 0.85 * (COALESCE(c.contrib, 0.0) + d.m / nn.n) AS rank
   FROM nodes n LEFT JOIN c{k} c ON n.node = c.node, d{k} d, nn
 )""")
-    parts.append(f"""
-SELECT node, ROUND(rank, 6) AS rank FROM r{n_iters}""")
+    parts.append("""
+SELECT node, ROUND(rank, 6) AS rank FROM r8""")
     return "".join(parts)
 
 

@@ -71,13 +71,14 @@ _ENGINE_CONFS: dict[str, str] = {
 def get_spark(
     app_name: str = "webalizer_spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_confs: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with engine defaults.
 
     master defaults to ``local[$SPARK_GRAFT_CPUS]`` in the sandbox and is
     left unset under spark-submit (cluster manager decides).
+    extra_confs are applied last, so they override the engine defaults
+    (e.g. ``spark.sql.shuffle.partitions``).
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -88,7 +89,7 @@ def get_spark(
     for k, v in _ENGINE_CONFS.items():
         builder = builder.config(k, v)
     # Local mode: one JVM; shuffle partitions should track cores, not 200.
-    nshuf = shuffle_partitions or int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
+    nshuf = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
     builder = builder.config("spark.sql.shuffle.partitions", str(nshuf))
     builder = builder.config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
     builder = builder.config("spark.ui.enabled", "false")

@@ -26,12 +26,16 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 
 
-def merge_sql(target: str, keys: list[str], source: str = "_merge_src") -> str:
+# the temp view TableIO.merge registers its rows under for MERGE INTO
+_MERGE_SRC = "_merge_src"
+
+
+def merge_sql(target: str, keys: list[str]) -> str:
     """The MERGE INTO statement the Iceberg branch executes — factored
     out so the generated SQL is unit-testable in-sandbox, where no
     Iceberg runtime jar exists to run it live."""
     on = " AND ".join(f"t.{k} = s.{k}" for k in keys)
-    return (f"MERGE INTO {target} t USING {source} s ON {on}\n"
+    return (f"MERGE INTO {target} t USING {_MERGE_SRC} s ON {on}\n"
             "WHEN MATCHED THEN UPDATE SET *\n"
             "WHEN NOT MATCHED THEN INSERT *")
 
@@ -87,7 +91,7 @@ class TableIO:
             if not self.spark.catalog.tableExists(target):
                 df.writeTo(target).create()
                 return
-            df.createOrReplaceTempView("_merge_src")
+            df.createOrReplaceTempView(_MERGE_SRC)
             self.spark.sql(merge_sql(target, keys))
             return
         assert self.base_path is not None
